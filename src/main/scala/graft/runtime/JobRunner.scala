@@ -2,6 +2,7 @@ package graft.runtime
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.config.JobConfig.JobSpec
 import graft.graph.JobGraph
@@ -19,10 +20,18 @@ import graft.graph.JobGraph
  *  - per-component `lines_forwarded` is collected with Dataset.observe —
  *    a zero-cost aggregate riding INSIDE the existing plan (no second
  *    scan, no accumulator races on retried tasks) — harvested by a
- *    QueryExecutionListener when each sink action completes;
+ *    QueryExecutionListener when each sink action completes. Spark calls
+ *    that listener asynchronously from the listener bus's shared queue;
+ *    before returning, `run` posts a marker to that queue and waits for
+ *    it (`ListenerBusBridge`). The queue is FIFO, so the counts are
+ *    complete when `run` returns;
  *  - job throughput = total forwarded rows / wall seconds.
  */
 object JobRunner {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  /** Cap on the metrics barrier; reached only when the bus is stalled. */
+  private val BusTimeoutMs = 5000L
 
   sealed trait Backoff { def delayMs(attempt: Int): Long }
   /** Same delay every attempt (retry_strategy.py: constant). */
@@ -104,14 +113,13 @@ object JobRunner {
             String.valueOf(e.getMessage)).take(300)))
       }
     } finally {
-      // listener callbacks run async on Spark's bus (no public flush);
-      // poll until the metric map settles before detaching
-      val deadline = System.currentTimeMillis() + 5000
-      var prev = -1
-      while (System.currentTimeMillis() < deadline && listener.rows.size != prev) {
-        prev = listener.rows.size
-        Thread.sleep(100)
-      }
+      // QueryExecutionListener callbacks run async on the listener bus's
+      // shared queue, which delivers in posting order: once a marker
+      // posted now is delivered there, every SQL execution this run
+      // finished has reached `listener`. The bound only caps a stalled bus.
+      if (!ListenerBusBridge.drainSharedQueue(spark.sparkContext, BusTimeoutMs))
+        log.warn(s"run $runTag: listener bus did not drain within " +
+          s"$BusTimeoutMs ms; ${listener.rows.size} counts harvested, record may be partial")
       spark.listenerManager.unregister(listener)
       // Backstop for operator persists that fall through the build-thread
       // OpCaches scope (r20 ADVICE: a future operator deferring a persist

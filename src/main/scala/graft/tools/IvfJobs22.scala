@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Dev-only (r22): per-rep Spark-job census of named gate queries —
@@ -36,7 +37,7 @@ object IvfJobs22 {
       val t0 = System.nanoTime()
       val n = graft.SparkEntry.queries(q)(spark, dir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
+      ListenerBusBridge.drainSharedQueue(spark.sparkContext, 10000)
       println(f"==== $q n=$n ${dt}%.2f s  jobs=${started.size}")
       var i = 0
       started.forEach { s => i += 1; println(f"  job $i%2d $s") }

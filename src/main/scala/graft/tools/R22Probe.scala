@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import graft.SparkEntry.table
 import graft.scale._
@@ -51,7 +52,7 @@ object R22Probe {
       val t0 = System.nanoTime()
       val n = f.count()
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(100) // let listener events drain
+      ListenerBusBridge.drainSharedQueue(spark.sparkContext, 10000)
       println(f"$name%-24s n=$n%-6d ${dt}%6.2f s  jobs=$jobs stages=$stages")
     }
 

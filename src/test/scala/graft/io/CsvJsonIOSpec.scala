@@ -2,6 +2,7 @@ package graft.io
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 
@@ -230,15 +231,9 @@ class CsvJsonIOSpec extends SparkTestBase {
       counter.set(0)
       try {
         JsonIO.write(agg, out, gzip = gzip)
-        // the listener bus is asynchronous: poll until the count is
-        // stable for 500 ms (deadline 10 s) instead of a fixed sleep,
-        // so a loaded box cannot undercount either side
-        val deadline = System.nanoTime() + 10000000000L
-        var last = -1
-        while (last != counter.get() && System.nanoTime() < deadline) {
-          last = counter.get()
-          Thread.sleep(500)
-        }
+        // the listener bus is asynchronous: wait until every job start
+        // the write posted has reached `l`
+        assert(ListenerBusBridge.drainSharedQueue(spark.sparkContext, 10000))
         counter.get()
       } finally spark.sparkContext.removeSparkListener(l)
     }

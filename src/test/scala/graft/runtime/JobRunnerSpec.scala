@@ -3,6 +3,9 @@ package graft.runtime
 import graft.SparkTestBase
 import graft.config.JobConfig
 import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 
 class JobRunnerSpec extends SparkTestBase {
 
@@ -110,6 +113,57 @@ class JobRunnerSpec extends SparkTestBase {
     assert(res.linesDismissed.get("f") === Some(2L))
     assert(res.linesReceived.get("f.in") === Some(3L))
     assert(res.linesForwarded.get("f.fail") === Some(2L))
+  }
+
+  test("counts are complete on return even behind a slow shared-queue listener") {
+    // another listener on the shared queue stalls every SQL execution's
+    // delivery by ~1 s: the harvesting callbacks reach MetricsListener
+    // late, and run() must wait for them, not for a quiet interval
+    import spark.implicits._
+    val in = tmp("in_slow_bus")
+    graft.io.CsvIO.write(
+      Seq(("1", "x"), ("2", "y"), ("3", "z")).toDF("a", "b"), in, singleFile = true)
+    val json =
+      s"""{ "name": "t3", "components": [
+         |  { "name": "r", "comp_type": "read_csv", "filepath": "$in",
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "w", "comp_type": "write_csv",
+         |    "filepath": "${tmp("out_slow_bus")}",
+         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin
+    val slow = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => Thread.sleep(1000)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try {
+      val res = JobRunner.run(spark, JobConfig.parse(json))
+      assert(res.succeeded)
+      assert(res.linesForwarded.get("r.out") === Some(3L))
+      assert(res.linesReceived.get("w.in") === Some(3L))
+    } finally spark.sparkContext.removeSparkListener(slow)
+  }
+
+  test("the listener-bus barrier reports a stalled shared queue as a timeout") {
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val stalled = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => release.await()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(stalled)
+    try {
+      spark.range(3).collect()
+      assert(!ListenerBusBridge.drainSharedQueue(spark.sparkContext, 200))
+      release.countDown()
+      assert(ListenerBusBridge.drainSharedQueue(spark.sparkContext, 10000))
+    } finally {
+      release.countDown()
+      spark.sparkContext.removeSparkListener(stalled)
+    }
   }
 
   test("retry loop: missing input exhausts attempts, reports last error") {

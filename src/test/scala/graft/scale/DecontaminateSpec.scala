@@ -2,6 +2,7 @@ package graft.scale
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 
 /** Pins Decontaminate semantics (distinct-intersection hit counts, the
   * min_overlap threshold, null/empty-text handling) and the contract
@@ -174,7 +175,7 @@ class DecontaminateSpec extends SparkTestBase {
     try {
       val plan = Decontaminate.pairs(corpus, bench, n = 3)
       assert(plan.columns.toSeq === Seq("corpus_id", "bench_id", "n_shared"))
-      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+      assert(ListenerBusBridge.drainSharedQueue(spark.sparkContext, 10000))
       assert(jobs.isEmpty,
         s"pairs() graph build launched Spark jobs (ids: $jobs)")
     } finally spark.sparkContext.removeSparkListener(listener)
