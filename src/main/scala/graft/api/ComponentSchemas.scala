@@ -1,402 +1,20 @@
 package graft.api
 
+import graft.graph.{ComponentDef, Components, Param, PortSpec}
 import graft.util.JsonStr.quote
 
 /**
  * Component config-schema discovery for UIs, mirroring the reference's
  * GET /schemas surface (reference: src/etl_core/api/routers/schemas.py:
  * 362-479 — per-component JSON schemas served from the component
- * registry). Each comp_type accepted by JobGraph.runComponent is described
+ * registry). This object only renders: every view is JSON drawn from the
+ * same registry (graph/Components.scala) that validation and both folds
+ * read, so what is documented is what runs. Each comp_type is described
  * as a JSON-Schema-shaped object: `properties` with type + description,
  * and a `required` list. The descriptions double as the user-facing
  * parameter documentation.
  */
 object ComponentSchemas {
-
-  final case class Param(name: String, tpe: String, required: Boolean, desc: String)
-
-  private def p(name: String, tpe: String, desc: String) = Param(name, tpe, required = false, desc)
-  private def req(name: String, tpe: String, desc: String) = Param(name, tpe, required = true, desc)
-
-  private val filepath = req("filepath", "string", "path of the file to read/write")
-
-  /** comp_type → (description, params). Single source of truth for the
-    * discovery endpoint; JobGraph.runComponent is the executor of the same
-    * contract. */
-  val registry: Seq[(String, (String, Seq[Param]))] = Seq(
-    "read_csv" -> ("Read a CSV file as all-string columns" -> Seq(
-      filepath, p("separator", "string", "field delimiter, default ','"),
-      p("multiline", "boolean", "quote-aware whole-record parse (reads back write_csv output whose cells carry embedded newlines); default false = line-splittable parallel parse"))),
-    "write_csv" -> ("Write a CSV file" -> Seq(
-      filepath, p("separator", "string", "field delimiter, default ','"),
-      p("single_file", "boolean", "write one file (true, default) or a parquet-style directory of parts"),
-      p("append", "boolean", "append rows under the existing header"))),
-    "read_json" -> ("Read JSON: array, NDJSON, or gzip of either" -> Seq(
-      filepath)),
-    "write_json" -> ("Write JSON (NDJSON or array format)" -> Seq(
-      filepath,
-      p("format", "string", "'ndjson' (default) or 'array' (pretty-printed JSON array)"),
-      p("append", "boolean", "append rows to an existing file instead of overwriting"))),
-    "read_parquet" -> ("Read a parquet file or directory" -> Seq(filepath,
-      p("merge_schema", "boolean", "schema-evolution read: merge every file's footer into the union schema (columns added by newer files surface as nulls in older rows); default false — single-footer inference"))),
-    "write_parquet" -> ("Write parquet" -> Seq(filepath,
-      p("partition_by", "array", "Hive-style partition columns (directory layout)"),
-      p("coalesce", "integer", "shrink to N output partitions before writing (small-files control for dimension-sized outputs)"),
-      p("sort_by", "array", "data-skipping layout: range-partition + sort on these keys so each file carries a disjoint range and min/max stats skip files (high-cardinality keys that can't be directories); exclusive with coalesce"),
-      p("files", "integer", "range-partition count for sort_by, default = session shuffle partitions"),
-      p("max_records_per_file", "integer", "split each task's output at this row cap — bounded training shards; composes with partition_by/sort_by (splitting a sorted run keeps ranges disjoint)"))),
-    "read_orc" -> ("Read an ORC file or directory (vectorized, pruned, pushdown like parquet)" -> Seq(filepath)),
-    "write_orc" -> ("Write ORC" -> Seq(filepath,
-      p("partition_by", "array", "Hive-style partition columns (directory layout)"),
-      p("coalesce", "integer", "shrink to N output partitions before writing (small-files control)"))),
-    "read_xml" -> ("Read XML rows (@attr/#text conventions)" -> Seq(
-      filepath, p("record_tag", "string", "element name of one record, default 'record'"))),
-    "write_xml" -> ("Write XML rows" -> Seq(
-      filepath, p("root_tag", "string", "document root element, default 'root'"),
-      p("record_tag", "string", "per-record element, default 'record'"),
-      p("append", "boolean", "insert records into the existing document"))),
-    "read_excel" -> ("Read an xlsx sheet (header row + all-string cells)" -> Seq(
-      filepath, p("sheet_name", "string", "sheet to read, default first"))),
-    "write_excel" -> ("Write an xlsx sheet" -> Seq(
-      filepath, p("sheet_name", "string", "sheet name, default 'Sheet1'"),
-      p("append", "boolean", "append rows under the existing header"))),
-    "read_mongodb" -> ("Read a document collection with find() pushdown" -> Seq(
-      req("store", "string", "store name (connection seam)"),
-      req("entity_name", "string", "collection name"),
-      p("query_filter", "object", "top-level equality filter; values keep their JSON types"),
-      p("sort", "array", "[[field, 1|-1], ...]"),
-      p("skip", "integer", "documents to skip"),
-      p("limit", "integer", "max documents"))),
-    "write_mongodb" -> ("Write documents: insert/upsert/update/truncate" -> Seq(
-      req("store", "string", "store name (connection seam)"),
-      req("entity_name", "string", "collection name"),
-      p("if_exists", "string", "insert (default) | upsert | update | truncate"),
-      p("key_fields", "array", "match keys for upsert/update"),
-      p("match_filter", "object", "explicit UPDATE filter; overrides key_fields"),
-      p("update_fields", "array", "restrict $set to these fields"))),
-    "filter" -> ("Route rows to pass/fail ports by a boolean rule tree" -> Seq(
-      req("rule", "object", "nested {column, operator, value} / {logical_operator, rules} tree"))),
-    "aggregation" -> ("Group-by aggregation (count/sum/min/max/mean/median/std/nunique)" -> Seq(
-      p("group_by", "array", "grouping columns; empty = one global row"),
-      req("aggregations", "array", "[{src, op, dest}, ...] — src column, aggregate op, output name"),
-      p("grouping", "string", "groups (default) | rollup | cube"),
-      p("pivot_column", "string", "pivot this column's values into output columns"),
-      p("pivot_values", "array", "explicit pivot values (required with pivot_column)"),
-      p("time_column", "string", "event-time column: switches to windowed aggregation (batch face of streaming_aggregation)"),
-      p("time_unit", "string", "epoch scale when time_column is INT64: seconds | millis | micros | nanos (REQUIRED for integer time columns — same contract as streaming_aggregation)"),
-      p("window", "string", "tumbling/sliding window size, e.g. '1 hour' (with time_column)"),
-      p("slide", "string", "slide interval; requires window"),
-      p("session_gap", "string", "session window gap; exclusive with window/slide"),
-      p("salted", "boolean", "two-phase skew-safe aggregate for hot keys (exact results; count/sum/min/max only; exclusive with rollup/cube/pivot/windows), default false"),
-      p("salt_factor", "integer", "subkeys per key when salted, default 16"))),
-    "type_conversion" -> ("Cast columns with raise/null/skip policies" -> Seq(
-      req("rules", "array", "[{column_path, target, on_error}, ...]; nested paths with '*' supported"))),
-    "schema_mapping" -> ("Project/rename columns (map mode) or join inputs (join mode)" -> Seq(
-      p("rules_by_dest", "object", "map mode: {dst_port: {dst_path: {src_port, src_path}}}"),
-      p("join_plan", "object", "join mode: {steps: [{left_port, right_port, left_on, right_on, how, output_port, broadcast?}]} — broadcast: left|right pins a broadcast-hash plan for a known-small side above Catalyst's auto threshold (results identical; the shuffle of the big side disappears)"))),
-    "split" -> ("Fan one input out to N identical ports (ports come from routes)" -> Seq()),
-    "sql" -> ("Run Spark SQL over the inbound ports (views named <component>_<port>)" -> Seq(
-      req("query", "string", "SQL text; reference inputs as <component>_<port>"))),
-    "merge" -> ("Union all inbound branches by column name" -> Seq()),
-    "set_op" -> ("Set operation over same-schema ports left/right" -> Seq(
-      req("op", "string",
-        "intersect | intersect_all | except | except_all | union_distinct " +
-          "(SQL semantics — non-_all variants deduplicate)"))),
-    "dedup" -> ("Deduplicate documents: exact, minhash, simhash, ngram, or embedding" -> Seq(
-      p("method", "string", "exact (default) | minhash | simhash | ngram | embedding"),
-      p("text_column", "string", "document text column, default 'text'"),
-      p("id_column", "string", "unique id column, default 'id'"),
-      p("keep_by", "array", "exact only: [[field, 1|-1], ...] quality-aware winner — keep the top row per normalized key under this order (id ascending tiebreak); omitted = lowest id wins. NULL keep_by values sort LAST in both directions (a null field never wins over a row with evidence; matches the oracle's nulls-last default)"),
-      p("shingle_n", "integer", "minhash verification shingle width, default 5"),
-      p("num_hashes", "integer", "minhash signature width, default 32"),
-      p("bands", "integer", "LSH bands: minhash default 16; embedding omitted = solved for the effective rows_per_band (recall-budget rule)"),
-      p("threshold", "number", "jaccard threshold: minhash 0.6, ngram 0.5"),
-      p("max_hamming", "integer", "simhash distance cap, default 3"),
-      p("ngram_n", "integer", "ngram width, default 3"),
-      p("max_df", "integer", "ngram stop-phrase document-frequency cap, default 10000"),
-      p("vector_column", "string", "embedding column, default 'embedding'"),
-      p("sim_threshold", "number", "embedding cosine threshold, default 0.95"),
-      p("dim", "integer", "embedding dimension, default 64"),
-      p("rows_per_band", "integer", "embedding sign bits per band; omitted = sized from the corpus count (measured lshDepthFor rule)"),
-      p("emit", "string", "survivors (default, pairwise drop-id_b) | pairs (near-dup pair table (id_a, id_b, score) for connected_components) | cluster (one min-id survivor per TRANSITIVE component; near-dup methods only)"),
-      p("max_iter", "integer", "emit=cluster: connected-components round cap, default 25"),
-      p("checkpoint_dir", "string", "emit=cluster: per-round RELIABLE checkpoint directory for the component loop (preemption-safe; superseded rounds' files deleted as it advances); unset = executor-block localCheckpoint. NOTE: Spark's checkpoint directory is a global SparkContext setting — declaring this retargets it for the whole application unless the context already points under this directory"))),
-    "hash_split" -> ("Deterministic train/val/test split: md5-bucket of the id routes each row to exactly one named out port (stable across engines/runs; no shuffle)" -> Seq(
-      req("splits", "array", "[{name, fraction}, ...] — out ports are the names; fractions must sum to 1 (honored to 0.01% on the 10,000-bucket grid)"),
-      p("id_column", "string", "column hashed for routing, default 'id'"))),
-    "sample" -> ("Deterministic seeded Bernoulli sample: keep a row iff md5(seed:id) bucket < rate*10000 (stable across engines/runs/partitionings; one narrow filter, no shuffle). Null ids are kept only at rate 1.0. rate_column switches to the per-row WEIGHTED face: keep probability = the row's own rate clamped into [0,1] (quality-weighted curation; NULL rates drop; raising a rate only ever ADDS rows — the bucket is rate-independent)" -> Seq(
-      p("fraction", "number", "default keep rate in [0, 1], honored to 0.01% on the 10,000-bucket grid (required unless rate_column is set)"),
-      p("rate_column", "string", "per-row keep-rate column — exclusive with fraction/strata_column"),
-      p("id_column", "string", "column hashed for the keep/drop decision, default 'id'"),
-      p("seed", "string", "hash salt, default '' — different seeds draw independent samples, and any seed is independent of hash_split's routing"),
-      p("strata_column", "string", "column whose values select per-stratum rates from strata_fractions"),
-      p("strata_fractions", "object", "{value: rate} overrides of the default fraction per stratum (downsample dominant strata, keep rare ones); unlisted and NULL strata use 'fraction'"))),
-    "budget_sample" -> ("Token-budget sample: per `by` mixing group, keep rows in deterministic md5(seed:id) order while the cumulative cost_column total stays <= budget ('keep ~N tokens per source'; one hash exchange + in-partition sort)" -> Seq(
-      req("budget", "integer", "inclusive running-cost ceiling per group"),
-      p("id_column", "string", "column hashed for the selection order, default 'id'"),
-      p("cost_column", "string", "per-row cost (token/char count; nulls cost 0), default 'n_tokens'"),
-      p("by", "array", "mixing-group columns (source, language, shard); empty needs allow_global"),
-      p("seed", "string", "hash salt, default '' — independent of sample/shuffle/hash_split draws"),
-      p("allow_global", "boolean", "permit the empty-`by` single-partition sort, default false"))),
-    "mix_sample" -> ("Mixture sampling: split total_budget across the weighted sources (per-source budget = floor(weight/Σweights × total_budget)) and keep each source's deterministic md5(seed:id)-order prefix while its cumulative cost_column total stays <= that share — the data-MIXING step ('50% web, 30% code, 20% books'). Sources not named in weights (and NULL sources) are dropped BEFORE the exchange; one narrow isin prefilter + one hash exchange on the source key (budget_sample's plan shape)" -> Seq(
-      req("total_budget", "integer", "inclusive total running-cost ceiling split across the weighted sources (floored shares never overshoot)"),
-      req("source_column", "string", "column naming each row's source; values not in weights drop"),
-      req("weights", "object", "{source: weight} relative composition (finite, > 0; any scale — normalized internally)"),
-      p("id_column", "string", "column hashed for the selection order, default 'id'"),
-      p("cost_column", "string", "per-row cost (token/char count; nulls cost 0), default 'n_tokens'"),
-      p("seed", "string", "hash salt, default '' — same key strings as budget_sample, independent of sample/shuffle/hash_split draws"))),
-    "embedding_transform" -> ("Embedding-column transforms, both narrow maps: op=normalize appends dest = v/‖v‖ (double array; NULL for a zero vector) + norm_column = ‖v‖ — unit vectors turn cosine into a dot product; op=quantize appends dest = round(v_i/scale) as an int8 array + scale_column = max|v_i|/127 — the 4× storage/bandwidth lever for a float32 embedding column (dequantize as q_i·scale)" -> Seq(
-      p("op", "string", "'normalize' (default) or 'quantize'"),
-      p("vector_column", "string", "embedding array column, default 'embedding'"),
-      p("dest", "string", "name of the added transformed-vector column, default 'vec_unit' / 'vec_q8' (must not collide)"),
-      p("norm_column", "string", "normalize only: name of the added L2-norm column, default 'vec_norm'"),
-      p("scale_column", "string", "quantize only: name of the added per-row scale column, default 'vec_scale'"))),
-    "pack_units" -> ("Contiguous-fill unit packing: within each `by` group, lay rows out in deterministic md5(seed:id) order and assign unit_column = floor((running-cost)/capacity) — the training shard / context window where the row starts; every unit carries ~capacity cost (a row may straddle a boundary). One hash exchange + in-partition sort (budget_sample's plan shape); the global shard key is (`by` values, unit_column)" -> Seq(
-      req("capacity", "integer", "target cost per unit (>= 1); a unit may overflow by < 1 row"),
-      p("id_column", "string", "column hashed for the layout order, default 'id'"),
-      p("cost_column", "string", "per-row cost (token/char count; nulls pack free), default 'n_tokens'"),
-      p("by", "array", "packing-group columns (source, language, shard); empty needs allow_global"),
-      p("seed", "string", "hash salt, default '' — same key strings as budget_sample, independent of sample/shuffle/hash_split draws"),
-      p("unit_column", "string", "name of the added unit-id column, default 'unit_id' (must not collide with an input column)"),
-      p("allow_global", "boolean", "permit the empty-`by` single-partition sort, default false"))),
-    "chunk" -> ("Context-window chunking: fan each document out into fixed-size character chunks of `size` with `overlap` characters shared between consecutive chunks (chunk starts 0, size-overlap, … < len; the last chunk may be shorter, none is empty). NULL/empty text emits no chunks. One narrow filter + posexplode in the scan's task — no shuffle" -> Seq(
-      req("size", "integer", "chunk length in characters (>= 1)"),
-      p("overlap", "integer", "characters shared between consecutive chunks, in [0, size), default 0"),
-      p("text_column", "string", "document text column, default 'text'"),
-      p("index_column", "string", "name of the added 0-based chunk index column, default 'chunk_index'"),
-      p("chunk_column", "string", "name of the added chunk text column, default 'chunk_text'"),
-      p("keep_text", "boolean", "keep the source text column, default false — after chunking the full document is dead weight in every downstream exchange"))),
-    "text_normalize" -> ("Text canonicalization (normalize-before-dedup): lowercase → accent-fold (1:1 translate) → punctuation strip (drop chars that are not unicode letter/digit/whitespace) → whitespace squeeze (runs → one space) → trim, each step opt-in/out, FIXED order so equal flags give equal bytes. Codegen'd narrow map, no shuffle; NULL stays NULL" -> Seq(
-      p("text_column", "string", "column to normalize, default 'text'"),
-      p("dest", "string", "land the result in this new column; default overwrites text_column in place"),
-      p("lowercase", "boolean", "apply lower(), default true"),
-      p("accent_fold", "boolean", "fold accented latin letters to ascii (char-for-char translate; multi-char folds like ß→ss are out of scope), default false"),
-      p("strip_punct", "boolean", "drop every char that is not a unicode letter, digit, or whitespace, default false"),
-      p("squeeze_ws", "boolean", "collapse whitespace runs to one space, default true"))),
-    "url_features" -> ("URL decomposition: append <prefix>scheme/host/domain/path parsed from a URL string column — the per-domain quota / blocklist / URL-dedup primitive (chain with group_cap on <prefix>domain for the CCNet-style dominance guard). domain = last two dot-labels of the host (PSL-free heuristic); userinfo/port are stripped from host; non-matching parts are NULL. Codegen'd regexp chains, no shuffle" -> Seq(
-      p("url_column", "string", "URL string column, default 'url'"),
-      p("prefix", "string", "output column prefix, default 'url_' (the four output names must not collide with input columns)"))),
-    "outlier_filter" -> ("Distribution-based outlier filter: keep rows whose numeric `column` sits inside the statistical fences — method=zscore (|v-mean| <= k·stddev, one map-side-combinable aggregate: the 100 TB default) or method=iqr (Tukey fences [q1-k·IQR, q3+k·IQR]; exact percentile buffers group values — set approx=true for the t-digest sketch at scale). Fences per `by` group or global; stats broadcast-join back so the big side never shuffles. NULL values and NULL group keys drop" -> Seq(
-      req("column", "string", "numeric signal column the fences are computed on"),
-      p("method", "string", "'zscore' (default) or 'iqr'"),
-      p("k", "number", "fence width multiplier (>= 0), default 3.0 (use 1.5 for classic Tukey)"),
-      p("by", "array", "compute fences per these group columns (per-source length norms differ); empty = global fences"),
-      p("approx", "boolean", "iqr only: use approx_percentile (bounded sketch state) instead of exact percentile, default false"))),
-    "json_extract" -> ("Typed JSON-path extraction from a JSON string column (event props, crawl metadata): each field rule lands one path as a typed column — codegen'd narrow map (get_json_object + cast), missing/uncastable values become NULL" -> Seq(
-      req("fields", "array", "[{path, dest, type?}, ...] — path is JSONPath ('$.k'; bare names normalize), type one of string|integer|float|boolean (default string)"),
-      p("column", "string", "JSON string column, default 'props'"),
-      p("keep_source", "boolean", "keep the raw JSON column, default true — drop it to keep the widest column out of downstream exchanges"))),
-    "group_cap" -> ("Per-group row cap: keep at most `cap` rows per `by` group ('at most N docs per domain' — the source-dominance guard). order_by keeps the TOP rows under that order (quality cap, id tiebreak); empty order_by draws a seeded uniform md5(seed:id) subset. One hash exchange + in-partition sort (WindowOp's shape)" -> Seq(
-      req("cap", "integer", "max rows kept per group (>= 1)"),
-      p("id_column", "string", "deterministic tiebreak / hash key, default 'id'"),
-      p("by", "array", "quota-group columns (source, domain, language); empty needs allow_global"),
-      p("order_by", "array", "[[field, 1|-1], ...] — keep the top rows under this order; omitted = seeded uniform draw"),
-      p("seed", "string", "hash salt for the uniform draw, default '' — independent of sample/shuffle/hash_split hashing"),
-      p("allow_global", "boolean", "permit the empty-`by` single-partition rank, default false"))),
-    "streaming_group_cap" -> ("Streaming per-group quota (flatMapGroupsWithState): keep the FIRST `cap` rows per `by` group over the stream's lifetime — one Long of state per distinct group, no watermark. The cap is exact across microbatches; the kept subset follows arrival order (streams have no replayable order — use batch group_cap for order-exact curation). STATE GROWS WITH GROUP CARDINALITY AND NEVER EXPIRES: a lifetime quota cannot time out (an expired counter would re-admit rows past the cap), so state is one counter per distinct group ever seen, forever — key on bounded-cardinality columns (source, language, shard), never a per-document id" -> Seq(
-      req("cap", "integer", "max rows emitted per group over the stream's lifetime (>= 1)"),
-      p("by", "array", "quota-group columns (bounded-cardinality keys: source, language, shard — state holds one counter per distinct group forever)"))),
-    "top_tokens" -> ("Corpus top-k vocabulary / n-gram stats: the k most frequent lowercase whitespace tokens (n=1, column `token`) or word n-grams counted per POSITION (n>1, column `gram` — a dominating bigram/trigram is navigation chrome or licence boilerplate), with occurrence counts and a deterministic (count desc, gram asc) boundary. Explode → partial count → one shuffle → TakeOrderedAndProject; batch-only (a global top-k over an unbounded stream never finalizes)" -> Seq(
-      req("k", "integer", "number of top entries (> 0)"),
-      p("n", "integer", "gram width, default 1 (tokens)"),
-      p("text_column", "string", "document text column, default 'text'"),
-      p("sample_fraction", "number", "in (0, 1], default 1.0 (exact). Below 1: count grams over a deterministic md5(seed:id) document sample — the corpus-scale path (gram volume is linear in corpus tokens; frequency RANKS converge fast under uniform sampling, and the md5 sample replays bit-exactly on any engine, so the sampled top-k is a stable documented estimate, not a silent cap)"),
-      p("sample_id_column", "string", "document id hashed for the sample, default 'doc_id'"),
-      p("sample_seed", "string", "sample hash salt, default '' — independent of hash_split/sample seeds"))),
-    "gopher_filter" -> ("Gopher QUALITY rules (Rae et al. 2021 A1.1) as one stateless narrow projection — the complement of text_repetition's Gopher REPETITION signals: word-count bounds, mean-word-length bounds, symbol-to-word ratio (# and ellipses), bullet-start and ellipsis-end line fractions, alphabetic-word fraction, and >= min_stop_hits distinct English stopwords (the, be, to, of, and, that, have, with). Every rule is a boolean over integer counts and IEEE-exact divisions (oracle-replayable; ratios never leave the engine). emit=docs keeps passing rows; emit=flagged appends the per-rule booleans + gopher_pass for threshold tuning. NULL text fails every rule. Stateless, so it also runs incrementally over streams" -> Seq(
-      p("text_column", "string", "document text column, default 'text'"),
-      p("emit", "string", "'docs' (default — passing rows only) or 'flagged' (append g_* rule booleans + gopher_pass)"),
-      p("min_words", "integer", "word-count lower bound, default 50"),
-      p("max_words", "integer", "word-count upper bound, default 100000"),
-      p("min_mean_word_len", "number", "mean token length lower bound, default 3.0"),
-      p("max_mean_word_len", "number", "mean token length upper bound, default 10.0"),
-      p("max_symbol_ratio", "number", "(# + ellipsis occurrences) / words cap, default 0.1"),
-      p("max_bullet_ratio", "number", "bullet-start line fraction cap, default 0.9"),
-      p("max_ellipsis_ratio", "number", "ellipsis-end line fraction cap, default 0.3"),
-      p("min_alpha_ratio", "number", "fraction of words containing a letter floor, default 0.8"),
-      p("min_stop_hits", "integer", "distinct Gopher stopwords required, default 2"))),
-    "line_dedup" -> ("Corpus-level duplicate-line removal (RefinedWeb/CCNet boilerplate stripping): census the corpus's non-blank lines, call a line hot when it appears byte-exactly in more than max_docs DISTINCT documents (navigation chrome, cookie banners, licence footers), and rewrite every document with its hot lines removed. Blank lines pass through (paragraph structure survives); within-document repetition never promotes a line (per-document census); documents with no surviving lines — including NULL text — drop. The post-cut hot set is tiny and broadcasts (LeftAnti, no exchange on the exploded lines); one hash exchange regroups kept lines per document. strategy=set (identical survivors, spec-pinned) collects the hot set once — bounded by max_hot_lines, loud overflow — and rewrites via one codegen'd narrow remove_in_set projection: no regroup exchange, no join-back, the corpus-scale path after the census" -> Seq(
-      p("text_column", "string", "document text column, default 'text'"),
-      p("id_column", "string", "document id column (regroup key), default 'doc_id' — MUST be unique per document under strategy=join (the rewrite regroups and joins back on it; duplicate ids silently merge documents — dedup upstream if ids can collide; strategy=set rewrites per row and tolerates duplicates)"),
-      p("max_docs", "integer", "a line in more than this many distinct documents is removed, default 1"),
-      p("unit", "string", "'line' (default) or 'paragraph' (blank-line-separated blocks, the C4-style span — catches boilerplate whose internal line breaks vary only at the block level)"),
-      p("emit", "string", "'docs' (default — the rewritten documents) or 'hot' (the audit table: hot line + distinct-doc count, what WOULD be stripped — census only, for eyeballing a threshold)"),
-      p("strategy", "string", "'join' (default, fully lazy) or 'set' (eager bounded hot-set collect, narrow rewrite) — identical results, spec-pinned"),
-      p("max_hot_lines", "integer", "strategy=set driver-collect cap, default 1000000 — overflow fails loudly toward strategy=join"),
-      p("broadcast", "boolean", "strategy=join: broadcast the hot-line set, default true — disable when max_docs is low and the corpus dirty enough that the hot set outgrows the driver"))),
-    "dedup_against" -> ("Incremental exact dedup: keep only `in`-port rows whose normalized text key (lowercase, whitespace-collapse — the dedup family's exactKey) does NOT appear on the `reference` port — the ingest-time 'drop documents we already have' primitive that avoids re-deduplicating the whole corpus per batch. strategy=join (default, fully lazy): one anti-join, reference broadcasts when small. strategy=bloom (corpus-sized reference): probe a compact reference-key bloom as a codegen'd narrow map and send ONLY might-contain candidates to the exact join — bloom negatives are provably absent and skip the exchange; exactness preserved (a false positive just pays one row's join). NULL-text rows are always kept (a NULL key never equals)" -> Seq(
-      p("strategy", "string", "'join' (default) or 'bloom' — identical results, spec-pinned"),
-      p("text_column", "string", "document text column on the in port, default 'text'"),
-      p("reference_text_column", "string", "text column on the reference port, default = text_column"))),
-    "streaming_dedup_against" -> ("Stream-static incremental exact dedup: drop stream rows whose normalized text key already exists in the reference_path parquet corpus — a stateless stream-static LEFT ANTI join (no watermark, no state store; the reference is closed, unlike in-stream streaming_dedup which needs a watermark TTL). strategy=bloom builds a compact key bloom from the static reference at plan time and anti-joins only the stream's might-contain candidates. NULL-text rows pass through" -> Seq(
-      req("reference_path", "string", "parquet path of the existing corpus the stream is deduplicated against"),
-      p("strategy", "string", "'join' (default) or 'bloom' — identical results"),
-      p("text_column", "string", "document text column on the stream, default 'text'"),
-      p("reference_text_column", "string", "text column on the reference, default = text_column"))),
-    "streaming_line_dedup" -> ("Stream-static boilerplate-line strip: remove from every stream document the lines that appear byte-exactly in more than max_docs DISTINCT documents of the reference_path parquet corpus — the hot census comes from the closed reference at plan time (a census over an unbounded stream never finalizes), bounded-collected under max_hot_lines like batch line_dedup strategy=set, then applied as ONE codegen'd narrow remove_in_set projection: no explode, no shuffle, no watermark, no state. Blank lines pass through; documents with nothing left — including NULL text — drop" -> Seq(
-      req("reference_path", "string", "parquet path of the closed corpus whose hot lines define the boilerplate set"),
-      p("text_column", "string", "document text column on the stream, default 'text'"),
-      p("reference_text_column", "string", "text column on the reference, default = text_column"),
-      p("id_column", "string", "document id column on the reference (distinct-doc census key), default 'doc_id'"),
-      p("max_docs", "integer", "a line in more than this many distinct reference documents is hot, default 1"),
-      p("unit", "string", "'line' (default) or 'paragraph' — same census/rewrite over blank-line-separated blocks"),
-      p("max_hot_lines", "integer", "plan-time driver-collect cap, default 1000000 — overflow fails loudly"))),
-    "streaming_outlier_filter" -> ("Stream-static outlier gate: keep stream rows whose numeric `column` sits inside fences computed ONCE from the reference_path parquet baseline (an unwindowed aggregate over the stream itself could never finalize) — method=zscore or iqr, global or per `by` group, broadcast onto the stream as a stateless narrow filter (no watermark, no state store). NULL values and NULL group keys drop, matching the batch outlier_filter" -> Seq(
-      req("column", "string", "numeric signal column the fences apply to (must exist on both the stream and the reference)"),
-      req("reference_path", "string", "parquet path of the static baseline the fences are computed from"),
-      p("method", "string", "'zscore' (default) or 'iqr'"),
-      p("k", "number", "fence width multiplier (>= 0), default 3.0"),
-      p("by", "array", "compute/apply fences per these group columns; empty = global fences"),
-      p("approx", "boolean", "iqr only: approx_percentile on the reference, default false"))),
-    "shuffle" -> ("Deterministic seeded global shuffle: adds key_column = md5(seed:id) and returns a TOTAL order over it (one range exchange; same row order on any run/engine/partitioning — reproducible training order). Null ids take the fixed md5(seed:) key" -> Seq(
-      p("id_column", "string", "column hashed for the permutation, default 'id'"),
-      p("seed", "string", "hash salt, default '' — different seeds draw independent permutations, independent of hash_split/sample hashing"),
-      p("key_column", "string", "name of the added order-key column, default 'shuffle_key' (must not collide with an input column)"))),
-    "sort" -> ("ORDER BY / OFFSET / LIMIT over the input (one range exchange; skip compiles to GlobalLimit-with-offset, no global window)" -> Seq(
-      req("sort", "array", "[[field, 1|-1], ...] — include a unique tie-breaking key for deterministic output"),
-      p("skip", "integer", "rows to skip after sorting, default 0"),
-      p("limit", "integer", "max rows after skip"))),
-    "window" -> ("Window functions over PARTITION BY + ORDER BY: row_number/rank/dense_rank/percent_rank/cume_dist/ntile, lag/lead, running sum/min/max/avg/count/first/last — top-n per group composes as window then filter (rank <= n), quality-percentile curation as percent_rank/ntile then filter. One hash exchange on the partition keys" -> Seq(
-      req("functions", "array", "[{fn, src?, offset?, frame_rows?, dest}, ...] — rank family takes no src; lag/lead use offset (default 1); ntile reads its bucket count from offset; ordered aggregates run UNBOUNDED PRECEDING..CURRENT ROW (SQL default frame), unordered span the partition; frame_rows=N switches an ordered aggregate to a trailing ROWS window of the last N rows (moving average/rolling sum)"),
-      p("partition_by", "array", "partition keys; empty requires allow_global"),
-      p("order_by", "array", "[[field, 1|-1], ...] — required by rank/lag/lead/first/last; include a unique tie-breaker for determinism"),
-      p("allow_global", "boolean", "opt into an empty partition_by — the whole input flows through ONE task (small frames only; use sort/shuffle for global order at scale)"))),
-    "connected_components" -> ("Label every pair-table endpoint with the min id reachable from it (transitive dedup clusters)" -> Seq(
-      p("src_column", "string", "edge source column, default 'id_a'"),
-      p("dst_column", "string", "edge destination column, default 'id_b'"),
-      p("max_iter", "integer", "propagation round cap (rounds are O(log diameter)), default 25"),
-      p("check_every", "integer", "convergence-count cadence, default 1 (ScaleProbe-measured: the count is ~21% of a round, so skipping only pays when rounds >> cadence)"),
-      p("checkpoint_dir", "string", "set = per-round RELIABLE checkpoint to this directory (survives executor loss — the preemption-safe path; superseded rounds' files are deleted as the loop advances); unset (default) = executor-block localCheckpoint, cheaper but lost with an executor. NOTE: Spark's checkpoint directory is a global SparkContext setting — declaring this retargets it for the whole application unless the context already points under this directory"))),
-    "text_analysis" -> ("Token counts, quality ratios, language id" -> Seq(
-      p("text_column", "string", "document text column, default 'text'"),
-      p("repetition", "boolean", "append Gopher repetition signals (dup_line_ratio, top_gram, top_gram_ratio, dup_gram_ratio), default false"),
-      p("repetition_n", "integer", "word n-gram width for the repetition signals, default 2"),
-      p("entropy", "boolean", "append char_entropy — Shannon entropy of the text's UTF-8 bytes in bits/byte (compression-proxy quality signal: prose ~4.0-4.5; base64/padding/binary score far off), default false"))),
-    "similarity" -> ("Nearest-neighbor search: exact k-NN join or IVF cell probe" -> Seq(
-      p("method", "string", "knn (default; ports corpus/queries) | ivf (ports corpus/centroids/query) | ivf_index (ports centroids/query over a write_ivf_index layout)"),
-      p("index_path", "string", "ivf_index: directory written by write_ivf_index (REQUIRED when method=ivf_index)"),
-      p("query_column", "string", "ivf_index: query port's vector column, default 'qvec'"),
-      p("query_id", "string", "knn: query id column, default 'id'. ivf_index: if the query port carries this column (default 'query_id'), it is a multi-row BATCH probe — per-query cell ranking, one pruned scan, top-k per query; without it the port must carry exactly one row"),
-      p("vector_column", "string", "embedding column, default 'embedding'"),
-      p("k", "integer", "neighbors per query, default 10"),
-      p("corpus_id", "string", "knn: corpus id column, default 'id'"),
-      p("id_column", "string", "ivf: corpus id column, default 'id'"),
-      p("nprobe", "integer", "ivf: probed cells, default max(2, cells/8) from the centroid count"))),
-    "pii_redact" -> ("Mask emails/phones/IPv4 in a text column (<EMAIL>/<PHONE>/<IP>) and add n_emails/n_phones/n_ips counts" -> Seq(
-      p("text_column", "string", "column to redact in place, default 'text'"))),
-    "decontaminate" -> ("Flag/drop corpus docs sharing word n-grams with a benchmark set (ports corpus/benchmark) — the train/test-overlap guard" -> Seq(
-      p("text_column", "string", "text column on both ports, default 'text'"),
-      p("id_column", "string", "corpus id column (join strategy), default 'doc_id'"),
-      p("ngram_n", "integer", "word n-gram width, default 3"),
-      p("min_overlap", "integer", "shared distinct grams to count as contaminated, default 1"),
-      p("strategy", "string", "broadcast (default; benchmark grams probed via a codegen'd set, corpus stays a narrow map) | join (ids-only posting join for huge benchmarks) | bloom (sketch prefilter: only candidate docs pay the exact join — the middle path; results exact under all three)"),
-      p("emit", "string", "flagged (default; appends n_hits/contaminated) | clean (keeps only uncontaminated rows) | pairs (audit: one (corpus_id, bench_id, n_shared) row per contaminated pair; always the join shape)"),
-      p("bench_id_column", "string", "pairs: benchmark id column, default = id_column"),
-      p("max_df", "integer", "pairs: corpus-side document-frequency cap on the posting join (stop-gram guard), default 100000 — capped grams leave the per-pair n_shared counts (docs contaminated only through capped grams keep a row with null bench_id, the loud signal the cap fired); the doc-level contamination set itself is never capped"))),
-    "write_bucketed" -> ("Bucketed external-table sink: tables bucketed+sorted the same way on their join key join with ZERO exchanges (sort-merge over aligned buckets). Data at filepath, metadata in the session catalog for read_table" -> Seq(
-      req("table", "string", "catalog table name (bare identifier) downstream read_table consumes"),
-      req("filepath", "string", "external data directory — nothing is written to a warehouse or metastore"),
-      req("buckets", "integer", "bucket count; align it across tables meant to join exchange-free"),
-      req("bucket_by", "array", "bucket key columns (the join key)"),
-      p("sort_by", "array", "in-bucket sort columns — lets the join skip its sort too")),
-    ),
-    "read_table" -> ("Catalog-table source (the read side of write_bucketed): the scan carries the bucket spec, so joins/aggs on the bucket key skip their exchange" -> Seq(
-      req("table", "string", "catalog table name registered by write_bucketed in this session"))),
-    "write_ivf_index" -> ("Write the corpus partitioned by nearest centroid cell (ports corpus/centroids) — the probe-prunable IVF layout" -> Seq(
-      req("filepath", "string", "index directory (one subdirectory per cell)"),
-      p("vector_column", "string", "embedding column, default 'embedding'"),
-      p("id_column", "string", "corpus id column, default 'id'"))),
-    "kmeans_train" -> ("Train k-means centroids (cell, cvec) for the ivf similarity method" -> Seq(
-      p("vector_column", "string", "embedding column, default 'embedding'"),
-      p("k", "integer", "number of centroids/cells, default ceil(sqrt(n)) from the corpus count"),
-      p("iters", "integer", "Lloyd iterations, default 5"))),
-    "range_join" -> ("Range/interval join: left rows matched to right [start,end] intervals, one-to-many (ports left/right)" -> Seq(
-      req("on", "string", "left-side value/time column the interval must contain (inclusive bounds)"),
-      req("start", "string", "right-side interval start column"),
-      req("end", "string", "right-side interval end column"),
-      p("by", "array", "optional equality keys — REQUIRED at scale unless the interval side is dimension-sized (without keys the right side broadcasts)"),
-      p("suffix", "string", "suffix for clashing right columns, default '_r'"),
-      p("join_type", "string", "inner (default) | left"))),
-    "asof_join" -> ("As-of join: nearest right row per left row (ports left/right)" -> Seq(
-      req("on", "string", "event-time column present on both sides"),
-      req("by", "array", "equality keys"),
-      p("suffix", "string", "suffix for clashing right columns, default '_r'"),
-      p("direction", "string", "backward (default): latest right at or before | forward: earliest at or after | nearest: closer of the two, ties to backward"),
-      p("tolerance", "string", "max match distance as a SQL literal (INTERVAL '1' HOUR for timestamps, a number for numeric times); farther matches become null"),
-      p("strategy", "string", "window (default; one shuffle on the by-keys, right side any size) | broadcast (interval-prepared right broadcasts, ZERO shuffle of the left — for corpus-sized left x dimension-sized right)"))),
-    "unpivot" -> ("Unpivot/melt: value columns become (variable, value) rows" -> Seq(
-      req("value_columns", "array", "columns melted into rows (must share a common type)"),
-      p("id_columns", "array", "columns kept as row identity"),
-      p("var_column", "string", "name of the variable column, default 'variable'"),
-      p("value_column", "string", "name of the value column, default 'value'"))),
-    "profile" -> ("Column-level data profile: count/nulls/distinct/min/max in one scan. histogram_column switches to the distribution face: fixed-width bucket counts (one narrow map + one shuffle over <= buckets keys)" -> Seq(
-      p("columns", "array", "columns to profile, default all"),
-      p("approx", "boolean", "HyperLogLog distincts instead of exact (the at-scale path)"),
-      p("histogram_column", "string", "numeric column to histogram instead of profiling (requires buckets/lo/hi)"),
-      p("buckets", "integer", "histogram bucket count (out-of-range values clamp into the edge buckets; v == hi lands in the top bucket)"),
-      p("lo", "number", "histogram domain lower bound (inclusive)"),
-      p("hi", "number", "histogram domain upper bound"))),
-    // streaming-only comp_types (StreamingJobs dispatch, not JobGraph):
-    "streaming_aggregation" -> ("Watermark-bounded windowed aggregation (streaming jobs only)" -> Seq(
-      req("time_column", "string", "event-time column (string/timestamp/date parsed; INT64 epochs additionally need time_unit)"),
-      p("time_unit", "string", "epoch scale when time_column is INT64: seconds | millis | micros | nanos (REQUIRED for integer time columns — the scale is not inferable)"),
-      req("watermark", "string", "late-data horizon, e.g. '10 minutes'"),
-      p("window", "string", "tumbling window width (required unless session_gap)"),
-      p("slide", "string", "slide interval for overlapping windows"),
-      p("session_gap", "string", "session window gap (exclusive with window/slide)"),
-      p("group_by", "array", "grouping columns next to the window"),
-      req("aggregations", "array", "[{src, op, dest}, ...] — src column, aggregate op, output name"))),
-    "streaming_dedup" -> ("Watermark-bounded exact dedup (streaming jobs only)" -> Seq(
-      req("time_column", "string", "event-time column (string/timestamp/date parsed; INT64 epochs additionally need time_unit)"),
-      p("time_unit", "string", "epoch scale when time_column is INT64: seconds | millis | micros | nanos (REQUIRED for integer time columns)"),
-      p("watermark", "string", "dedup state horizon, default '1 hour'"),
-      p("text_column", "string", "document text column, default 'text'"),
-      p("method", "string", "only 'exact' is streamable (near-dup families are batch-only)"))),
-    "streaming_decontaminate" -> ("Stream-static benchmark decontamination: flag/drop stream docs sharing word n-grams with a STATIC eval set (streaming jobs only; stateless broadcast probe)" -> Seq(
-      req("benchmark_path", "string", "parquet directory of the STATIC benchmark side — read as a batch frame, its distinct grams broadcast"),
-      p("text_column", "string", "text column on both sides, default 'text'"),
-      p("ngram_n", "integer", "word n-gram width, default 3"),
-      p("min_overlap", "integer", "shared distinct grams to count as contaminated, default 1"),
-      p("strategy", "string", "only 'broadcast' is streamable (the join strategy aggregates over the stream)"),
-      p("emit", "string", "flagged (default; appends n_hits/contaminated) | clean (keeps only uncontaminated rows)"))),
-    "streaming_range_join" -> ("Stream-static range/interval enrichment: STATIC right [start,end] intervals containing each stream row's value (streaming jobs only; stateless)" -> Seq(
-      req("right_path", "string", "parquet directory of the STATIC interval side — read as a batch frame, not a stream"),
-      req("on", "string", "stream-side value/time column the interval must contain (inclusive bounds)"),
-      req("start", "string", "right-side interval start column"),
-      req("end", "string", "right-side interval end column"),
-      p("by", "array", "optional equality keys (without them the interval side broadcasts)"),
-      p("suffix", "string", "suffix for clashing right columns, default '_r'"),
-      p("join_type", "string", "inner (default) | left"))),
-    "streaming_asof_join" -> ("Stream-static as-of enrichment: nearest STATIC right row per stream row (streaming jobs only; stateless, right side broadcasts)" -> Seq(
-      req("right_path", "string", "parquet directory of the STATIC right side (dimension table) — read as a batch frame, not a stream"),
-      req("on", "string", "event-time column present on both sides"),
-      req("by", "array", "equality keys"),
-      p("suffix", "string", "suffix for clashing right columns, default '_r'"),
-      p("direction", "string", "backward (default) | forward | nearest — same semantics as batch asof_join"),
-      p("tolerance", "string", "max match distance as a SQL literal; farther matches become null")))
-  ) ++ Seq("mariadb", "postgresql", "sqlserver", "jdbc").flatMap { db =>
-    Seq(
-      s"read_$db" -> (s"Read from $db via JDBC (table or query)" -> Seq(
-        p("url", "string", "JDBC url; omit when using a credentials context"),
-        p("context", "string", "credentials context id resolved per environment"),
-        p("entity_name", "string", "table to read (or use 'query')"),
-        p("query", "string", "SQL text; named :params bind from 'params'"),
-        p("params", "object", "named query parameter values"),
-        p("partition_column", "string", "numeric column for partitioned parallel read"),
-        p("lower_bound", "integer", "partition column min"),
-        p("upper_bound", "integer", "partition column max"),
-        p("num_partitions", "integer", "parallel read partitions, default 4"))),
-      s"write_$db" -> (s"Write to $db via JDBC" -> Seq(
-        p("url", "string", "JDBC url; omit when using a credentials context"),
-        p("context", "string", "credentials context id resolved per environment"),
-        req("entity_name", "string", "target table"),
-        p("if_exists", "string", "insert (default) | upsert | truncate | update"),
-        p("key_fields", "array", "conflict keys for upsert/update"),
-        p("where_conditions", "array", "UPDATE-mode where clauses"),
-        p("row_batch_size", "integer", "JDBC batch size, default 1000"))))
-  }
-
-  private val byType: Map[String, (String, Seq[Param])] = registry.toMap
 
   private def paramJson(pr: Param): String =
     s"${quote(pr.name)}:{" +
@@ -404,119 +22,63 @@ object ComponentSchemas {
 
   /** Shared renderer for the form/full/hidden views: one place owns the
     * properties/required envelope shape. */
-  private def renderSchema(compType: String, desc: String, params: Seq[Param],
+  private def renderSchema(d: ComponentDef, params: Seq[Param],
                            withPorts: Boolean): String = {
     val props = params.map(paramJson).mkString("{", ",", "}")
     val required = params.filter(_.required).map(x => quote(x.name)).mkString("[", ",", "]")
-    s"""{"comp_type":${quote(compType)},"description":${quote(desc)},""" +
+    s"""{"comp_type":${quote(d.name)},"description":${quote(d.doc)},""" +
       s""""properties":$props,"required":$required""" +
-      (if (withPorts) s",${portsJson(compType)}}" else "}")
+      (if (withPorts) s",${portsJson(d)}}" else "}")
   }
 
   /** One component's JSON-Schema-shaped description (the FORM view:
     * per-type config params only — reference /{comp_type}/form,
     * schemas.py:410-440, serves the schema with GUI-hidden wiring fields
     * removed; here the registry already is that projection). */
-  def schemaJson(compType: String): Option[String] = byType.get(compType).map {
-    case (desc, params) => renderSchema(compType, desc, params, withPorts = false)
-  }
+  def schemaJson(compType: String): Option[String] =
+    Components.byName.get(compType).map(d => renderSchema(d, d.params, withPorts = false))
 
   /** All comp_types with their schemas (GET /schemas). */
   def listJson: String =
-    registry.map { case (t, _) => schemaJson(t).get }.mkString("[", ",", "]")
+    Components.all.map(d => renderSchema(d, d.params, withPorts = false)).mkString("[", ",", "]")
 
-  def compTypes: Seq[String] = registry.map(_._1)
+  def compTypes: Seq[String] = Components.all.map(_.name)
 
   // ------------------------------------------------- full / hidden views
 
-  /** The wiring-level fields every component carries (JobConfig.
-    * parseComponent) — the engine's analogue of the reference's
-    * GUI-hidden base fields (routes/schemas are `used_in_table=False` on
-    * the reference's Component model, served only by the /hidden and
-    * /full views, schemas.py:442-479). */
-  private val baseFields: Seq[Param] = Seq(
-    req("name", "string", "unique component name within the job"),
-    req("comp_type", "string", "component type (see /schemas/component_types)"),
-    p("routes", "object", "{out_port: [{to, in_port}] | \"component\" | [\"component\"]} — downstream wiring"),
-    p("in_port_schemas", "object", "{in_port: {fields: [FieldDef]}} — required for every used in port"),
-    p("out_port_schemas", "object", "{out_port: {fields: [FieldDef]}} — required for every routed out port"),
-    p("extra_input_ports", "array", "additional declared in-port names (sql/schema_mapping fan-in)"),
-    p("extra_output_ports", "array", "additional declared out-port names (split fan-out)"))
-
-  /** Static port-contract description per comp_type — the data JobGraph's
-    * wiring validation enforces (JobGraph.outPorts/inPorts), attached to
-    * the /full view like the reference's class-var attachment
-    * (schemas.py `_attach_class_vars`: port specs + ALLOW_NO_INPUTS). */
-  private[api] def portInfo(compType: String): (Seq[(String, Boolean, Boolean)], Seq[(String, Boolean, Boolean)], Option[String]) =
-    compType match {
-      case t if t.startsWith("read_") =>
-        (Nil, Seq(("out", true, true)), None)
-      case "filter" =>
-        (Seq(("in", true, false)), Seq(("pass", true, true), ("fail", false, true)), None)
-      case "split" =>
-        (Seq(("in", true, false)), Nil,
-          Some("out ports are the declared extra_output_ports (fan-out tee)"))
-      case "hash_split" =>
-        (Seq(("in", true, false)), Nil,
-          Some("one out port per configured split name; unrouted splits are legal"))
-      case "merge" =>
-        (Seq(("in", true, true)), Seq(("merge", true, false)), None)
-      case "schema_mapping" =>
-        (Nil, Nil, Some("in ports from in_port_schemas/extra_input_ports (default 'in'); " +
-          "out ports from rules_by_dest keys / join_plan output_ports (default 'out')"))
-      case "sql" =>
-        (Nil, Seq(("out", true, true)),
-          Some("in ports from in_port_schemas/extra_input_ports (default 'in')"))
-      case "similarity" =>
-        (Nil, Seq(("out", true, true)),
-          Some("in ports by method: knn=corpus,queries | ivf=corpus,centroids,query | ivf_index=centroids,query"))
-      case "write_ivf_index" =>
-        (Seq(("corpus", true, false), ("centroids", true, false)),
-          Seq(("out", false, true)), None)
-      case "decontaminate" =>
-        (Seq(("corpus", true, false), ("benchmark", true, false)),
-          Seq(("out", true, true)), None)
-      case "dedup_against" =>
-        (Seq(("in", true, false), ("reference", true, false)),
-          Seq(("out", true, true)), None)
-      case "asof_join" | "set_op" | "range_join" =>
-        (Seq(("left", true, false), ("right", true, false)), Seq(("out", true, true)), None)
-      case t if t.startsWith("write_") =>
-        (Seq(("in", true, false)), Seq(("out", false, true)),
-          Some("out is an optional passthrough of the written rows"))
-      case _ =>
-        (Seq(("in", true, false)), Seq(("out", true, true)), None)
-    }
-
-  private def portsJson(compType: String): String = {
-    val (ins, outs, note) = portInfo(compType)
-    def arr(ps: Seq[(String, Boolean, Boolean)]) = ps.map { case (n, r, m) =>
-      s"""{"name":${quote(n)},"required":$r,"multi":$m}"""
+  /** The port contract as wiring validation enforces it, attached to the
+    * /full view like the reference's class-var attachment (schemas.py
+    * `_attach_class_vars`: port specs + ALLOW_NO_INPUTS). Params-dependent
+    * contracts render their ports for an empty config, plus the note. */
+  private def portsJson(d: ComponentDef): String = {
+    val ports = d.ports.of(graft.config.JobConfig.ComponentSpec(
+      d.name, d.name, org.json4s.JNothing, Map.empty, Map.empty, Map.empty, Nil, Nil))
+    def arr(ps: Seq[PortSpec]) = ps.map { p =>
+      s"""{"name":${quote(p.name)},"required":${p.required},"multi":${p.multi}}"""
     }.mkString("[", ",", "]")
-    s""""ports":{"in":${arr(ins)},"out":${arr(outs)},""" +
-      s""""allow_no_inputs":${compType.startsWith("read_")}""" +
-      note.map(n => s""","note":${quote(n)}""").getOrElse("") + "}"
+    s""""ports":{"in":${arr(ports.in)},"out":${arr(ports.out)},""" +
+      s""""allow_no_inputs":${ports.in.isEmpty}""" +
+      d.ports.note.map(n => s""","note":${quote(n)}""").getOrElse("") + "}"
   }
 
   /** /{comp_type}/full — form params + wiring base fields + the port
     * contract (nothing stripped; reference schemas.py:442-471). */
-  def fullSchemaJson(compType: String): Option[String] = byType.get(compType).map {
-    case (desc, params) =>
-      renderSchema(compType, desc, baseFields ++ params, withPorts = true)
-  }
+  def fullSchemaJson(compType: String): Option[String] =
+    Components.byName.get(compType).map(d =>
+      renderSchema(d, Components.baseFields ++ d.params, withPorts = true))
 
   /** /{comp_type}/hidden — ONLY the GUI-hidden wiring fields
     * (reference schemas.py:474-479). */
-  def hiddenSchemaJson(compType: String): Option[String] = byType.get(compType).map {
-    case (desc, _) => renderSchema(compType, desc, baseFields, withPorts = true)
-  }
+  def hiddenSchemaJson(compType: String): Option[String] =
+    Components.byName.get(compType).map(d =>
+      renderSchema(d, Components.baseFields, withPorts = true))
 
   /** GET /schemas/job — the job-config document schema ($defs preserved,
     * not inlined: reference schemas.py:362-388). Mirrors exactly what
     * JobConfig.parse accepts. */
   def jobSchemaJson: String = {
-    val compProps = baseFields.map(paramJson).mkString("{", ",", "}")
-    val compRequired = baseFields.filter(_.required).map(x => quote(x.name)).mkString("[", ",", "]")
+    val compProps = Components.baseFields.map(paramJson).mkString("{", ",", "}")
+    val compRequired = Components.baseFields.filter(_.required).map(x => quote(x.name)).mkString("[", ",", "]")
     s"""{"title":"JobConfig","type":"object","properties":{""" +
       s""""name":{"type":"string","description":"job name"},""" +
       s""""num_of_retries":{"type":"integer","description":"attempts beyond the first, default 0"},""" +

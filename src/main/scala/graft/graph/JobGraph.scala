@@ -3,9 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.JobConfig._
-import graft.io.{CsvIO, JsonIO}
-import graft.ops._
-import graft.schema.{FieldDef, SchemaValidator}
+import graft.ops.TypeConversionOp
+import graft.schema.SchemaValidator
 
 /**
  * Wiring validation + topological DataFrame fold — the Spark translation
@@ -19,7 +18,8 @@ import graft.schema.{FieldDef, SchemaValidator}
  * Validation mirrors the reference checks 1:1:
  *  - unique component names, routes point to known components
  *    (job_config.py:107-113);
- *  - sources reject incoming edges (runtimejob.py:218-227);
+ *  - sources reject incoming edges (runtimejob.py:218-227): they
+ *    declare no in ports, so the route check below refuses them;
  *  - required out ports need ≥1 route, fanout=one ports at most 1;
  *    required in ports need ≥1 upstream, fanin=one exactly 1
  *    (runtimejob.py:266-301);
@@ -34,58 +34,18 @@ import graft.schema.{FieldDef, SchemaValidator}
  * ≥2 routed out ports, is persisted so Spark's per-action lineage does not
  * recompute the shared prefix. BuiltJob.close() releases those handles —
  * ownership lives here, not in the operators.
+ *
+ * Per-comp_type knowledge (params, ports, build) lives in one place, the
+ * registry in graph/Components.scala; this object holds only what every
+ * component shares.
  */
 object JobGraph {
 
-  final case class PortSpec(name: String, required: Boolean, multi: Boolean)
-
-  /** Static port contract per component type. `multi`=true on an out port
-    * allows fan-out to many edges; on an in port allows fan-in of many. */
-  private[graft] def outPorts(c: ComponentSpec): Seq[PortSpec] = c.compType match {
-    case "filter" => Seq(PortSpec("pass", required = true, multi = true),
-      PortSpec("fail", required = false, multi = true))
-    case "split" => c.extraOutputPorts.map(PortSpec(_, required = true, multi = true))
-    // one out port per declared split; unrouted splits are legal (a
-    // pipeline keeping only `train` simply doesn't route val/test)
-    case "hash_split" =>
-      parseSplits(c).map(s => PortSpec(s._1, required = false, multi = true))
-    case "merge" => Seq(PortSpec("merge", required = true, multi = false))
-    case "schema_mapping" =>
-      val declared = (parseMapRules(c).keySet ++ parseJoinPlan(c).map(_.outputPort).toSet ++
-        c.extraOutputPorts).toSeq
-      val exposed = if (declared.nonEmpty) declared else Seq("out")
-      exposed.sorted.map(PortSpec(_, required = false, multi = true))
-    case t if t.startsWith("write_") =>
-      Seq(PortSpec("out", required = false, multi = true)) // optional passthrough
-    case _ => Seq(PortSpec("out", required = true, multi = true))
-  }
-
-  private[graft] def inPorts(c: ComponentSpec): Seq[PortSpec] = c.compType match {
-    case t if t.startsWith("read_") => Nil // sources: ALLOW_NO_INPUTS
-    case "merge" => Seq(PortSpec("in", required = true, multi = true))
-    case "schema_mapping" | "sql" =>
-      val declared = (c.inPortSchemas.keySet ++ c.extraInputPorts).toSeq
-      val exposed = if (declared.nonEmpty) declared else Seq("in")
-      exposed.sorted.map(PortSpec(_, required = true, multi = false))
-    case "similarity" =>
-      val ports = c.params \ "method" match {
-        case org.json4s.JString("ivf")       => Seq("corpus", "centroids", "query")
-        case org.json4s.JString("ivf_index") => Seq("centroids", "query")
-        case _                               => Seq("corpus", "queries")
-      }
-      ports.map(PortSpec(_, required = true, multi = false))
-    case "write_ivf_index" =>
-      Seq("corpus", "centroids").map(PortSpec(_, required = true, multi = false))
-    case "decontaminate" =>
-      Seq("corpus", "benchmark").map(PortSpec(_, required = true, multi = false))
-    case "dedup_against" =>
-      Seq("in", "reference").map(PortSpec(_, required = true, multi = false))
-    case "asof_join" | "set_op" | "range_join" =>
-      Seq("left", "right").map(PortSpec(_, required = true, multi = false))
-    case _ => Seq(PortSpec("in", required = true, multi = false))
-  }
-
-  private def isSource(c: ComponentSpec): Boolean = c.compType.startsWith("read_")
+  /** The registry entry of a known comp_type (validation has already
+    * rejected unknown ones). */
+  private def defOf(c: ComponentSpec): ComponentDef = Components.byName(c.compType)
+  private[graft] def inPorts(c: ComponentSpec): Seq[PortSpec] = defOf(c).ports.of(c).in
+  private def outPorts(c: ComponentSpec): Seq[PortSpec] = defOf(c).ports.of(c).out
 
   final case class BuiltJob(
       frames: Map[(String, String), DataFrame],
@@ -124,34 +84,80 @@ object JobGraph {
       else c
     })
 
-  /** Required params per comp_type, read from the served /schemas
-    * registry (one source of truth for discovery AND validation). */
-  private lazy val requiredParams: Map[String, Seq[String]] =
-    graft.api.ComponentSchemas.registry.map { case (t, (_, ps)) =>
-      t -> ps.filter(_.required).map(_.name)
-    }.toMap
-
   /** Validate wiring only (throws on contract violations). */
   def validate(spec0: JobSpec): Unit = validateDerived(deriveSchemas(spec0))
 
+  /** The registry entry a component runs under in this fold — or the
+    * rejection: an unknown comp_type (a typo like 'text_normalise' must
+    * not reach execute time, after every retry and backoff), a
+    * streaming-only twin in a batch job, or a batch-only type in a
+    * streaming job. */
+  private def resolve(spec: JobSpec, c: ComponentSpec, streaming: Boolean): ComponentDef =
+    Components.byName.get(c.compType) match {
+      case None => throw new IllegalArgumentException(
+        s"component ${c.name}: unknown comp_type '${c.compType}' " +
+          "(GET /schemas lists the registry)")
+      case Some(d) if streaming && !d.runs.streaming =>
+        val supported = Components.all.filter(_.runs.streaming).map(_.name).sorted
+        throw new IllegalArgumentException(
+          s"streaming job ${spec.name}: comp_type '${c.compType}' (${c.name}) is not " +
+            s"streamable — supported: ${supported.mkString(", ")}; " +
+            "aggregation/dedup need watermark semantics (see streaming/Streaming.scala)")
+      case Some(d) if !streaming && !d.runs.batch => throw new IllegalArgumentException(
+        s"component ${c.name}: comp_type '${c.compType}' runs only in streaming " +
+          "jobs (graft.streaming.StreamingJobs); its batch counterpart is " +
+          s"'${c.compType.stripPrefix("streaming_")}'")
+      case Some(d) => d
+    }
+
+  /** " (did you mean 'x'?)" for the closest candidate within a third of
+    * the word's length in edits, else "". */
+  private def didYouMean(word: String, candidates: Iterable[String]): String = {
+    def edits(a: String, b: String): Int = {
+      var prev = Array.tabulate(b.length + 1)(identity)
+      for (i <- 1 to a.length) {
+        val cur = Array.fill(b.length + 1)(i)
+        for (j <- 1 to b.length)
+          cur(j) = math.min(math.min(cur(j - 1), prev(j)) + 1,
+            prev(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+        prev = cur
+      }
+      prev(b.length)
+    }
+    candidates.map(k => k -> edits(word, k))
+      .filter(_._2 <= math.max(1, word.length / 3))
+      .minByOption(_._2).map(k => s" (did you mean '${k._1}'?)").getOrElse("")
+  }
+
+  private val baseFieldNames: Set[String] = Components.baseFields.map(_.name).toSet
+
   /** Validation body over an already-derived spec (build() derives once
-    * and calls this directly instead of re-deriving via validate). */
-  private def validateDerived(spec: JobSpec): Unit = {
+    * and calls this directly instead of re-deriving via validate);
+    * `streaming` selects which fold's comp_types are accepted. */
+  private[graft] def validateDerived(spec: JobSpec, streaming: Boolean = false): Unit = {
     val byName = spec.components.map(c => c.name -> c).toMap
     require(byName.size == spec.components.size, {
       val dups = spec.components.groupBy(_.name).filter(_._2.size > 1).keys
       s"duplicate component names: ${dups.mkString(", ")}"
     })
-    // unknown comp_type rejected FIRST — a typo ('text_normalise') used
-    // to sail through (outPorts/inPorts have defaults, requiredParams
-    // yields Nil for unknown keys) and only die at execute time after
-    // spending every retry attempt and backoff; it must also precede the
-    // port checks below, whose default-port complaints would mask the
-    // real problem
-    for (c <- spec.components)
-      require(JobGraph.requiredParams.contains(c.compType),
-        s"component ${c.name}: unknown comp_type '${c.compType}' " +
-          "(GET /schemas lists the registry)")
+    // comp_type and param keys are checked FIRST: the port checks below
+    // would otherwise mask the real problem with default-port complaints
+    for (c <- spec.components) {
+      val d = resolve(spec, c, streaming)
+      // a key that is neither a wiring field nor a declared param is a
+      // typo ("seperator") the build would silently ignore for its default
+      val unknown = c.params match {
+        case org.json4s.JObject(fields) =>
+          fields.map(_._1).filterNot(k => baseFieldNames(k) || d.paramNames(k))
+        case _ => Nil
+      }
+      require(unknown.isEmpty,
+        s"component ${c.name} (${c.compType}): unknown param" +
+          (if (unknown.size > 1) "s " else " ") +
+          unknown.map(k => s"'$k'" + didYouMean(k, d.paramNames ++ baseFieldNames)).mkString(", ") +
+          s"; declared: ${d.params.map(_.name).mkString(", ")}")
+    }
+
     // routes point at known components and known in-ports
     for (c <- spec.components; (port, dsts) <- c.routes; d <- dsts) {
       val target = byName.getOrElse(d.to, throw new IllegalArgumentException(
@@ -168,13 +174,9 @@ object JobGraph {
       }).groupBy(identity).view.mapValues(_.size).toMap
 
     for (c <- spec.components) {
-      if (isSource(c)) {
-        val n = incoming.collect { case ((t, _), cnt) if t == c.name => cnt }.sum
-        require(n == 0, s"source ${c.name} has $n incoming edge(s)")
-      }
       for (p <- outPorts(c)) {
         val n = c.routes.get(p.name).map(_.size).getOrElse(0)
-        require(!(p.required && n == 0) || c.compType.startsWith("write_"),
+        require(!(p.required && n == 0),
           s"component ${c.name}: required out port '${p.name}' has no route")
         require(p.multi || n <= 1,
           s"component ${c.name}: out port '${p.name}' must have exactly one successor")
@@ -191,12 +193,10 @@ object JobGraph {
       // so a config that would only fail at execute time ("missing
       // 'filepath'", after spending retry attempts and backoff) is
       // rejected HERE — create/validate time, like the reference's
-      // throwaway RuntimeJob construction. Consistency of this list
-      // with the runComponent readers is pinned by the gate: every
-      // COVERAGE job config passes through this check.
+      // throwaway RuntimeJob construction.
       // an explicit JSON null is as absent as a missing key — "filepath":
       // null must fail HERE too, not at execute time after retry/backoff
-      for (p <- JobGraph.requiredParams.getOrElse(c.compType, Nil))
+      for (p <- defOf(c).params.filter(_.required).map(_.name))
         require((c.params \ p) match {
           case org.json4s.JNothing | org.json4s.JNull => false
           case _ => true
@@ -311,29 +311,11 @@ object JobGraph {
           }
         } else inByPort
 
-      val (outs, sink) = runComponent(spark, c, cachedIn, spec.components)
+      val (outs, sink) = defOf(c).build(new BuildCtx(spark, c, cachedIn, spec.components))
       sink.foreach(a => sinks += ((c.name, a)))
 
-      // every routed port must actually be produced in this component's
-      // configuration: a route from a port runComponent never emits used
-      // to be SILENTLY dropped — a merge downstream simply unioned fewer
-      // inputs (silent data loss) or a single-edge consumer died later
-      // with a misleading 'no input on port' error
-      for ((port, dsts) <- c.routes if dsts.nonEmpty)
-        require(outs.contains(port),
-          s"component ${c.name} (${c.compType}): route from out port " +
-            s"'$port', which this configuration does not produce " +
-            s"(produced: ${outs.keys.mkString(", ")})")
-
-      for ((port, df) <- outs) {
+      for ((port, checked) <- checkedOutputs(c, outs, validateData)) {
         val edges = c.routes.getOrElse(port, Nil)
-        // structural schema contract on the producing port
-        val checked = c.outPortSchemas.get(port) match {
-          case Some(expected) if edges.nonEmpty =>
-            if (validateData) SchemaValidator.enforce(df, expected)
-            else SchemaValidator.enforce(df, expected, structuralOnly = true)
-          case _ => df
-        }
         val observed = instrumentTag match {
           case Some(tag) =>
             checked.observe(s"graft.$tag.${c.name}.$port", count(lit(1)).as("rows"))
@@ -366,6 +348,28 @@ object JobGraph {
     }
   }
 
+  /** Both folds' contract on one component's outputs: every routed port
+    * must be produced in this configuration (else a merge downstream
+    * would silently union fewer inputs, or a single-edge consumer die
+    * later with a misleading 'no input on port' error), and each routed
+    * port is checked against its declared schema (structurally, plus the
+    * data checks when `validateData`). */
+  private[graft] def checkedOutputs(c: ComponentSpec, outs: Map[String, DataFrame],
+                                    validateData: Boolean): Map[String, DataFrame] = {
+    for ((port, dsts) <- c.routes if dsts.nonEmpty)
+      require(outs.contains(port),
+        s"component ${c.name} (${c.compType}): route from out port " +
+          s"'$port', which this configuration does not produce " +
+          s"(produced: ${outs.keys.mkString(", ")})")
+    outs.map { case (port, df) =>
+      port -> (c.outPortSchemas.get(port) match {
+        case Some(expected) if c.routes.getOrElse(port, Nil).nonEmpty =>
+          SchemaValidator.enforce(df, expected, structuralOnly = !validateData)
+        case _ => df
+      })
+    }
+  }
+
   /** Dry-run plan inspection: build the whole DAG — config parsing,
     * schema validation, and Catalyst analysis/optimization all run,
     * exactly as a real execution would plan them — and return each
@@ -387,24 +391,6 @@ object JobGraph {
     finally built.close()
   }
 
-  /** JDBC endpoint resolution: an explicit `url` param wins (tests/local
-    * wiring), otherwise `context` names a registered
-    * CredentialsMappingContext and the url + auth options assemble
-    * engine-side from the credentials resolved for the active environment
-    * (explicit `environment` param > EXECUTION_ENV > context default) —
-    * so secrets never sit in job configs, exactly the reference's rule
-    * (database.py:57-95, credentials_mapping_context.py:152-217). */
-  private def resolveJdbc(c: ComponentSpec, dialect: graft.io.JdbcIO.Dialect)
-      : (String, Map[String, String]) =
-    c.str("url") match {
-      case Some(u) => (u, Map.empty)
-      case None =>
-        val ctx = c.str("context").getOrElse(throw new IllegalArgumentException(
-          s"component ${c.name}: jdbc components need 'url' or 'context'"))
-        val creds = graft.runtime.Contexts.resolve(ctx, c.str("environment"))
-        (graft.io.JdbcIO.urlFor(dialect, creds),
-          graft.io.JdbcIO.credentialOptions(dialect, creds))
-    }
 
   /** LSH depth for the declarative `dedup method=embedding` component.
     * Explicit `bands`/`rows_per_band` config always wins; each OMITTED
@@ -423,1067 +409,5 @@ object JobGraph {
     val r = explicitR.getOrElse(Similarity.lshRowsFor(math.max(1L, corpusCount)))
     val bands = explicitBands.getOrElse(Similarity.lshBandsFor(r, simThreshold))
     (bands, r)
-  }
-
-  /** Serializes the sql component's view-register → analyze → drop
-    * critical section (temp views are session-global). */
-  private val sqlViewLock = new Object
-
-  /** Dispatch one component. Returns (out frames, optional sink action). */
-  private def runComponent(spark: SparkSession, c: ComponentSpec,
-                           in: Map[String, Seq[DataFrame]],
-                           allSpecs: Seq[ComponentSpec])
-      : (Map[String, DataFrame], Option[() => Unit]) = {
-
-    def one(port: String = "in"): DataFrame =
-      in.getOrElse(port, throw new IllegalArgumentException(
-        s"component ${c.name}: no input on port '$port'")).head
-
-    // multi-port components (similarity, asof/range join, set_op, index
-    // sinks): exactly one edge per named port
-    def port(p: String): DataFrame = {
-      val xs = in.getOrElse(p, Nil)
-      require(xs.size == 1,
-        s"${c.compType} ${c.name}: port '$p' needs exactly one edge")
-      xs.head
-    }
-
-    def declaredSchema(port: String): Option[Seq[FieldDef]] = c.outPortSchemas.get(port)
-
-    c.compType match {
-      case "read_csv" =>
-        // multiline=false (default) = reference parity, line-splittable
-        // parallel parse; true = quote-aware whole-record parse, the
-        // knob that reads back write_csv output whose cells carry
-        // embedded newlines (the writer quotes them across physical
-        // lines, which a line-based parse splits into corrupt rows)
-        (Map("out" -> CsvIO.read(spark, c.reqStr("filepath"),
-          c.str("separator").getOrElse(","),
-          multiLine = c.bool("multiline", default = false))), None)
-
-      case "read_json" =>
-        val path = c.reqStr("filepath")
-        val schema = declaredSchema("out").map(FieldDef.toStructType)
-        val df =
-          if (JsonIO.isNdjsonPath(path) && schema.isDefined)
-            JsonIO.readNdjsonLenient(spark, path, schema.get)
-          else JsonIO.read(spark, path, schema,
-            multiLine = !JsonIO.isNdjsonPath(path))
-        (Map("out" -> df), None)
-
-      case "read_parquet" =>
-        // ParquetIO caches inferred schemas (listing-fingerprint
-        // invalidated) — repeated builds over the same inputs skip the
-        // ~70 ms footer-inference constant (tools/JobPhaseProbe).
-        // merge_schema=true opts into schema-evolution reads (a dataset
-        // whose newer files added columns): Spark merges ALL footers
-        // into the union schema — a per-file pass worth paying only
-        // when files genuinely disagree, so it is explicit, and it
-        // bypasses the single-footer cache.
-        (Map("out" ->
-          (if (c.bool("merge_schema", false))
-            spark.read.option("mergeSchema", "true").parquet(c.reqStr("filepath"))
-          else graft.io.ParquetIO.read(spark, c.reqStr("filepath")))), None)
-
-      case "read_orc" =>
-        (Map("out" -> graft.io.OrcIO.read(spark, c.reqStr("filepath"))), None)
-
-      // ORC sink with the parquet sink's layout levers (partition_by,
-      // coalesce) — see OrcIO's scaladoc for the format's scale notes
-      case "write_orc" =>
-        val df = one()
-        val path = c.reqStr("filepath")
-        val parts = c.strSeqParam("partition_by")
-        val coalesceTo = c.intOpt("coalesce")
-        coalesceTo.foreach(n => require(n >= 1,
-          s"write_orc ${c.name}: coalesce must be >= 1, got $n"))
-        (Map("out" -> df), Some(() =>
-          graft.io.OrcIO.write(df, path, parts, coalesceTo)))
-
-      case "read_xml" =>
-        (Map("out" -> graft.io.XmlIO.read(spark, c.reqStr("filepath"),
-          c.str("record_tag").getOrElse("record"))), None)
-
-      case "write_xml" =>
-        val df = one()
-        val path = c.reqStr("filepath")
-        val root = c.str("root_tag").getOrElse("root")
-        val rec = c.str("record_tag").getOrElse("record")
-        (Map("out" -> df), Some(() =>
-          graft.io.XmlIO.write(df, path, root, rec,
-            singleFile = c.bool("single_file", true),
-            append = c.bool("append", false))))
-
-      case "read_excel" =>
-        (Map("out" -> graft.io.ExcelIO.read(spark, c.reqStr("filepath"),
-          c.str("sheet_name"))), None)
-
-      case "write_excel" =>
-        val df = one()
-        val path = c.reqStr("filepath")
-        val sheet = c.str("sheet_name").getOrElse("Sheet1")
-        (Map("out" -> df), Some(() =>
-          graft.io.ExcelIO.write(df, path, sheet, append = c.bool("append", false))))
-
-      case "read_mongodb" =>
-        val schema = c.outPortSchemas.getOrElse("out",
-          throw new IllegalArgumentException(s"read_mongodb ${c.name}: needs out schema"))
-        val sort = (c.params \ "sort") match {
-          case org.json4s.JArray(items) => items.collect {
-            case org.json4s.JArray(List(org.json4s.JString(f), org.json4s.JInt(d))) =>
-              (f, d.toInt)
-          }
-          case _ => Nil
-        }
-        (Map("out" -> graft.io.MongoIO.read(spark,
-          graft.io.MongoIO.InMemory(c.reqStr("store")), c.reqStr("entity_name"),
-          schema, filter = c.scalarMapParam("query_filter"), sort = sort,
-          skip = c.int("skip", 0),
-          limit = if (c.int("limit", -1) >= 0) Some(c.int("limit", -1)) else None,
-          splitKey = c.str("split_key"))), None)
-
-      case "write_mongodb" =>
-        val df = one()
-        val factory = graft.io.MongoIO.InMemory(c.reqStr("store"))
-        val entity = c.reqStr("entity_name")
-        val mode = c.str("if_exists").getOrElse("insert")
-        val keys = c.strSeqParam("key_fields")
-        val matchFilter = c.scalarMapParam("match_filter")
-        val updateFields = c.strSeqParam("update_fields")
-        (Map("out" -> df), Some(() =>
-          graft.io.MongoIO.write(df, factory, entity, mode, keys,
-            matchFilter = matchFilter, updateFields = updateFields)))
-
-      case t if t == "read_jdbc" || t == "read_mariadb" ||
-                t == "read_postgresql" || t == "read_sqlserver" =>
-        // reference: arbitrary query or entity_name, mariadb_read.py:17-70;
-        // partitioned-read knobs are the Spark-side scale upgrade
-        import graft.io.JdbcIO
-        // bounds read FULL-RANGE: bigint PK ranges are the main use
-        // case for partitioned reads, and intOpt's JLong(l).toInt
-        // would silently wrap a 3e9 upper_bound negative
-        val partition = c.str("partition_column").map { pc =>
-          // bounds are REQUIRED with partition_column: the old 0/1
-          // default made Spark clamp numPartitions to upper-lower = 1,
-          // silently collapsing the read the user explicitly asked to
-          // parallelize into one sequential connection
-          def bound(k: String): Long = c.longOpt(k).getOrElse(
-            throw new IllegalArgumentException(
-              s"${c.name}: partition_column needs explicit " +
-                "lower_bound/upper_bound (without them the partitioned " +
-                s"read degrades to ONE partition); missing '$k'"))
-          JdbcIO.PartitionSpec(pc, bound("lower_bound"),
-            bound("upper_bound"), c.int("num_partitions", 4))
-        }
-        val dialect = JdbcIO.Dialect.fromName(
-          c.str("dialect").getOrElse(t.stripPrefix("read_") match {
-            case "jdbc" => "derby"
-            case d      => d
-          }))
-        val (url, credOpts) = resolveJdbc(c, dialect)
-        // named :params bind into the query engine-side (mariadb_read.py:26-67)
-        val params = c.scalarMapParam("params")
-        val query = c.str("query").map(q =>
-          if (params.isEmpty) q else JdbcIO.bindParams(q, params))
-        (Map("out" -> JdbcIO.read(spark, url,
-          table = c.str("entity_name"), query = query,
-          partition = partition,
-          options = credOpts ++ c.strMapParam("options"))), None)
-
-      case t if t == "write_jdbc" || t == "write_mariadb" ||
-                t == "write_postgresql" || t == "write_sqlserver" =>
-        import graft.io.JdbcIO
-        val df = one()
-        val dialect = JdbcIO.Dialect.fromName(
-          c.str("dialect").getOrElse(t.stripPrefix("write_") match {
-            case "jdbc" => "derby"
-            case d      => d
-          }))
-        val mode = JdbcIO.WriteMode.fromName(c.str("if_exists").getOrElse("insert"))
-        val keys = c.strSeqParam("key_fields")
-        val where = c.strSeqParam("where_conditions")
-        val (url, credOpts) = resolveJdbc(c, dialect)
-        val entity = c.reqStr("entity_name")
-        val batch = c.int("row_batch_size", 1000)
-        val opts = credOpts ++ c.strMapParam("options")
-        (Map("out" -> df), Some(() =>
-          JdbcIO.write(df, url, entity, mode, dialect, keys, where, batch, opts)))
-
-      case "write_csv" =>
-        val df = one()
-        val path = c.reqStr("filepath")
-        val sep = c.str("separator").getOrElse(",")
-        (Map("out" -> df), Some(() =>
-          CsvIO.write(df, path, sep, singleFile = c.bool("single_file", true),
-            append = c.bool("append", false))))
-
-      case "write_json" =>
-        val df = one()
-        val path = c.reqStr("filepath")
-        // default stays NDJSON (Spark's native part-file layout); "array"
-        // opts into the reference's single-file indent-2 array format
-        val format = c.str("format").getOrElse("ndjson")
-        val append = c.bool("append", false)
-        // the append and array paths take neither knob — accepting them
-        // silently would drop the user's compression/layout request on
-        // the floor (the loud-exclusivity convention, like sample's
-        // rate_column). single_file with array is redundant but honest
-        // (the array format IS one file), so only gzip is rejected there.
-        require(!append || (!c.bool("gzip", false) && !c.bool("single_file", false)),
-          s"write_json ${c.name}: append is exclusive with gzip/single_file " +
-            "(the append path re-reads and rewrites the target in its own layout)")
-        require(format != "array" || !c.bool("gzip", false),
-          s"write_json ${c.name}: format=array does not support gzip")
-        (Map("out" -> df), Some(() => format match {
-          case "array" => JsonIO.writeArray(df, path, append)
-          case "ndjson" if append => JsonIO.appendNdjson(df, path)
-          case "ndjson" => JsonIO.write(df, path, gzip = c.bool("gzip", false),
-            singleFile = c.bool("single_file", false))
-          case other => throw new IllegalArgumentException(
-            s"unknown json format: $other")
-        }))
-
-      case "write_parquet" =>
-        val df = one()
-        val path = c.reqStr("filepath")
-        // partition_by: Hive-style directory partitioning — the 100 TB
-        // layout lever (a reader filtering on a partition column scans
-        // only its directories: PartitionFilters, not data IO). Beyond
-        // the reference's surface, which has no partitioned sinks.
-        val parts = c.strSeqParam("partition_by")
-        // coalesce: small-files control for dimension-sized outputs (a
-        // 32-partition write of a 5-row frame is 32 tiny files a 100 TB
-        // pipeline then pays to re-list and re-open downstream)
-        val coalesceTo = c.intOpt("coalesce")
-        coalesceTo.foreach(n => require(n >= 1,
-          s"write_parquet ${c.name}: coalesce must be >= 1, got $n"))
-        // sort_by: data-skipping layout — range-partition on the sort
-        // keys then sort within partitions, so each output file carries
-        // a DISJOINT key range and parquet's row-group min/max stats let
-        // a reader filtering on those keys skip whole files/row-groups
-        // (SortedLayoutSpec pins the disjointness + the pushdown). The
-        // non-directory complement to partition_by: high-cardinality /
-        // continuous keys that can't be directories. `files` sets the
-        // range partition count (default: session shuffle partitions).
-        val sortBy = c.strSeqParam("sort_by")
-        val files = c.intOpt("files")
-        require(sortBy.nonEmpty || files.isEmpty,
-          s"write_parquet ${c.name}: 'files' only applies with 'sort_by'")
-        require(sortBy.isEmpty || coalesceTo.isEmpty,
-          s"write_parquet ${c.name}: sort_by is exclusive with coalesce " +
-            "(a post-sort coalesce would merge the disjoint ranges back)")
-        files.foreach(n => require(n >= 1,
-          s"write_parquet ${c.name}: files must be >= 1, got $n"))
-        // max_records_per_file: the output-SHARD size lever (training
-        // loaders want bounded shards; a 10 B-row partition written as
-        // one file defeats any downstream parallelism). Spark splits
-        // each task's output at the cap — composes with partition_by
-        // and sort_by (splitting a sorted run keeps ranges disjoint).
-        val maxRecords = c.longOpt("max_records_per_file")
-        maxRecords.foreach(n => require(n >= 1,
-          s"write_parquet ${c.name}: max_records_per_file must be >= 1, got $n"))
-        (Map("out" -> df), Some(() => {
-          val src =
-            if (sortBy.nonEmpty) {
-              val keys = sortBy.map(col)
-              val ranged = files
-                .map(n => df.repartitionByRange(n, keys: _*))
-                .getOrElse(df.repartitionByRange(keys: _*))
-              ranged.sortWithinPartitions(keys: _*)
-            } else coalesceTo.map(df.coalesce).getOrElse(df)
-          val w0 = src.write.mode("overwrite")
-          val w = maxRecords.map(n => w0.option("maxRecordsPerFile", n))
-            .getOrElse(w0)
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path)
-        }))
-
-      // Bucketed external table sink — the co-located-join layout lever:
-      // two tables bucketed (and sorted) the same way on their join key
-      // join with ZERO exchanges (sort-merge over aligned buckets;
-      // ScaleIdiomsSpec pins the plan). Data lands at `filepath` (an
-      // EXTERNAL table — nothing is written to the warehouse or a
-      // metastore; the in-memory catalog carries only metadata), and the
-      // table name is what downstream `read_table` sources consume.
-      case "write_bucketed" =>
-        val df = one()
-        val table = c.reqStr("table")
-        val path = c.reqStr("filepath")
-        val buckets = c.intOpt("buckets").getOrElse(
-          throw new IllegalArgumentException(
-            s"write_bucketed ${c.name}: missing integer 'buckets'"))
-        require(buckets >= 1,
-          s"write_bucketed ${c.name}: buckets must be >= 1, got $buckets")
-        val by = c.strSeqParam("bucket_by")
-        require(by.nonEmpty,
-          s"write_bucketed ${c.name}: 'bucket_by' needs at least one column")
-        val sortBy = c.strSeqParam("sort_by")
-        require(table.matches("[A-Za-z0-9_]+"),
-          s"write_bucketed ${c.name}: table must be a bare identifier " +
-            s"([A-Za-z0-9_]+), got '$table'")
-        (Map("out" -> df), Some(() => {
-          spark.sql(s"DROP TABLE IF EXISTS `$table`")
-          val w = df.write.mode("overwrite").option("path", path)
-            .bucketBy(buckets, by.head, by.tail: _*)
-          (if (sortBy.nonEmpty) w.sortBy(sortBy.head, sortBy.tail: _*) else w)
-            .saveAsTable(table)
-        }))
-
-      // Catalog-table source, the read side of write_bucketed: the scan
-      // carries the table's bucket spec, so joins/aggregations on the
-      // bucket key skip their exchange. Resolution is EAGER (build time)
-      // while write_bucketed writes at sink time, so reading a table the
-      // SAME job stages is rejected up front — it would bind to the
-      // previous run's files (or die mid-run when the overwrite drops
-      // them); stage and consume in separate jobs.
-      case "read_table" =>
-        val table = c.reqStr("table")
-        require(table.matches("[A-Za-z0-9_]+"),
-          s"read_table ${c.name}: table must be a bare identifier " +
-            s"([A-Za-z0-9_]+), got '$table'")
-        // equalsIgnoreCase: Spark's catalog resolves table names
-        // case-insensitively under the default caseSensitive=false, so
-        // 'Events' staged here WOULD be the table 'events' binds to
-        val stagedHere = allSpecs.exists(o => o.compType == "write_bucketed" &&
-          o.str("table").exists(_.equalsIgnoreCase(table)))
-        require(!stagedHere,
-          s"read_table ${c.name}: table '$table' is written by a " +
-            "write_bucketed component in this SAME job — read_table binds " +
-            "at build time, before any sink runs; stage the table in a " +
-            "prior job")
-        val df =
-          try spark.table(table)
-          catch { case e: org.apache.spark.sql.AnalysisException =>
-            throw new IllegalArgumentException(
-              s"read_table ${c.name}: table '$table' is not in the session " +
-                s"catalog (stage it with write_bucketed first): ${e.getMessage}")
-          }
-        (Map("out" -> df), None)
-
-      case "filter" =>
-        val rule = parseRule(c.params \ "rule")
-        (FilterOp(one(), rule), None)
-
-      case "aggregation" =>
-        val (groupBy, aggs) = parseAggregations(c)
-        // salted is only meaningful on the plain group-by face; the
-        // pivot/window branches never read it, so accepting it there
-        // would silently drop the skew protection the user asked for
-        require(!c.bool("salted", false) ||
-          (c.str("pivot_column").isEmpty && c.str("time_column").isEmpty),
-          s"aggregation ${c.name}: salted is exclusive with pivot and " +
-            "time windows")
-        (c.str("pivot_column"), c.str("time_column")) match {
-          case (Some(_), Some(_)) => throw new IllegalArgumentException(
-            s"aggregation ${c.name}: pivot and time windows are exclusive")
-          case (Some(pc), None) =>
-            require(c.str("grouping").forall(_ == "groups"),
-              s"aggregation ${c.name}: pivot and rollup/cube are exclusive")
-            val values = c.scalarSeqParam("pivot_values") // typed: [2023] stays numeric
-            (Map("out" -> AggregateOp.pivoted(one(), groupBy, pc, values, aggs)), None)
-          // batch time-windowed aggregation (tumbling/sliding/session) —
-          // the same window rules as streaming_aggregation, minus the
-          // watermark: config-level batch/stream parity
-          case (None, Some(tc)) =>
-            require(c.str("grouping").forall(_ == "groups"),
-              s"aggregation ${c.name}: time windows and rollup/cube are exclusive")
-            val winCol = AggregateOp.windowColumn(tc, c.str("window"),
-              c.str("slide"), c.str("session_gap"), s"aggregation ${c.name}")
-            // same event-time normalization as streaming_aggregation
-            // (EventTime.forComponent), so a config with an INT64 epoch
-            // time column + time_unit means ONE thing in both modes
-            val base = one()
-            val et = base.withColumn(tc, graft.util.EventTime.forComponent(
-              base.schema, tc, c.str("time_unit"), s"aggregation ${c.name}"))
-            (Map("out" -> AggregateOp.windowed(et, tc, winCol, groupBy, aggs)), None)
-          case (None, None) =>
-            // salted=true opts into the two-phase skew-safe aggregate
-            // (scale/Skew.saltedAggregate — exactly equal results for
-            // the decomposable count/sum/min/max subset); loud for
-            // non-decomposable ops and for grouping sets
-            if (c.bool("salted", false)) {
-              require(c.str("grouping").forall(_ == "groups"),
-                s"aggregation ${c.name}: salted and rollup/cube are exclusive")
-              require(groupBy.nonEmpty,
-                s"aggregation ${c.name}: salting a global aggregate is meaningless")
-              (Map("out" -> graft.scale.Skew.saltedAggregate(one(), groupBy,
-                aggs, c.int("salt_factor", 16))), None)
-            } else
-              (Map("out" -> AggregateOp(one(), groupBy, aggs,
-                c.str("grouping").getOrElse("groups"))), None)
-        }
-
-      case "type_conversion" =>
-        (Map("out" -> TypeConversionOp(one(), parseCastRules(c))), None)
-
-      case "schema_mapping" =>
-        val mapRules = parseMapRules(c)
-        val joinSteps = parseJoinPlan(c)
-        val byPort: Map[String, DataFrame] = in.view.mapValues(_.head).toMap
-        val afterJoins =
-          if (joinSteps.nonEmpty) SchemaMappingOp.joinMode(byPort, joinSteps)
-          else byPort
-        val outs =
-          if (mapRules.nonEmpty) SchemaMappingOp.mapMode(afterJoins, mapRules)
-          else joinSteps.map(_.outputPort).distinct.map(p => p -> afterJoins(p)).toMap
-        (outs, None)
-
-      case "split" =>
-        val df = one()
-        (c.extraOutputPorts.map(_ -> df).toMap, None)
-
-      // Deterministic md5-bucket split (RelationalOps.hashSplit): each
-      // row routes to exactly one split port; no shuffle, stable across
-      // engines/runs — the train/val/test primitive of a training-data
-      // pipeline.
-      case "hash_split" =>
-        (RelationalOps.hashSplit(one(), c.str("id_column").getOrElse("id"),
-          parseSplits(c)), None)
-
-      // Deterministic seeded Bernoulli sample (RelationalOps.hashSample):
-      // the training-mix primitive — one narrow filter, per-stratum rates,
-      // engine-replayable md5 arithmetic. rate_column switches to the
-      // per-row WEIGHTED face (hashSampleWeighted): keep probability =
-      // the row's own clamped rate — quality-weighted curation.
-      case "sample" =>
-        c.str("rate_column") match {
-          case Some(rc) =>
-            require(!c.has("fraction") && !c.has("strata_column"),
-              s"sample ${c.name}: rate_column is exclusive with " +
-                "fraction/strata_column — the row carries its own rate")
-            (Map("out" -> RelationalOps.hashSampleWeighted(one(),
-              c.str("id_column").getOrElse("id"), rc,
-              c.str("seed").getOrElse(""))), None)
-          case None =>
-            val (idCol, fraction, seed, strataCol, strata) = parseSample(c)
-            (Map("out" -> RelationalOps.hashSample(one(), idCol, fraction, seed,
-              strataCol, strata)), None)
-        }
-
-      // Token-budget sampling (RelationalOps.budgetSample): within each
-      // `by` mixing group, rows survive in deterministic md5(seed:id)
-      // order until the cumulative cost_column total reaches `budget` —
-      // the "keep ~N tokens per source" data-mixing primitive.
-      case "budget_sample" =>
-        val budget = c.longOpt("budget").getOrElse(
-          throw new IllegalArgumentException(
-            s"budget_sample ${c.name}: missing integer 'budget'"))
-        (Map("out" -> RelationalOps.budgetSample(one(),
-          c.str("id_column").getOrElse("id"),
-          c.str("cost_column").getOrElse("n_tokens"),
-          budget,
-          c.strSeqParam("by"),
-          c.str("seed").getOrElse(""),
-          c.bool("allow_global", false))), None)
-
-      // Mixture sampling (RelationalOps.mixSample): split total_budget
-      // across the weighted sources and keep each source's deterministic
-      // md5(seed:id)-order prefix under its share — the data-MIXING step
-      // ("50% web, 30% code, 20% books") after curation. Unlisted/null
-      // sources drop before the exchange.
-      case "mix_sample" =>
-        val (idCol, costCol, totalBudget, sourceCol, weights, seed) =
-          parseMixSample(c)
-        (Map("out" -> RelationalOps.mixSample(one(), idCol, costCol,
-          totalBudget, sourceCol, weights, seed)), None)
-
-      // Contiguous-fill unit packing (RelationalOps.packUnits): assign
-      // each row the training shard / context window where it starts
-      // under a deterministic md5(seed:id)-order contiguous fill of
-      // ~capacity cost per unit — the step after mixing that shapes the
-      // corpus into model-sized pieces.
-      case "pack_units" =>
-        val capacity = c.longOpt("capacity").getOrElse(
-          throw new IllegalArgumentException(
-            s"pack_units ${c.name}: missing integer 'capacity'"))
-        (Map("out" -> RelationalOps.packUnits(one(),
-          c.str("id_column").getOrElse("id"),
-          c.str("cost_column").getOrElse("n_tokens"),
-          capacity,
-          c.strSeqParam("by"),
-          c.str("seed").getOrElse(""),
-          c.str("unit_column").getOrElse("unit_id"),
-          c.bool("allow_global", false))), None)
-
-      // Typed JSON-path extraction (RelationalOps.jsonExtract): pull
-      // fields out of a JSON string column (event props, crawl
-      // metadata) as typed columns — codegen'd narrow map, lenient
-      // nulls for missing/uncastable values.
-      case "json_extract" =>
-        val (column, rules, keepSource) = parseJsonExtract(c)
-        (Map("out" -> RelationalOps.jsonExtract(one(), column, rules,
-          keepSource)), None)
-
-      // Per-group row cap (RelationalOps.groupCap): at most `cap` rows
-      // per `by` group — the domain/source-quota curation primitive.
-      // order_by keeps the top rows under an explicit order (quality
-      // cap); empty order_by draws a seeded uniform subset.
-      case "group_cap" =>
-        val (idCol, cap, by, orderBy, seed, allowGlobal) = parseGroupCap(c)
-        (Map("out" -> RelationalOps.groupCap(one(), idCol, cap, by,
-          orderBy, seed, allowGlobal)), None)
-
-      // Deterministic seeded global shuffle (RelationalOps.hashShuffle):
-      // adds shuffle_key = md5(seed:id) and returns a total order over it
-      // — the reproducible-training-order primitive. One range exchange.
-      case "shuffle" =>
-        (Map("out" -> RelationalOps.hashShuffle(one(),
-          c.str("id_column").getOrElse("id"),
-          c.str("seed").getOrElse(""),
-          c.str("key_column").getOrElse("shuffle_key"))), None)
-
-      // Generic ORDER BY / OFFSET / LIMIT (RelationalOps.findLike): the
-      // Mongo-read-shaped sort surface over ANY upstream frame. skip
-      // compiles to GlobalLimit-with-offset (no global window); pass a
-      // unique tie-breaking key for deterministic output.
-      case "sort" =>
-        val (keys, skip, limit) = parseSortSpec(c)
-        (Map("out" -> RelationalOps.findLike(one(), sort = keys,
-          skip = skip, limit = limit)), None)
-
-      // Declarative window functions (ops/WindowOp.scala): rank /
-      // row_number / lag / lead / running aggregates over
-      // PARTITION BY + ORDER BY — "top-n per group" composes as
-      // window → filter (rank <= n). One hash exchange on the
-      // partition keys; empty partition_by needs allow_global.
-      case "window" =>
-        val (partitionBy, orderBy, fns) = parseWindowFns(c)
-        (Map("out" -> WindowOp(one(), partitionBy, orderBy, fns,
-          allowGlobal = c.bool("allow_global", false))), None)
-
-      // Spark-native escape hatch the DataFrame components compose with:
-      // every inbound port is registered as a temp view named
-      // <component>_<port> and the declared SQL runs against them —
-      // Catalyst treats it exactly like the built-in operators (pushdown,
-      // pruning, AQE all apply). Temp views are SESSION-scoped, so the
-      // register→analyze window is serialized under a lock and the views
-      // are dropped immediately after analysis (spark.sql resolves them
-      // eagerly; the returned DataFrame no longer needs them) — two
-      // concurrent jobs with a same-named component can't read each
-      // other's data, and a long-lived process doesn't accumulate views.
-      case "sql" =>
-        val query = c.reqStr("query")
-        val names = in.keys.map(p => s"${c.name}_$p").toSeq
-        val resolved = sqlViewLock.synchronized {
-          in.foreach { case (port, dfs) =>
-            dfs.head.createOrReplaceTempView(s"${c.name}_$port")
-          }
-          try spark.sql(query)
-          finally names.foreach(spark.catalog.dropTempView(_))
-        }
-        (Map("out" -> resolved), None)
-
-      // beyond-reference components: training-data pipeline operators as
-      // first-class declarative citizens
-      case "dedup" =>
-        import graft.scale.Dedup
-        val textCol = c.str("text_column").getOrElse("text")
-        val idCol = c.str("id_column").getOrElse("id")
-        val method = c.str("method").getOrElse("exact")
-        // emit=survivors (default) keeps rows under the PAIRWISE drop-id_b
-        // rule; emit=pairs exposes the raw near-dup PAIR table (id_a,
-        // id_b, score) for downstream clustering; emit=cluster keeps one
-        // row (min id) per TRANSITIVE component — what a config author
-        // asking for "dedup" almost always wants when chains matter
-        // (pairs → connectedComponents → anti-join, all in one call via
-        // Dedup.clusterDedup). Pairs only exist for the near-dup
-        // families — exact/fingerprint dedup groups keys directly.
-        val emit = c.str("emit").getOrElse("survivors")
-        require(Set("survivors", "pairs", "cluster").contains(emit),
-          s"dedup ${c.name}: emit must be survivors|pairs|cluster, got '$emit'")
-        require(emit == "survivors" || Set("minhash", "simhash", "ngram",
-          "embedding").contains(method),
-          s"dedup ${c.name}: emit=$emit needs a near-dup method " +
-            s"(minhash|simhash|ngram|embedding), not '$method'")
-        val wantPairs = emit != "survivors"
-        // keep_by: quality-aware winner for EXACT groups ("keep the
-        // longest/highest-score duplicate"); near-dup methods pick
-        // winners pairwise/transitively where a per-group order does
-        // not apply — loud rejection, not silent ignore
-        val keepBy = graft.config.JobConfig.parseOrderPairs(c, "keep_by",
-          s"dedup ${c.name}")
-        require(keepBy.isEmpty || method == "exact",
-          s"dedup ${c.name}: keep_by applies only to method=exact " +
-            "(near-dup winners are pairwise drop-id_b / cluster-minimum)")
-        val base = one()
-        // the frame cluster-survivors are anti-joined from: the persisted
-        // variant when the embedding path persists for its sizing count
-        var clusterSrc = base
-        val out = method match {
-          case "exact" => Dedup.exact(base, textCol, idCol, keepBy)
-          case "minhash" =>
-            val (sn, k, b) = (c.int("shingle_n", 5), c.int("num_hashes", 32),
-              c.int("bands", 16))
-            // doubleOpt itself coerces numeric strings (pydantic-lax),
-            // so the stringly-typed configs parse through one accessor
-            val th = c.doubleOpt("threshold").getOrElse(0.6)
-            if (wantPairs)
-              Dedup.minhashNearDups(base, textCol, idCol, sn, k, b, th)
-            else Dedup.minhashDedup(base, textCol, idCol, sn, k, b, th)
-          case "simhash" =>
-            val mh = c.int("max_hamming", 3)
-            if (wantPairs) Dedup.simhashNearDups(base, textCol, idCol, mh)
-            else Dedup.simhashDedup(base, textCol, idCol, mh)
-          case "ngram" =>
-            val (n, mdf) = (c.int("ngram_n", 3), c.int("max_df", 10000))
-            val th = c.doubleOpt("threshold").getOrElse(0.5)
-            if (wantPairs)
-              Dedup.ngramJaccardPairs(base, textCol, idCol, n, th, mdf)
-            else Dedup.ngramDedup(base, textCol, idCol, n, th, mdf)
-          case "embedding" =>
-            val simThreshold = c.doubleOpt("sim_threshold").getOrElse(0.95)
-            // persist BEFORE the sizing count when r must be derived —
-            // otherwise the count() action and the dedup itself would
-            // each materialize the full upstream DAG (released by
-            // BuiltJob.close → OpCaches.drain, like the operators'
-            // internal tables)
-            val df = if (c.intOpt("rows_per_band").isDefined) base
-                     else graft.scale.OpCaches.persist(base)
-            clusterSrc = df
-            val (bands, r) = embeddingDepth(c.intOpt("bands"),
-              c.intOpt("rows_per_band"), simThreshold, df.count())
-            val vecCol = c.str("vector_column").getOrElse("embedding")
-            if (wantPairs)
-              graft.scale.Similarity.embeddingNearDups(df, vecCol, idCol,
-                simThreshold = simThreshold, dim = c.int("dim", 64),
-                bands = bands, r = r)
-            else graft.scale.Similarity.embeddingDedup(df, vecCol, idCol,
-              simThreshold = simThreshold, dim = c.int("dim", 64),
-              bands = bands, r = r)
-          case other => throw new IllegalArgumentException(s"unknown dedup method: $other")
-        }
-        val result =
-          if (emit == "cluster")
-            Dedup.clusterDedup(clusterSrc, idCol, out,
-              maxIter = c.int("max_iter", 25),
-              checkpointDir = c.str("checkpoint_dir").getOrElse(""))
-          else out
-        (Map("out" -> result), None)
-
-      // Connected components over a pair/edge table (Dedup
-      // .connectedComponents): labels every endpoint with the min id
-      // reachable from it — the pair → transitive-cluster step of a
-      // dedup pipeline (chain with dedup emit=pairs upstream).
-      case "connected_components" =>
-        (Map("out" -> graft.scale.Dedup.connectedComponents(one(),
-          c.str("src_column").getOrElse("id_a"),
-          c.str("dst_column").getOrElse("id_b"),
-          c.int("max_iter", 25),
-          c.int("check_every", 1),
-          c.str("checkpoint_dir").getOrElse(""))), None)
-
-      case "text_analysis" =>
-        val textCol = c.str("text_column").getOrElse("text")
-        val base = graft.scale.TextAnalysis.analyze(one(), textCol)
-        // repetition=true appends the Gopher repetition signals
-        // (dup_line_ratio, top_gram, top_gram_ratio, dup_gram_ratio);
-        // entropy=true appends char_entropy (bits/byte compression
-        // proxy) — both opt-in so existing jobs' declared output
-        // schemas stay valid
-        val withRep =
-          if (c.bool("repetition", false))
-            graft.scale.TextAnalysis.repetitionStats(base, textCol,
-              c.int("repetition_n", 2))
-          else base
-        val out =
-          if (c.bool("entropy", false))
-            withRep.withColumn("char_entropy",
-              graft.scale.TextAnalysis.charEntropy(col(textCol)))
-          else withRep
-        (Map("out" -> out), None)
-
-      // Context-window chunking (TextAnalysis.chunk): fan each document
-      // out into fixed-size character chunks with overlap — one narrow
-      // filter + posexplode in the scan's task, no shuffle. NULL/empty
-      // text emits no chunks; keep_text=false drops the source column.
-      case "chunk" =>
-        val size = c.intOpt("size").getOrElse(
-          throw new IllegalArgumentException(
-            s"chunk ${c.name}: missing integer 'size'"))
-        (Map("out" -> graft.scale.TextAnalysis.chunk(one(),
-          c.str("text_column").getOrElse("text"),
-          size,
-          c.int("overlap", 0),
-          c.str("index_column").getOrElse("chunk_index"),
-          c.str("chunk_column").getOrElse("chunk_text"),
-          c.bool("keep_text", false))), None)
-
-      // Text canonicalization (TextAnalysis.normalizeText): the
-      // normalize-before-dedup step — lowercase → accent-fold →
-      // punctuation strip → whitespace squeeze → trim, each opt-in/out,
-      // fixed order. Codegen'd narrow map.
-      case "text_normalize" =>
-        (Map("out" -> graft.scale.TextAnalysis.normalizeText(one(),
-          c.str("text_column").getOrElse("text"),
-          c.str("dest").getOrElse(""),
-          c.bool("lowercase", true),
-          c.bool("accent_fold", false),
-          c.bool("strip_punct", false),
-          c.bool("squeeze_ws", true))), None)
-
-      // URL decomposition (TextAnalysis.urlFeatures): scheme/host/
-      // domain/path columns parsed from a URL string — the per-domain
-      // quota / blocklist primitive. Codegen'd regexp chains, no shuffle.
-      case "url_features" =>
-        (Map("out" -> graft.scale.TextAnalysis.urlFeatures(one(),
-          c.str("url_column").getOrElse("url"),
-          c.str("prefix").getOrElse("url_"))), None)
-
-      // Distribution-based outlier filter (Profile.outlierFilter):
-      // z-score or Tukey-fence (IQR) quality gate on a numeric signal,
-      // optionally per `by` group. Stats aggregate + broadcast join +
-      // narrow filter — the big side never shuffles.
-      case "outlier_filter" =>
-        (Map("out" -> graft.scale.Profile.outlierFilter(one(),
-          c.reqStr("column"),
-          c.str("method").getOrElse("zscore"),
-          c.doubleOpt("k").getOrElse(3.0),
-          c.strSeqParam("by"),
-          c.bool("approx", false))), None)
-
-      // Unpivot/melt (RelationalOps.unpivot): value columns become
-      // (variable, value) rows next to the id columns.
-      case "unpivot" =>
-        val (ids, values, varC, valC) = parseUnpivot(c)
-        (Map("out" -> RelationalOps.unpivot(one(), ids, values, varC, valC)), None)
-
-      // PII redaction (scale/TextAnalysis.redactPiiWithCounts): masks
-      // emails/phones/IPv4 in the text column and adds per-category
-      // counts for downstream filtering. Codegen'd regex maps, no
-      // shuffle.
-      case "pii_redact" =>
-        (Map("out" -> graft.scale.TextAnalysis.redactPiiWithCounts(one(),
-          c.str("text_column").getOrElse("text"))), None)
-
-      // Corpus top-k vocabulary / n-gram stats (TextAnalysis.topGrams):
-      // explode → partial count → one shuffle on the gram → top-k with
-      // a deterministic boundary. Batch-only (a global top-k over an
-      // unbounded stream never finalizes).
-      // sample_fraction < 1 is the corpus-scale path (the topGrams
-      // scaladoc's guidance, reachable declaratively): a deterministic
-      // md5(seed:id) hashSample of the DOCUMENTS feeds the explode —
-      // frequency ranks converge fast under uniform sampling, the
-      // sample replays bit-exactly on any engine (no silent cap), and
-      // the gram volume shrinks by the fraction before the wide work.
-      case "top_tokens" =>
-        val k = c.intOpt("k").getOrElse(
-          throw new IllegalArgumentException(
-            s"top_tokens ${c.name}: missing integer 'k'"))
-        val fraction = c.doubleOpt("sample_fraction").getOrElse(1.0)
-        require(fraction > 0.0 && fraction <= 1.0,
-          s"top_tokens ${c.name}: sample_fraction must be in (0, 1], got $fraction")
-        val in = one()
-        val sampled =
-          if (fraction < 1.0)
-            graft.ops.RelationalOps.hashSample(in,
-              c.str("sample_id_column").getOrElse("doc_id"), fraction,
-              c.str("sample_seed").getOrElse(""))
-          else in
-        (Map("out" -> graft.scale.TextAnalysis.topGrams(sampled,
-          c.str("text_column").getOrElse("text"), k, c.int("n", 1))), None)
-
-      // Incremental exact dedup (Dedup.exactAgainst): keep only `in`
-      // rows whose normalized key is absent from the `reference` port —
-      // the ingest-time "drop documents we already have" primitive.
-      // One anti-join, no window, no state.
-      // strategy=bloom probes a compact reference-key bloom as a narrow
-      // map and sends only candidates to the exact join — the
-      // corpus-sized-reference path (Dedup.exactAgainstBloom).
-      // Gopher quality rules (TextAnalysis.gopherRules): one narrow
-      // boolean projection per document — emit=docs keeps passing rows
-      // (the training-pipeline shape), emit=flagged appends the
-      // per-rule booleans + gopher_pass for auditing. Stateless, so
-      // also streamable (same comp_type in StreamingJobs).
-      case "gopher_filter" =>
-        val textCol = c.str("text_column").getOrElse("text")
-        def d(k: String, dflt: Double) = c.doubleOpt(k).getOrElse(dflt)
-        val (minW, maxW) = (c.int("min_words", 50), c.int("max_words", 100000))
-        val (minMl, maxMl) = (d("min_mean_word_len", 3.0),
-          d("max_mean_word_len", 10.0))
-        val (maxSym, maxBul, maxEll, minAlpha) = (d("max_symbol_ratio", 0.1),
-          d("max_bullet_ratio", 0.9), d("max_ellipsis_ratio", 0.3),
-          d("min_alpha_ratio", 0.8))
-        val minStops = c.int("min_stop_hits", 2)
-        val out = c.str("emit").getOrElse("docs") match {
-          case "docs" => graft.scale.TextAnalysis.gopherFilter(one(), textCol,
-            minW, maxW, minMl, maxMl, maxSym, maxBul, maxEll, minAlpha,
-            minStops)
-          case "flagged" => graft.scale.TextAnalysis.gopherRules(one(),
-            textCol, minW, maxW, minMl, maxMl, maxSym, maxBul, maxEll,
-            minAlpha, minStops)
-          case other => throw new IllegalArgumentException(
-            s"gopher_filter ${c.name}: emit must be docs|flagged, got '$other'")
-        }
-        (Map("out" -> out), None)
-
-      // Corpus-level duplicate-line removal (Dedup.lineDedup): census
-      // non-blank lines across documents, lines present in more than
-      // max_docs DISTINCT documents are boilerplate and get stripped
-      // from every document (blank lines pass through; documents with
-      // nothing left drop). The post-cut hot set broadcasts by default
-      // — only the regroup-by-id pays an exchange.
-      // strategy=set collects the post-cut hot set (bounded, loud
-      // overflow) and rewrites via one codegen'd narrow projection —
-      // no regroup exchange, no join-back (Dedup.lineDedupSet).
-      case "line_dedup" =>
-        val (textCol, idCol) = (c.str("text_column").getOrElse("text"),
-          c.str("id_column").getOrElse("doc_id"))
-        val maxDocs = c.int("max_docs", 1)
-        val unit = c.str("unit").getOrElse("line")
-        val out = c.str("emit").getOrElse("docs") match {
-          // emit=hot: the audit table (line, n_docs) of what WOULD be
-          // stripped — census only, no rewrite, strategy ignored
-          case "hot" => graft.scale.Dedup.hotLineReport(one(), textCol,
-            idCol, maxDocs, unit)
-          case "docs" => c.str("strategy").getOrElse("join") match {
-            case "join" => graft.scale.Dedup.lineDedup(one(), textCol, idCol,
-              maxDocs, c.bool("broadcast", true), unit)
-            case "set" => graft.scale.Dedup.lineDedupSet(one(), textCol, idCol,
-              maxDocs, c.int("max_hot_lines", graft.scale.Dedup.MaxHotLines),
-              unit)
-            case other => throw new IllegalArgumentException(
-              s"line_dedup ${c.name}: strategy must be join|set, got '$other'")
-          }
-          case other => throw new IllegalArgumentException(
-            s"line_dedup ${c.name}: emit must be docs|hot, got '$other'")
-        }
-        (Map("out" -> out), None)
-
-      case "dedup_against" =>
-        val fn = c.str("strategy").getOrElse("join") match {
-          case "join" => graft.scale.Dedup.exactAgainst _
-          case "bloom" => graft.scale.Dedup.exactAgainstBloom _
-          case other => throw new IllegalArgumentException(
-            s"dedup_against ${c.name}: strategy must be join|bloom, got '$other'")
-        }
-        (Map("out" -> fn(port("in"), port("reference"),
-          c.str("text_column").getOrElse("text"),
-          c.str("reference_text_column").getOrElse(""))), None)
-
-      // Benchmark decontamination (scale/Decontaminate.scala): flag or
-      // drop corpus docs sharing word n-grams with the `benchmark` port's
-      // eval set. emit=flagged appends n_hits/contaminated for auditing;
-      // emit=clean (the training-pipeline shape) keeps only clean rows;
-      // emit=pairs names the leaking benchmark items per contaminated doc.
-      case "decontaminate" =>
-        import graft.scale.Decontaminate
-        val (textCol, idCol) = (c.str("text_column").getOrElse("text"),
-          c.str("id_column").getOrElse("doc_id"))
-        val (n, minOv) = (c.int("ngram_n", 3), c.int("min_overlap", 1))
-        val strat = c.str("strategy").getOrElse("broadcast")
-        val emit = c.str("emit").getOrElse("flagged")
-        val out = emit match {
-          case "flagged" => Decontaminate.flag(port("corpus"),
-            port("benchmark"), textCol, idCol, n, minOv, strat)
-          case "clean" => Decontaminate.clean(port("corpus"),
-            port("benchmark"), textCol, idCol, n, minOv, strat)
-          // the audit face always runs the posting-join shape; a pinned
-          // broadcast strategy cannot produce per-benchmark pairs
-          case "pairs" =>
-            require(c.str("strategy").forall(_ == "join"),
-              s"decontaminate ${c.name}: emit=pairs requires the join " +
-                "shape (benchmark identity survives only there); drop " +
-                "strategy or set strategy=join")
-            Decontaminate.pairs(port("corpus"), port("benchmark"),
-              textCol, idCol, c.str("bench_id_column").getOrElse(idCol),
-              n, minOv, c.int("max_df", Decontaminate.DefaultPairsMaxDf))
-          case other => throw new IllegalArgumentException(
-            s"decontaminate ${c.name}: emit must be flagged|clean|pairs, got '$other'")
-        }
-        (Map("out" -> out), None)
-
-      // Column-level data profile (scale/Profile.scala): `columns`
-      // restricts the profiled set (default all), `approx` swaps exact
-      // distinct counts for HyperLogLog at scale.
-      case "profile" =>
-        // histogram_column switches to the distribution face
-        // (Profile.histogram): fixed-width bucket counts with explicit
-        // bounds — buckets/lo/hi all required, a defaulted domain would
-        // silently mis-bucket
-        c.str("histogram_column") match {
-          case Some(hc) =>
-            def num(k: String): Double = c.doubleOpt(k).getOrElse(
-              throw new IllegalArgumentException(
-                s"profile ${c.name}: histogram needs number '$k'"))
-            val buckets = c.intOpt("buckets").getOrElse(
-              throw new IllegalArgumentException(
-                s"profile ${c.name}: histogram needs integer 'buckets'"))
-            (Map("out" -> graft.scale.Profile.histogram(one(), hc, buckets,
-              num("lo"), num("hi"))), None)
-          case None =>
-            (Map("out" -> graft.scale.Profile.profile(one(),
-              c.strSeqParam("columns"), approx = c.bool("approx", false))), None)
-        }
-
-      // Embedding-column transforms (Similarity.l2NormalizeVectors /
-      // quantizeVectorsInt8): op=normalize appends the unit vector +
-      // norm; op=quantize appends the int8 vector + per-row scale (the
-      // 4× storage lever). Both narrow maps.
-      case "embedding_transform" =>
-        import graft.scale.Similarity
-        val vecCol = c.str("vector_column").getOrElse("embedding")
-        val out = c.str("op").getOrElse("normalize") match {
-          case "normalize" => Similarity.l2NormalizeVectors(one(), vecCol,
-            c.str("dest").getOrElse("vec_unit"),
-            c.str("norm_column").getOrElse("vec_norm"))
-          case "quantize" => Similarity.quantizeVectorsInt8(one(), vecCol,
-            c.str("dest").getOrElse("vec_q8"),
-            c.str("scale_column").getOrElse("vec_scale"))
-          case other => throw new IllegalArgumentException(
-            s"embedding_transform ${c.name}: op must be normalize|quantize, " +
-              s"got '$other'")
-        }
-        (Map("out" -> out), None)
-
-      // Approximate/exact nearest-neighbor search as a declarative
-      // component, like `dedup` is for the dedup family. method=knn:
-      // exact top-k per query row (corpus streamed once, queries
-      // broadcast — ports `corpus`, `queries`); method=ivf: cell-probed
-      // approximate top-k (ports `corpus`, `centroids` as (cell, cvec),
-      // `query` as a one-row (qvec) frame).
-      case "similarity" =>
-        import graft.scale.Similarity
-        val vecCol = c.str("vector_column").getOrElse("embedding")
-        val k = c.int("k", 10)
-        val out = c.str("method").getOrElse("knn") match {
-          case "knn" => Similarity.knnJoin(port("corpus"), port("queries"),
-            vecCol, c.str("corpus_id").getOrElse("id"),
-            c.str("query_id").getOrElse("id"), k)
-          case "ivf" =>
-            val centroids = port("centroids")
-            // explicit nprobe wins; omitted → the IvfProbe-measured
-            // default from the cell count (the count() is a tiny action
-            // over the centroid table — kcells rows, usually persisted
-            // by kmeans_train — and is skipped entirely when pinned)
-            val nprobe = c.intOpt("nprobe").getOrElse(
-              Similarity.ivfNprobeDefault(centroids.count().toInt))
-            Similarity.ivfTopK(port("corpus"), vecCol,
-              c.str("id_column").getOrElse("id"), centroids,
-              port("query"), k, nprobe = nprobe)
-          // probe a PREBUILT write_ivf_index layout: no corpus port — the
-          // index at `index_path` is the corpus, and the probed cells
-          // prune its directories at plan time. The single query row is
-          // collected driver-side (bounded and required to be exactly
-          // one row — the same justified exception searchBucketed's doc
-          // records for the probe cells).
-          case "ivf_index" =>
-            require(c.str("index_path").isDefined,
-              s"similarity ${c.name}: method=ivf_index needs index_path " +
-                "(the directory written by write_ivf_index)")
-            val centroids = port("centroids")
-            val query = port("query")
-            // the query port's vector column: `query_column` param, else
-            // `qvec` by convention (documented in ComponentSchemas)
-            val qCol = c.str("query_column").getOrElse("qvec")
-            require(query.columns.contains(qCol),
-              s"similarity ${c.name}: query port has no column '$qCol' " +
-                s"(columns: ${query.columns.mkString(", ")}); set query_column")
-            val nprobe = c.intOpt("nprobe").getOrElse(
-              Similarity.ivfNprobeDefault(centroids.count().toInt))
-            val qidCol = c.str("query_id").getOrElse("query_id")
-            if (query.columns.contains(qidCol))
-              // BATCH probe: a query-id column marks a multi-row query
-              // set — per-query cell ranking, one pruned scan, top-k
-              // per query (KMeans.searchBucketedMany)
-              graft.scale.KMeans.searchBucketedMany(spark,
-                c.reqStr("index_path"), vecCol,
-                c.str("id_column").getOrElse("id"), centroids, query,
-                qidCol, qCol, k, nprobe = nprobe)
-            else {
-              val qRows = query.limit(2).collect()
-              require(qRows.length == 1,
-                s"similarity ${c.name}: the query port must carry exactly " +
-                  s"one row (or carry a '$qidCol' column for batch probing)")
-              val rawVec = qRows(0).getSeq[Number](qRows(0).fieldIndex(qCol))
-              require(rawVec != null,
-                s"similarity ${c.name}: the query row's '$qCol' vector is " +
-                  "NULL (an upstream left join with no match?)")
-              val vec = rawVec.map(_.floatValue).toSeq
-              graft.scale.KMeans.searchBucketed(spark, c.reqStr("index_path"),
-                vecCol, c.str("id_column").getOrElse("id"), centroids, vec,
-                k, nprobe = nprobe)
-            }
-          case other =>
-            throw new IllegalArgumentException(s"unknown similarity method: $other")
-        }
-        (Map("out" -> out), None)
-
-      // Lloyd's k-means over an embedding column (scale/KMeans.scala):
-      // trains the (cell, cvec) centroid table that `similarity
-      // method=ivf` consumes on its centroids port — a JSON author runs
-      // ANN end-to-end without writing Scala. Like the sized embedding
-      // dedup, training executes AT BUILD (the iterations are actions);
-      // the returned table is persisted by train() and its release is
-      // handed to BuiltJob.close via OpCaches, per the cache-ownership
-      // rule.
-      // IVF index sink (scale/KMeans.indexBucketed): assigns each corpus
-      // row to its nearest centroid and writes the corpus partitioned by
-      // cell, one file per cell directory — the layout whose probes
-      // prune at the file source. Ports `corpus` + `centroids`.
-      case "write_ivf_index" =>
-        val (corpus, centroids) = (port("corpus"), port("centroids"))
-        val path = c.reqStr("filepath")
-        (Map("out" -> corpus), Some(() => graft.scale.KMeans.indexBucketed(
-          corpus, c.str("vector_column").getOrElse("embedding"),
-          c.str("id_column").getOrElse("id"), centroids, path)))
-
-      case "kmeans_train" =>
-        val corpus = one()
-        // explicit k wins; omitted → the sqrt-n cell rule from the
-        // corpus count (conditional like embeddingDepth: pinning k
-        // skips the count() action)
-        val k = c.intOpt("k").getOrElse(
-          graft.scale.Similarity.ivfCellsFor(math.max(1L, corpus.count())))
-        val centroids = graft.scale.KMeans.train(corpus,
-          c.str("vector_column").getOrElse("embedding"),
-          k = k, iters = c.int("iters", 5))
-        (Map("out" -> graft.scale.OpCaches.persist(centroids)), None)
-
-      case "merge" =>
-        val dfs = in.getOrElse("in", Nil)
-        require(dfs.nonEmpty, s"merge ${c.name}: no inputs")
-        (Map("merge" -> dfs.reduce(_.unionByName(_))), None)
-
-      // Backward as-of join (ops/AsofJoin.scala): ports `left`/`right`,
-      // `on` = event-time column on both sides, `by` = equality keys.
-      case "asof_join" =>
-        val by = c.strSeqParam("by")
-        require(by.nonEmpty, s"asof_join ${c.name}: needs non-empty 'by' keys")
-        // strategy=window (default): union + one window pass — ONE
-        // shuffle of left+right on the by-keys; right side any size.
-        // strategy=broadcast (AsofJoin.enrichStatic): the right side is
-        // prepared into validity intervals and BROADCAST — zero Exchange
-        // on the left, the plan to pick when left is corpus-sized and
-        // right is a dimension table. Same results (AsofJoinSpec pins
-        // both against one model).
-        val strategy = c.str("strategy").getOrElse("window")
-        require(Set("window", "broadcast").contains(strategy),
-          s"asof_join ${c.name}: strategy must be window|broadcast, got '$strategy'")
-        val join = if (strategy == "broadcast") AsofJoin.enrichStatic _ else AsofJoin.apply _
-        (Map("out" -> join(port("left"), port("right"),
-          c.reqStr("on"), by,
-          c.str("suffix").getOrElse("_r"),
-          c.str("direction").getOrElse("backward"),
-          c.str("tolerance"))), None)
-
-      // Range/interval join (ops/RangeJoin.scala): left rows matched to
-      // right [start,end] intervals, one-to-many; with `by` keys an
-      // equi-join carries the range condition (no cross product), without
-      // them the interval side broadcasts.
-      case "range_join" =>
-        (Map("out" -> RangeJoin(port("left"), port("right"),
-          c.reqStr("on"), c.reqStr("start"), c.reqStr("end"),
-          c.strSeqParam("by"),
-          c.str("suffix").getOrElse("_r"),
-          c.str("join_type").getOrElse("inner"))), None)
-
-      // Set operations over same-schema ports (ops/RelationalOps.setOp;
-      // beyond-reference — the reference's only set-ish op is merge).
-      case "set_op" =>
-        (Map("out" -> RelationalOps.setOp(port("left"), port("right"),
-          c.reqStr("op"))), None)
-
-      case other =>
-        throw new IllegalArgumentException(s"unknown comp_type: $other")
-    }
   }
 }

@@ -1,22 +1,19 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, session_window, window}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.config.JobConfig._
-import graft.graph.JobGraph
-import graft.ops._
-import graft.schema.{FieldDef, SchemaValidator}
+import graft.graph.{BuildCtx, Components, JobGraph}
+import graft.schema.FieldDef
 
 /**
  * Incremental execution of a declarative job config: the SAME JobSpec the
  * batch engine folds into DataFrames (graph/JobGraph.scala) runs as a
  * Structured Streaming pipeline — sources become `readStream` over their
- * directories, the transform vocabulary compiles to the identical Column
- * expressions (FilterOp / TypeConversionOp / SchemaMappingOp /
- * TextAnalysis are expression-only, so they apply to streaming frames
- * unchanged), and each sink runs as its own StreamingQuery with an
- * exactly-once checkpoint.
+ * directories, every other component runs the SAME build from the
+ * component registry (graph/Components.scala) on streaming frames, and
+ * each sink runs as its own StreamingQuery with an exactly-once
+ * checkpoint.
  *
  * This is the Spark-first mapping of the reference's `row` strategy
  * (SURVEY.md §1.4: record-at-a-time push streaming,
@@ -26,6 +23,14 @@ import graft.schema.{FieldDef, SchemaValidator}
  * from the SAME operator implementations — StreamingJobsSpec asserts
  * batch/streaming parity per config, which is the reference's own
  * cross-strategy contract.
+ *
+ * Which comp_types stream is the registry's `runs` field: `Both` for the
+ * stateless transforms and the csv/json/parquet sources and sinks,
+ * `StreamingOnly` for the `streaming_*` twins. Batch `aggregation`/`dedup`
+ * stay batch-only (their JSON surfaces declare no watermark, so their
+ * state would be unbounded); `streaming_aggregation` and `streaming_dedup`
+ * are the watermark-bounded twins. Validation (JobGraph, in streaming
+ * mode) rejects anything else before any frame is built.
  *
  * Scale/runtime notes:
  *  - No persist/cache is inserted (illegal on streaming frames). A config
@@ -37,11 +42,6 @@ import graft.schema.{FieldDef, SchemaValidator}
  *    input then stops, giving deterministic "process the backlog" runs —
  *    the closest incremental analogue of one batch job execution; pass a
  *    processing-time trigger to `start` for continuous tailing.
- *  - State: the supported vocabulary is stateless (narrow maps/filters +
- *    unions), so there is no state store to size; dedup/aggregation need
- *    watermark semantics the JSON surface does not declare — they are
- *    rejected here and live as explicit streaming twins in
- *    streaming/Streaming.scala (streamingExactDedup, windowedCounts).
  *
  * Sources read ONLY with a declared schema (streaming refuses inference):
  * read_csv consumes its all-string declared schema, read_json (NDJSON
@@ -49,46 +49,14 @@ import graft.schema.{FieldDef, SchemaValidator}
  */
 object StreamingJobs {
 
-  /** comp_types that run incrementally. Batch `aggregation`/`dedup` stay
-    * excluded (their JSON surfaces declare no watermark, so their state
-    * would be unbounded); `streaming_aggregation` and `streaming_dedup`
-    * are the watermark-bounded twins reachable from JSON. Join mode
-    * remains an explicit streaming twin in streaming/Streaming.scala. */
-  val supportedTypes: Set[String] = Set(
-    "read_csv", "read_json", "read_parquet",
-    "filter", "type_conversion", "schema_mapping", "split", "merge",
-    "unpivot", "hash_split", "sample", "json_extract",
-    "chunk", "text_normalize", "url_features", "embedding_transform",
-    "gopher_filter",
-    "text_analysis", "pii_redact", "streaming_aggregation", "streaming_dedup",
-    "streaming_asof_join", "streaming_range_join", "streaming_decontaminate",
-    "streaming_group_cap", "streaming_outlier_filter",
-    "streaming_dedup_against", "streaming_line_dedup",
-    "write_csv", "write_json", "write_parquet")
-
   final case class SinkPlan(component: String, df: DataFrame, format: String,
                             path: String, options: Map[String, String])
-
-  /** Event-time column for the streaming components — the SAME
-    * normalization the batch `aggregation` time-window path applies
-    * (graft.util.EventTime.forComponent: string/date/NTZ/native
-    * timestamps normalize; INT64 epochs require an explicit
-    * `time_unit`), so a config means one thing in both modes. */
-  private def eventTimeCol(df: DataFrame, timeCol: String,
-                           c: ComponentSpec, what: String
-                          ): org.apache.spark.sql.Column =
-    graft.util.EventTime.forComponent(df.schema, timeCol,
-      c.str("time_unit"), s"$what ${c.name}")
 
   /** Fold the spec into per-sink streaming plans (no query started yet). */
   def plan(spark: SparkSession, spec0: JobSpec): Seq[SinkPlan] = {
     val spec = JobGraph.deriveSchemas(spec0)
-    JobGraph.validate(spec)
+    JobGraph.validateDerived(spec, streaming = true)
     for (c <- spec.components) {
-      require(supportedTypes.contains(c.compType),
-        s"streaming job ${spec.name}: comp_type '${c.compType}' (${c.name}) is not " +
-          s"streamable — supported: ${supportedTypes.toSeq.sorted.mkString(", ")}; " +
-          "aggregation/dedup need watermark semantics (see streaming/Streaming.scala)")
       require(c.compType != "schema_mapping" || parseJoinPlan(c).isEmpty,
         s"streaming job ${spec.name}: schema_mapping join mode (${c.name}) is not " +
           "streamable (stream-stream joins need watermark bounds); map mode is")
@@ -106,23 +74,18 @@ object StreamingJobs {
         m((d.to, d.inPort)) = m((d.to, d.inPort)) :+ ((c.name, port))
       m.toMap
     }
-    def in(c: ComponentSpec, port: String = "in"): Seq[DataFrame] =
+    def in(c: ComponentSpec, port: String): Seq[DataFrame] =
       inbound.getOrElse((c.name, port), Nil).map(frames(_))
-    def one(c: ComponentSpec): DataFrame = {
-      val xs = in(c)
-      require(xs.size == 1, s"${c.name}: expected exactly one 'in' edge")
-      xs.head
-    }
-    def declared(c: ComponentSpec, port: String): Option[Seq[FieldDef]] =
-      c.outPortSchemas.get(port)
     def schemaFor(c: ComponentSpec): org.apache.spark.sql.types.StructType =
-      FieldDef.toStructType(declared(c, "out").getOrElse(
+      FieldDef.toStructType(c.outPortSchemas.getOrElse("out",
         throw new IllegalArgumentException(
           s"streaming source ${c.name}: out schema required (no inference on streams)")))
 
     val sinks = scala.collection.mutable.ListBuffer.empty[SinkPlan]
 
     for (c <- JobGraph.topoOrder(spec)) {
+      val inByPort = JobGraph.inPorts(c).map(p => p.name -> in(c, p.name))
+        .filter(_._2.nonEmpty).toMap
       val outs: Map[String, DataFrame] = c.compType match {
         case "read_csv" =>
           Map("out" -> spark.readStream.schema(schemaFor(c))
@@ -135,320 +98,8 @@ object StreamingJobs {
         case "read_parquet" =>
           Map("out" -> spark.readStream.schema(schemaFor(c))
             .parquet(c.reqStr("filepath")))
-
-        case "filter" => FilterOp(one(c), parseRule(c.params \ "rule"))
-        case "type_conversion" =>
-          Map("out" -> TypeConversionOp(one(c), parseCastRules(c)))
-        case "schema_mapping" =>
-          val byPort = c.inPortSchemas.keys.map(p => p -> {
-            val xs = in(c, p)
-            require(xs.size == 1, s"${c.name}: port $p needs exactly one edge")
-            xs.head
-          }).toMap
-          SchemaMappingOp.mapMode(byPort, parseMapRules(c))
-        case "split" => c.extraOutputPorts.map(_ -> one(c)).toMap
-        // stateless narrow ops, streamable unchanged (same dispatch as
-        // the batch fold): unpivot is an expression-level expand;
-        // hash_split is one md5-bucket filter per split port
-        case "unpivot" =>
-          val (ids, values, varC, valC) = parseUnpivot(c)
-          Map("out" -> RelationalOps.unpivot(one(c), ids, values, varC, valC))
-        case "hash_split" =>
-          RelationalOps.hashSplit(one(c), c.str("id_column").getOrElse("id"),
-            parseSplits(c))
-        // json_extract is a codegen'd narrow map (get_json_object +
-        // try_cast): streams as-is, same dispatch as the batch fold
-        case "json_extract" =>
-          val (column, rules, keepSource) = parseJsonExtract(c)
-          Map("out" -> RelationalOps.jsonExtract(one(c), column, rules,
-            keepSource))
-        // chunk is a filter + posexplode narrow map: streams as-is
-        // (same dispatch as the batch fold)
-        case "chunk" =>
-          val size = c.intOpt("size").getOrElse(
-            throw new IllegalArgumentException(
-              s"chunk ${c.name}: missing integer 'size'"))
-          Map("out" -> graft.scale.TextAnalysis.chunk(one(c),
-            c.str("text_column").getOrElse("text"), size,
-            c.int("overlap", 0),
-            c.str("index_column").getOrElse("chunk_index"),
-            c.str("chunk_column").getOrElse("chunk_text"),
-            c.bool("keep_text", false)))
-        // text_normalize / url_features are codegen'd narrow maps:
-        // stream as-is, same dispatch as the batch fold
-        case "text_normalize" =>
-          Map("out" -> graft.scale.TextAnalysis.normalizeText(one(c),
-            c.str("text_column").getOrElse("text"),
-            c.str("dest").getOrElse(""),
-            c.bool("lowercase", true),
-            c.bool("accent_fold", false),
-            c.bool("strip_punct", false),
-            c.bool("squeeze_ws", true)))
-        case "url_features" =>
-          Map("out" -> graft.scale.TextAnalysis.urlFeatures(one(c),
-            c.str("url_column").getOrElse("url"),
-            c.str("prefix").getOrElse("url_")))
-        // gopher_filter is a stateless boolean projection: streams
-        // as-is, same thresholds as the batch fold
-        case "gopher_filter" =>
-          def d(k: String, dflt: Double) = c.doubleOpt(k).getOrElse(dflt)
-          val f = c.str("emit").getOrElse("docs") match {
-            case "docs" => graft.scale.TextAnalysis.gopherFilter _
-            case "flagged" => graft.scale.TextAnalysis.gopherRules _
-            case other => throw new IllegalArgumentException(
-              s"gopher_filter ${c.name}: emit must be docs|flagged, got '$other'")
-          }
-          Map("out" -> f(one(c), c.str("text_column").getOrElse("text"),
-            c.int("min_words", 50), c.int("max_words", 100000),
-            d("min_mean_word_len", 3.0), d("max_mean_word_len", 10.0),
-            d("max_symbol_ratio", 0.1), d("max_bullet_ratio", 0.9),
-            d("max_ellipsis_ratio", 0.3), d("min_alpha_ratio", 0.8),
-            c.int("min_stop_hits", 2)))
-        // embedding transforms are per-row vector math: stream as-is
-        case "embedding_transform" =>
-          val vecCol = c.str("vector_column").getOrElse("embedding")
-          Map("out" -> (c.str("op").getOrElse("normalize") match {
-            case "normalize" => graft.scale.Similarity.l2NormalizeVectors(
-              one(c), vecCol, c.str("dest").getOrElse("vec_unit"),
-              c.str("norm_column").getOrElse("vec_norm"))
-            case "quantize" => graft.scale.Similarity.quantizeVectorsInt8(
-              one(c), vecCol, c.str("dest").getOrElse("vec_q8"),
-              c.str("scale_column").getOrElse("vec_scale"))
-            case other => throw new IllegalArgumentException(
-              s"embedding_transform ${c.name}: op must be " +
-                s"normalize|quantize, got '$other'")
-          }))
-        // sample is a single stateless md5-threshold filter: streams
-        // as-is — both the fixed/stratified face and the rate_column
-        // weighted face (same dispatch rule as the batch fold)
-        case "sample" =>
-          c.str("rate_column") match {
-            case Some(rc) =>
-              require(!c.has("fraction") && !c.has("strata_column"),
-                s"sample ${c.name}: rate_column is exclusive with " +
-                  "fraction/strata_column — the row carries its own rate")
-              Map("out" -> RelationalOps.hashSampleWeighted(one(c),
-                c.str("id_column").getOrElse("id"), rc,
-                c.str("seed").getOrElse("")))
-            case None =>
-              val (idCol, fraction, seed, strataCol, strata) = parseSample(c)
-              Map("out" -> RelationalOps.hashSample(one(c), idCol, fraction,
-                seed, strataCol, strata))
-          }
-        case "merge" =>
-          val xs = in(c)
-          require(xs.nonEmpty, s"merge ${c.name}: no inputs")
-          Map("merge" -> xs.reduce(_.unionByName(_)))
-        case "text_analysis" =>
-          // same surface as the batch dispatch incl. the repetition and
-          // entropy opt-ins — all per-row codegen'd narrow maps, so
-          // they stream as-is
-          val textCol = c.str("text_column").getOrElse("text")
-          val base = graft.scale.TextAnalysis.analyze(one(c), textCol)
-          val withRep =
-            if (c.bool("repetition", false))
-              graft.scale.TextAnalysis.repetitionStats(base, textCol,
-                c.int("repetition_n", 2))
-            else base
-          Map("out" ->
-            (if (c.bool("entropy", false))
-              withRep.withColumn("char_entropy",
-                graft.scale.TextAnalysis.charEntropy(col(textCol)))
-            else withRep))
-
-        // stateless narrow map like text_analysis: streams as-is
-        case "pii_redact" =>
-          Map("out" -> graft.scale.TextAnalysis.redactPiiWithCounts(one(c),
-            c.str("text_column").getOrElse("text")))
-
-        // Watermark-bounded windowed aggregation, the streaming twin of the
-        // batch `aggregation` comp_type: `time_column` is the event-time
-        // column (normalized via EventTime when the declared schema carries
-        // it as a string — the engine's schema vocabulary travels times as
-        // strings, SURVEY §1.2), `watermark` bounds state AND late data,
-        // `window` (+ optional `slide`) tumbles/slides, and group_by/
-        // aggregations reuse the batch vocabulary (AggregateOp.aggColumn).
-        // Window bounds are emitted as STRING columns window_start/
-        // window_end so the out-port schema stays declarable. In append
-        // mode (file sinks) a window emits once the watermark passes its
-        // end — the deterministic drain contract for runOnce.
-        case "streaming_aggregation" =>
-          val df = one(c)
-          val timeCol = c.reqStr("time_column")
-          val wm = c.reqStr("watermark")
-          val (groupBy, aggs) = parseAggregations(c)
-          require(aggs.nonEmpty, s"streaming_aggregation ${c.name}: needs aggregations")
-          val et = df.withColumn(timeCol,
-            eventTimeCol(df, timeCol, c, "streaming_aggregation"))
-          // window-rule selection + the grouped tail are shared with the
-          // batch aggregation component (AggregateOp.windowColumn /
-          // .windowed); the stream's only addition is the watermark —
-          // with session_gap a session closes when the watermark passes
-          // its end
-          val winCol = AggregateOp.windowColumn(timeCol, c.str("window"),
-            c.str("slide"), c.str("session_gap"),
-            s"streaming_aggregation ${c.name}")
-          Map("out" -> AggregateOp.windowed(
-            et.withWatermark(timeCol, wm), timeCol, winCol, groupBy, aggs))
-
-        // Watermark-bounded exact dedup, the streaming twin of the batch
-        // `dedup` comp_type (ingest-side face of
-        // Streaming.streamingExactDedup): dropDuplicatesWithinWatermark on
-        // the normalized text key bounds state by the watermark horizon —
-        // a duplicate arriving after the horizon can re-emit, the right
-        // trade for continuous ingest. Only method=exact is streamable:
-        // the near-dup families (minhash/simhash/ngram/embedding) need a
-        // corpus-wide self-join and stay batch-only. The event-time column
-        // rides in a temp column so the input schema passes through
-        // unchanged (declared schemas travel times as strings).
-        case "streaming_dedup" => // method=exact enforced at plan entry
-          val df = one(c)
-          val textCol = c.str("text_column").getOrElse("text")
-          val timeCol = c.reqStr("time_column")
-          val wm = c.str("watermark").getOrElse("1 hour")
-          // the temp columns are added with withColumn, which silently
-          // OVERWRITES an existing column of the same name — that would
-          // be user data loss at the final drop
-          val reservedHit = df.columns.toSet.intersect(Set("__t", "__key"))
-          require(reservedHit.isEmpty, s"streaming_dedup ${c.name}: column names " +
-            s"${reservedHit.mkString(", ")} are reserved internally")
-          val et = df.withColumn("__t",
-            eventTimeCol(df, timeCol, c, "streaming_dedup"))
-          Map("out" -> et
-            .withColumn("__key", graft.scale.Dedup.exactKey(col(textCol)))
-            .withWatermark("__t", wm)
-            .dropDuplicatesWithinWatermark("__key")
-            .drop("__key", "__t"))
-
-        // Custom-state per-group quota (Streaming.streamingGroupCap —
-        // the flatMapGroupsWithState primitive reachable from JSON):
-        // keeps the FIRST cap rows per `by` group over the stream's
-        // LIFETIME; one Long of state per distinct group, no watermark
-        // (a quota is not time-scoped). Unlike batch group_cap the kept
-        // subset is arrival-order dependent (streams carry no
-        // engine-replayable order) — the CAP itself is exact across
-        // microbatches, which is the quota's contract.
-        case "streaming_group_cap" =>
-          val cap = c.intOpt("cap").getOrElse(
-            throw new IllegalArgumentException(
-              s"streaming_group_cap ${c.name}: missing integer 'cap'"))
-          Map("out" -> graft.streaming.Streaming.streamingGroupCap(
-            one(c), c.strSeqParam("by"), cap))
-
-        // Stream-static as-of enrichment (ops/AsofJoin.enrichStatic): the
-        // STATIC right side comes from `right_path` (a parquet dimension
-        // table read as a batch frame — NOT a stream port), is prepared
-        // into per-key validity intervals batch-side, and broadcasts
-        // into a stateless row-wise left join — no watermark, no state
-        // store, exact parity with the batch asof_join on the same data
-        // (StreamingJobsSpec pins it per direction). Static-right-only
-        // by design: a stream-stream as-of needs watermark bounds this
-        // surface does not declare.
-        case "streaming_asof_join" =>
-          val rightDf = graft.io.ParquetIO.read(spark, c.reqStr("right_path"))
-          Map("out" -> AsofJoin.enrichStatic(one(c), rightDf,
-            on = c.reqStr("on"), by = c.strSeqParam("by"),
-            suffix = c.str("suffix").getOrElse("_r"),
-            direction = c.str("direction").getOrElse("backward"),
-            tolerance = c.str("tolerance")))
-
-        // Stream-static range/interval enrichment (ops/RangeJoin): the
-        // STATIC right side comes from `right_path` (a parquet interval
-        // dimension — calendars, campaigns, config epochs) and joins
-        // statelessly: equi-join on the by-keys with the containment
-        // condition, or a broadcast nested loop without keys. No
-        // watermark, no state store; exact parity with batch range_join
-        // on the same data (StreamingJobsSpec).
-        case "streaming_range_join" =>
-          val rightDf = graft.io.ParquetIO.read(spark, c.reqStr("right_path"))
-          Map("out" -> RangeJoin(one(c), rightDf,
-            c.reqStr("on"), c.reqStr("start"), c.reqStr("end"),
-            c.strSeqParam("by"),
-            c.str("suffix").getOrElse("_r"),
-            c.str("join_type").getOrElse("inner")))
-
-        // Stream-static benchmark decontamination (scale/Decontaminate):
-        // the eval set comes from `benchmark_path` (a batch parquet dim)
-        // and is collected into the broadcast gram probe at plan time, so
-        // the streaming corpus stays a stateless narrow map — no
-        // watermark, no state store. strategy=join is rejected loudly
-        // (its explode + groupBy would aggregate over the unbounded
-        // stream); exact parity with the batch component on the same
-        // data is pinned in StreamingJobsSpec.
-        case "streaming_decontaminate" =>
-          require(c.str("strategy").forall(_ == "broadcast"),
-            s"streaming_decontaminate ${c.name}: only strategy=broadcast " +
-              "is streamable — the join strategy aggregates over the stream")
-          val benchDf = graft.io.ParquetIO.read(spark, c.reqStr("benchmark_path"))
-          val textCol = c.str("text_column").getOrElse("text")
-          val (n, minOv) = (c.int("ngram_n", 3), c.int("min_overlap", 1))
-          val out = c.str("emit").getOrElse("flagged") match {
-            case "flagged" => graft.scale.Decontaminate.flag(
-              one(c), benchDf, textCol, n = n, minOverlap = minOv)
-            case "clean" => graft.scale.Decontaminate.clean(
-              one(c), benchDf, textCol, n = n, minOverlap = minOv)
-            case other => throw new IllegalArgumentException(
-              s"streaming_decontaminate ${c.name}: emit must be " +
-                s"flagged|clean, got '$other'")
-          }
-          Map("out" -> out)
-
-        // Stream-static incremental exact dedup (Dedup.exactAgainst):
-        // the existing corpus comes from reference_path (batch parquet),
-        // and the stream anti-joins it statelessly — no watermark
-        // needed, the reference is closed (in-stream dedup stays with
-        // streaming_dedup's watermark TTL).
-        case "streaming_dedup_against" =>
-          val refDf = graft.io.ParquetIO.read(spark, c.reqStr("reference_path"))
-          // strategy=bloom: the bloom build runs eagerly over the STATIC
-          // reference at plan time (fine — it is a batch frame); the
-          // stream side stays a narrow probe + candidate-only anti-join
-          val fn = c.str("strategy").getOrElse("join") match {
-            case "join" => graft.scale.Dedup.exactAgainst _
-            case "bloom" => graft.scale.Dedup.exactAgainstBloom _
-            case other => throw new IllegalArgumentException(
-              s"streaming_dedup_against ${c.name}: strategy must be " +
-                s"join|bloom, got '$other'")
-          }
-          Map("out" -> fn(one(c), refDf,
-            c.str("text_column").getOrElse("text"),
-            c.str("reference_text_column").getOrElse("")))
-
-        // Stream-static boilerplate-line strip (Dedup.stripHotLines):
-        // the hot-line census comes from the reference_path parquet
-        // corpus at plan time (a census over an unbounded stream never
-        // finalizes), bounded-collected like the batch strategy=set,
-        // then applied to the stream as ONE codegen'd narrow
-        // projection — no explode, no shuffle, no watermark, no state.
-        case "streaming_line_dedup" =>
-          val refDf = graft.io.ParquetIO.read(spark, c.reqStr("reference_path"))
-          val textCol = c.str("text_column").getOrElse("text")
-          val unit = c.str("unit").getOrElse("line")
-          val hot = graft.scale.Dedup.hotLineSet(refDf,
-            c.str("reference_text_column").getOrElse(textCol),
-            c.str("id_column").getOrElse("doc_id"),
-            c.int("max_docs", 1),
-            c.int("max_hot_lines", graft.scale.Dedup.MaxHotLines), unit)
-          Map("out" -> graft.scale.Dedup.stripHotLines(one(c), textCol, hot,
-            unit))
-
-        // Stream-static outlier gate (Profile.outlierFilterAgainst):
-        // fences come from `reference_path` (a batch parquet baseline —
-        // an unwindowed aggregate over the stream itself could never
-        // finalize), computed once at plan time and broadcast onto the
-        // stream as a stateless narrow filter. No watermark, no state.
-        case "streaming_outlier_filter" =>
-          val refDf = graft.io.ParquetIO.read(spark, c.reqStr("reference_path"))
-          Map("out" -> graft.scale.Profile.outlierFilterAgainst(
-            one(c), refDf,
-            c.reqStr("column"),
-            c.str("method").getOrElse("zscore"),
-            c.doubleOpt("k").getOrElse(3.0),
-            c.strSeqParam("by"),
-            c.bool("approx", false)))
-
         case t if t.startsWith("write_") =>
-          val df = one(c)
+          val df = inByPort("in").head
           val (fmt, opts) = t match {
             case "write_parquet" => ("parquet", Map.empty[String, String])
             case "write_csv" => ("csv", Map("header" -> "true",
@@ -462,25 +113,12 @@ object StreamingJobs {
           }
           sinks += SinkPlan(c.name, df, fmt, c.reqStr("filepath"), opts)
           Map("out" -> df) // optional passthrough port, like the batch fold
-        case other => throw new IllegalArgumentException(s"unreachable: $other")
+        case _ =>
+          Components.byName(c.compType)
+            .build(new BuildCtx(spark, c, inByPort, spec.components))._1
       }
-      // same contract as the batch fold: a routed port the component does
-      // not produce in this configuration is a loud error, not a silently
-      // thinner merge downstream
-      for ((port, dsts) <- c.routes if dsts.nonEmpty)
-        require(outs.contains(port),
-          s"component ${c.name} (${c.compType}): route from out port " +
-            s"'$port', which this configuration does not produce " +
-            s"(produced: ${outs.keys.mkString(", ")})")
-      // same structural contract as the batch fold, per produced port
-      for ((port, df) <- outs) {
-        val checked = c.outPortSchemas.get(port) match {
-          case Some(expected) if c.routes.getOrElse(port, Nil).nonEmpty =>
-            SchemaValidator.enforce(df, expected, structuralOnly = true)
-          case _ => df
-        }
-        frames((c.name, port)) = checked
-      }
+      for ((port, df) <- JobGraph.checkedOutputs(c, outs, validateData = false))
+        frames((c.name, port)) = df
     }
     sinks.toSeq
   }

@@ -2,58 +2,9 @@ package graft.api
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drift guard: ComponentSchemas.registry documents itself as the single
-  * source of truth for the GET /schemas discovery surface, with
-  * JobGraph.runComponent as the executor of the same contract — so every
-  * dispatch arm must have a registry entry and every registry entry must
-  * be dispatchable. The dispatch side is scanned from source (the arms
-  * are literal `case "<comp_type>"` at a fixed nesting depth; guard-style
-  * jdbc arms are matched separately), which is exactly the property a
-  * registry rot would break. */
+/** The discovery views rendered from the component registry: shapes of
+  * the form/full/hidden views, the port block, and the job schema. */
 class ComponentSchemasSpec extends AnyFunSuite {
-
-  private val source = new String(
-    java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/graph/JobGraph.scala")),
-    java.nio.charset.StandardCharsets.UTF_8)
-
-  // literal arms of the runComponent dispatch sit at 6-space indent;
-  // nested matches (json formats, dedup methods, ...) are deeper
-  private val literalArms =
-    "(?m)^      case \"([a-z0-9_]+)\"".r.findAllMatchIn(source).map(_.group(1)).toSet
-  // jdbc families dispatch through guards: case t if t == "read_jdbc" || ...
-  private val guardArms =
-    "\"((?:read|write)_(?:jdbc|mariadb|postgresql|sqlserver))\"".r
-      .findAllMatchIn(source).map(_.group(1)).toSet
-  // streaming-only comp_types dispatch through StreamingJobs, not JobGraph
-  private val streamingArms =
-    StreamingJobsTypes.streamingOnly
-
-  private val dispatched = literalArms ++ guardArms ++ streamingArms
-  private val documented = ComponentSchemas.compTypes.toSet
-
-  test("every dispatched comp_type is documented in the discovery registry") {
-    val undocumented = dispatched -- documented
-    assert(undocumented.isEmpty,
-      s"comp_types dispatchable by JobGraph but missing from " +
-        s"ComponentSchemas.registry: ${undocumented.toSeq.sorted.mkString(", ")}")
-  }
-
-  test("every documented comp_type is dispatchable") {
-    val vaporware = documented -- dispatched
-    assert(vaporware.isEmpty,
-      s"ComponentSchemas.registry documents comp_types JobGraph cannot run: " +
-        vaporware.toSeq.sorted.mkString(", "))
-  }
-
-  test("streaming-only comp_types come from the live StreamingJobs set") {
-    // the streaming side needs no source scan: supportedTypes is a value
-    assert(StreamingJobsTypes.streamingOnly ===
-      Set("streaming_aggregation", "streaming_dedup", "streaming_asof_join",
-        "streaming_range_join", "streaming_decontaminate",
-        "streaming_group_cap", "streaming_outlier_filter",
-        "streaming_dedup_against", "streaming_line_dedup"))
-  }
 
   test("streaming_group_cap discovery doc declares the never-expiring state contract") {
     // the state-growth contract IS the semantics (a lifetime quota
@@ -106,56 +57,4 @@ class ComponentSchemasSpec extends AnyFunSuite {
     }
     assert(props === Set("name", "num_of_retries", "strategy_type", "components"))
   }
-
-  test("the source scan actually found the dispatch (anchor sanity)") {
-    // if JobGraph is reformatted and the indent anchor breaks, this fails
-    // loudly instead of the two set checks passing vacuously
-    assert(literalArms.size >= 20, s"only found: ${literalArms.toSeq.sorted}")
-    assert(Seq("filter", "aggregation", "dedup", "similarity", "asof_join",
-      "profile").forall(literalArms.contains))
-  }
-
-  test("static port contracts in the discovery views match JobGraph's real port spec") {
-    // portInfo is a second copy of JobGraph.inPorts/outPorts; for every
-    // comp_type whose /full view claims a COMPLETE static contract (no
-    // dynamic-ports "note"), the advertised names/required/multi must be
-    // exactly what graph validation will enforce. (decontaminate drifted
-    // here once: the view said 'in' while the graph required
-    // corpus/benchmark.)
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods.parse
-    val minimal = (t: String) => graft.config.JobConfig.ComponentSpec(
-      "probe", t, JNothing, Map.empty, Map.empty, Map.empty, Nil, Nil)
-    def names(v: JValue): Seq[(String, Boolean, Boolean)] = v match {
-      case JArray(items) => items.map { p =>
-        ((p \ "name").asInstanceOf[JString].s,
-          (p \ "required").asInstanceOf[JBool].value,
-          (p \ "multi").asInstanceOf[JBool].value)
-      }
-      case _ => Nil
-    }
-    var checked = 0
-    ComponentSchemas.compTypes.filterNot(_.startsWith("streaming_")).foreach { t =>
-      val full = parse(ComponentSchemas.fullSchemaJson(t).get)
-      val ports = full \ "ports"
-      if ((ports \ "note") == JNothing) {
-        val spec = minimal(t)
-        val wantIn = graft.graph.JobGraph.inPorts(spec)
-          .map(p => (p.name, p.required, p.multi))
-        val wantOut = graft.graph.JobGraph.outPorts(spec)
-          .map(p => (p.name, p.required, p.multi))
-        assert(names(ports \ "in") === wantIn, s"in-port drift for $t")
-        assert(names(ports \ "out") === wantOut, s"out-port drift for $t")
-        checked += 1
-      }
-    }
-    assert(checked >= 25, s"static-contract sweep looks broken: only $checked types checked")
-  }
-}
-
-/** Streaming-only comp_types = StreamingJobs.supportedTypes minus the
-  * batch vocabulary it shares with JobGraph. */
-private object StreamingJobsTypes {
-  val streamingOnly: Set[String] =
-    graft.streaming.StreamingJobs.supportedTypes.filter(_.startsWith("streaming_"))
 }

@@ -499,4 +499,38 @@ class JobGraphSpec extends SparkTestBase {
     assert(e.getMessage.contains("SAME job"),
       s"case variant must hit the staging guard, got: ${e.getMessage}")
   }
+
+  test("validation: a batch job naming a streaming-only comp_type is rejected at validate") {
+    // the streaming twins are documented in the registry, so a batch job
+    // naming one used to pass validation and die at execute time with
+    // 'unknown comp_type', after every retry and backoff
+    val e = intercept[IllegalArgumentException] {
+      JobGraph.validate(specOf(
+        s"""{ "name": "r", "comp_type": "read_csv", "filepath": "x",
+           |  "routes": { "out": [ { "to": "agg", "in_port": "in" } ] },
+           |  "out_port_schemas": { "out": $abSchema } }""".stripMargin,
+        s"""{ "name": "agg", "comp_type": "streaming_aggregation",
+           |  "time_column": "a", "watermark": "1 minute", "window": "1 hour",
+           |  "aggregations": [ { "src": "b", "op": "count", "dest": "n" } ],
+           |  "in_port_schemas": { "in": $abSchema } }""".stripMargin))
+    }
+    assert(e.getMessage.contains("'streaming_aggregation' runs only in streaming jobs"))
+    assert(e.getMessage.contains("StreamingJobs"))
+    assert(e.getMessage.contains("'aggregation'"))
+  }
+
+  test("validation: a misspelled param is rejected with a did-you-mean, not run on defaults") {
+    val e = intercept[IllegalArgumentException] {
+      JobGraph.validate(specOf(
+        s"""{ "name": "r", "comp_type": "read_csv", "filepath": "x",
+           |  "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+           |  "out_port_schemas": { "out": $abSchema } }""".stripMargin,
+        s"""{ "name": "w", "comp_type": "write_csv", "filepath": "y",
+           |  "seperator": ";", "apend": true,
+           |  "in_port_schemas": { "in": $abSchema } }""".stripMargin))
+    }
+    assert(e.getMessage.contains("unknown params 'seperator'"))
+    assert(e.getMessage.contains("did you mean 'separator'?"))
+    assert(e.getMessage.contains("'apend' (did you mean 'append'?)"))
+  }
 }

@@ -1237,4 +1237,135 @@ class StreamingJobsSpec extends SparkTestBase {
       graft.scale.TextAnalysis.analyze(spark.read.parquet(in)), "text", 2)
     assert(slurp(spark.read.parquet(out)) === slurp(batch))
   }
+
+  test("gopher_filter streams: parity with the batch fold, emit=docs and emit=flagged") {
+    import spark.implicits._
+    val in = tmp("gph_in")
+    val prose = "the cat sat on the mat and then it went to sleep with the dog"
+    Seq(
+      (1L, prose),                                      // passes every rule
+      (2L, "### ### ### ###"),                          // symbols, no words
+      (3L, s"$prose\n- a\n- b\n- c\n- d\n- e\n- f"),    // bullet-heavy
+      (4L, "word " * 3),                                // too short
+      (5L, (null: String)))
+      .toDF("id", "text").coalesce(1).write.mode("overwrite").parquet(in)
+    val inSchema =
+      """{ "fields": [
+        |  { "name": "id", "data_type": "integer" },
+        |  { "name": "text", "data_type": "string", "nullable": true } ] }""".stripMargin
+    val flagSchema =
+      """{ "fields": [
+        |  { "name": "id", "data_type": "integer" },
+        |  { "name": "text", "data_type": "string", "nullable": true },
+        |  { "name": "g_word_count", "data_type": "boolean" },
+        |  { "name": "g_mean_word_len", "data_type": "boolean" },
+        |  { "name": "g_symbol_ratio", "data_type": "boolean" },
+        |  { "name": "g_bullet_lines", "data_type": "boolean" },
+        |  { "name": "g_ellipsis_lines", "data_type": "boolean" },
+        |  { "name": "g_alpha_words", "data_type": "boolean" },
+        |  { "name": "g_stopwords", "data_type": "boolean" },
+        |  { "name": "gopher_pass", "data_type": "boolean" } ] }""".stripMargin
+    def cfg(emit: String, outSchema: String, out: String) =
+      s"""{ "name": "gph", "components": [
+         |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
+         |    "routes": { "out": [ { "to": "g", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $inSchema } },
+         |  { "name": "g", "comp_type": "gopher_filter", "emit": "$emit",
+         |    "min_words": 5, "max_bullet_ratio": 0.5,
+         |    "in_port_schemas": { "in": $inSchema },
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $outSchema } },
+         |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
+         |    "in_port_schemas": { "in": $outSchema } } ] }""".stripMargin
+    for ((emit, outSchema) <- Seq("docs" -> inSchema, "flagged" -> flagSchema)) {
+      val bOut = tmp(s"gph_${emit}_b")
+      val built = JobGraph.build(spark, JobConfig.parse(cfg(emit, outSchema, bOut)))
+      built.runSinks(); built.close()
+      val sOut = tmp(s"gph_${emit}_s")
+      StreamingJobs.runOnce(spark, JobConfig.parse(cfg(emit, outSchema, sOut)),
+        tmp(s"gph_${emit}_ckpt"))
+      assert(slurp(spark.read.parquet(sOut)) === slurp(spark.read.parquet(bOut)),
+        s"emit=$emit")
+    }
+    assert(spark.read.parquet(tmp("gph_docs_s")).select("id").as[Long]
+      .collect().toSeq === Seq(1L))
+    val flagged = spark.read.parquet(tmp("gph_flagged_s"))
+    assert(flagged.count() === 5)
+    assert(flagged.filter($"gopher_pass").select("id").as[Long].collect().toSeq === Seq(1L))
+  }
+
+  test("split streams: tee parity with the batch fold, through a downstream merge") {
+    import spark.implicits._
+    val in = tmp("sm_in")
+    graft.io.CsvIO.write(Seq(("1", "x"), ("2", "y"), ("3", "x")).toDF("a", "b"), in)
+    def cfg(teeOut: String, mergedOut: String) =
+      s"""{ "name": "sm", "components": [
+         |  { "name": "r", "comp_type": "read_csv", "filepath": "$in",
+         |    "routes": { "out": [ { "to": "s", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "s", "comp_type": "split",
+         |    "extra_output_ports": ["left", "right", "copy"],
+         |    "in_port_schemas": { "in": $abSchema },
+         |    "routes": { "left": [ { "to": "f", "in_port": "in" } ],
+         |                "right": [ { "to": "m", "in_port": "in" } ],
+         |                "copy": [ { "to": "wt", "in_port": "in" } ] },
+         |    "out_port_schemas": { "left": $abSchema, "right": $abSchema,
+         |                          "copy": $abSchema } },
+         |  { "name": "f", "comp_type": "filter",
+         |    "rule": { "column": "b", "operator": "==", "value": "x" },
+         |    "in_port_schemas": { "in": $abSchema },
+         |    "routes": { "pass": [ { "to": "m", "in_port": "in" } ] },
+         |    "out_port_schemas": { "pass": $abSchema } },
+         |  { "name": "m", "comp_type": "merge",
+         |    "in_port_schemas": { "in": $abSchema },
+         |    "routes": { "merge": [ { "to": "wm", "in_port": "in" } ] },
+         |    "out_port_schemas": { "merge": $abSchema } },
+         |  { "name": "wt", "comp_type": "write_parquet", "filepath": "$teeOut",
+         |    "in_port_schemas": { "in": $abSchema } },
+         |  { "name": "wm", "comp_type": "write_parquet", "filepath": "$mergedOut",
+         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin
+    val (bt, bm) = (tmp("sm_b_tee"), tmp("sm_b_merged"))
+    val built = JobGraph.build(spark, JobConfig.parse(cfg(bt, bm)))
+    built.runSinks(); built.close()
+    val (st, sm) = (tmp("sm_s_tee"), tmp("sm_s_merged"))
+    StreamingJobs.runOnce(spark, JobConfig.parse(cfg(st, sm)), tmp("sm_ckpt"))
+    assert(slurp(spark.read.parquet(st)) === slurp(spark.read.parquet(bt)))
+    assert(slurp(spark.read.parquet(sm)) === slurp(spark.read.parquet(bm)))
+    // the tee copies every row; the merge unions all rows with the x rows
+    assert(slurp(spark.read.parquet(st)) === Seq("1|x", "2|y", "3|x"))
+    assert(slurp(spark.read.parquet(sm)) === Seq("1|x", "1|x", "2|y", "3|x", "3|x"))
+  }
+
+  test("merge streams: two sources union by name, parity with the batch fold") {
+    import spark.implicits._
+    val (in1, in2) = (tmp("mg_in1"), tmp("mg_in2"))
+    graft.io.CsvIO.write(Seq(("1", "x"), ("2", "y")).toDF("a", "b"), in1)
+    // same columns, other order: merge unions BY NAME
+    graft.io.CsvIO.write(Seq(("z", "3")).toDF("b", "a"), in2)
+    val baSchema =
+      """{ "fields": [
+        |  { "name": "b", "data_type": "string" },
+        |  { "name": "a", "data_type": "string" } ] }""".stripMargin
+    def cfg(out: String) =
+      s"""{ "name": "mg", "components": [
+         |  { "name": "r1", "comp_type": "read_csv", "filepath": "$in1",
+         |    "routes": { "out": [ { "to": "m", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "r2", "comp_type": "read_csv", "filepath": "$in2",
+         |    "routes": { "out": [ { "to": "m", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $baSchema } },
+         |  { "name": "m", "comp_type": "merge",
+         |    "in_port_schemas": { "in": $abSchema },
+         |    "routes": { "merge": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "merge": $abSchema } },
+         |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
+         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin
+    val bOut = tmp("mg_b")
+    val built = JobGraph.build(spark, JobConfig.parse(cfg(bOut)))
+    built.runSinks(); built.close()
+    val sOut = tmp("mg_s")
+    StreamingJobs.runOnce(spark, JobConfig.parse(cfg(sOut)), tmp("mg_ckpt"))
+    assert(slurp(spark.read.parquet(sOut)) === slurp(spark.read.parquet(bOut)))
+    assert(slurp(spark.read.parquet(sOut)) === Seq("1|x", "2|y", "3|z"))
+  }
 }
