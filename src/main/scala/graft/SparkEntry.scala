@@ -651,7 +651,7 @@ object SparkEntry {
     * normalizes it exactly the way file-source inference would) — skips
     * the per-readback footer-inference Spark job, a measured 67 ms flat
     * constant per q_job_* gate query (~85 ms with the first action;
-    * tools/R21Probe rb.* phases, r21). With no explicit `sink` the job
+    * tools/R21Probe @0fcdae9 rb.* phases, r21). With no explicit `sink` the job
     * must have exactly one — multi-sink jobs name the one they read.
     * Partitioned sinks keep plain `s.read.parquet` (see readAs scaladoc). */
   private def readBack(s: SparkSession, built: graft.graph.JobGraph.BuiltJob,
@@ -2806,11 +2806,11 @@ object SparkEntry {
     * is EXACTLY the brute-force cosine top-10 no matter where Lloyd's
     * iterations put the centroids — an exact SQL oracle for a pipeline
     * whose training step SQL can't replicate. Recall under partial
-    * probing is IvfProbe's job, not the gate's — which is also why
-    * iters=1: one Lloyd iteration exercises the whole training loop
-    * (assign → update → empty-cell carry) and each extra iteration
-    * only moves centroids the oracle is insensitive to, at ~3 shuffles
-    * per iteration of pure bench cost. */
+    * probing was measured by tools/IvfProbe @0fcdae9; it is not the
+    * gate's job — which is also why iters=1: one Lloyd iteration
+    * exercises the whole training loop (assign → update → empty-cell
+    * carry) and each extra iteration only moves centroids the oracle is
+    * insensitive to, at ~3 shuffles per iteration of pure bench cost. */
   private def qJobSimIvf(s: SparkSession, dir: String): DataFrame = {
     val outDir = s"$tmpRoot/job_out_simivf"
     val embSchema = ivfEmbSchema
@@ -2917,7 +2917,7 @@ object SparkEntry {
     * verifying the layout round-trip: vectors and ids must survive the
     * partitionBy(cell) write, the hive-partition read-back, and the
     * static isin cell filter bit-exactly. Partial-nprobe recall and the
-    * pruning plan itself are pinned by KMeansSpec + IvfProbe; the gate's
+    * pruning plan itself are pinned by KMeansSpec + tools/IvfProbe @0fcdae9; the gate's
     * job is value correctness of the full build-then-probe chain. */
   private def qJobIvfIndex(s: SparkSession, dir: String): DataFrame = {
     val idxDir = s"$tmpRoot/job_ivf_index"

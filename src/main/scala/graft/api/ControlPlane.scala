@@ -5,7 +5,7 @@ import graft.config.JobConfig
 import graft.graph.JobGraph
 import graft.runtime.JobRunner
 import graft.util.JsonStr.quote
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, StandardOpenOption}
 
 /**
  * Control plane: job registry + execution records + REST surface,

@@ -35,8 +35,6 @@ object JobConfig {
       extraInputPorts: Seq[String],
       extraOutputPorts: Seq[String]) {
 
-    private implicit val fmts: Formats = DefaultFormats
-
     /** Loud wrong-type failure. Absent (JNothing) and explicit null
       * (JNull) mean "not set" everywhere below — the reference's
       * pydantic layer likewise treats omitted/None as default — but a

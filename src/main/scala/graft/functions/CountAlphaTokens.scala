@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 /**
  * Count of whitespace tokens containing at least one Unicode letter —
  * gopherRules' alpha-word numerator as ONE compiled char loop, no
- * regex. Replaces two measured-slower formulations (CurationProbe,
+ * regex. Replaces two measured-slower formulations (tools/CurationProbe @0fcdae9,
  * local[32], 500k docs = 27.6M tokens): the interpreted per-token
  * `size(filter(toks, _ rlike \p{L}))` lambda at 0.41 s (ArrayFilter is
  * CodegenFallback, and each token pays a regex match) and the compiled

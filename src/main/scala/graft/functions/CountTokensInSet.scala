@@ -35,7 +35,7 @@ import org.apache.spark.sql.types._
  *  - membership is exact string equality post-lowering;
  *  - NULL text → null (split(null) propagation).
  *
- * Measured paired (tools/KeyProbe, local[32], 500k docs):
+ * Measured paired (tools/KeyProbe @0fcdae9, local[32], 500k docs):
  * stopwordRatio 0.40-0.55 s kernel vs 0.68-1.61 s split form; Gopher
  * stopHits 0.25-0.26 s kernel vs 0.50 s split + 8-scan reduce on the
  * quiet pass (a loaded pass showed the split form at 4.2 s — the

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
  * n_bullet, n_ell_end) — replacing five separate scans, two of them
  * multiline regexes, one a full-text `regexp_replace(t, "#", "")`
  * copy and one a `split(t, "\n")` array-of-strings allocation.
- * Measured paired (tools/LineRuleProbe, local[32], 500k docs, 3
+ * Measured paired (tools/LineRuleProbe @0fcdae9, local[32], 500k docs, 3
  * reps): five-scan composed form 1.40/0.97/0.94 s vs this kernel
  * 0.57/0.42/0.32 s — ~2.3× on warm medians; the per-rule split shows
  * why: each composed scan ALONE (nHash regexp_replace 0.40-0.46 s,

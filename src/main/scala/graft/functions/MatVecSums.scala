@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
  *    array poisons the whole fold);
  *  - vector SHORTER (incl. empty), or any null ELEMENT at any position →
  *    an all-ZEROS array, exactly the fold's init (measured empirically —
- *    tools/HofProbe — and pinned side-by-side in MatVecSumsSpec; the
+ *    tools/HofProbe @0fcdae9 — and pinned side-by-side in MatVecSumsSpec; the
  *    practical effect either way is the all-zero LSH signature);
  *  - empty weight matrix is rejected at construction.
  */

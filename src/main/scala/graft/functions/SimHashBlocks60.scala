@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
  *    order; block i = Σ_j (votes(15i+j) > 0 ? 1<<j : 0);
  *  - null token array → an array of 4 NULL blocks, never a null array
  *    (the HOF's outer transform runs over a literal 0..3 sequence, so it
- *    always yields 4 elements — measured in tools/HofProbe);
+ *    always yields 4 elements — measured in tools/HofProbe @0fcdae9);
  *  - a null ELEMENT votes -1 on every bit (bitwiseAND(null) is null,
  *    the when falls through to otherwise(-1)).
  */

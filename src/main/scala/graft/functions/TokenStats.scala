@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
  * compiled pass, no regex — struct(n_tokens, n_chars) — the kernel
  * behind TextAnalysis.tokenCount and meanWordLen (text_stats, the
  * quality score, and the Gopher rules all fan out from these two).
- * Measured paired (tools/KeyProbe, local[32], 500k docs, two runs):
+ * Measured paired (tools/KeyProbe @0fcdae9, local[32], 500k docs, two runs):
  * tokenCount 0.38 s kernel vs 0.46-0.56 s split; meanWordLen 0.34-
  * 0.39 s kernel vs 0.93-1.14 s regexp_replace+split (~2.8x — the
  * regex strip was the expensive half). Both stats are field reads off

@@ -259,7 +259,7 @@ object Components {
       p("merge_schema", "boolean", "schema-evolution read: merge every file's footer into the union schema (columns added by newer files surface as nulls in older rows); default false — single-footer inference")), source, runs = Both) { b => import b._
       // ParquetIO caches inferred schemas (listing-fingerprint
       // invalidated) — repeated builds over the same inputs skip the
-      // ~70 ms footer-inference constant (tools/JobPhaseProbe).
+      // ~70 ms footer-inference constant (tools/JobPhaseProbe @0fcdae9).
       // merge_schema=true opts into schema-evolution reads (a dataset
       // whose newer files added columns): Spark merges ALL footers
       // into the union schema — a per-file pass worth paying only
@@ -1128,7 +1128,7 @@ object Components {
       p("src_column", "string", "edge source column, default 'id_a'"),
       p("dst_column", "string", "edge destination column, default 'id_b'"),
       p("max_iter", "integer", "propagation round cap (rounds are O(log diameter)), default 25"),
-      p("check_every", "integer", "convergence-count cadence, default 1 (ScaleProbe-measured: the count is ~21% of a round, so skipping only pays when rounds >> cadence)"),
+      p("check_every", "integer", "convergence-count cadence, default 1 (measured: the fused count is ~4% of a round, so skipping only pays when rounds >> cadence)"),
       p("checkpoint_dir", "string", "set = per-round RELIABLE checkpoint to this directory (survives executor loss — the preemption-safe path; superseded rounds' files are deleted as the loop advances); unset (default) = executor-block localCheckpoint, cheaper but lost with an executor. NOTE: Spark's checkpoint directory is a global SparkContext setting — declaring this retargets it for the whole application unless the context already points under this directory"))) { b => import b._
       // Connected components over a pair/edge table (Dedup
       // .connectedComponents): labels every endpoint with the min id
@@ -1190,7 +1190,7 @@ object Components {
           c.str("query_id").getOrElse("id"), k)
         case "ivf" =>
           val centroids = port("centroids")
-          // explicit nprobe wins; omitted → the IvfProbe-measured
+          // explicit nprobe wins; omitted → the measured (tools/IvfProbe @0fcdae9)
           // default from the cell count (the count() is a tiny action
           // over the centroid table — kcells rows, usually persisted
           // by kmeans_train — and is skipped entirely when pinned)

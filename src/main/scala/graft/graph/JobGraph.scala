@@ -156,6 +156,13 @@ object JobGraph {
           (if (unknown.size > 1) "s " else " ") +
           unknown.map(k => s"'$k'" + didYouMean(k, d.paramNames ++ baseFieldNames)).mkString(", ") +
           s"; declared: ${d.params.map(_.name).mkString(", ")}")
+      // a retry re-runs the whole job, so an append sink that committed
+      // before a later failure would write the same rows again
+      require(streaming || spec.numOfRetries == 0 || !d.paramNames("append") ||
+        !c.bool("append", false),
+        s"component ${c.name} (${c.compType}): append: true cannot be combined " +
+          s"with num_of_retries ${spec.numOfRetries} — a retry re-runs the whole " +
+          "job and would append the same rows again; set num_of_retries to 0 or drop append")
     }
 
     // routes point at known components and known in-ports
@@ -395,7 +402,7 @@ object JobGraph {
   /** LSH depth for the declarative `dedup method=embedding` component.
     * Explicit `bands`/`rows_per_band` config always wins; each OMITTED
     * parameter is solved CONDITIONAL on the pinned one via the MEASURED
-    * rule halves (the 100x ScaleProbe showed fixed small-corpus depth
+    * rule halves (the 100x tools/ScaleProbe @0fcdae9 showed fixed small-corpus depth
     * degenerating at 200k vectors: ~6e8 background candidates, ~60 GB
     * spill): r from the corpus count (candidate volume), bands from the
     * EFFECTIVE r (recall budget) — deriving bands against a fresh r when

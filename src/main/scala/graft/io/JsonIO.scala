@@ -156,8 +156,8 @@ object JsonIO {
     * Gzip parts are UNSPLITTABLE on read: an under-partitioned input
     * (one small parquet file → one scan partition) would write one big
     * .gz whose every later read is a single-task gunzip+parse — measured
-    * 2.3 s vs 0.35 s at 32 parts for a 100k-row roundtrip (tools/
-    * R21Probe; guide §2.5 "input skew: fix at the source"). So the gzip
+    * 2.3 s vs 0.35 s at 32 parts for a 100k-row roundtrip
+    * (tools/R21Probe @0fcdae9; guide §2.5 "input skew: fix at the source"). So the gzip
     * path widens to the cluster's default parallelism first, exactly
     * like Dedup.widen: row content is unchanged, and at production scale
     * inputs already exceed the parallelism so this is a no-op. Plain

@@ -218,7 +218,6 @@ object MongoIO {
   }
 
   final class InMemoryStore extends DocumentStore {
-    private implicit val fmts: Formats = DefaultFormats
     private val colls =
       new java.util.concurrent.ConcurrentHashMap[String, java.util.List[String]]()
 

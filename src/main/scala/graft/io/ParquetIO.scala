@@ -9,7 +9,7 @@ import java.util.concurrent.ConcurrentHashMap
  *
  * `spark.read.parquet(path)` re-runs footer-based schema inference on
  * every call — measured at 60–90 ms of driver-side constant per read at
- * sf0.1 (tools/JobPhaseProbe: a read with an explicit schema is ~7 ms,
+ * sf0.1 (tools/JobPhaseProbe @0fcdae9: a read with an explicit schema is ~7 ms,
  * inferred ~70 ms), which is most of a declarative job's build cost and
  * recurring overhead for a job-per-minute control plane re-reading the
  * same inputs. The cache keys the inferred StructType on the path's
@@ -54,7 +54,7 @@ object ParquetIO {
     * fs.listFiles(p, recursive=true): the RemoteIterator resolves block
     * locations per file (a stat/open on LocalFileSystem, an RPC on
     * distributed stores) — measured at ~8 ms/file on a 142-directory
-    * partitioned index (IvfPhase), which made the fingerprint 3x the
+    * partitioned index (tools/IvfPhase @0fcdae9), which made the fingerprint 3x the
     * cost of the inference it was saving. listStatus returns
     * name/length/mtime without touching block metadata. */
   private def fingerprint(spark: SparkSession, pathStr: String): Option[String] =
@@ -83,7 +83,7 @@ object ParquetIO {
   /** Read `path` trusting a KNOWN schema — for readbacks of files this
     * process just wrote, where the writer frame's schema is in hand.
     * Skips the per-call footer-inference Spark job entirely (measured
-    * 67 ms flat per readback, tools/R21Probe rb.* phases — the fingerprint
+    * 67 ms flat per readback, tools/R21Probe @0fcdae9 rb.* phases — the fingerprint
     * cache above can't help because a rewritten output always misses).
     * The schema is normalized the way file-source inference would yield
     * it — deep-nullable (DataSource marks every field/element nullable:

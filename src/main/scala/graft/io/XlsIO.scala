@@ -245,7 +245,7 @@ object XlsIO {
       throw new IllegalArgumentException(s"$path: no Workbook stream (not a .xls?)"))
 
     // pass 1: globals — BOUNDSHEETs and SST (with CONTINUEs)
-    var sheets = scala.collection.mutable.ArrayBuffer[(String, Int)]()
+    val sheets = scala.collection.mutable.ArrayBuffer[(String, Int)]()
     var sstParts = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
     var inSst = false
     val it = records(wb, 0)

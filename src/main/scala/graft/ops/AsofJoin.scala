@@ -50,13 +50,13 @@ import org.apache.spark.sql.functions._
  *    times. Post-filtering the single carried match is sufficient: the
  *    nearest row is out of tolerance exactly when every farther row is.
  *
- * MEASURED scaling (tools/AsofProbe, synthetic events over n/100 users,
+ * MEASURED scaling (tools/AsofProbe @0fcdae9, synthetic events over n/100 users,
  * local[32], one aggregate forcing the carried column; struct-carry
  * implementation): 10M rows 1.48 s, 30M 2.35 s, 100M 9.05 s — 10x input
  * costs ~6x time (the 1M point, 2.8 s, is JIT-cold; checksums identical
  * to the pre-struct implementation). The only shuffle is the window's
  * hash partition on the by-keys; a bare count() over the result is NOT
- * a valid probe (column pruning deletes the window — AsofProbe
+ * a valid probe (column pruning deletes the window — tools/AsofProbe @0fcdae9
  * aggregates p_value).
  */
 object AsofJoin {

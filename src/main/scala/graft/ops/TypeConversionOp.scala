@@ -225,7 +225,7 @@ object TypeConversionOp {
     * from codegen subexpression elimination). CollapseProject keeps the
     * staging Projects intact precisely because the temps are non-cheap and
     * multiply-referenced, so each is computed ONCE per row; measured ~3×
-    * on a 600k-row all-string CSV conversion (CsvPhaseProbe shape). */
+    * on a 600k-row all-string CSV conversion. */
   def apply(df: DataFrame, rules: Seq[CastRule]): DataFrame =
     rules.foldLeft(df) { (d, r) =>
       val segs = r.columnPath.split('.')

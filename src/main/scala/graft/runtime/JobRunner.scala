@@ -16,7 +16,8 @@ import graft.graph.JobGraph
  *
  *  - `num_of_retries` re-runs the whole job on failure with constant or
  *    exponential backoff; idempotency comes from sink modes (overwrite /
- *    upsert keys), matching the reference's retry contract;
+ *    upsert keys), matching the reference's retry contract, and
+ *    validation rejects retries on a job with an `append: true` sink;
  *  - per-component `lines_forwarded` is collected with Dataset.observe —
  *    a zero-cost aggregate riding INSIDE the existing plan (no second
  *    scan, no accumulator races on retried tasks) — harvested by a

@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
  *
  * Everything is built from codegen'd Catalyst expressions — no UDFs.
  *
- * Measured scaling (tools/ScaleProbe, sf0.1 docs replicated Nx with
+ * Measured scaling (tools/ScaleProbe @0fcdae9, sf0.1 docs replicated Nx with
  * salted near-dup replicas, local[32] / 96g driver):
  *
  *  | stage             | 10x (50k docs)    | 100x decade (500k docs)        |
@@ -62,7 +62,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
  *    (background collisions ~C(n,2)·bands·2^-r ≈ 6e8 candidates, ~60 GB
  *    spill); with r ~ log2(n) and bands from the recall budget (29x18 at
  *    200k, ~99% recall at cos 0.95) candidates stay ~linear and the 100x
- *    run costs 4.7x. ScaleProbe derives the per-scale params, exposed as
+ *    run costs 4.7x. tools/ScaleProbe @0fcdae9 derives the per-scale params, exposed as
  *    Similarity.lshDepthFor — and the declarative `dedup method=embedding`
  *    component sizes omitted bands/rows_per_band from the corpus count
  *    through that rule (JobGraph.embeddingDepth), so the measured
@@ -78,7 +78,7 @@ object Dedup {
     * parallelism and this is a no-op.
     *
     * The probe forces one physical-planning pass of the input at graph
-    * build (no job runs). Measured (tools/WidenProbe, local[8], sf0.01,
+    * build (no job runs). Measured (tools/WidenProbe @0fcdae9, local[8], sf0.01,
     * plans from a bare scan to a 30-step transform chain):
     * `queryExecution.toRdd.getNumPartitions` ~25 ms/invocation, flat in
     * plan depth — half of `df.rdd`'s ~45 ms (which adds a row-
@@ -96,7 +96,7 @@ object Dedup {
     * whitespace — the codegen'd CollapseWs kernel, one compiled
     * pass with NO regex (byte-equivalence with the regexp_replace form
     * below pinned in DedupSimilaritySpec). Every dedup path runs this
-    * normalization corpus-wide; measured paired (tools/KeyProbe,
+    * normalization corpus-wide; measured paired (tools/KeyProbe @0fcdae9,
     * local[32], 500k docs, md5(key) plans): kernel 0.41 s vs regex
     * 0.62 s vs 0.32 s no-collapse floor — the kernel reclaims ~70% of
     * what the regex engine was costing on top of the hash itself. */
@@ -284,7 +284,7 @@ object Dedup {
    * exploded). Set `broadcastHot=false` when maxDocs is low enough and
    * the corpus dirty enough that the hot set outgrows the driver.
    *
-   * Measured (tools/CurationProbe, local[32], 4-line docs with a
+   * Measured (tools/CurationProbe @0fcdae9, local[32], 4-line docs with a
    * fixed 51-line hot set): 5k docs 1.51 s → 50k 2.13 s → 500k 5.83 s
    * — 3.9x time for 100x rows; [[lineDedupSet]] measures 0.78/1.47/
    * 4.91 s on the same corpus, ahead at every factor.
@@ -333,7 +333,7 @@ object Dedup {
   /** (id, pos, unit) exploded view of the documents, with the temp-name
     * collision guard both line_dedup strategies share. */
   private def explodedLines(df: DataFrame, textCol: String,
-                            idCol: String, delim: String = "\n"): DataFrame = {
+                            idCol: String, delim: String): DataFrame = {
     Seq("__pos", "__line", "__docs", "__line_text", "__kept").foreach { c =>
       require(!df.columns.contains(c), s"line_dedup: input already has a '$c' column")
     }
@@ -734,7 +734,7 @@ object Dedup {
     // verifies each candidate in place — no cross-block pair dedup (a
     // duplicate collision re-verifies a 4-long hamming, cheaper than the
     // distinct exchange) and no rep join-backs (two whole join stages).
-    // Interleaved arms at sf0.1 (tools/R22Probe): 1.55 → 1.26 s, Spark
+    // Interleaved arms at sf0.1 (tools/R22Probe @0fcdae9): 1.55 → 1.26 s, Spark
     // jobs 17 → 12, identical survivors.
     val withFp =
       widen(df).select(col(idCol).as("id"), simhashBlocks(col(textCol)).as("blk"))
@@ -762,7 +762,7 @@ object Dedup {
    * pair set plus the size table) are gone. Guide §2.3's
    * "shuffle metadata, not payloads" weighed the other way: here the
    * metadata IS 8 bytes and the joins were the heavy part. Measured
-   * (tools/R22Probe interleaved arms, sf0.1): 1.73 → 1.39 s, Spark jobs
+   * (tools/R22Probe @0fcdae9 interleaved arms, sf0.1): 1.73 → 1.39 s, Spark jobs
    * 17 → 12, identical 256 output pairs.
    * `maxDf` drops postings whose document frequency exceeds the cap —
    * a stop-phrase shingle shared by df docs would otherwise contribute an
@@ -836,10 +836,10 @@ object Dedup {
    * in no pair are not in the output (their component is trivially
    * themselves — `clusterDedup` keeps such rows untouched).
    *
-   * Measured scaling (tools/ScaleProbe `connectedComponents` stage,
-   * length-512 chains — ~10 pointer-jump rounds, the hard multi-round
-   * case — local[32] / 96g driver, per-round split via ccProbed; r19
-   * numbers, join-form check):
+   * Measured scaling (tools/ScaleProbe @0fcdae9 `connectedComponents`
+   * stage, length-512 chains — ~10 pointer-jump rounds, the hard
+   * multi-round case — local[32] / 96g driver, per-round split via that
+   * commit's per-round loop hook; r19 numbers, join-form check):
    *
    *  | vertices | rounds | total    | step (label+ckpt) | check action |
    *  |----------|--------|----------|-------------------|--------------|
@@ -851,7 +851,7 @@ object Dedup {
    * count stays O(log diameter) as designed.
    *
    * The ~20-22% changed-count share above motivated the r20 FUSED check
-   * (tools/CcCheckProbe, same chain fixture, interleaved join/fused/
+   * (tools/CcCheckProbe @0fcdae9, same chain fixture, interleaved join/fused/
    * fused/join after a discarded warmup loop so drift cancels):
    *
    *  | variant          | total (2-run avg) | step        | check      |
@@ -862,13 +862,12 @@ object Dedup {
    * Fused carries the round-entry label through the jump as `prev` and
    * counts changed rows from the just-checkpointed blocks — no V-row
    * join against the previous round. The extra long per row costs ~1 s
-   * of step and buys back ~5.6 s of check; fused is the default, and
-   * the join form survives only as ccProbed's comparison arm so the
-   * experiment stays reproducible.
+   * of step and buys back ~5.6 s of check, so fused is the only form
+   * (the join-form arm is in Dedup.scala @0fcdae9).
    *
    * r21 experiment — MULTIPLE POINTER JUMPS PER ROUND (fewer rounds per
    * convergence at one extra V-row self-join per extra jump): NULL
-   * RESULT. tools/CcJumpProbe, same 1M-vertex 512-chain fixture,
+   * RESULT. tools/CcJumpProbe @0fcdae9, same 1M-vertex 512-chain fixture,
    * interleaved 1/2/2/1 + 3/3 after a discarded warmup:
    *
    *  | jumps/round | rounds | total (2-run mean) |
@@ -880,8 +879,8 @@ object Dedup {
    * The chained self-joins run INSIDE one round's un-truncated plan, so
    * each extra jump pays two more V-row exchanges per round and the
    * per-round step cost grows faster than the round count falls.
-   * jumpsPerRound stays 1 (the knob survives only on ccProbed for
-   * reproducibility). The residual ~4% check share also
+   * The loop jumps once per round (the multi-jump knob is in
+   * Dedup.scala @0fcdae9). The residual ~4% check share also
    * re-fixes the `checkEvery` default at 1 more firmly than before:
    * skipping checks can now save at most ~4% of wall but still pays up
    * to k-1 extra full rounds after actual convergence. The knob stays
@@ -919,7 +918,7 @@ object Dedup {
         case _ => false
       })
     if (!integralSame || maxLocalEdges <= 0)
-      ccProbed(pairs, srcCol, dstCol, maxIter, checkEvery, null, checkpointDir)
+      ccLoop(pairs, srcCol, dstCol, maxIter, checkEvery, checkpointDir)
     else {
       // persist the 2-column projection once: the gate count consumes it,
       // and on the distributed path the loop's edge build references it
@@ -940,7 +939,7 @@ object Dedup {
       val dirF = sel.persist()
       try {
         if (dirF.count() <= maxLocalEdges) localCc(dirF)
-        else ccProbed(dirF, "src", "dst", maxIter, checkEvery, null, checkpointDir)
+        else ccLoop(dirF, "src", "dst", maxIter, checkEvery, checkpointDir)
       } finally dirF.unpersist(false)
     }
   }
@@ -1005,20 +1004,12 @@ object Dedup {
     spark.createDataFrame(out, schema)
   }
 
-  /** connectedComponents with a per-round instrumentation hook —
-    * (round, stepSeconds, checkSeconds, changed; changed = -1 on rounds
-    * whose convergence check was skipped under checkEvery > 1). The
-    * probe is how tools/ScaleProbe measures the changed-count action's
-    * share of a round without timing from outside the loop. */
-  private[graft] def ccProbed(pairs: DataFrame, srcCol: String, dstCol: String,
-                              maxIter: Int, checkEvery: Int,
-                              probe: (Int, Double, Double, Long) => Unit,
-                              checkpointDir: String = "",
-                              fusedCheck: Boolean = true,
-                              jumpsPerRound: Int = 1): DataFrame = {
+  /** The distributed connectedComponents loop: label propagation with
+    * one pointer jump and a fused convergence check per round. */
+  private def ccLoop(pairs: DataFrame, srcCol: String, dstCol: String,
+                     maxIter: Int, checkEvery: Int,
+                     checkpointDir: String): DataFrame = {
     require(checkEvery >= 1, s"connectedComponents: checkEvery must be >= 1, got $checkEvery")
-    require(jumpsPerRound >= 1,
-      s"connectedComponents: jumpsPerRound must be >= 1, got $jumpsPerRound")
     // checkpointDir swaps the per-round plan truncation from executor-
     // block localCheckpoint to RELIABLE checkpoint on that directory
     // (survives executor loss — the preemption-safe path); rounds still
@@ -1062,63 +1053,39 @@ object Dedup {
     // blocks (~O(V) each) linger until ContextCleaner GC — on a
     // long-running driver that accumulates rounds × V rows of storage
     while (changed > 0 && it < maxIter) {
-      val t0 = System.nanoTime()
       val nbrMin = edges
         .join(labels.select(col("id").as("dst"), col("comp").as("dcomp")),
           Seq("dst"))
         .groupBy(col("src")).agg(min(col("dcomp")).as("nmin"))
-      // fusedCheck carries the round-entry label through the jump as
+      // the step carries the round-entry label through the jump as
       // `prev`, so the convergence check below is a scan-count of the
       // just-checkpointed blocks instead of a V-row join against the
       // previous round (measured 1.18x whole-loop at 1M vertices,
-      // tools/CcCheckProbe — see the class scaladoc table); the price is
-      // one extra long per row through the jump shuffle + checkpoint
-      val stepCols =
-        if (fusedCheck) Seq(col("id"),
-          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
-          col("comp").as("prev"))
-        else Seq(col("id"),
-          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
+      // tools/CcCheckProbe @0fcdae9 — see the class scaladoc table); the
+      // price is one extra long per row through the jump shuffle +
+      // checkpoint
       val stepped = labels
         .join(nbrMin.select(col("src").as("id"), col("nmin")), Seq("id"), "left")
-        .select(stepCols: _*)
+        .select(col("id"),
+          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
+          col("comp").as("prev"))
       // the jump: comp is itself a vertex id (labels only ever take
       // vertex-id values), so the inner self-join always finds its row.
-      // jumpsPerRound > 1 chains further comp ← comp(comp) self-joins
-      // INSIDE the round's plan (no intermediate checkpoint/action): each
-      // extra jump multiplies the per-round label-depth reduction, so
-      // deep graphs converge in fewer rounds at the price of one V-row
-      // self-join per extra jump — see the CcJumpProbe table in the
-      // connectedComponents scaladoc for the measured trade.
-      def jump(t: DataFrame): DataFrame = {
-        val cols =
-          if (fusedCheck) Seq(col("id"), col("cc").as("comp"), col("prev"))
-          else Seq(col("id"), col("cc").as("comp"))
-        t.join(t.select(col("id").as("comp"), col("comp").as("cc")), Seq("comp"))
-          .select(cols: _*)
-      }
-      var j = stepped
-      for (_ <- 0 until jumpsPerRound) j = jump(j)
-      val jumped = ckpt(j)
-      val t1 = System.nanoTime()
+      // One jump per round — more measured slower, see the
+      // tools/CcJumpProbe @0fcdae9 table in the connectedComponents
+      // scaladoc.
+      val jumped = ckpt(stepped
+        .join(stepped.select(col("id").as("comp"), col("comp").as("cc")), Seq("comp"))
+        .select(col("id"), col("cc").as("comp"), col("prev")))
       // checkEvery > 1 skips the convergence action on most rounds at
       // the cost of up to checkEvery-1 extra label rounds after actual
       // convergence; the final permitted round always checks so the
       // non-convergence require below stays meaningful
-      val check = (it + 1) % checkEvery == 0 || it + 1 >= maxIter
-      if (check)
-        changed =
-          if (fusedCheck)
-            jumped.filter(col("comp") =!= col("prev")).count()
-          else jumped
-            .join(labels.select(col("id"), col("comp").as("prev")), Seq("id"))
-            .filter(col("comp") =!= col("prev")).count()
-      val t2 = System.nanoTime()
-      if (probe != null)
-        probe(it, (t1 - t0) / 1e9, (t2 - t1) / 1e9, if (check) changed else -1L)
+      if ((it + 1) % checkEvery == 0 || it + 1 >= maxIter)
+        changed = jumped.filter(col("comp") =!= col("prev")).count()
       releaseCheckpoint(ckptFrame) // superseded round, count() done
       ckptFrame = jumped
-      labels = if (fusedCheck) jumped.select(col("id"), col("comp")) else jumped
+      labels = jumped.select(col("id"), col("comp"))
       it += 1
     }
     edges.unpersist(false) // consumed; don't wait for OpCaches.drain

@@ -33,7 +33,6 @@ object KMeans {
   /** Train k centroids; returns (cell, cvec) with cell = 0..k-1. */
   def train(corpus: DataFrame, vecCol: String, k: Int, iters: Int = 5): DataFrame = {
     require(k > 0 && iters >= 0, s"bad kmeans params k=$k iters=$iters")
-    val spark = corpus.sparkSession
     val vecs = corpus.select(col(vecCol).as("v"))
 
     // deterministic init: k rows by smallest hash of the vector bytes
@@ -82,7 +81,7 @@ object KMeans {
     *
     * The repartition on cell makes each cell directory ONE file instead
     * of one-per-upstream-task: a probe scans whole cells anyway, and the
-    * small-files alternative (IvfProbe measured 32 files/cell at 142
+    * small-files alternative (tools/IvfProbe @0fcdae9 measured 32 files/cell at 142
     * cells) costs every probe a ~4 s listing + footer-inference floor —
     * more than the scan itself. At real scale add
     * spark.sql.files.maxRecordsPerFile to re-split jumbo cells. */
@@ -102,7 +101,7 @@ object KMeans {
     * PLAN TIME — the scan lists only the nprobe directories (PartitionCount
     * pinned in KMeansSpec), where the previous broadcast-join form relied
     * on runtime DPP and still listed every cell directory per query
-    * (IvfProbe measured it as a flat ~1.2 s/query floor at 142 cells).
+    * (tools/IvfProbe @0fcdae9 measured it as a flat ~1.2 s/query floor at 142 cells).
     * The index schema comes from ParquetIO's fingerprint cache, so
     * repeated probes skip footer re-inference. */
   /** Batch-probe a bucketed index with MANY queries: rank cells per query
@@ -121,7 +120,7 @@ object KMeans {
     * cell). Corpus-scale query sets belong in knnJoin or a dedup pass.
     * Output: (query_id, rank, idCol, cosine), k rows per query.
     *
-    * MEASURED amortization (tools/IvfProbe, 20k-vector index, 142 cells,
+    * MEASURED amortization (tools/IvfProbe @0fcdae9, 20k-vector index, 142 cells,
     * nprobe=2, local[32]): point probes (searchBucketed) cost ~0.66 s
     * per query — a floor of plan/listing per probe; batch probing runs
     * 8/64/256 queries in 4.6/4.9/7.6 s = 0.57/0.077/0.030 s per query,

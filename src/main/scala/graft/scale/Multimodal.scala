@@ -26,18 +26,6 @@ import org.apache.spark.sql.types._
  */
 object Multimodal {
 
-  /** Typed metadata carried next to every media payload. */
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("mime", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("duration_ms", LongType, nullable = true)))
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = false),
-    StructField("meta", mediaMetaType, nullable = false)))
-
   /**
    * REAL container-header codecs, pure JDK: sniff the format and decode
    * intrinsic dimensions from header bytes without touching pixel data.
@@ -343,7 +331,6 @@ object Multimodal {
 
   /** Synthesize a deterministic media table for tests/benches. */
   def syntheticMedia(spark: SparkSession, n: Int, bytesPerRow: Int = 4096): DataFrame = {
-    import spark.implicits._
     spark.range(n.toLong).select(col("id").as("media_id"))
       .withColumn("payload",
         // deterministic pseudo-random bytes: sha2 chain sliced to length

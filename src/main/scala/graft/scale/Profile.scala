@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
  * aggregate through r20; the r21 split exists because the
  * multi-distinct rewrite drags every regular aggregate through the
  * Expand's grouping stage (measured 3.5× the sum of the two plans at
- * sf0.1, tools/R21Probe). The approx face has no Expand and keeps the
+ * sf0.1, tools/R21Probe @0fcdae9). The approx face has no Expand and keeps the
  * single fused scan.
  *
  * Exact by default so the output is oracle-replayable (count, nulls,
@@ -73,12 +73,12 @@ object Profile {
     // plain aggregates makes Spark's multi-distinct rewrite carry EVERY
     // regular aggregate through the Expand×(k+1) grouping stage — measured
     // 2.6 s noop vs 0.75 s for the distincts alone + ~0.1 s for the plain
-    // aggregates at sf0.1 (tools/R21Probe). Two single-row aggregates
+    // aggregates at sf0.1 (tools/R21Probe @0fcdae9). Two single-row aggregates
     // cross-joined compute the identical values in two bounded scans of
     // `df` (still O(1) scans, never per-column); the approx face has no
     // Expand, so it keeps the single fused scan.
     //
-    // Crossover AT SCALE (r22, tools/ProfileScale22 — the r21 claim was
+    // Crossover AT SCALE (r22, tools/ProfileScale22 @0fcdae9 — the r21 claim was
     // sf0.1-only): at 100× the bench input (15M rows × 5 exact-distinct
     // columns, persisted, noop sink, interleaved fused/split/split/fused
     // ×2) fused = 6.2 s vs split = 4.4 s mean — the split WIDENS its win

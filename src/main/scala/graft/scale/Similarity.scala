@@ -8,12 +8,9 @@ import org.apache.spark.sql.functions._
  * Similarity search over an embedding column (Array[Float]).
  *
  * Tiers, by scale:
- *  - bruteForceTopK: exact cosine top-k against one query vector — a single
- *    codegen'd projection (zip_with + aggregate for the dot product) plus a
- *    top-k sort. Correctness baseline; O(n·d), embarrassingly parallel.
  *  - knnJoin: exact k-NN for every row of a (small, broadcastable) query set —
  *    broadcast the queries, one narrow pass over the corpus, per-query
- *    window top-k. No shuffle of the corpus.
+ *    window top-k. No shuffle of the corpus. Correctness baseline; O(n·d).
  *  - ivfTopK: IVF-style approximate search with centroids as a DataFrame —
  *    assignment is a broadcast cross-join + argmax (fully distributed, no
  *    driver collect), the query probes only the `nprobe` nearest cells. At
@@ -48,19 +45,6 @@ object Similarity {
   }
 
   /**
-   * Exact top-k by cosine against one literal query vector.
-   * The query is folded into the expression tree as an array literal —
-   * no join, no broadcast, just a scan + TakeOrderedAndProject.
-   */
-  def bruteForceTopK(corpus: DataFrame, vecCol: String, idCol: String,
-                     query: Seq[Float], k: Int): DataFrame = {
-    val q = array(query.map(v => lit(v)): _*)
-    corpus.select(col(idCol), round(cosine(col(vecCol), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /**
    * Exact k-NN join: for each query row, the k nearest corpus rows.
    * Queries must be broadcast-small; the corpus is streamed once.
    * Ranking uses the ROUNDED cosine (ties broken by corpus id) so the
@@ -90,30 +74,30 @@ object Similarity {
     Array.fill(dim)(rnd.nextDouble() - 0.5)
   }
 
-  /** Signed projection of `vec` onto deterministic plane `p` (higher-order
-    * fold; see lshCosineBands for why this interpreted form is the one we
-    * keep). Null/short/empty vectors propagate null through zip_with, so
-    * every sign bit lands 0 — malformed rows share the all-zero
-    * signature. */
-  private def planeProjection(vec: Column, p: Int, dim: Int): Column =
-    aggregate(
-      zip_with(vec, array(planeWeights(p, dim).map(lit(_)).toIndexedSeq: _*),
-        (x, w) => x.cast("double") * w),
-      lit(0.0), (acc, v) => acc + v)
-
   /**
    * All nPlanes signed projections in ONE pass with ONE literal: the
    * transposed weight matrix rides as a single typedLit 2D-array node and
    * a fold over vector positions accumulates every plane's partial sum in
    * an nPlanes-wide array state (the simhashBlocks pattern). Identical
-   * float math to the per-plane zip_with+aggregate form — same products,
+   * float math to a per-plane zip_with+aggregate form — same products,
    * same per-plane accumulation order — but the expression tree is a few
    * hundred nodes instead of ~20k (160 aggregates × 64-element array
    * literals), which was the real cost at bench scale: Catalyst re-
    * analyzes/optimizes the plan on every run, and plan processing scaled
    * with those 160 inlined literals while the interpreted runtime was
-   * already negligible (see lshCosineBands note). Null/short/long vectors
-   * propagate null → all-zero signature, same as before.
+   * already negligible. Null/short/long vectors propagate null →
+   * all-zero signature.
+   *
+   * Measured head-to-head (tools/EmbProbe @0fcdae9, sf0.1, 160 planes ×
+   * dim 64, local[32]) across four forms — a per-plane HOF (2.6 s cold /
+   * 1.1 s warm for 2k rows), a fully-unrolled codegen'd per-row sum
+   * (3.0-4.1 s, ~10k-node tree), a relational posexplode+groupBy (adds a
+   * shuffle carrying 2.5× the vector bytes and silently merges duplicate
+   * ids), and this matrix-fold form (0.4-0.6 s, bit-identical
+   * signatures). Every variant's cost is FIXED plan-processing overhead,
+   * not row work (64× the rows left timings unchanged; marginal cost
+   * ≤ 5 µs/row). All stay narrow maps with no shuffle, the shape that
+   * survives a 100× scale-up.
    */
   private[graft] def planeSums(vec: Column, dim: Int, nPlanes: Int): Column =
     graft.functions.MatVecSums.sums(vec, planeMatrix(dim, nPlanes))
@@ -147,51 +131,16 @@ object Similarity {
       (acc, arr) => zip_with(acc, arr, (a, v) => a + v))
   }
 
-  /** (band, sig) keys from a MATERIALIZED planeSums column. Callers must
-    * select planeSums into its own column first: inlining it here would
-    * duplicate the fold 160× across the sign extractions. */
+  /** (band, sig) keys from a MATERIALIZED planeSums column: `bands` bands
+    * of `r` sign bits each (planes band*r .. band*r+r-1). A pair collides
+    * in a band with probability (1-θ/π)^r; across bands the miss
+    * probability is (1-(1-θ/π)^r)^bands. Callers must select planeSums
+    * into its own column first: inlining it here would duplicate the fold
+    * 160× across the sign extractions. */
   private[graft] def bandKeysFromSums(sums: Column, bands: Int, r: Int): Column =
     array((0 until bands).map { b =>
       val sig = (0 until r).map { j =>
         when(element_at(sums, b * r + j + 1) > 0, lit(1L << j)).otherwise(lit(0L))
-      }.reduce((x, y) => x.bitwiseOR(y))
-      struct(lit(b).as("band"), sig.as("sig"))
-    }: _*)
-
-  /** Sign-of-projection LSH signature with `nPlanes` bits, as a long. */
-  def lshCosineSignature(vec: Column, dim: Int, nPlanes: Int = 16): Column =
-    (0 until nPlanes).map { p =>
-      when(planeProjection(vec, p, dim) > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
-  /**
-   * Banded LSH bucket keys: `bands` bands of `r` sign bits each (planes
-   * band*r .. band*r+r-1). A pair collides in a band with probability
-   * (1-θ/π)^r; across bands the miss probability is (1-(1-θ/π)^r)^bands —
-   * at cos ≥ 0.95, bands=16, r=8 that is ≈ 1.4e-4, while near-orthogonal
-   * pairs (the background mass of a real corpus) collide per band at only
-   * 2^-8, keeping bucket joins linear.
-   *
-   * Prefer the two-step planeSums → bandKeysFromSums pipeline for many
-   * planes (embeddingNearDups uses it): measured head-to-head
-   * (tools/EmbProbe, sf0.1, 160 planes × dim 64, local[32]) across four
-   * forms — this per-plane HOF (2.6 s cold / 1.1 s warm for 2k rows), a
-   * fully-unrolled codegen'd per-row sum (3.0-4.1 s, ~10k-node tree), a
-   * relational posexplode+groupBy (adds a shuffle carrying 2.5× the
-   * vector bytes and silently merges duplicate ids), and the matrix-fold
-   * planeSums form (0.4-0.6 s, bit-identical signatures). Every variant's
-   * cost is FIXED plan-processing overhead, not row work (64× the rows
-   * left timings unchanged; marginal cost ≤ 5 µs/row): this form inlines
-   * one 64-double literal per plane into 160 aggregates, and Catalyst
-   * re-analyzes that whole tree on every run, while planeSums carries the
-   * weights as ONE 2D-literal node. Kept for few-plane callers and as the
-   * semantic reference; both stay narrow maps with no shuffle, the shape
-   * that survives a 100× scale-up.
-   */
-  def lshCosineBands(vec: Column, dim: Int, bands: Int = 16, r: Int = 8): Column =
-    array((0 until bands).map { b =>
-      val sig = (0 until r).map { j =>
-        when(planeProjection(vec, b * r + j, dim) > 0, lit(1L << j)).otherwise(lit(0L))
       }.reduce((x, y) => x.bitwiseOR(y))
       struct(lit(b).as("band"), sig.as("sig"))
     }: _*)
@@ -254,7 +203,7 @@ object Similarity {
    * only because a null/zero-norm cosine can never reach a positive
    * threshold.
    *
-   * MEASURED stage breakdown (tools/EmbStage, sf0.1 = 2k vectors x dim 64,
+   * MEASURED stage breakdown (tools/EmbStage @0fcdae9, sf0.1 = 2k vectors x dim 64,
    * bands=16 r=10, local[32], cold = cache-cleared like a bench rep):
    * read 1.7 s / widen 0.6 / bucket projection 1.0 (0.4 warm) / persist
    * +1.7 over no-persist but 2.8x faster on the reused side of the
@@ -273,7 +222,7 @@ object Similarity {
    * budget, keeping candidates ~linear while the projection stays a
    * narrow one-pass map.
    *
-   * The rule is MEASURED at 100x (tools/ScaleProbe, 200k vectors,
+   * The rule is MEASURED at 100x (tools/ScaleProbe @0fcdae9, 200k vectors,
    * local[32]): fixed 16x10 params degenerate exactly as predicted
    * (~6e8 background candidates, ~60 GB spill, run killed), while
    * r=18 / bands=29 (r ~ log2(n), bands solved from a 1% miss budget at
@@ -289,7 +238,7 @@ object Similarity {
     val base = graft.scale.Dedup.widen(df).select(col(idCol).as("id"), col(vecCol).as("v"))
     // two-step: materialize the 160 plane sums as a column, THEN extract
     // band keys — and the sums fold appears once in the plan. Same
-    // signatures as the per-plane lshCosineBands form, tiny plan.
+    // signatures as a per-plane projection form, tiny plan.
     val bucketed = OpCaches.persist( // both sides of the self-join
       base.select(col("id"), planeSums(col("v"), dim, bands * r).as("ps"))
         .select(col("id"), explode(bandKeysFromSums(col("ps"), bands, r)).as("bk"))
@@ -344,7 +293,7 @@ object Similarity {
    * divide half, the wrong bill for a pass billed to touch a whole
    * 100 TB embedding column — equivalence pinned in CurationOpsSpec;
    * measured 2.4x: 0.23 s vs the composed form's 0.56 s on 200k
-   * 64-dim vectors, CurationProbe local[32]).
+   * 64-dim vectors, tools/CurationProbe @0fcdae9, local[32]).
    * A zero vector cannot be normalized: its `dest` is NULL (norm 0
    * survives for diagnosis), as is everything after a NULL vector.
    * Pure narrow map — no shuffle at any scale.
@@ -530,7 +479,7 @@ object Similarity {
     * and cell scan ~n/cells·nprobe — so both grow as sqrt(n)). Clamped
     * to [16, 65536].
     *
-    * IvfProbe measurements (sf0.1 embeddings replicated by isometry,
+    * tools/IvfProbe @0fcdae9 measurements (sf0.1 embeddings replicated by isometry,
     * 64-dim, recall@10 vs exact brute force, local[32]):
     * {{{
     *   n        cells  train(3 it)  index   recall@10 by nprobe            per-query
@@ -561,7 +510,7 @@ object Similarity {
   }
 
   /** Default probed-cell count given the cell count: an eighth of the
-    * cells, floored at 2 — the scale-stable point of the IvfProbe recall
+    * cells, floored at 2 — the scale-stable point of the tools/IvfProbe @0fcdae9 recall
     * curve (~0.5 recall@10 at 20k/60k/200k on the synthetic corpus; see
     * ivfCellsFor's table). A fixed absolute nprobe was measured to decay
     * with corpus growth; the fraction holds. */

@@ -1,6 +1,6 @@
 package graft.scale
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.AggregateOp
 import graft.ops.AggregateOp.AggSpec

@@ -56,7 +56,7 @@ object TextAnalysis {
     * boundary.
     *
     * Cost is genuinely LINEAR in gram positions (~n_tokens per doc —
-    * CurationProbe measures ~75M grams/s at local[32] with the
+    * tools/CurationProbe @0fcdae9 measures ~75M grams/s at local[32] with the
     * positional-WordShingles codegen kernel); at 100 TB run
     * it on a deterministic hashSample of the corpus: frequency RANKS
     * converge fast under uniform sampling, and the md5 sample is
@@ -202,7 +202,7 @@ object TextAnalysis {
    * The whole projection is compiled — no CodegenFallback node
    * (plan-pinned in CurationOpsSpec). The alpha-word count is the
    * CountAlphaTokens char-loop kernel — one compiled pass, NO regex:
-   * measured (CurationProbe, local[32], 500k docs) 0.23 s vs 0.41 s
+   * measured (tools/CurationProbe @0fcdae9, local[32], 500k docs) 0.23 s vs 0.41 s
    * for the interpreted per-token ArrayFilter lambda it replaced
    * (size(filter(toks, _ rlike \p{L})), equivalence spec-pinned) and
    * vs 0.60 s for the compiled-but-regex-bound
@@ -224,7 +224,7 @@ object TextAnalysis {
     // the five symbol/line counts in ONE GopherLineStats pass — the
     // five separate scans it replaced (regexp_replace '#' strip,
     // ellipsis regexp_count, split-\n, two (?dm) regexp_counts) each
-    // cost alone about what the whole kernel does (LineRuleProbe,
+    // cost alone about what the whole kernel does (tools/LineRuleProbe @0fcdae9,
     // 500k docs: composed 0.94-1.40 s vs kernel 0.32-0.57 s, ~2.3x;
     // equivalence pinned in CurationOpsSpec + ScalePropertySpec)
     val ls = graft.functions.GopherLineStats.stats(t)

@@ -47,8 +47,6 @@ final case class FieldDef(
     children: Seq[FieldDef] = Nil,
     item: Option[FieldDef] = None) {
 
-  import GraftType._
-
   def toStructField: StructField =
     StructField(name, FieldDef.toSparkType(this), nullable)
 }
@@ -83,7 +81,7 @@ object FieldDef {
     case at: ArrayType =>
       FieldDef(name, TArray, nullable,
         item = Some(fromSparkType("item", at.elementType, at.containsNull)))
-    case other =>
+    case _ =>
       // Timestamps/decimals etc. surface as STRING in the reference model.
       FieldDef(name, TString, nullable)
   }

@@ -835,7 +835,7 @@ class JobComponentsSpec extends SparkTestBase {
   }
 
   test("embedding dedup depth: sized from corpus count unless pinned") {
-    // The 100x ScaleProbe showed fixed (16, 8) degenerating at 200k
+    // The 100x tools/ScaleProbe @0fcdae9 showed fixed (16, 8) degenerating at 200k
     // vectors; an omitted-config job must get the measured rule instead.
     val auto = JobGraph.embeddingDepth(None, None, 0.95, 200000L)
     assert(auto !== ((16, 8)))

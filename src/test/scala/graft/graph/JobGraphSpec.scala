@@ -533,4 +533,24 @@ class JobGraphSpec extends SparkTestBase {
     assert(e.getMessage.contains("did you mean 'separator'?"))
     assert(e.getMessage.contains("'apend' (did you mean 'append'?)"))
   }
+
+  test("validation: num_of_retries > 0 with an append sink is rejected, naming the sink") {
+    // a retry re-runs every sink, so an append that committed before a
+    // later failure would land its rows twice
+    def job(retries: Int, sinkType: String, append: Boolean) = JobConfig.parse(
+      s"""{ "name": "t", "num_of_retries": $retries, "components": [
+         |  { "name": "r", "comp_type": "read_csv", "filepath": "x",
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "w", "comp_type": "$sinkType", "filepath": "y",
+         |    "append": $append, "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin)
+    for (t <- Seq("write_csv", "write_json", "write_xml", "write_excel")) {
+      val e = intercept[IllegalArgumentException](JobGraph.validate(job(2, t, append = true)))
+      assert(e.getMessage.contains(s"component w ($t)"))
+      assert(e.getMessage.contains("num_of_retries 2"))
+      assert(e.getMessage.contains("append the same rows again"))
+      JobGraph.validate(job(0, t, append = true))
+      JobGraph.validate(job(2, t, append = false))
+    }
+  }
 }

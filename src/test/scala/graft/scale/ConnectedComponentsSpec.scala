@@ -104,38 +104,17 @@ class ConnectedComponentsSpec extends SparkTestBase {
     assert(out === Map(1 -> 1, 2 -> 1, 3 -> 1, 8 -> 8, 9 -> 8))
   }
 
-  test("fused and join-form convergence checks produce the identical labeling") {
-    // the r20 fused check (prev carried through the jump, scan-count on
-    // the checkpointed blocks) must be observationally equal to the
-    // join-form it replaced — on a multi-component graph with genuine
-    // multi-round convergence so intermediate rounds actually differ
-    // (a 10-chain takes ~3 pointer-jump rounds; r22 trimmed from 30 —
-    // every extra round is ~0.5 s of pure suite wall, COVERAGE.md guard)
+  test("distributed loop matches union-find; output is (id, component)") {
+    // a 10-chain takes ~3 pointer-jump rounds, so intermediate rounds
+    // differ and the fused check (prev carried through the jump) must
+    // count them right; the prev column must not leak into the output
+    // (r22 trimmed the chain from 30 — every extra round is ~0.5 s of
+    // pure suite wall, COVERAGE.md guard)
     val edges = (1L until 10L).map(i => (i, i + 1)) ++
       Seq((50L, 51L), (51L, 52L), (200L, 100L))
-    def viaProbed(fused: Boolean) =
-      Dedup.ccProbed(edges.toDF("id_a", "id_b"), "id_a", "id_b",
-        maxIter = 25, checkEvery = 1, probe = null, fusedCheck = fused)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val f = viaProbed(fused = true)
-    val j = viaProbed(fused = false)
-    assert(f === j)
-    assert(f === ufModel(edges))
-    // and the fused frame's prev column never leaks into the output
-    assert(Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
-      .columns.toSeq === Seq("id", "component"))
-  }
-
-  test("jumpsPerRound > 1 (the r21 null-result experiment arm) labels identically") {
-    // 10-chain: multi-round under jumps=1, fewer rounds under jumps=2 —
-    // the interesting divergence survives the r22 fixture trim
-    val edges = (1L until 10L).map(i => (i, i + 1)) ++ Seq((50L, 51L), (200L, 100L))
-    def via(jumps: Int) =
-      Dedup.ccProbed(edges.toDF("id_a", "id_b"), "id_a", "id_b",
-        maxIter = 25, checkEvery = 1, probe = null, jumpsPerRound = jumps)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(via(2) === via(1))
-    assert(via(1) === ufModel(edges))
+    val df = Dedup.connectedComponents(edges.toDF("id_a", "id_b"), maxLocalEdges = 0)
+    assert(df.columns.toSeq === Seq("id", "component"))
+    assert(df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === ufModel(edges))
   }
 
   test("check_every > 1 converges to the identical labeling") {

@@ -187,7 +187,7 @@ class DedupSimilaritySpec extends SparkTestBase {
       assert(n * math.pow(2.0, -r) <= 1.0 + 1e-12,
         s"n=$n r=$r: n·2^-r=${n * math.pow(2.0, -r)}")
     }
-    // measured 100x points from ScaleProbe reproduce
+    // measured 100x points from tools/ScaleProbe @0fcdae9 reproduce
     assert(Similarity.lshDepthFor(2000L, 0.95) === ((16, 11)))
     assert(Similarity.lshDepthFor(200000L, 0.95) === ((29, 18)))
   }
