@@ -1,6 +1,8 @@
 package graft.api
 
-import graft.graph.{ComponentDef, Components, Param, PortSpec}
+import org.json4s.jackson.JsonMethods.{compact, render}
+import graft.config.Param
+import graft.graph.{ComponentDef, Components, PortSpec}
 import graft.util.JsonStr.quote
 
 /**
@@ -11,18 +13,25 @@ import graft.util.JsonStr.quote
  * same registry (graph/Components.scala) that validation and both folds
  * read, so what is documented is what runs. Each comp_type is described
  * as a JSON-Schema-shaped object: `properties` with type + description,
- * and a `required` list. The descriptions double as the user-facing
- * parameter documentation.
+ * and a `required` list. Each property also carries `default` when the
+ * param has one and `enum` (its allowed values) when it is a choice —
+ * both drawn from the same `Param` validation and the builds read. The
+ * descriptions double as the user-facing parameter documentation.
  */
 object ComponentSchemas {
 
-  private def paramJson(pr: Param): String =
+  private def paramJson(pr: Param[_]): String = {
+    def json(v: Any) = compact(render(Param.json(v)))
     s"${quote(pr.name)}:{" +
-      s""""type":${quote(pr.tpe)},"description":${quote(pr.desc)}}"""
+      s""""type":${quote(pr.kind.json)},""" +
+      pr.default.map(v => s""""default":${json(v)},""").getOrElse("") +
+      (if (pr.choices.isEmpty) "" else s""""enum":${json(pr.choices)},""") +
+      s""""description":${quote(pr.desc)}}"""
+  }
 
   /** Shared renderer for the form/full/hidden views: one place owns the
     * properties/required envelope shape. */
-  private def renderSchema(d: ComponentDef, params: Seq[Param],
+  private def renderSchema(d: ComponentDef, params: Seq[Param[_]],
                            withPorts: Boolean): String = {
     val props = params.map(paramJson).mkString("{", ",", "}")
     val required = params.filter(_.required).map(x => quote(x.name)).mkString("[", ",", "]")

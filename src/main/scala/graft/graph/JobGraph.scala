@@ -78,7 +78,7 @@ object JobGraph {
       if (c.compType == "type_conversion" && !c.outPortSchemas.contains("out"))
         c.inPortSchemas.get("in") match {
           case Some(in) => c.copy(outPortSchemas = c.outPortSchemas +
-            ("out" -> TypeConversionOp.deriveOutSchema(in, parseCastRules(c))))
+            ("out" -> TypeConversionOp.deriveOutSchema(in, Components.castRules(c))))
           case None => c
         }
       else c
@@ -156,13 +156,26 @@ object JobGraph {
           (if (unknown.size > 1) "s " else " ") +
           unknown.map(k => s"'$k'" + didYouMean(k, d.paramNames ++ baseFieldNames)).mkString(", ") +
           s"; declared: ${d.params.map(_.name).mkString(", ")}")
-      // a retry re-runs the whole job, so an append sink that committed
-      // before a later failure would write the same rows again
-      require(streaming || spec.numOfRetries == 0 || !d.paramNames("append") ||
-        !c.bool("append", false),
-        s"component ${c.name} (${c.compType}): append: true cannot be combined " +
-          s"with num_of_retries ${spec.numOfRetries} — a retry re-runs the whole " +
-          "job and would append the same rows again; set num_of_retries to 0 or drop append")
+      // every declared param is read once, so a wrong type or a value
+      // outside a choice fails HERE, naming the component and key — not
+      // at build time inside every retry attempt. An explicit JSON null
+      // is as absent as a missing key: "filepath": null fails here too.
+      d.params.foreach(p => if (p.required) p(c) else p.read(c))
+      // a retry re-runs the whole job, so a sink that committed before a
+      // later failure would write the same rows again: an append file
+      // sink, or a database sink inserting
+      if (!streaming && spec.numOfRetries > 0) {
+        require(!d.params.contains(Components.append) || !Components.append(c),
+          s"component ${c.name} (${c.compType}): append: true cannot be combined " +
+            s"with num_of_retries ${spec.numOfRetries} — a retry re-runs the whole " +
+            "job and would append the same rows again; set num_of_retries to 0 or drop append")
+        require(!d.params.contains(Components.ifExists) ||
+          !Components.ifExists(c).equalsIgnoreCase("insert"),
+          s"component ${c.name} (${c.compType}): if_exists insert cannot be combined " +
+            s"with num_of_retries ${spec.numOfRetries} — a retry re-runs the whole " +
+            "job and would insert the same rows again; set num_of_retries to 0 or " +
+            "use if_exists upsert/truncate")
+      }
     }
 
     // routes point at known components and known in-ports
@@ -195,19 +208,6 @@ object JobGraph {
         require(p.multi || n == 1,
           s"component ${c.name}: in port '${p.name}' must have exactly one upstream edge")
       }
-      // required params, from the discovery contract: the /schemas
-      // registry's `required` list is the published source of truth,
-      // so a config that would only fail at execute time ("missing
-      // 'filepath'", after spending retry attempts and backoff) is
-      // rejected HERE — create/validate time, like the reference's
-      // throwaway RuntimeJob construction.
-      // an explicit JSON null is as absent as a missing key — "filepath":
-      // null must fail HERE too, not at execute time after retry/backoff
-      for (p <- defOf(c).params.filter(_.required).map(_.name))
-        require((c.params \ p) match {
-          case org.json4s.JNothing | org.json4s.JNull => false
-          case _ => true
-        }, s"component ${c.name} (${c.compType}): missing required param '$p'")
       // unknown route ports
       for (port <- c.routes.keys)
         require(outPorts(c).exists(_.name == port),
@@ -318,7 +318,7 @@ object JobGraph {
           }
         } else inByPort
 
-      val (outs, sink) = defOf(c).build(new BuildCtx(spark, c, cachedIn, spec.components))
+      val (outs, sink) = defOf(c).build(new BuildCtx(spark, c, defOf(c), cachedIn, spec.components))
       sink.foreach(a => sinks += ((c.name, a)))
 
       for ((port, checked) <- checkedOutputs(c, outs, validateData)) {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.config.JobConfig._
+import graft.config.JobConfig.{ComponentSpec, JobSpec}
 import graft.graph.{BuildCtx, Components, JobGraph}
 import graft.schema.FieldDef
 
@@ -45,25 +45,44 @@ import graft.schema.FieldDef
  *
  * Sources read ONLY with a declared schema (streaming refuses inference):
  * read_csv consumes its all-string declared schema, read_json (NDJSON
- * layouts) and read_parquet their declared port schema.
+ * layouts) and read_parquet their declared port schema. The readStream /
+ * writeStream mapping applies only a source's or sink's path, separator
+ * and json format; any other of their params (write_parquet's layout
+ * levers, write_json gzip, read_csv multiline, read_parquet
+ * merge_schema, ...) set away from its default is rejected, not ignored.
  */
 object StreamingJobs {
 
   final case class SinkPlan(component: String, df: DataFrame, format: String,
                             path: String, options: Map[String, String])
 
+  /** The params each readStream source / writeStream sink below applies,
+    * per comp_type; its other declared params must stay at their defaults. */
+  private val appliedParams: Map[String, Set[String]] = Map(
+    "read_csv" -> Set("filepath", "separator"),
+    "read_json" -> Set("filepath", "format"),
+    "read_parquet" -> Set("filepath"),
+    "write_csv" -> Set("filepath", "separator"),
+    "write_json" -> Set("filepath", "format"),
+    "write_parquet" -> Set("filepath"))
+
   /** Fold the spec into per-sink streaming plans (no query started yet). */
   def plan(spark: SparkSession, spec0: JobSpec): Seq[SinkPlan] = {
     val spec = JobGraph.deriveSchemas(spec0)
     JobGraph.validateDerived(spec, streaming = true)
     for (c <- spec.components) {
-      require(c.compType != "schema_mapping" || parseJoinPlan(c).isEmpty,
+      require(c.compType != "schema_mapping" || Components.joinPlan.read(c).isEmpty,
         s"streaming job ${spec.name}: schema_mapping join mode (${c.name}) is not " +
           "streamable (stream-stream joins need watermark bounds); map mode is")
-      require(c.compType != "streaming_dedup" || c.str("method").forall(_ == "exact"),
-        s"streaming_dedup ${c.name}: only method=exact is streamable — " +
-          "near-dup families need a corpus self-join; run them as a batch " +
-          s"`dedup` component (got method=${c.str("method").getOrElse("")})")
+      // a source/sink param the readStream/writeStream mapping below does
+      // not apply would be silently ignored: only its default is accepted
+      for (applied <- appliedParams.get(c.compType);
+           p <- Components.byName(c.compType).params if !applied(p.name))
+        require(!p.overridden(c),
+          s"streaming job ${spec.name}: ${c.compType} ${c.name} sets '${p.name}', " +
+            "which the streaming source/sink path does not apply " +
+            s"(it applies only ${applied.toSeq.sorted.mkString(", ")}); " +
+            "drop it or run the job as a batch job")
     }
 
     val frames = scala.collection.mutable.Map.empty[(String, String), DataFrame]
@@ -86,36 +105,35 @@ object StreamingJobs {
     for (c <- JobGraph.topoOrder(spec)) {
       val inByPort = JobGraph.inPorts(c).map(p => p.name -> in(c, p.name))
         .filter(_._2.nonEmpty).toMap
+      val b = new BuildCtx(spark, c, Components.byName(c.compType), inByPort, spec.components)
       val outs: Map[String, DataFrame] = c.compType match {
         case "read_csv" =>
           Map("out" -> spark.readStream.schema(schemaFor(c))
             .option("header", "true")
-            .option("sep", c.str("separator").getOrElse(","))
-            .csv(c.reqStr("filepath")))
+            .option("sep", b(Components.separator))
+            .csv(b(Components.filepath)))
         case "read_json" =>
           Map("out" -> spark.readStream.schema(schemaFor(c))
-            .json(c.reqStr("filepath")))
+            .json(b(Components.filepath)))
         case "read_parquet" =>
           Map("out" -> spark.readStream.schema(schemaFor(c))
-            .parquet(c.reqStr("filepath")))
+            .parquet(b(Components.filepath)))
         case t if t.startsWith("write_") =>
           val df = inByPort("in").head
           val (fmt, opts) = t match {
             case "write_parquet" => ("parquet", Map.empty[String, String])
             case "write_csv" => ("csv", Map("header" -> "true",
-              "sep" -> c.str("separator").getOrElse(",")))
+              "sep" -> b(Components.separator)))
             case "write_json" =>
-              require(c.str("format").forall(_ == "ndjson"),
+              require(b(Components.jsonFormat) == "ndjson",
                 s"streaming write_json ${c.name}: only ndjson (array is a " +
                   "single-document format; a stream has no final document)")
               ("json", Map.empty[String, String])
             case other => throw new IllegalArgumentException(s"unstreamable sink $other")
           }
-          sinks += SinkPlan(c.name, df, fmt, c.reqStr("filepath"), opts)
+          sinks += SinkPlan(c.name, df, fmt, b(Components.filepath), opts)
           Map("out" -> df) // optional passthrough port, like the batch fold
-        case _ =>
-          Components.byName(c.compType)
-            .build(new BuildCtx(spark, c, inByPort, spec.components))._1
+        case _ => Components.byName(c.compType).build(b)._1
       }
       for ((port, df) <- JobGraph.checkedOutputs(c, outs, validateData = false))
         frames((c.name, port)) = df

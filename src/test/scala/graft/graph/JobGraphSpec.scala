@@ -553,4 +553,93 @@ class JobGraphSpec extends SparkTestBase {
       JobGraph.validate(job(2, t, append = false))
     }
   }
+
+  test("validation: num_of_retries > 0 with a database sink inserting is rejected, naming the sink") {
+    // a retry re-runs every sink, so rows an insert committed before a
+    // later failure would be inserted again; upsert/truncate re-run safely
+    def job(retries: Int, sink: String) = JobConfig.parse(
+      s"""{ "name": "t", "num_of_retries": $retries, "components": [
+         |  { "name": "r", "comp_type": "read_csv", "filepath": "x",
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "w", $sink, "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin)
+    val jdbc = """"comp_type": "write_jdbc", "url": "jdbc:derby:memory:x", "entity_name": "T""""
+    val mongo = """"comp_type": "write_mongodb", "store": "s", "entity_name": "c""""
+    for ((sink, t) <- Seq(jdbc -> "write_jdbc", mongo -> "write_mongodb");
+         mode <- Seq("", """, "if_exists": "insert"""", """, "if_exists": "INSERT"""")) {
+      val e = intercept[IllegalArgumentException](JobGraph.validate(job(1, sink + mode)))
+      assert(e.getMessage.contains(s"component w ($t)"))
+      assert(e.getMessage.contains("if_exists insert cannot be combined with num_of_retries 1"))
+      JobGraph.validate(job(0, sink + mode))
+    }
+    for (sink <- Seq(jdbc, mongo); mode <- Seq("upsert", "truncate"))
+      JobGraph.validate(job(3, sink + s""", "if_exists": "$mode", "key_fields": ["a"]"""))
+  }
+
+  test("validation: a present param of the wrong type or outside its choices is rejected at create time") {
+    def job(sink: String) =
+      s"""{ "name": "t", "components": [
+         |  { "name": "r", "comp_type": "read_csv", "filepath": "x",
+         |    "routes": { "out": [ { "to": "d", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "d", "comp_type": "dedup", "text_column": "b", "id_column": "a", $sink,
+         |    "in_port_schemas": { "in": $abSchema },
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "w", "comp_type": "write_json", "filepath": "y",
+         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin
+    val reg = new graft.api.ControlPlane.JobRegistry(spark)
+    val cases = Seq(
+      job(""""method": "exact"""").replace(""""filepath": "y"""", """"filepath": "y", "gzip": "on"""")
+        -> "component w: param 'gzip' must be a boolean",
+      job(""""method": "minhash", "num_hashes": "x"""")
+        -> "component d: param 'num_hashes' must be an integer",
+      job(""""method": "minhash", "emit": "bogus"""")
+        -> "component d: param 'emit' must be one of survivors | pairs | cluster, got emit=bogus")
+    for ((cfg, msg) <- cases) {
+      val e1 = intercept[IllegalArgumentException](JobGraph.validate(JobConfig.parse(cfg)))
+      assert(e1.getMessage.contains(msg), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](reg.createJob(cfg))
+      assert(e2.getMessage.contains(msg), e2.getMessage)
+    }
+    reg.createJob(job(""""method": "minhash", "num_hashes": "16", "emit": "pairs""""))
+  }
+
+  test("validation: read_mongodb sort entries must be [field, 1|-1]") {
+    // a lenient collect dropped ["a", "1"] and accepted a direction of 2
+    def job(sort: String) = JobConfig.parse(
+      s"""{ "name": "t", "components": [
+         |  { "name": "m", "comp_type": "read_mongodb", "store": "s", "entity_name": "c",
+         |    "sort": $sort,
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "w", "comp_type": "write_csv", "filepath": "y",
+         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin)
+    for (bad <- Seq("""[["a", "1"]]""", """[["a", 2]]""", """"a"""")) {
+      val e = intercept[IllegalArgumentException](JobGraph.validate(job(bad)))
+      assert(e.getMessage.contains("component m"), e.getMessage)
+      assert(e.getMessage.contains("[field, 1|-1]"), e.getMessage)
+    }
+    JobGraph.validate(job("""[["a", 1], ["b", -1]]"""))
+  }
+
+  test("job config: num_of_retries and strategy_type use the strict readers") {
+    def parse(fields: String) = JobConfig.parse(
+      s"""{ "name": "t", $fields "components": [] }""")
+    // a numeric string is the number, not a silent 0
+    assert(parse(""""num_of_retries": "2",""").numOfRetries === 2)
+    assert(parse("").numOfRetries === 0)
+    assert(parse(""""strategy_type": "ROW",""").strategyType === "row")
+    assert(parse("").strategyType === "bulk")
+    for ((bad, msg) <- Seq(
+        """"num_of_retries": -1,""" -> "num_of_retries must be >= 0",
+        """"num_of_retries": 3000000000,""" -> "param 'num_of_retries' must be a 32-bit integer",
+        """"num_of_retries": 1.5,""" -> "param 'num_of_retries' must be an integer",
+        """"num_of_retries": true,""" -> "param 'num_of_retries' must be an integer",
+        """"strategy_type": 5,""" -> "param 'strategy_type' must be a string")) {
+      val e = intercept[IllegalArgumentException](parse(bad))
+      assert(e.getMessage.contains(msg), e.getMessage)
+      assert(e.getMessage.contains("job t"), e.getMessage)
+    }
+  }
 }

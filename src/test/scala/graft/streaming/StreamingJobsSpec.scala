@@ -1089,8 +1089,29 @@ class StreamingJobsSpec extends SparkTestBase {
     val ex = intercept[IllegalArgumentException] {
       StreamingJobs.plan(spark, JobConfig.parse(cfg))
     }
-    assert(ex.getMessage.contains("only method=exact is streamable"))
+    assert(ex.getMessage.contains("param 'method' must be one of exact"))
     assert(ex.getMessage.contains("got method=minhash"))
+  }
+
+  test("a sink param the writeStream path does not apply is rejected, not ignored") {
+    // the streaming sink writes plain parquet parts: a partition_by the
+    // batch fold would honour used to vanish without a word
+    import spark.implicits._
+    Seq(("1", "x")).toDF("a", "b").write.mode("overwrite").parquet(tmp("spart_in"))
+    def cfg(sinkParams: String) =
+      s"""{ "name": "spart", "components": [
+         |  { "name": "r", "comp_type": "read_parquet", "filepath": "${tmp("spart_in")}",
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "w", "comp_type": "write_parquet", "filepath": "${tmp("spart_out")}"$sinkParams,
+         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin
+    val ex = intercept[IllegalArgumentException] {
+      StreamingJobs.plan(spark, JobConfig.parse(cfg(""", "partition_by": ["a"]""")))
+    }
+    assert(ex.getMessage.contains("write_parquet w sets 'partition_by'"))
+    // a param left at its default is accepted
+    val plans = StreamingJobs.plan(spark, JobConfig.parse(cfg(""", "partition_by": []""")))
+    assert(plans.map(_.component) === Seq("w"))
   }
 
   test("stateful comp_types are rejected with a pointer to streaming twins") {
@@ -1192,7 +1213,7 @@ class StreamingJobsSpec extends SparkTestBase {
     val ex = intercept[IllegalArgumentException] {
       StreamingJobs.runOnce(spark, JobConfig.parse(cfg), tmp("sdecbad_ckpt"))
     }
-    assert(ex.getMessage.contains("only strategy=broadcast"))
+    assert(ex.getMessage.contains("param 'strategy' must be one of broadcast"))
   }
 
   test("text_analysis repetition=true streams: parity with the batch fold") {
