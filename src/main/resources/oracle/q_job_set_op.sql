@@ -1,0 +1,4 @@
+SELECT o_custkey, o_orderpriority FROM orders WHERE o_orderstatus = 'F'
+INTERSECT
+SELECT o_custkey, o_orderpriority FROM orders WHERE o_orderstatus = 'O'
+ORDER BY o_custkey, o_orderpriority

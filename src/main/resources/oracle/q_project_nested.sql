@@ -1,0 +1,3 @@
+SELECT c_custkey AS cust_id, c_nationkey AS nation_key,
+  c_mktsegment AS segment
+FROM customer ORDER BY cust_id

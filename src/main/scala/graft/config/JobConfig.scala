@@ -55,12 +55,15 @@ object JobConfig {
 
   /** Parse a job config JSON string; `substitutions` replaces placeholder
     * tokens (the reference test corpus uses __IN__/__OUT__,
-    * tests/config_helpers.py:18-55). */
+    * tests/config_helpers.py:18-55) inside string values, after parsing:
+    * a value carrying `\` or `"` (a Windows path) stays that value, and
+    * keys are never rewritten. */
   def parse(json: String, substitutions: Map[String, String] = Map.empty): JobSpec = {
-    val substituted = substitutions.foldLeft(json) {
-      case (acc, (k, v)) => acc.replace(k, v)
+    val parsed = JsonMethods.parse(json)
+    val root = if (substitutions.isEmpty) parsed else parsed.transform {
+      case JString(s) =>
+        JString(substitutions.foldLeft(s) { case (acc, (k, v)) => acc.replace(k, v) })
     }
-    val root = JsonMethods.parse(substituted)
     val name = (root \ "name") match {
       case JString(s) => s
       case _ => throw new IllegalArgumentException("job config: missing 'name'")

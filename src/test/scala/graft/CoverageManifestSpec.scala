@@ -1,12 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drift guard for COVERAGE.md: the manifest maps the reference's 42
   * combination-job shapes to CORRECTNESS queries and indexes every query,
   * and this spec pins it to the code in BOTH directions so it cannot
-  * silently rot as queries are added, renamed, or removed. No Spark
-  * session needed — `SparkEntry.queries` is a map of thunks. */
+  * silently rot as queries are added, renamed, or removed. The same
+  * two-way pin holds the `oracle/` and `gate/` resources to the query
+  * map. No Spark session needed — `SparkEntry.queries` is a map of
+  * thunks. */
 class CoverageManifestSpec extends AnyFunSuite {
 
   private val manifest = new String(
@@ -41,15 +44,35 @@ class CoverageManifestSpec extends AnyFunSuite {
       s"COVERAGE.md cites unknown non-q queries: ${stale.toSeq.sorted.mkString(", ")}")
   }
 
+  private def resourceNames(dir: String, suffix: String): Set[String] = {
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(s"src/main/resources/$dir"))
+    try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(suffix)).map(_.stripSuffix(suffix)).toSet
+    finally ls.close()
+  }
+  private val oracleFiles = resourceNames("oracle", ".sql")
+  private val gateDirs = resourceNames("gate", "")
+
   test("every oracleSql key is a queries key and the gate is fully oracled") {
-    // the driver records a weaker rows-only check for queries without
+    // oracleSql is loaded from oracle/<query>.sql, one file per query.
+    // The driver records a weaker rows-only check for queries without
     // oracle SQL; this project keeps the gate at 100% oracle coverage
-    val orphanOracles = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    val orphanOracles = oracleFiles -- SparkEntry.queries.keySet
     assert(orphanOracles.isEmpty,
-      s"oracleSql entries without a query: ${orphanOracles.toSeq.sorted.mkString(", ")}")
-    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+      s"oracle files without a query: ${orphanOracles.toSeq.sorted.mkString(", ")}")
+    val unoracled = SparkEntry.queries.keySet -- oracleFiles
     assert(unoracled.isEmpty,
       s"queries without oracle SQL (driver downgrades to rows-only): " +
         unoracled.toSeq.sorted.mkString(", "))
+    assert(SparkEntry.oracleSql.keySet === oracleFiles)
+  }
+
+  test("every gate/<query>/ job directory names a query, and every q_job_* query has one") {
+    val orphanJobs = gateDirs -- SparkEntry.queries.keySet
+    assert(orphanJobs.isEmpty,
+      s"gate job directories without a query: ${orphanJobs.toSeq.sorted.mkString(", ")}")
+    val missing = SparkEntry.queries.keySet.filter(_.startsWith("q_job_")) -- gateDirs
+    assert(missing.isEmpty,
+      s"q_job_* queries without a gate/<query>/ directory: ${missing.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -93,4 +93,17 @@ class JobConfigParamsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("fetchsize"))
   }
+
+  test("substitutions replace tokens inside string values, never keys") {
+    // a backslash-and-quote value spliced into the raw text became a TAB
+    // (\t), an invalid escape (\i) or a broken string
+    val path = "C:\\tmp\\in \"q\" __IN__"
+    val c = JobConfig.parse(
+      """{ "name": "t", "components": [
+        |  { "name": "c", "comp_type": "read_csv", "filepath": "__IN__/part",
+        |    "k": { "__IN__": "__IN__" } } ] }""".stripMargin,
+      Map("__IN__" -> path)).components.head
+    assert(Param("filepath", Kind.str)("")(c) === path + "/part")
+    assert(Param("k", Kind.strMap)("").read(c) === Some(Map("__IN__" -> path)))
+  }
 }

@@ -1,6 +1,8 @@
 #!/usr/bin/env sh
 # Scala line counts per top-level package under src/main/scala/graft,
-# plus the total. Run from the repository root: sh tools/loc.sh
+# plus the total, then the lines of data under src/main/resources (the
+# gate job corpus and oracle SQL), which the Scala-only total excludes.
+# Run from the repository root: sh tools/loc.sh
 root=src/main/scala/graft
 for d in "$root"/*/; do
   n=$(find "$d" -name '*.scala' -exec cat {} + | wc -l)
@@ -9,3 +11,4 @@ done
 n=$(find "$root" -maxdepth 1 -name '*.scala' -exec cat {} + | wc -l)
 printf '%-12s %6d\n' "(top level)" "$n"
 printf '%-12s %6d\n' "total" "$(find "$root" -name '*.scala' -exec cat {} + | wc -l)"
+printf '%-12s %6d\n' "resources/" "$(find src/main/resources -type f -exec cat {} + | wc -l)"
