@@ -97,6 +97,7 @@ object ControlPlane {
     // ------------------------------------------------------- file store
     private def jobsDir: Option[Path] = storeDir.map(_.resolve("jobs"))
     private def execLog: Option[Path] = storeDir.map(_.resolve("executions.jsonl"))
+    private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
     locally { // reload persisted state before first use
       jobsDir.foreach { d =>
@@ -122,6 +123,14 @@ object ControlPlane {
         // the surviving window. The id sequence continues past EVERY line.
         val idRe = java.util.regex.Pattern.compile("\"id\":\"[a-z]+-(\\d+)\"")
         val startRe = java.util.regex.Pattern.compile("\"started_at_ms\":(\\d+)")
+        def idNumOf(line: String): Long = {
+          val im = idRe.matcher(line)
+          if (im.find()) im.group(1).toLong else 0L
+        }
+        cutTornTail(p).foreach { line =>
+          seq.set(math.max(seq.get(), idNumOf(line)))
+          log.warn(s"$p: dropped a torn final line (an interrupted append): ${line.take(200)}")
+        }
         // min-heap of (startedAtMs, idNum, line): smallest = first evicted
         implicit val ord: Ordering[(Long, Long, String)] =
           Ordering.by(t => (-t._1, -t._2)) // PriorityQueue is a MAX-heap
@@ -131,8 +140,7 @@ object ControlPlane {
         try stream.forEach { line =>
           if (line.nonEmpty) {
             total += 1
-            val im = idRe.matcher(line)
-            val idn = if (im.find()) im.group(1).toLong else 0L
+            val idn = idNumOf(line)
             seq.set(math.max(seq.get(), idn))
             val sm = startRe.matcher(line)
             val started = if (sm.find()) sm.group(1).toLong else 0L
@@ -148,6 +156,38 @@ object ControlPlane {
         case s: String => s.split('-').last.toLongOption.getOrElse(0L)
       }
       seq.set((seq.get() +: maxSeen.toSeq).max)
+    }
+
+    /** A process killed mid-append leaves a partial final line in the
+      * execution log, and the next append would land on that same line.
+      * An unparseable final line is cut off the log and returned (this
+      * works on bytes: the cut may fall inside a UTF-8 sequence, which a
+      * line reader rejects); a complete final line missing its newline
+      * gets one. A corrupt line anywhere else still fails the reload. */
+    private def cutTornTail(p: Path): Option[String] = {
+      val f = new java.io.RandomAccessFile(p.toFile, "rw")
+      try {
+        val size = f.length()
+        def byteAt(i: Long): Int = { f.seek(i); f.read() }
+        var end = size
+        while (end > 0 && byteAt(end - 1) == '\n') end -= 1
+        var start = end
+        while (start > 0 && byteAt(start - 1) != '\n') start -= 1
+        if (start == end) None
+        else {
+          val bytes = new Array[Byte]((end - start).toInt)
+          f.seek(start)
+          f.readFully(bytes)
+          val line = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+          if (scala.util.Try(parseExecLine(line)).isSuccess) {
+            if (end == size) { f.seek(size); f.write('\n') }
+            None
+          } else {
+            f.setLength(start)
+            Some(line)
+          }
+        }
+      } finally f.close()
     }
 
     private def persistJob(rec: JobRecord): Unit =

@@ -81,8 +81,10 @@ object Cron {
         require(step >= 1, s"bad cron step in: $part")
         val (a, b) = rangePart match {
           case "*" => (lo, hi)
-          case r if r.contains('-') =>
-            val Array(x, y) = r.split('-'); (x.toInt, y.toInt)
+          case r if r.contains('-') => r.split('-') match {
+            case Array(x, y) => (x.toInt, y.toInt)
+            case _ => throw new IllegalArgumentException(s"bad cron range: $part")
+          }
           case v =>
             val x = v.toInt
             if (step == 1) (x, x) else (x, hi) // "a/n" = from a by n

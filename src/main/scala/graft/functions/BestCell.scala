@@ -1,14 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Cosine-argmax cell assignment in ONE narrow pass — the codegen'd kernel
+ * Cosine-argmax cell assignment in ONE narrow pass — the compiled kernel
  * behind `Similarity.assignCells` (r21). Given a corpus vector and the
  * full centroid table packed into a single array<struct<cell:long,
  * cvec:array<numeric>>> column (one broadcast row), returns the `cell`
@@ -33,78 +32,42 @@ import org.apache.spark.sql.types._
  *    as the grouped max did;
  *  - a null cells array (never produced by assignCells) → null.
  *
- * The per-row loop lives in one compiled Scala method invoked from
- * whole-stage codegen via a reference object — one virtual call per row,
- * amortized over cells × dim arithmetic (the same budget class as a
- * catalyst StaticInvoke), with no interpreter dispatch per element and
- * no CodegenFallback node splitting the codegen span.
+ * The per-row loop is one Scala method, statically invoked from
+ * whole-stage codegen — one call per row, amortized over cells × dim
+ * arithmetic, with no interpreter dispatch per element and no
+ * CodegenFallback node splitting the codegen span.
  */
-final case class BestCell(left: Expression, right: Expression)
-    extends BinaryExpression {
+object BestCell {
 
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = (left.dataType, right.dataType) match {
-      case (ArrayType(_: NumericType, _),
-            ArrayType(StructType(Array(f0, f1)), _)) =>
-        f0.dataType == LongType && (f1.dataType match {
-          case ArrayType(_: NumericType, _) => true
-          case _ => false
-        })
-      case _ => false
-    }
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "best_cell needs (array<numeric>, array<struct<cell:bigint, cvec:array<numeric>>>), " +
-        s"got ${left.dataType.sql} and ${right.dataType.sql}")
+  private val CellsType = ColumnBridge.InputType(
+    "array<struct<cell:bigint, cvec:array<numeric>>>") {
+    case ArrayType(StructType(Array(f0, f1)), _) =>
+      f0.dataType == LongType && Kernel.numbers.accepts(f1.dataType)
+    case _ => false
   }
 
-  private lazy val vecElem: DataType =
-    left.dataType.asInstanceOf[ArrayType].elementType
-  private lazy val cvecElem: DataType =
-    right.dataType.asInstanceOf[ArrayType].elementType
-      .asInstanceOf[StructType](1).dataType.asInstanceOf[ArrayType].elementType
-
-  private def numAt(ad: ArrayData, i: Int, t: DataType): Double = t match {
-    case FloatType   => ad.getFloat(i).toDouble
-    case DoubleType  => ad.getDouble(i)
-    case IntegerType => ad.getInt(i).toDouble
-    case LongType    => ad.getLong(i).toDouble
-    case ShortType   => ad.getShort(i).toDouble
-    case ByteType    => ad.getByte(i).toDouble
-    case d: DecimalType => ad.getDecimal(i, d.precision, d.scale).toDouble
-    case other => throw new IllegalStateException(s"best_cell: unsupported element $other")
-  }
-
-  /** dot(a, b) with ArrayDot's exact semantics: double accumulation in
-    * index order; null on length mismatch or any null element. Boxed so
-    * null propagates like the SQL expression it replaces. */
-  private def dot(a: ArrayData, ta: DataType, b: ArrayData, tb: DataType): java.lang.Double = {
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      acc += numAt(a, i, ta) * numAt(b, i, tb)
-      i += 1
-    }
-    acc
-  }
+  /** Column-API face: argmax-by-cosine cell over a packed centroid array. */
+  def best(vec: Column, cells: Column): Column =
+    ColumnBridge.invoke(this, "route", LongType,
+      Kernel.typed(vec) ++ Kernel.typed(cells, CellsType), propagateNull = false)
 
   /** SQL double total order: -0.0 == 0.0, NaN largest (SQLOrderingUtil). */
   private def cmpDouble(x: Double, y: Double): Int =
     if (x == y) 0 else java.lang.Double.compare(x, y)
 
-  /** The per-row loop. `vecVal` may be null (a null corpus vector keeps
-    * the grouped form's all-null-sim behavior: max cell wins). Returns a
-    * boxed Long (the winning cell) or null. */
-  def route(vecVal: Any, cellsArr: ArrayData): java.lang.Long = {
-    val vec = vecVal.asInstanceOf[ArrayData]
+  /** The kernel. `vec` may be null (a null corpus vector keeps the
+    * grouped form's all-null-sim behavior: max cell wins); a null
+    * `cellsArr` gives null. `vecType`/`cellsType` are the columns'
+    * `typeof()` names. Returns the winning cell, or null. */
+  def route(vec: ArrayData, vecType: UTF8String,
+            cellsArr: ArrayData, cellsType: UTF8String): java.lang.Long = {
+    if (cellsArr == null) return null
+    val vr = Kernel.elements(vecType)
+    val cr = Kernel.reader(Kernel.typeNamed(cellsType).asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType](1).dataType
+      .asInstanceOf[ArrayType].elementType)
     val na2: java.lang.Double =
-      if (vec == null) null else dot(vec, vecElem, vec, vecElem)
+      if (vec == null) null else ArrayDot.accumulate(vec, vr, vec, vr)
     val n = cellsArr.numElements()
     var found = false
     var bestSim: java.lang.Double = null
@@ -121,13 +84,13 @@ final case class BestCell(left: Expression, right: Expression)
       val sim: java.lang.Double =
         if (na2 == null || cvec == null) null
         else {
-          val nb2 = dot(cvec, cvecElem, cvec, cvecElem)
+          val nb2 = ArrayDot.accumulate(cvec, cr, cvec, cr)
           if (nb2 == null) null
           else {
             val d = math.sqrt(na2.doubleValue()) * math.sqrt(nb2.doubleValue())
             if (d == 0.0) java.lang.Double.valueOf(0.0)
             else {
-              val ab = dot(vec, vecElem, cvec, cvecElem)
+              val ab = ArrayDot.accumulate(vec, vr, cvec, cr)
               if (ab == null) null else java.lang.Double.valueOf(ab.doubleValue() / d)
             }
           }
@@ -155,46 +118,4 @@ final case class BestCell(left: Expression, right: Expression)
     }
     if (!found) null else bestCell
   }
-
-  override def eval(input: InternalRow): Any = {
-    val cellsVal = right.eval(input)
-    if (cellsVal == null) null
-    else {
-      val r = route(left.eval(input), cellsVal.asInstanceOf[ArrayData])
-      if (r == null) null else r.longValue()
-    }
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vecGen = left.genCode(ctx)
-    val cellsGen = right.genCode(ctx)
-    val ref = ctx.addReferenceObj("bestCell", this, classOf[BestCell].getName)
-    val r = ctx.freshName("r")
-    ev.copy(code = code"""
-      ${vecGen.code}
-      ${cellsGen.code}
-      boolean ${ev.isNull} = true;
-      long ${ev.value} = -1L;
-      if (!${cellsGen.isNull}) {
-        java.lang.Long $r = $ref.route(
-          ${vecGen.isNull} ? null : (Object) ${vecGen.value}, ${cellsGen.value});
-        if ($r != null) { ${ev.isNull} = false; ${ev.value} = $r.longValue(); }
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BestCell =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "best_cell"
-}
-
-object BestCell {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** Column-API face: argmax-by-cosine cell over a packed centroid array. */
-  def best(vec: Column, cells: Column): Column =
-    ColumnBridge.column(
-      BestCell(ColumnBridge.expression(vec), ColumnBridge.expression(cells)))
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * Fixed-size character chunks with overlap in one compiled pass — the
@@ -23,43 +22,9 @@ import org.apache.spark.sql.types._
  *  - empty string → empty array (the caller's length guard drops
  *    empties before the Generate anyway); null → null.
  */
-final case class CharChunks(child: Expression, size: Int, overlap: Int)
-    extends UnaryExpression {
-
-  require(size >= 1, s"chunk size must be >= 1, got $size")
-  require(overlap >= 0 && overlap < size,
-    s"overlap must be in [0, size), got $overlap for size $size")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"char_chunks needs string, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    CharChunks.compute(v.asInstanceOf[UTF8String], size, size - overlap)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cls = CharChunks.getClass.getName.stripSuffix("$")
-      s"${ev.value} = $cls.compute($v, $size, ${size - overlap});"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): CharChunks =
-    copy(child = newChild)
-
-  override def prettyName: String = "char_chunks"
-}
-
 object CharChunks {
 
-  /** Compiled chunk grid (called from generated code). */
+  /** The kernel: the chunk grid of `s` (`stride` = size − overlap). */
   def compute(s: UTF8String, size: Int, stride: Int): ArrayData = {
     val chars = s.numChars()
     if (chars == 0) return new GenericArrayData(new Array[Any](0))
@@ -75,7 +40,11 @@ object CharChunks {
     new GenericArrayData(out)
   }
 
-  def chunks(text: Column, size: Int, overlap: Int): Column =
-    ColumnBridge.column(
-      CharChunks(ColumnBridge.expression(text), size, overlap))
+  def chunks(text: Column, size: Int, overlap: Int): Column = {
+    require(size >= 1, s"chunk size must be >= 1, got $size")
+    require(overlap >= 0 && overlap < size,
+      s"overlap must be in [0, size), got $overlap for size $size")
+    ColumnBridge.invoke(this, "compute", ArrayType(StringType, containsNull = false),
+      Seq(text -> Kernel.string), Seq(Literal(size), Literal(size - overlap)))
+  }
 }

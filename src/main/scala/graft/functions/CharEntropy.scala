@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * Shannon entropy of a string's UTF-8 BYTES, in bits per byte — the
@@ -26,39 +24,11 @@ import org.apache.spark.sql.types._
  *    deterministic for a given string on this engine; cross-engine
  *    replay agrees to float round-off (gate rounds to 6).
  */
-final case class CharEntropy(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"char_entropy needs string, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    CharEntropy.entropyOf(v.asInstanceOf[UTF8String].getBytes)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.CharEntropy.entropyOf($v.getBytes());")
-
-  override protected def withNewChildInternal(newChild: Expression): CharEntropy =
-    copy(child = newChild)
-
-  override def prettyName: String = "char_entropy"
-}
-
 object CharEntropy {
 
-  /** Shared kernel for the interpreted and codegen paths (one static
-    * call from generated code keeps the bytecode tiny and the two
-    * paths bit-identical by construction). */
-  def entropyOf(bs: Array[Byte]): Double = {
+  /** The kernel: byte entropy of `s`, in bits per byte. */
+  def entropyOf(s: UTF8String): Double = {
+    val bs = s.getBytes
     val n = bs.length
     if (n == 0) return 0.0
     val hist = new Array[Int](256)
@@ -79,5 +49,5 @@ object CharEntropy {
   }
 
   def entropy(text: Column): Column =
-    ColumnBridge.column(CharEntropy(ColumnBridge.expression(text)))
+    ColumnBridge.invoke(this, "entropyOf", DoubleType, Seq(text -> Kernel.string))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * Distinct character n-gram shingles of a string in one compiled pass —
@@ -26,62 +26,22 @@ import org.apache.spark.sql.types._
  *    and greatest SKIPS nulls, so one substr(null) element survives
  *    (measured — WordShinglesSpec pins it).
  */
-final case class CharShingles(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"char_shingles needs string, got ${other.sql}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) CharShingles.oneNull
-    else CharShingles.compute(v.asInstanceOf[UTF8String], n)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val nullRef = ctx.addReferenceObj("oneNull", CharShingles.oneNull,
-      classOf[ArrayData].getName)
-    val cls = CharShingles.getClass.getName.stripSuffix("$")
-    ev.copy(
-      code = code"""
-        |${c.code}
-        |final ${CodeGenerator.javaType(dataType)} ${ev.value} =
-        |  ${c.isNull} ? $nullRef : $cls.compute(${c.value}, $n);
-        """.stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CharShingles =
-    copy(child = newChild)
-
-  override def prettyName: String = "char_shingles"
-}
-
 object CharShingles {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** Column face. */
-  def shingles(text: Column, n: Int): Column =
-    ColumnBridge.column(CharShingles(ColumnBridge.expression(text), n))
+  def shingles(text: Column, n: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    ColumnBridge.invoke(this, "compute", ArrayType(StringType, containsNull = true),
+      Seq(text -> Kernel.string), Seq(Literal(n)),
+      propagateNull = false, returnNullable = false)
+  }
 
-  /** Null-text result: one null element (see class doc). */
-  val oneNull: ArrayData = new GenericArrayData(Array[Any](null))
+  /** Null-text result: one null element (see the object doc). */
+  private val oneNull: ArrayData = new GenericArrayData(Array[Any](null))
 
-  /** Compiled shingling (called from generated code). */
+  /** The kernel; null text gives `[null]`. */
   def compute(s: UTF8String, n: Int): ArrayData = {
+    if (s == null) return oneNull
     val chars = s.numChars()
     val positions = math.max(chars - (n - 1), 1)
     val seen = new java.util.LinkedHashSet[UTF8String]()

@@ -3,10 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.lower
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * Dedup.exactKey's normalization with the whitespace work as ONE
@@ -37,40 +35,13 @@ import org.apache.spark.sql.types._
  * measured paired (tools/KeyProbe @0fcdae9, local[32], 500k docs, md5(key)
  * plans) 0.41 s kernel vs 0.62 s regex vs 0.32 s no-collapse floor.
  */
-final case class CollapseWs(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"collapse_ws needs string, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    CollapseWs.collapse(v.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.CollapseWs.collapse($v);")
-
-  override protected def withNewChildInternal(newChild: Expression): CollapseWs =
-    copy(child = newChild)
-
-  override def prettyName: String = "collapse_ws"
-}
-
 object CollapseWs {
 
-  /** Shared kernel for the interpreted and codegen paths. Replays the
-    * Column composition's whitespace work exactly: trim() strips 0x20
-    * only, THEN each maximal \s run — leading/trailing runs of other
-    * \s chars included — becomes one 0x20. Case folding happens in the
-    * CHILD (Catalyst Lower), never here. */
+  /** The kernel. Replays the Column composition's whitespace work
+    * exactly: trim() strips 0x20 only, THEN each maximal \s run —
+    * leading/trailing runs of other \s chars included — becomes one
+    * 0x20. Case folding happens in the argument (Catalyst Lower), never
+    * here. */
   def collapse(s: UTF8String): UTF8String = {
     val t = s.toString
     var i = 0
@@ -99,7 +70,7 @@ object CollapseWs {
   /** lower(text) under the compiled collapse — the engine's own case
     * fold, the kernel's whitespace pass. */
   def normalize(text: Column): Column =
-    ColumnBridge.column(CollapseWs(ColumnBridge.expression(lower(text))))
+    ColumnBridge.invoke(this, "collapse", StringType, Seq(lower(text) -> Kernel.string))
 
   /** The exact Lower dispatch the Column form compiles to
     * (UTF8_BINARY collation) — for kernels that fold case in Scala

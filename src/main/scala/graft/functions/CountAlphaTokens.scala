@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * Count of whitespace tokens containing at least one Unicode letter —
@@ -29,41 +27,13 @@ import org.apache.spark.sql.types._
  *    decoded code-point-wise so supplementary-plane letters count;
  *  - null → null; empty/blank text → 0.
  */
-final case class CountAlphaTokens(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"count_alpha_tokens needs string, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    CountAlphaTokens.countOf(v.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.CountAlphaTokens.countOf($v.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): CountAlphaTokens =
-    copy(child = newChild)
-
-  override def prettyName: String = "count_alpha_tokens"
-}
-
 object CountAlphaTokens {
 
-
-  /** Shared kernel for the interpreted and codegen paths. One pass:
-    * track in-token/has-letter, decode a code point only while the
-    * current token is still letterless (a letter found skips decoding
-    * for the token's remainder). */
-  def countOf(s: String): Int = {
+  /** The kernel. One pass: track in-token/has-letter, decode a code
+    * point only while the current token is still letterless (a letter
+    * found skips decoding for the token's remainder). */
+  def countOf(text: UTF8String): Int = {
+    val s = text.toString
     val n = s.length
     var i = 0
     var count = 0
@@ -90,5 +60,5 @@ object CountAlphaTokens {
   }
 
   def count(text: Column): Column =
-    ColumnBridge.column(CountAlphaTokens(ColumnBridge.expression(text)))
+    ColumnBridge.invoke(this, "countOf", IntegerType, Seq(text -> Kernel.string))
 }

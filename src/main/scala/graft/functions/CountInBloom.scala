@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.util.sketch.BloomFilter
 
 /**
@@ -24,25 +24,17 @@ import org.apache.spark.util.sketch.BloomFilter
  *
  * The filter ships in the task closure like CountInSet's set — at 1%
  * FPR a 2M-gram benchmark is ~3 MB, far below the point where a
- * Broadcast handle would matter; codegen references it once per stage.
+ * Broadcast handle would matter; it is one constant argument per plan.
  */
-final case class CountInBloom(child: Expression, bloom: BloomFilter)
-    extends UnaryExpression {
+object CountInBloom {
 
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
+  /** Column face: how many elements of `tokens` MIGHT be in `bloom`. */
+  def count(tokens: Column, bloom: BloomFilter): Column =
+    ColumnBridge.invoke(this, "compute", IntegerType,
+      Seq(tokens -> Kernel.strings), Seq(Kernel.obj(bloom, classOf[BloomFilter])))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"count_in_bloom needs array<string>, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any = {
-    val xs = v.asInstanceOf[ArrayData]
+  /** The kernel. */
+  def compute(xs: ArrayData, bloom: BloomFilter): Int = {
     val n = xs.numElements()
     var count = 0
     var i = 0
@@ -53,36 +45,4 @@ final case class CountInBloom(child: Expression, bloom: BloomFilter)
     }
     count
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val bloomRef = ctx.addReferenceObj("bloom", bloom,
-        classOf[BloomFilter].getName)
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val cnt = ctx.freshName("cnt")
-      s"""
-         |final int $n = $v.numElements();
-         |int $cnt = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$v.isNullAt($i) &&
-         |      $bloomRef.mightContainBinary($v.getUTF8String($i).getBytes())) $cnt++;
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): CountInBloom =
-    copy(child = newChild)
-
-  override def prettyName: String = "count_in_bloom"
-}
-
-object CountInBloom {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** Column face: how many elements of `tokens` MIGHT be in `bloom`. */
-  def count(tokens: Column, bloom: BloomFilter): Column =
-    ColumnBridge.column(CountInBloom(ColumnBridge.expression(tokens), bloom))
 }

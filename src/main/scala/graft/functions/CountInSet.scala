@@ -1,14 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * Count of string-array elements that belong to a LITERAL set — the
- * codegen'd replacement for `size(filter(toks, t => t.isin(set: _*)))`
+ * compiled replacement for `size(filter(toks, t => t.isin(set: _*)))`
  * in stopword-ratio and language-ID marker voting (ArrayFilter is
  * CodegenFallback: interpreted per element per lexicon; this is one
  * compiled loop with an O(1) hash-set probe).
@@ -18,33 +18,18 @@ import org.apache.spark.sql.types._
  *  - null ELEMENTS don't count (isin(null) is null, filter drops it);
  *  - comparison is exact binary UTF8 equality, same as isin.
  */
-final case class CountInSet(child: Expression, set: Seq[String])
-    extends UnaryExpression {
+object CountInSet {
 
-  require(set.nonEmpty, "CountInSet needs a non-empty set")
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"count_in_set needs array<string>, got ${other.sql}")
-    }
-
-  /** The probe set as UTF8String, built once per executor (the case
-    * class ships the Scala strings; UTF8 conversion happens lazily). */
-  @transient private lazy val probe: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](set.size * 2)
-    set.foreach(x => s.add(UTF8String.fromString(x)))
-    s
+  /** Column face: how many elements of `tokens` are in `set`. */
+  def count(tokens: Column, set: Seq[String]): Column = {
+    require(set.nonEmpty, "CountInSet needs a non-empty set")
+    ColumnBridge.invoke(this, "compute", IntegerType, Seq(tokens -> Kernel.strings),
+      Seq(Kernel.obj(new Kernel.ProbeSet(set.map(UTF8String.fromString)),
+        classOf[java.util.HashSet[UTF8String]])))
   }
 
-  override def nullSafeEval(v: Any): Any = {
-    val xs = v.asInstanceOf[ArrayData]
+  /** The kernel. */
+  def compute(xs: ArrayData, probe: java.util.HashSet[UTF8String]): Int = {
     val n = xs.numElements()
     var count = 0
     var i = 0
@@ -54,35 +39,4 @@ final case class CountInSet(child: Expression, set: Seq[String])
     }
     count
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val setRef = ctx.addReferenceObj("probeSet", probe,
-        classOf[java.util.HashSet[_]].getName)
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val cnt = ctx.freshName("cnt")
-      s"""
-         |final int $n = $v.numElements();
-         |int $cnt = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$v.isNullAt($i) && $setRef.contains($v.getUTF8String($i))) $cnt++;
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): CountInSet =
-    copy(child = newChild)
-
-  override def prettyName: String = "count_in_set"
-}
-
-object CountInSet {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** Column face: how many elements of `tokens` are in `set`. */
-  def count(tokens: Column, set: Seq[String]): Column =
-    ColumnBridge.column(CountInSet(ColumnBridge.expression(tokens), set))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.functions.lower
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * Membership count of a text's lowercased whitespace tokens against a
@@ -26,12 +26,11 @@ import org.apache.spark.sql.types._
  *    leading/trailing non-space whitespace, and the single empty
  *    field of blank text (they only matter if the set contains "",
  *    which real lexicons never do, but the replay is exact);
- *  - lowercasing is the SAME CollationSupport.Lower dispatch the
- *    Column lower() compiles to (the r18 version used
+ *  - lowercasing is Catalyst's own lower() composed under the kernel,
+ *    as in CollapseWs.normalize (the r18 version used
  *    UTF8String.toLowerCase, which diverges from lower() on the
  *    Greek final-sigma rule under the default ICU conf — harmless
- *    for ASCII lexicons, wrong for one containing σ/ς; the ICU flag
- *    is read once per expression instance, Lower's own pattern);
+ *    for ASCII lexicons, wrong for one containing σ/ς);
  *  - membership is exact string equality post-lowering;
  *  - NULL text → null (split(null) propagation).
  *
@@ -41,58 +40,12 @@ import org.apache.spark.sql.types._
  * quiet pass (a loaded pass showed the split form at 4.2 s — the
  * allocation-heavy shape is also the GC-pressure-sensitive one).
  */
-final case class CountTokensInSet(child: Expression, set: Seq[String],
-                                  distinct: Boolean)
-    extends UnaryExpression {
-
-  require(set.nonEmpty, "CountTokensInSet needs a non-empty set")
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"count_tokens_in_set needs string, got ${other.sql}")
-    }
-
-  @transient private lazy val probe: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String](set.size * 2)
-    set.foreach(s.add)
-    s
-  }
-
-  @transient private lazy val useICU: Boolean = CollapseWs.icuEnabled
-
-  override def nullSafeEval(v: Any): Any =
-    CountTokensInSet.compute(
-      CollapseWs.lowerFold(v.asInstanceOf[UTF8String], useICU).toString,
-      probe, distinct)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val setRef = ctx.addReferenceObj("probeSet", probe,
-        classOf[java.util.HashSet[_]].getName)
-      s"${ev.value} = graft.functions.CountTokensInSet.compute(" +
-        s"graft.functions.CollapseWs.lowerFold($v, $useICU).toString(), " +
-        s"$setRef, $distinct);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): CountTokensInSet =
-    copy(child = newChild)
-
-  override def prettyName: String = "count_tokens_in_set"
-}
-
 object CountTokensInSet {
 
-  /** Shared kernel for the interpreted and codegen paths. `t` is the
-    * already-lowercased text. */
-  def compute(t: String, probe: java.util.HashSet[String],
+  /** The kernel. `lowered` is the already-lowercased text. */
+  def compute(lowered: UTF8String, probe: java.util.HashSet[String],
               distinct: Boolean): Int = {
+    val t = lowered.toString
     var i = 0
     var end = t.length
     while (i < end && t.charAt(i) == ' ') i += 1
@@ -117,12 +70,15 @@ object CountTokensInSet {
   }
 
   /** Occurrences of set members among the text's lowercased tokens. */
-  def count(text: Column, set: Seq[String]): Column =
-    ColumnBridge.column(
-      CountTokensInSet(ColumnBridge.expression(text), set, distinct = false))
+  def count(text: Column, set: Seq[String]): Column = face(text, set, distinct = false)
 
   /** How many DISTINCT set members appear among the tokens. */
-  def countDistinct(text: Column, set: Seq[String]): Column =
-    ColumnBridge.column(
-      CountTokensInSet(ColumnBridge.expression(text), set, distinct = true))
+  def countDistinct(text: Column, set: Seq[String]): Column = face(text, set, distinct = true)
+
+  private def face(text: Column, set: Seq[String], distinct: Boolean): Column = {
+    require(set.nonEmpty, "CountTokensInSet needs a non-empty set")
+    ColumnBridge.invoke(this, "compute", IntegerType, Seq(lower(text) -> Kernel.string),
+      Seq(Kernel.obj(new Kernel.ProbeSet(set), classOf[java.util.HashSet[String]]),
+        Literal(distinct)))
+  }
 }

@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * Gopher duplicate-line fraction in one compiled pass — the kernel of
@@ -22,40 +20,11 @@ import org.apache.spark.sql.types._
  *    surviving lines, 0.0 when none survive; NULL text → NULL;
  *  - distinctness is exact binary equality of the trimmed lines.
  */
-final case class DupLineRatio(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dup_line_ratio needs string, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    DupLineRatio.compute(v.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cls = DupLineRatio.getClass.getName.stripSuffix("$")
-      s"${ev.value} = $cls.compute($v);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): DupLineRatio =
-    copy(child = newChild)
-
-  override def prettyName: String = "dup_line_ratio"
-}
-
 object DupLineRatio {
 
   private val NL = UTF8String.fromString("\n")
 
-  /** Compiled kernel (called from generated code). */
+  /** The kernel. */
   def compute(s: UTF8String): Double = {
     val lines = s.split(NL, -1)
     var total = 0
@@ -74,5 +43,5 @@ object DupLineRatio {
   }
 
   def ratio(text: Column): Column =
-    ColumnBridge.column(DupLineRatio(ColumnBridge.expression(text)))
+    ColumnBridge.invoke(this, "compute", DoubleType, Seq(text -> Kernel.string))
 }

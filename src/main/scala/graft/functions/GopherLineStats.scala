@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * The five line/symbol counts of gopherRules' symbol-ratio and line
@@ -52,38 +50,6 @@ import org.apache.spark.sql.types._
  *    n_lines' \n-only shape);
  *  - NULL text → null struct.
  */
-final case class GopherLineStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_hash", IntegerType, nullable = false),
-    StructField("n_ell", IntegerType, nullable = false),
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("n_bullet", IntegerType, nullable = false),
-    StructField("n_ell_end", IntegerType, nullable = false)))
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"gopher_line_stats needs string, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    GopherLineStats.compute(v.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.GopherLineStats.compute($v.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): GopherLineStats =
-    copy(child = newChild)
-
-  override def prettyName: String = "gopher_line_stats"
-}
-
 object GopherLineStats {
 
   private final val Ellipsis = '…'
@@ -95,8 +61,7 @@ object GopherLineStats {
   private def isBullet(c: Char): Boolean =
     c == '-' || c == '*' || c == '•' || c == '‣' || c == '▪'
 
-  /** Shared kernel for the interpreted and codegen paths. One pass,
-    * three per-line state variables:
+  /** The kernel. One pass, three per-line state variables:
     *  - startWs: only [ \t] seen since the current line's start (the
     *    `^[ \t]*` window for the bullet rule);
     *  - dotRun: current consecutive-'.' count (n_ell adds run/3 when
@@ -104,7 +69,8 @@ object GopherLineStats {
     *  - ellArmed: the line's content so far ends with an ellipsis
     *    followed only by [ \t] — finalized into n_ell_end at each
     *    line terminator and at end of input. */
-  def compute(t: String): InternalRow = {
+  def compute(text: UTF8String): InternalRow = {
+    val t = text.toString
     val n = t.length
     var nHash = 0; var nEll = 0; var nNewline = 0; var nBullet = 0; var nEllEnd = 0
     var startWs = true
@@ -150,5 +116,11 @@ object GopherLineStats {
   }
 
   def stats(text: Column): Column =
-    ColumnBridge.column(GopherLineStats(ColumnBridge.expression(text)))
+    ColumnBridge.invoke(this, "compute", StructType(Seq(
+      StructField("n_hash", IntegerType, nullable = false),
+      StructField("n_ell", IntegerType, nullable = false),
+      StructField("n_lines", IntegerType, nullable = false),
+      StructField("n_bullet", IntegerType, nullable = false),
+      StructField("n_ell_end", IntegerType, nullable = false))),
+      Seq(text -> Kernel.string))
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Per-vector L2 norm + unit vector in ONE compiled pass —
@@ -35,71 +34,19 @@ import org.apache.spark.sql.types._
  *  - NULL vector → NULL struct. Accepts any numeric element type
  *    (cast-to-double per element, ArrayDot's discipline).
  */
-final case class L2Normalize(child: Expression) extends UnaryExpression {
-
-  // unit elements are in fact never null (a null element nulls the
-  // whole struct), but containsNull stays TRUE to match the
-  // ArrayTransform-composed form this kernel replaced — written
-  // Parquet element nullability (optional vs required) is part of the
-  // output schema downstream artifact comparisons pin against.
-  override def dataType: DataType = StructType(Seq(
-    StructField("norm", DoubleType, nullable = true),
-    StructField("unit", ArrayType(DoubleType, containsNull = true),
-      nullable = true)))
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(_: NumericType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"l2_normalize needs array<numeric>, got ${other.sql}")
-    }
-
-  @transient private lazy val elemType: DataType =
-    child.dataType.asInstanceOf[ArrayType].elementType
-
-  override def nullSafeEval(v: Any): Any =
-    L2Normalize.compute(v.asInstanceOf[ArrayData], elemType)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cls = L2Normalize.getClass.getName.stripSuffix("$")
-      val tRef = ctx.addReferenceObj("elemType", elemType,
-        classOf[DataType].getName)
-      s"${ev.value} = $cls.compute($v, $tRef);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): L2Normalize =
-    copy(child = newChild)
-
-  override def prettyName: String = "l2_normalize"
-}
-
 object L2Normalize {
 
-  private def numAt(xs: ArrayData, i: Int, t: DataType): Double = t match {
-    case FloatType   => xs.getFloat(i).toDouble
-    case DoubleType  => xs.getDouble(i)
-    case IntegerType => xs.getInt(i).toDouble
-    case LongType    => xs.getLong(i).toDouble
-    case ShortType   => xs.getShort(i).toDouble
-    case ByteType    => xs.getByte(i).toDouble
-    case d: DecimalType => xs.getDecimal(i, d.precision, d.scale).toDouble
-    case other => throw new IllegalStateException(s"l2_normalize: $other")
-  }
-
-  /** Compiled kernel (called from generated code): one pass for the
-    * left-to-right Σx² (null element poisons → null norm, null unit),
-    * one for the divides — no per-element dispatch. */
-  def compute(xs: ArrayData, t: DataType): InternalRow = {
+  /** The kernel (`vecType` is the column's `typeof()` name): one pass
+    * for the left-to-right Σx² (null element poisons → null norm, null
+    * unit), one for the divides — no per-element dispatch. */
+  def compute(xs: ArrayData, vecType: UTF8String): InternalRow = {
+    val num = Kernel.elements(vecType)
     val n = xs.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
       if (xs.isNullAt(i)) return InternalRow(null, null)
-      val x = numAt(xs, i, t)
+      val x = num.at(xs, i)
       acc += x * x
       i += 1
     }
@@ -116,12 +63,21 @@ object L2Normalize {
     val out = new Array[Any](n)
     i = 0
     while (i < n) {
-      out(i) = numAt(xs, i, t) / norm
+      out(i) = num.at(xs, i) / norm
       i += 1
     }
     InternalRow(norm, new GenericArrayData(out))
   }
 
+  // unit elements are in fact never null (a null element nulls the
+  // whole struct), but containsNull stays TRUE to match the
+  // ArrayTransform-composed form this kernel replaced — written
+  // Parquet element nullability (optional vs required) is part of the
+  // output schema downstream artifact comparisons pin against.
   def normalize(vec: Column): Column =
-    ColumnBridge.column(L2Normalize(ColumnBridge.expression(vec)))
+    ColumnBridge.invoke(this, "compute", StructType(Seq(
+      StructField("norm", DoubleType, nullable = true),
+      StructField("unit", ArrayType(DoubleType, containsNull = true),
+        nullable = true))),
+      Kernel.typed(vec))
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Symmetric per-vector int8 quantization in ONE compiled pass —
@@ -43,64 +42,18 @@ import org.apache.spark.sql.types._
  *  - NULL vector → NULL struct. Accepts any numeric element type
  *    (cast-to-double per element, ArrayDot's discipline).
  */
-final case class QuantizeInt8(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("scale", DoubleType, nullable = false),
-    StructField("q", ArrayType(ByteType, containsNull = true), nullable = false)))
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(_: NumericType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"quantize_int8 needs array<numeric>, got ${other.sql}")
-    }
-
-  @transient private lazy val elemType: DataType =
-    child.dataType.asInstanceOf[ArrayType].elementType
-
-  override def nullSafeEval(v: Any): Any =
-    QuantizeInt8.compute(v.asInstanceOf[ArrayData], elemType)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cls = QuantizeInt8.getClass.getName.stripSuffix("$")
-      val tRef = ctx.addReferenceObj("elemType", elemType,
-        classOf[DataType].getName)
-      s"${ev.value} = $cls.compute($v, $tRef);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): QuantizeInt8 =
-    copy(child = newChild)
-
-  override def prettyName: String = "quantize_int8"
-}
-
 object QuantizeInt8 {
 
-  private def numAt(xs: ArrayData, i: Int, t: DataType): Double = t match {
-    case FloatType   => xs.getFloat(i).toDouble
-    case DoubleType  => xs.getDouble(i)
-    case IntegerType => xs.getInt(i).toDouble
-    case LongType    => xs.getLong(i).toDouble
-    case ShortType   => xs.getShort(i).toDouble
-    case ByteType    => xs.getByte(i).toDouble
-    case d: DecimalType => xs.getDecimal(i, d.precision, d.scale).toDouble
-    case other => throw new IllegalStateException(s"quantize_int8: $other")
-  }
-
-  /** Compiled kernel (called from generated code): one pass for the
-    * max-abs scale, one for the bytes — no per-element dispatch. */
-  def compute(xs: ArrayData, t: DataType): InternalRow = {
+  /** The kernel (`vecType` is the column's `typeof()` name): one pass
+    * for the max-abs scale, one for the bytes — no per-element dispatch. */
+  def compute(xs: ArrayData, vecType: UTF8String): InternalRow = {
+    val num = Kernel.elements(vecType)
     val n = xs.numElements()
     var maxAbs = 0.0
     var i = 0
     while (i < n) {
       if (!xs.isNullAt(i)) {
-        val a = math.abs(numAt(xs, i, t))
+        val a = math.abs(num.at(xs, i))
         // greatest() folds under Spark's nanSafeCompare, where NaN is
         // the LARGEST value — one NaN element pins the fold to NaN
         // (Java's bare `a > maxAbs` would silently skip it instead)
@@ -115,7 +68,7 @@ object QuantizeInt8 {
       if (scale == 0.0) out(i) = 0.toByte
       else if (xs.isNullAt(i)) out(i) = null
       else {
-        val q = numAt(xs, i, t) / scale
+        val q = num.at(xs, i) / scale
         // a NaN QUOTIENT is the corrupt-element signal in one test:
         // scale NaN (a NaN element poisoned the fold — every position),
         // or the element itself is ±Inf (Inf/Inf). The composed ANSI
@@ -136,5 +89,8 @@ object QuantizeInt8 {
   }
 
   def quantize(vec: Column): Column =
-    ColumnBridge.column(QuantizeInt8(ColumnBridge.expression(vec)))
+    ColumnBridge.invoke(this, "compute", StructType(Seq(
+      StructField("scale", DoubleType, nullable = false),
+      StructField("q", ArrayType(ByteType, containsNull = true), nullable = false))),
+      Kernel.typed(vec))
 }

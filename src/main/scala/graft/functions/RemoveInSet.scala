@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * String-array elements NOT in a LITERAL set, order and duplicate
@@ -28,51 +26,9 @@ import org.apache.spark.sql.types._
  *    holds no nulls) — note CountInSet conversely ignores them;
  *  - comparison is exact binary UTF8 equality, same as isin.
  */
-final case class RemoveInSet(child: Expression, set: Seq[String])
-    extends UnaryExpression {
-
-  require(set.nonEmpty, "RemoveInSet needs a non-empty set")
-
-  override def dataType: DataType = child.dataType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"remove_in_set needs array<string>, got ${other.sql}")
-    }
-
-  /** The probe set as UTF8String, built once per executor (the case
-    * class ships the Scala strings; UTF8 conversion happens lazily). */
-  @transient private lazy val probe: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](set.size * 2)
-    set.foreach(x => s.add(UTF8String.fromString(x)))
-    s
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    RemoveInSet.compute(v.asInstanceOf[ArrayData], probe)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val setRef = ctx.addReferenceObj("probeSet", probe,
-        classOf[java.util.HashSet[_]].getName)
-      val cls = RemoveInSet.getClass.getName.stripSuffix("$")
-      s"${ev.value} = $cls.compute($v, $setRef);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): RemoveInSet =
-    copy(child = newChild)
-
-  override def prettyName: String = "remove_in_set"
-}
-
 object RemoveInSet {
 
-  /** Compiled filter pass (called from generated code). */
+  /** The kernel. */
   def compute(xs: ArrayData, probe: java.util.HashSet[UTF8String]): ArrayData = {
     val n = xs.numElements()
     val out = new java.util.ArrayList[Any](n)
@@ -89,6 +45,11 @@ object RemoveInSet {
   }
 
   /** Column face: `arr` with every element that is in `set` removed. */
-  def remove(arr: Column, set: Seq[String]): Column =
-    ColumnBridge.column(RemoveInSet(ColumnBridge.expression(arr), set))
+  def remove(arr: Column, set: Seq[String]): Column = {
+    require(set.nonEmpty, "RemoveInSet needs a non-empty set")
+    ColumnBridge.invoke(this, "compute", ArrayType(StringType, containsNull = true),
+      Seq(arr -> Kernel.strings),
+      Seq(Kernel.obj(new Kernel.ProbeSet(set.map(UTF8String.fromString)),
+        classOf[java.util.HashSet[UTF8String]])))
+  }
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * SimHash fingerprint (4×15-bit blocks) of a token array in one compiled
@@ -26,56 +25,15 @@ import org.apache.spark.sql.types._
  *  - a null ELEMENT votes -1 on every bit (bitwiseAND(null) is null,
  *    the when falls through to otherwise(-1)).
  */
-final case class SimHashBlocks60(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash_blocks60 needs array<string>, got ${other.sql}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) SimHashBlocks60.fourNulls
-    else SimHashBlocks60.compute(v.asInstanceOf[ArrayData])
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val nullsRef = ctx.addReferenceObj("fourNulls", SimHashBlocks60.fourNulls,
-      classOf[ArrayData].getName)
-    val cls = SimHashBlocks60.getClass.getName.stripSuffix("$")
-    ev.copy(
-      code = code"""
-        |${c.code}
-        |final ${CodeGenerator.javaType(dataType)} ${ev.value} =
-        |  ${c.isNull} ? $nullsRef : $cls.compute(${c.value});
-        """.stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashBlocks60 =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash_blocks60"
-}
-
 object SimHashBlocks60 {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** Column face over a token array. */
   def blocks(tokens: Column): Column =
-    ColumnBridge.column(SimHashBlocks60(ColumnBridge.expression(tokens)))
+    ColumnBridge.invoke(this, "compute", ArrayType(LongType, containsNull = true),
+      Seq(tokens -> Kernel.strings), propagateNull = false, returnNullable = false)
 
-  /** The null-text result: 4 null blocks (see class doc). */
-  val fourNulls: ArrayData = new GenericArrayData(new Array[Any](4))
+  /** The null-text result: 4 null blocks (see the object doc). */
+  private val fourNulls: ArrayData = new GenericArrayData(new Array[Any](4))
 
   private val digestTL = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -95,8 +53,9 @@ object SimHashBlocks60 {
     v >>> 4
   }
 
-  /** Compiled vote + block packing (called from generated code). */
+  /** The kernel: vote + block packing; a null array gives 4 null blocks. */
   def compute(xs: ArrayData): ArrayData = {
+    if (xs == null) return fourNulls
     val n = xs.numElements()
     val votes = new Array[Long](60)
     var i = 0

@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Whitespace-token count + non-whitespace character count in ONE
@@ -35,39 +33,11 @@ import org.apache.spark.sql.types._
  *  - \s is the Java regex class {space, \t, \n, \x0B, \f, \r};
  *  - NULL text → NULL struct (the split forms' null propagation).
  */
-final case class TokenStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_chars", LongType, nullable = false)))
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"token_stats needs string, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    TokenStats.compute(v.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.TokenStats.compute($v.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenStats =
-    copy(child = newChild)
-
-  override def prettyName: String = "token_stats"
-}
-
 object TokenStats {
 
-  /** Shared kernel for the interpreted and codegen paths. */
-  def compute(t: String): InternalRow = {
+  /** The kernel. */
+  def compute(text: UTF8String): InternalRow = {
+    val t = text.toString
     var i = 0
     var end = t.length
     while (i < end && t.charAt(i) == ' ') i += 1
@@ -92,5 +62,8 @@ object TokenStats {
   }
 
   def stats(text: Column): Column =
-    ColumnBridge.column(TokenStats(ColumnBridge.expression(text)))
+    ColumnBridge.invoke(this, "compute", StructType(Seq(
+      StructField("n_tokens", LongType, nullable = false),
+      StructField("n_chars", LongType, nullable = false))),
+      Seq(text -> Kernel.string))
 }

@@ -1,12 +1,13 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Per-document word n-gram repetition statistics in one compiled pass —
@@ -30,54 +31,23 @@ import org.apache.spark.sql.types._
  *  - dup_positions: positions whose gram occurs more than once.
  * Empty token array → (0, "", 0, 0); null array → null.
  */
-final case class TopGramStats(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n >= 1, s"gram width must be >= 1, got $n")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("top_count", IntegerType, nullable = false),
-    StructField("top_gram", StringType, nullable = false),
-    StructField("n_positions", IntegerType, nullable = false),
-    StructField("dup_positions", IntegerType, nullable = false)))
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"top_gram_stats needs array<string>, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    TopGramStats.compute(v.asInstanceOf[ArrayData], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cls = TopGramStats.getClass.getName.stripSuffix("$")
-      s"${ev.value} = $cls.compute($v, $n);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): TopGramStats =
-    copy(child = newChild)
-
-  override def prettyName: String = "top_gram_stats"
-}
-
 object TopGramStats {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** Column face over a token array; result is the stats struct. */
-  def stats(tokens: Column, n: Int): Column =
-    ColumnBridge.column(TopGramStats(ColumnBridge.expression(tokens), n))
+  def stats(tokens: Column, n: Int): Column = {
+    require(n >= 1, s"gram width must be >= 1, got $n")
+    ColumnBridge.invoke(this, "compute", StructType(Seq(
+      StructField("top_count", IntegerType, nullable = false),
+      StructField("top_gram", StringType, nullable = false),
+      StructField("n_positions", IntegerType, nullable = false),
+      StructField("dup_positions", IntegerType, nullable = false))),
+      Seq(tokens -> Kernel.strings), Seq(Literal(n)))
+  }
 
   private val SPACE = UTF8String.fromString(" ")
   private val EMPTY = UTF8String.fromString("")
 
-  /** Compiled counting pass (called from generated code). */
+  /** The kernel: one counting pass. */
   def compute(xs: ArrayData, n: Int): InternalRow = {
     val size = xs.numElements()
     if (size == 0)

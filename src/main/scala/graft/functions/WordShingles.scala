@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types._
 
 /**
  * Word n-gram shingles of a token array in one compiled pass —
@@ -23,58 +24,24 @@ import org.apache.spark.sql.types._
  *  - distinct keeps FIRST-occurrence order (array_distinct semantics);
  *  - null token array → null.
  */
-final case class WordShingles(child: Expression, n: Int,
-                              distinct: Boolean = true)
-    extends UnaryExpression {
-
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"word_shingles needs array<string>, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    if (distinct) WordShingles.compute(v.asInstanceOf[ArrayData], n)
-    else WordShingles.computeAll(v.asInstanceOf[ArrayData], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cls = WordShingles.getClass.getName.stripSuffix("$")
-      val fn = if (distinct) "compute" else "computeAll"
-      s"${ev.value} = $cls.$fn($v, $n);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-
-  override def prettyName: String = "word_shingles"
-}
-
 object WordShingles {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** Column face over a token array (distinct shingles — dedup's need). */
-  def shingles(tokens: Column, n: Int): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(tokens), n))
+  def shingles(tokens: Column, n: Int): Column = face("compute", tokens, n)
 
   /** Every shingle POSITION with duplicates, in order — the counting
     * face (topGrams): same window/concat_ws rules, no distinct pass. */
-  def shinglesAll(tokens: Column, n: Int): Column =
-    ColumnBridge.column(
-      WordShingles(ColumnBridge.expression(tokens), n, distinct = false))
+  def shinglesAll(tokens: Column, n: Int): Column = face("computeAll", tokens, n)
+
+  private def face(kernel: String, tokens: Column, n: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    ColumnBridge.invoke(this, kernel, ArrayType(StringType, containsNull = false),
+      Seq(tokens -> Kernel.strings), Seq(Literal(n)))
+  }
 
   private val SPACE = UTF8String.fromString(" ")
 
-  /** Compiled shingling (called from generated code). */
+  /** The distinct kernel. */
   def compute(xs: ArrayData, n: Int): ArrayData = {
     val size = xs.numElements()
     // HOF parity: slice of an EMPTY grown array is empty (split never
@@ -104,7 +71,7 @@ object WordShingles {
     new GenericArrayData(out)
   }
 
-  /** Compiled positional shingling — every position, duplicates kept,
+  /** The positional kernel — every position, duplicates kept,
     * same window/concat_ws/short-list rules as [[compute]]. */
   def computeAll(xs: ArrayData, n: Int): ArrayData = {
     val size = xs.numElements()

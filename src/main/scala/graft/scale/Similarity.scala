@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Dot product of two float-array columns (double accumulation).
-    * Backed by the codegen'd ArrayDot expression — bit-identical to the
+    * Backed by the ArrayDot kernel — bit-identical to the
     * interpreted aggregate(zip_with) HOF form it replaced (same cast-to-
     * double-then-multiply per element, same left-to-right accumulation;
     * ArrayDotSpec pins the equivalence incl. null/length edges), but the
@@ -106,9 +106,10 @@ object Similarity {
     * plane's LCG vector is generated once and transposed — tabulating
     * per cell would re-draw the full vector dim times per plane.
     * Memoized per (dim, nPlanes) so repeated planeSums calls hand
-    * Catalyst the SAME matrix instance (MatVecSums also has structural
-    * equals, but instance reuse makes dedupe trivially cheap and avoids
-    * rebuilding the matrix per call). The cache stays tiny: one entry
+    * Catalyst the SAME matrix instance (the matrix is a constant kernel
+    * argument compared by reference, so instance reuse is what lets
+    * Catalyst dedupe repeated calls, and it avoids rebuilding the matrix
+    * per call). The cache stays tiny: one entry
     * per distinct (dim, nPlanes) configuration seen in the process. */
   private val planeMatrixCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Array[Double]]]()
@@ -120,7 +121,7 @@ object Similarity {
 
   /** The interpreted HOF form planeSums replaced (zip_with a 2D typedLit,
     * fold an nPlanes-wide accumulator). Kept as the semantic reference:
-    * MatVecSumsSpec pins the codegen'd expression bit-for-bit against it,
+    * MatVecSumsSpec pins the MatVecSums kernel bit-for-bit against it,
     * including the null/length poisoning edge cases. */
   private[graft] def planeSumsHof(vec: Column, dim: Int, nPlanes: Int): Column = {
     val wt: Seq[Seq[Double]] =

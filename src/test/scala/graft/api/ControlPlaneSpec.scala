@@ -164,6 +164,27 @@ class ControlPlaneSpec extends SparkTestBase {
     assert(regMem.listExecutions(limit = 10).size === 5)
   }
 
+  test("restart after a torn final log line: dropped, ids continue, corrupt middle fails") {
+    val store = Files.createTempDirectory(Paths.get(tmp("torn")).getParent, "torn")
+    val log = store.resolve("executions.jsonl")
+    val good = """{"id":"exec-1","job_id":"job-x","started_at_ms":1000,"wall_ms":1,""" +
+      """"status":"SUCCESS","attempts":1,"lines_forwarded":{},""" +
+      """"throughput_rows_per_sec":0.0,"attempt_list":[]}"""
+    // a process killed mid-append: the last line is cut mid-record
+    Files.writeString(log, good + "\n" + """{"id":"exec-2","job_""")
+    val reg = new ControlPlane.JobRegistry(sys.error("no Spark needed"), Some(store))
+    assert(reg.getExecution("exec-1").map(_.status) === Some("SUCCESS"))
+    assert(reg.listExecutions().map(_.id) === Seq("exec-1"))
+    // the torn record's id is not reused
+    assert(reg.createJob(jobJson("in.csv", "out.csv")).id === "job-3")
+    // the torn bytes are gone, so the next append starts its own line
+    assert(Files.readString(log) === good + "\n")
+
+    // a corrupt line that is NOT the last still fails the reload
+    Files.writeString(log, "{\"id\":\"exec-2\",\"job_\n" + good + "\n")
+    intercept[Exception](new ControlPlane.JobRegistry(sys.error("no Spark needed"), Some(store)))
+  }
+
   test("/schedules REST: lifecycle with pause/resume/run-now/update") {
     import spark.implicits._
     val reg = new ControlPlane.JobRegistry(spark)

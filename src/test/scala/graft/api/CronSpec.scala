@@ -63,4 +63,11 @@ class CronSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Cron.parse("* * 0 * *"))
     intercept[IllegalArgumentException](Cron.parse("* * * 13 *"))
   }
+
+  test("malformed ranges raise an IllegalArgumentException naming the part") {
+    for (part <- Seq("5-", "1-2-3", "0-10-20/5")) {
+      val e = intercept[IllegalArgumentException](Cron.parse(s"$part * * * *"))
+      assert(e.getMessage === s"bad cron range: $part")
+    }
+  }
 }

