@@ -58,12 +58,15 @@ object ComponentSchemas {
   /** The port contract as wiring validation enforces it, attached to the
     * /full view like the reference's class-var attachment (schemas.py
     * `_attach_class_vars`: port specs + ALLOW_NO_INPUTS). Params-dependent
-    * contracts render their ports for an empty config, plus the note. */
+    * contracts render their ports for an empty config, plus the note. A
+    * static in port (the closed side a streaming job reads as a batch
+    * frame) carries `"static":true`. */
   private def portsJson(d: ComponentDef): String = {
     val ports = d.ports.of(graft.config.JobConfig.ComponentSpec(
       d.name, d.name, org.json4s.JNothing, Map.empty, Map.empty, Map.empty, Nil, Nil))
     def arr(ps: Seq[PortSpec]) = ps.map { p =>
-      s"""{"name":${quote(p.name)},"required":${p.required},"multi":${p.multi}}"""
+      s"""{"name":${quote(p.name)},"required":${p.required},"multi":${p.multi}""" +
+        (if (p.static) ""","static":true}""" else "}")
     }.mkString("[", ",", "]")
     s""""ports":{"in":${arr(ports.in)},"out":${arr(ports.out)},""" +
       s""""allow_no_inputs":${ports.in.isEmpty}""" +

@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * Every dedup path runs this normalization corpus-wide (exact keys,
  * dedup_against keys, minhash/ngram shingle bases, simhash tokens,
- * the streaming twins), which is why its regex was worth killing:
+ * streaming_dedup), which is why its regex was worth killing:
  * measured paired (tools/KeyProbe @0fcdae9, local[32], 500k docs, md5(key)
  * plans) 0.41 s kernel vs 0.62 s regex vs 0.32 s no-collapse floor.
  */
@@ -71,34 +71,4 @@ object CollapseWs {
     * fold, the kernel's whitespace pass. */
   def normalize(text: Column): Column =
     ColumnBridge.invoke(this, "collapse", StringType, Seq(lower(text) -> Kernel.string))
-
-  /** The exact Lower dispatch the Column form compiles to
-    * (UTF8_BINARY collation) — for kernels that fold case in Scala
-    * space and must not drift from `lower()`. */
-  def lowerFold(s: UTF8String, useICU: Boolean): UTF8String =
-    org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(
-      s,
-      org.apache.spark.sql.catalyst.util.CollationFactory.UTF8_BINARY_COLLATION_ID,
-      useICU)
-
-  /** The ICU case-mapping flag Lower reads (lazily, once per
-    * expression instance — replicate that pattern, don't call this
-    * per row). */
-  def icuEnabled: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get.getConf(
-      org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
-
-  /** Scala-side twin of [[normalize]] for typed/streaming closures:
-    * the same CollationSupport.Lower dispatch the Column form compiles
-    * to (UTF8_BINARY collation), then the same collapse kernel. Row
-    * loops must resolve `useICU` ONCE (see [[icuEnabled]]) and pass it
-    * here — Dedup.ExactKeyFn is the packaged form. */
-  def normalizeString(text: String, useICU: Boolean): String =
-    collapse(lowerFold(UTF8String.fromString(text), useICU)).toString
-
-  /** Convenience form reading the ICU flag from the active SQLConf on
-    * EVERY call — fine for tests and one-off calls, wrong inside a row
-    * loop (a ThreadLocal fetch + conf lookup per row). */
-  def normalizeString(text: String): String =
-    normalizeString(text, icuEnabled)
 }

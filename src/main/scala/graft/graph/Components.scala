@@ -8,7 +8,13 @@ import graft.io.{CsvIO, JdbcIO, JsonIO}
 import graft.ops._
 import graft.schema.FieldDef
 
-final case class PortSpec(name: String, required: Boolean, multi: Boolean)
+/** One port of a comp_type. `static` marks the in port that takes the
+  * static side of a stream-static component (a reference corpus, a
+  * benchmark, an interval or dimension table): in a streaming job it is
+  * fed by a source routed to static ports only, which StreamingJobs
+  * reads as a batch frame; the batch fold treats it like any port. */
+final case class PortSpec(name: String, required: Boolean, multi: Boolean,
+                          static: Boolean = false)
 
 /** A comp_type's port contract for one configuration. `multi`=true on an
   * out port allows fan-out to many edges; on an in port, fan-in of many. */
@@ -19,7 +25,8 @@ final case class Ports(in: Seq[PortSpec], out: Seq[PortSpec])
 final case class PortContract(of: ComponentSpec => Ports, note: Option[String] = None)
 
 /** Which folds run a comp_type: the batch fold (JobGraph), the streaming
-  * fold (StreamingJobs), or both with the same build. */
+  * fold (StreamingJobs), or both with the same build (a stream-static
+  * comp_type reads its static port from a statically read source). */
 sealed abstract class Runs(val batch: Boolean, val streaming: Boolean)
 object Runs {
   case object BatchOnly extends Runs(batch = true, streaming = false)
@@ -56,6 +63,9 @@ final class BuildCtx(val spark: SparkSession, val c: ComponentSpec, d: Component
       s"${c.compType} ${c.name}: port '$p' needs exactly one edge")
     xs.head
   }
+
+  /** An optional single-edge port: its frame if wired. */
+  def optPort(p: String): Option[DataFrame] = in.get(p).map(_ => port(p))
 }
 
 /** One comp_type, defined once: its doc and params (served by GET
@@ -63,7 +73,7 @@ final class BuildCtx(val spark: SparkSession, val c: ComponentSpec, d: Component
   * and its build — the out frame per port plus, for sinks, the deferred
   * write. The streaming fold runs the same build on streaming frames
   * (sources and sinks aside, which StreamingJobs maps to readStream /
-  * writeStream). */
+  * writeStream; a source feeding only static ports runs this build). */
 final case class ComponentDef(name: String, doc: String, params: Seq[Param[_]],
                               ports: PortContract = Components.transform,
                               runs: Runs = Runs.BatchOnly)(
@@ -116,7 +126,8 @@ object Components {
   val filepath = req("filepath", Kind.str, "path of the file to read/write")
   val separator = p("separator", Kind.str, ",", "field delimiter")
   val append = p("append", Kind.bool, false, "append rows under the existing header")
-  /** write_json layout; the streaming fold writes ndjson only. */
+  /** read_json/write_json layout; the streaming fold reads and writes
+    * ndjson only. */
   val jsonFormat = choice("format", Seq("ndjson", "array"),
     "'ndjson' or 'array' (pretty-printed JSON array)")
   private val singleFile = p("single_file", Kind.bool, true,
@@ -136,9 +147,7 @@ object Components {
   private val docIdColumn = p("id_column", Kind.str, "doc_id", "document id column")
   private val vectorColumn = p("vector_column", Kind.str, "embedding", "embedding column")
   private val referenceTextColumn = p("reference_text_column", Kind.str,
-    "text column on the reference, default = text_column")
-  private val referencePath = req("reference_path", Kind.str,
-    "parquet path of the existing corpus the stream is deduplicated against")
+    "text column on the reference port, default = text_column")
   private val seed = p("seed", Kind.str, "",
     "hash salt — different seeds draw independent samples, and any seed is independent of hash_split's routing")
   private val by = p("by", Kind.strs, Nil,
@@ -229,6 +238,11 @@ object Components {
     Some("out is an optional passthrough of the written rows"))
   private def inputs(names: String*) =
     PortContract(_ => Ports(singles(names), Seq(out1)))
+  /** A data port plus the static side a streaming job reads once as a
+    * batch frame (StreamingJobs). */
+  private def withStatic(main: String, static: String, required: Boolean = true) =
+    PortContract(_ => Ports(Seq(PortSpec(main, required = true, multi = false),
+      PortSpec(static, required, multi = false, static = true)), Seq(out1)))
   private val filterPorts = PortContract(_ => Ports(Seq(in1),
     Seq(PortSpec("pass", required = true, multi = true),
       PortSpec("fail", required = false, multi = true))))
@@ -332,7 +346,7 @@ object Components {
     },
     ComponentDef("read_json", "Read JSON: array, NDJSON, or gzip of either", Seq(
       filepath,
-      p("format", Kind.str, "'ndjson' or 'array', accepted for symmetry with write_json; the layout follows the path: .ndjson/.jsonl (optionally .gz) read as NDJSON, anything else as an array/object document")), source, runs = Both) { b => import b._
+      jsonFormat.doc("'ndjson' or 'array', accepted for symmetry with write_json; a batch read's layout follows the path: .ndjson/.jsonl (optionally .gz) read as NDJSON, anything else as an array/object document; a streaming read is NDJSON only")), source, runs = Both) { b => import b._
       val path = b(filepath)
       val schema = c.outPortSchemas.get("out").map(FieldDef.toStructType)
       val df =
@@ -925,16 +939,22 @@ object Components {
           b(urlColumn), b(prefix))), None)
       }
     },
-    ComponentDef("outlier_filter", "Distribution-based outlier filter: keep rows whose numeric `column` sits inside the statistical fences — method=zscore (|v-mean| <= k·stddev, one map-side-combinable aggregate: the 100 TB default) or method=iqr (Tukey fences [q1-k·IQR, q3+k·IQR]; exact percentile buffers group values — set approx=true for the t-digest sketch at scale). Fences per `by` group or global; stats broadcast-join back so the big side never shuffles. NULL values and NULL group keys drop", Seq(
-      outlierColumn, outlierMethod,
+    ComponentDef("outlier_filter", "Distribution-based outlier filter: keep rows whose numeric `column` sits inside the statistical fences — method=zscore (|v-mean| <= k·stddev, one map-side-combinable aggregate: the 100 TB default) or method=iqr (Tukey fences [q1-k·IQR, q3+k·IQR]; exact percentile buffers group values — set approx=true for the t-digest sketch at scale). Fences per `by` group or global; stats broadcast-join back so the big side never shuffles. The fences come from the optional static `reference` port when wired (a trained baseline; in a streaming job it is required, since an aggregate over the stream itself never finalizes), else from `in`. NULL values and NULL group keys drop", Seq(
+      outlierColumn.doc("numeric signal column the fences are computed on (and, with a reference, must exist on both ports)"),
+      outlierMethod,
       fenceK.doc("fence width multiplier (>= 0) (use 1.5 for classic Tukey)"),
       by.doc("compute fences per these group columns (per-source length norms differ); empty = global fences"),
-      approx.doc("iqr only: use approx_percentile (bounded sketch state) instead of exact percentile"))) { b => import b._
-      // Distribution-based outlier filter (Profile.outlierFilter):
+      approx.doc("iqr only: use approx_percentile (bounded sketch state) instead of exact percentile")),
+      withStatic("in", "reference", required = false), runs = Both) { b => import b._
+      // Distribution-based outlier filter (Profile.outlierFilterAgainst):
       // z-score or Tukey-fence (IQR) quality gate on a numeric signal,
-      // optionally per `by` group. Stats aggregate + broadcast join +
-      // narrow filter — the big side never shuffles.
-      (Map("out" -> graft.scale.Profile.outlierFilter(one(), b(outlierColumn),
+      // optionally per `by` group, fences from `reference` if wired.
+      // Stats aggregate + broadcast join + narrow filter — the big side
+      // never shuffles; a static reference's fences broadcast onto a
+      // stream as a stateless filter.
+      val df = one()
+      (Map("out" -> graft.scale.Profile.outlierFilterAgainst(df,
+        optPort("reference").getOrElse(df), b(outlierColumn),
         b(outlierMethod), b(fenceK), b(by), b(approx))), None)
     },
     {
@@ -1047,14 +1067,16 @@ object Components {
       val emit = choice("emit", Seq("docs", "hot"), "'docs' (the rewritten documents) or 'hot' (the audit table: hot line + distinct-doc count, what WOULD be stripped — census only, for eyeballing a threshold)")
       val strategy = choice("strategy", Seq("join", "set"), "'join' (fully lazy) or 'set' (eager bounded hot-set collect, narrow rewrite) — identical results, spec-pinned")
       val broadcast = p("broadcast", Kind.bool, true, "strategy=join: broadcast the hot-line set — disable when max_docs is low and the corpus dirty enough that the hot set outgrows the driver")
-      ComponentDef("line_dedup", "Corpus-level duplicate-line removal (RefinedWeb/CCNet boilerplate stripping): census the corpus's non-blank lines, call a line hot when it appears byte-exactly in more than max_docs DISTINCT documents (navigation chrome, cookie banners, licence footers), and rewrite every document with its hot lines removed. Blank lines pass through (paragraph structure survives); within-document repetition never promotes a line (per-document census); documents with no surviving lines — including NULL text — drop. The post-cut hot set is tiny and broadcasts (LeftAnti, no exchange on the exploded lines); one hash exchange regroups kept lines per document. strategy=set (identical survivors, spec-pinned) collects the hot set once — bounded by max_hot_lines, loud overflow — and rewrites via one codegen'd narrow remove_in_set projection: no regroup exchange, no join-back, the corpus-scale path after the census", Seq(
+      ComponentDef("line_dedup", "Corpus-level duplicate-line removal (RefinedWeb/CCNet boilerplate stripping): census the corpus's non-blank lines (the optional static `reference` port's when wired — a closed corpus whose boilerplate defines the hot set; in a streaming job it is required and the job runs strategy=set, emit=docs), call a line hot when it appears byte-exactly in more than max_docs DISTINCT documents (navigation chrome, cookie banners, licence footers), and rewrite every document with its hot lines removed. Blank lines pass through (paragraph structure survives); within-document repetition never promotes a line (per-document census); documents with no surviving lines — including NULL text — drop. The post-cut hot set is tiny and broadcasts (LeftAnti, no exchange on the exploded lines); one hash exchange regroups kept lines per document. strategy=set (identical survivors, spec-pinned) collects the hot set once — bounded by max_hot_lines, loud overflow — and rewrites via one codegen'd narrow remove_in_set projection: no regroup exchange, no join-back, the corpus-scale path after the census", Seq(
         textColumn,
         docIdColumn.doc("document id column (regroup key) — MUST be unique per document under strategy=join (the rewrite regroups and joins back on it; duplicate ids silently merge documents — dedup upstream if ids can collide; strategy=set rewrites per row and tolerates duplicates)"),
         maxDocs,
         lineUnit.doc("'line' or 'paragraph' (blank-line-separated blocks, the C4-style span — catches boilerplate whose internal line breaks vary only at the block level)"),
         emit, strategy,
         maxHotLines.doc("strategy=set driver-collect cap — overflow fails loudly toward strategy=join"),
-        broadcast)) { b => import b._
+        broadcast,
+        referenceTextColumn),
+        withStatic("in", "reference", required = false), runs = Both) { b => import b._
         // Corpus-level duplicate-line removal (Dedup.lineDedup): census
         // non-blank lines across documents, lines present in more than
         // max_docs DISTINCT documents are boilerplate and get stripped
@@ -1064,27 +1086,36 @@ object Components {
         // strategy=set collects the post-cut hot set (bounded, loud
         // overflow) and rewrites via one codegen'd narrow projection —
         // no regroup exchange, no join-back (Dedup.lineDedupSet).
+        // A wired `reference` port runs the census instead of `in`.
         val (textCol, idCol) = (b(textColumn), b(docIdColumn))
+        val reference = optPort("reference").map(
+          _ -> opt(referenceTextColumn).getOrElse(textCol))
         val out =
           // emit=hot: the audit table (line, n_docs) of what WOULD be
           // stripped — census only, no rewrite, strategy ignored
-          if (b(emit) == "hot") graft.scale.Dedup.hotLineReport(one(), textCol,
-            idCol, b(maxDocs), b(lineUnit))
+          if (b(emit) == "hot") {
+            val (census, censusText) = reference.getOrElse(one() -> textCol)
+            graft.scale.Dedup.hotLineReport(census, censusText, idCol,
+              b(maxDocs), b(lineUnit))
+          }
           else if (b(strategy) == "join") graft.scale.Dedup.lineDedup(one(), textCol,
-            idCol, b(maxDocs), b(broadcast), b(lineUnit))
+            idCol, b(maxDocs), b(broadcast), b(lineUnit), reference)
           else graft.scale.Dedup.lineDedupSet(one(), textCol, idCol,
-            b(maxDocs), b(maxHotLines), b(lineUnit))
+            b(maxDocs), b(maxHotLines), b(lineUnit), reference)
         (Map("out" -> out), None)
       }
     },
     ComponentDef("dedup_against", "Incremental exact dedup: keep only `in`-port rows whose normalized text key (lowercase, whitespace-collapse — the dedup family's exactKey) does NOT appear on the `reference` port — the ingest-time 'drop documents we already have' primitive that avoids re-deduplicating the whole corpus per batch. strategy=join (default, fully lazy): one anti-join, reference broadcasts when small. strategy=bloom (corpus-sized reference): probe a compact reference-key bloom as a codegen'd narrow map and send ONLY might-contain candidates to the exact join — bloom negatives are provably absent and skip the exchange; exactness preserved (a false positive just pays one row's join). NULL-text rows are always kept (a NULL key never equals)", Seq(
       againstStrategy.doc("'join' or 'bloom' — identical results, spec-pinned"),
       textColumn.doc("document text column on the in port"),
-      referenceTextColumn.doc("text column on the reference port, default = text_column")), inputs("in", "reference")) { b => import b._
+      referenceTextColumn),
+      withStatic("in", "reference"), runs = Both) { b => import b._
       // Incremental exact dedup (Dedup.exactAgainst): keep only `in`
       // rows whose normalized key is absent from the `reference` port —
       // the ingest-time "drop documents we already have" primitive.
-      // One anti-join, no window, no state.
+      // One anti-join, no window, no state: a static reference
+      // anti-joins a stream statelessly (no watermark — the reference
+      // is closed, unlike streaming_dedup's in-stream TTL).
       // strategy=bloom probes a compact reference-key bloom as a narrow
       // map and sends only candidates to the exact join — the
       // corpus-sized-reference path (Dedup.exactAgainstBloom).
@@ -1093,61 +1124,6 @@ object Components {
         else graft.scale.Dedup.exactAgainstBloom _
       (Map("out" -> fn(port("in"), port("reference"), b(textColumn),
         opt(referenceTextColumn).getOrElse(""))), None)
-    },
-    ComponentDef("streaming_dedup_against", "Stream-static incremental exact dedup: drop stream rows whose normalized text key already exists in the reference_path parquet corpus — a stateless stream-static LEFT ANTI join (no watermark, no state store; the reference is closed, unlike in-stream streaming_dedup which needs a watermark TTL). strategy=bloom builds a compact key bloom from the static reference at plan time and anti-joins only the stream's might-contain candidates. NULL-text rows pass through", Seq(
-      referencePath, againstStrategy,
-      textColumn.doc("document text column on the stream"),
-      referenceTextColumn), runs = StreamingOnly) { b => import b._
-      // Stream-static incremental exact dedup (Dedup.exactAgainst):
-      // the existing corpus comes from reference_path (batch parquet),
-      // and the stream anti-joins it statelessly — no watermark
-      // needed, the reference is closed (in-stream dedup stays with
-      // streaming_dedup's watermark TTL).
-      val refDf = graft.io.ParquetIO.read(spark, b(referencePath))
-      // strategy=bloom: the bloom build runs eagerly over the STATIC
-      // reference at plan time (fine — it is a batch frame); the
-      // stream side stays a narrow probe + candidate-only anti-join
-      val fn =
-        if (b(againstStrategy) == "join") graft.scale.Dedup.exactAgainst _
-        else graft.scale.Dedup.exactAgainstBloom _
-      (Map("out" -> fn(one(), refDf, b(textColumn),
-        opt(referenceTextColumn).getOrElse(""))), None)
-    },
-    ComponentDef("streaming_line_dedup", "Stream-static boilerplate-line strip: remove from every stream document the lines that appear byte-exactly in more than max_docs DISTINCT documents of the reference_path parquet corpus — the hot census comes from the closed reference at plan time (a census over an unbounded stream never finalizes), bounded-collected under max_hot_lines like batch line_dedup strategy=set, then applied as ONE codegen'd narrow remove_in_set projection: no explode, no shuffle, no watermark, no state. Blank lines pass through; documents with nothing left — including NULL text — drop", Seq(
-      referencePath.doc("parquet path of the closed corpus whose hot lines define the boilerplate set"),
-      textColumn.doc("document text column on the stream"),
-      referenceTextColumn,
-      docIdColumn.doc("document id column on the reference (distinct-doc census key)"),
-      maxDocs.doc("a line in more than this many distinct reference documents is hot"),
-      lineUnit, maxHotLines), runs = StreamingOnly) { b => import b._
-      // Stream-static boilerplate-line strip (Dedup.stripHotLines):
-      // the hot-line census comes from the reference_path parquet
-      // corpus at plan time (a census over an unbounded stream never
-      // finalizes), bounded-collected like the batch strategy=set,
-      // then applied to the stream as ONE codegen'd narrow
-      // projection — no explode, no shuffle, no watermark, no state.
-      val refDf = graft.io.ParquetIO.read(spark, b(referencePath))
-      val textCol = b(textColumn)
-      val hot = graft.scale.Dedup.hotLineSet(refDf,
-        opt(referenceTextColumn).getOrElse(textCol), b(docIdColumn),
-        b(maxDocs), b(maxHotLines), b(lineUnit))
-      (Map("out" -> graft.scale.Dedup.stripHotLines(one(), textCol, hot,
-        b(lineUnit))), None)
-    },
-    ComponentDef("streaming_outlier_filter", "Stream-static outlier gate: keep stream rows whose numeric `column` sits inside fences computed ONCE from the reference_path parquet baseline (an unwindowed aggregate over the stream itself could never finalize) — method=zscore or iqr, global or per `by` group, broadcast onto the stream as a stateless narrow filter (no watermark, no state store). NULL values and NULL group keys drop, matching the batch outlier_filter", Seq(
-      outlierColumn.doc("numeric signal column the fences apply to (must exist on both the stream and the reference)"),
-      referencePath.doc("parquet path of the static baseline the fences are computed from"),
-      outlierMethod, fenceK,
-      by.doc("compute/apply fences per these group columns; empty = global fences"),
-      approx), runs = StreamingOnly) { b => import b._
-      // Stream-static outlier gate (Profile.outlierFilterAgainst):
-      // fences come from `reference_path` (a batch parquet baseline —
-      // an unwindowed aggregate over the stream itself could never
-      // finalize), computed once at plan time and broadcast onto the
-      // stream as a stateless narrow filter. No watermark, no state.
-      val refDf = graft.io.ParquetIO.read(spark, b(referencePath))
-      (Map("out" -> graft.scale.Profile.outlierFilterAgainst(one(), refDf,
-        b(outlierColumn), b(outlierMethod), b(fenceK), b(by), b(approx))), None)
     },
     {
       val keyColumn = p("key_column", Kind.str, "shuffle_key", "name of the added order-key column (must not collide with an input column)")
@@ -1325,10 +1301,11 @@ object Components {
       val emit = choice("emit", Seq("flagged", "clean", "pairs"), "flagged (appends n_hits/contaminated) | clean (keeps only uncontaminated rows) | pairs (audit: one (corpus_id, bench_id, n_shared) row per contaminated pair; always the join shape)")
       val benchIdColumn = p("bench_id_column", Kind.str, "pairs: benchmark id column, default = id_column")
       val maxDf = p("max_df", Kind.int, graft.scale.Decontaminate.DefaultPairsMaxDf, "pairs: corpus-side document-frequency cap on the posting join (stop-gram guard) — capped grams leave the per-pair n_shared counts (docs contaminated only through capped grams keep a row with null bench_id, the loud signal the cap fired); the doc-level contamination set itself is never capped")
-      ComponentDef("decontaminate", "Flag/drop corpus docs sharing word n-grams with a benchmark set (ports corpus/benchmark) — the train/test-overlap guard", Seq(
+      ComponentDef("decontaminate", "Flag/drop corpus docs sharing word n-grams with a benchmark set (ports corpus/benchmark) — the train/test-overlap guard. The benchmark port is static: in a streaming job a source feeds it as a batch frame and the stream runs strategy=broadcast, emit=flagged|clean (a stateless gram probe)", Seq(
         textColumn.doc("text column on both ports"),
         docIdColumn.doc("corpus id column (join strategy)"),
-        ngramN, minOverlap, strategy, emit, benchIdColumn, maxDf), inputs("corpus", "benchmark")) { b => import b._
+        ngramN, minOverlap, strategy, emit, benchIdColumn, maxDf),
+        withStatic("corpus", "benchmark"), runs = Both) { b => import b._
         // Benchmark decontamination (scale/Decontaminate.scala): flag or
         // drop corpus docs sharing word n-grams with the `benchmark` port's
         // eval set. emit=flagged appends n_hits/contaminated for auditing;
@@ -1458,25 +1435,26 @@ object Components {
         (Map("out" -> graft.scale.OpCaches.persist(centroids)), None)
       }
     },
-    ComponentDef("range_join", "Range/interval join: left rows matched to right [start,end] intervals, one-to-many (ports left/right)", Seq(
+    ComponentDef("range_join", "Range/interval join: left rows matched to right [start,end] intervals, one-to-many (ports left/right; right is static — in a streaming job a source feeds it as a batch frame and the stream joins it statelessly)", Seq(
       on.doc("left-side value/time column the interval must contain (inclusive bounds)"),
       start, end,
       by.doc("optional equality keys — REQUIRED at scale unless the interval side is dimension-sized (without keys the right side broadcasts)"),
-      suffix, joinType), inputs("left", "right")) { b => import b._
+      suffix, joinType), withStatic("left", "right"), runs = Both) { b => import b._
       // Range/interval join (ops/RangeJoin.scala): left rows matched to
       // right [start,end] intervals, one-to-many; with `by` keys an
       // equi-join carries the range condition (no cross product), without
-      // them the interval side broadcasts.
+      // them the interval side broadcasts. Both shapes run stateless on
+      // a streaming left against a static right.
       (Map("out" -> RangeJoin(port("left"), port("right"), b(on), b(start), b(end),
         b(by), b(suffix), b(joinType))), None)
     },
     {
       val strategy = choice("strategy", Seq("window", "broadcast"), "window (one shuffle on the by-keys, right side any size) | broadcast (interval-prepared right broadcasts, ZERO shuffle of the left — for corpus-sized left x dimension-sized right)")
-      ComponentDef("asof_join", "As-of join: nearest right row per left row (ports left/right)", Seq(
+      ComponentDef("asof_join", "As-of join: nearest right row per left row (ports left/right; right is static — in a streaming job a source feeds it as a batch frame and the stream runs strategy=broadcast, a stateless enrichment)", Seq(
         on, keysBy, suffix,
         direction.doc("backward: latest right at or before | forward: earliest at or after | nearest: closer of the two, ties to backward"),
         tolerance.doc("max match distance as a SQL literal (INTERVAL '1' HOUR for timestamps, a number for numeric times); farther matches become null"),
-        strategy), inputs("left", "right")) { b => import b._
+        strategy), withStatic("left", "right"), runs = Both) { b => import b._
         // Backward as-of join (ops/AsofJoin.scala): ports `left`/`right`,
         // `on` = event-time column on both sides, `by` = equality keys.
         val keys = b(keysBy)
@@ -1579,8 +1557,7 @@ object Components {
       ComponentDef("streaming_dedup", "Watermark-bounded exact dedup (streaming jobs only)", Seq(
         timeColumn, timeUnit, watermark, textColumn, exactOnly), runs = StreamingOnly) { b => import b._
         // Watermark-bounded exact dedup, the streaming twin of the batch
-        // `dedup` comp_type (ingest-side face of
-        // Streaming.streamingExactDedup): dropDuplicatesWithinWatermark on
+        // `dedup` comp_type: dropDuplicatesWithinWatermark on
         // the normalized text key bounds state by the watermark horizon —
         // a duplicate arriving after the horizon can re-emit, the right
         // trade for continuous ingest. Only method=exact is streamable
@@ -1604,69 +1581,6 @@ object Components {
           .withWatermark("__t", b(watermark))
           .dropDuplicatesWithinWatermark("__key")
           .drop("__key", "__t")), None)
-      }
-    },
-    {
-      val benchmarkPath = req("benchmark_path", Kind.str, "parquet directory of the STATIC benchmark side — read as a batch frame, its distinct grams broadcast")
-      val strategy = choice("strategy", Seq("broadcast"), "only 'broadcast' is streamable (the join strategy aggregates over the stream)")
-      val emit = choice("emit", Seq("flagged", "clean"), "flagged (appends n_hits/contaminated) | clean (keeps only uncontaminated rows)")
-      ComponentDef("streaming_decontaminate", "Stream-static benchmark decontamination: flag/drop stream docs sharing word n-grams with a STATIC eval set (streaming jobs only; stateless broadcast probe)", Seq(
-        benchmarkPath, textColumn.doc("text column on both sides"), ngramN, minOverlap,
-        strategy, emit), runs = StreamingOnly) { b => import b._
-        // Stream-static benchmark decontamination (scale/Decontaminate):
-        // the eval set comes from `benchmark_path` (a batch parquet dim)
-        // and is collected into the broadcast gram probe at plan time, so
-        // the streaming corpus stays a stateless narrow map — no
-        // watermark, no state store. strategy=join is not an allowed
-        // value (its explode + groupBy would aggregate over the unbounded
-        // stream); exact parity with the batch component on the same
-        // data is pinned in StreamingJobsSpec.
-        val benchDf = graft.io.ParquetIO.read(spark, b(benchmarkPath))
-        val (textCol, n, minOv) = (b(textColumn), b(ngramN), b(minOverlap))
-        val out =
-          if (b(emit) == "flagged") graft.scale.Decontaminate.flag(
-            one(), benchDf, textCol, n = n, minOverlap = minOv)
-          else graft.scale.Decontaminate.clean(
-            one(), benchDf, textCol, n = n, minOverlap = minOv)
-        (Map("out" -> out), None)
-      }
-    },
-    {
-      val rightPath = req("right_path", Kind.str, "parquet directory of the STATIC interval side — read as a batch frame, not a stream")
-      ComponentDef("streaming_range_join", "Stream-static range/interval enrichment: STATIC right [start,end] intervals containing each stream row's value (streaming jobs only; stateless)", Seq(
-        rightPath, on.doc("stream-side value/time column the interval must contain (inclusive bounds)"),
-        start, end, by.doc("optional equality keys (without them the interval side broadcasts)"),
-        suffix, joinType), runs = StreamingOnly) { b => import b._
-        // Stream-static range/interval enrichment (ops/RangeJoin): the
-        // STATIC right side comes from `right_path` (a parquet interval
-        // dimension — calendars, campaigns, config epochs) and joins
-        // statelessly: equi-join on the by-keys with the containment
-        // condition, or a broadcast nested loop without keys. No
-        // watermark, no state store; exact parity with batch range_join
-        // on the same data (StreamingJobsSpec).
-        val rightDf = graft.io.ParquetIO.read(spark, b(rightPath))
-        (Map("out" -> RangeJoin(one(), rightDf, b(on), b(start), b(end),
-          b(by), b(suffix), b(joinType))), None)
-      }
-    },
-    {
-      val rightPath = req("right_path", Kind.str, "parquet directory of the STATIC right side (dimension table) — read as a batch frame, not a stream")
-      ComponentDef("streaming_asof_join", "Stream-static as-of enrichment: nearest STATIC right row per stream row (streaming jobs only; stateless, right side broadcasts)", Seq(
-        rightPath, on, keysBy, suffix, direction, tolerance), runs = StreamingOnly) { b => import b._
-        // Stream-static as-of enrichment (ops/AsofJoin.enrichStatic): the
-        // STATIC right side comes from `right_path` (a parquet dimension
-        // table read as a batch frame — NOT a stream port), is prepared
-        // into per-key validity intervals batch-side, and broadcasts
-        // into a stateless row-wise left join — no watermark, no state
-        // store, exact parity with the batch asof_join on the same data
-        // (StreamingJobsSpec pins it per direction). Static-right-only
-        // by design: a stream-stream as-of needs watermark bounds this
-        // surface does not declare.
-        val rightDf = graft.io.ParquetIO.read(spark, b(rightPath))
-        (Map("out" -> AsofJoin.enrichStatic(one(), rightDf,
-          on = b(on), by = b(keysBy),
-          suffix = b(suffix), direction = b(direction),
-          tolerance = opt(tolerance))), None)
       }
     }
   ) ++ {

@@ -21,7 +21,7 @@ import graft.schema.SchemaValidator
  *  - sources reject incoming edges (runtimejob.py:218-227): they
  *    declare no in ports, so the route check below refuses them;
  *  - required out ports need ≥1 route, fanout=one ports at most 1;
- *    required in ports need ≥1 upstream, fanin=one exactly 1
+ *    required in ports need ≥1 upstream, fanin=one at most 1
  *    (runtimejob.py:266-301);
  *  - every USED port carries a schema (runtimejob.py:301-322);
  *  - plan-time structural schema validation on every edge, with unknown
@@ -205,8 +205,9 @@ object JobGraph {
         val n = incoming.getOrElse((c.name, p.name), 0)
         require(!(p.required && n == 0),
           s"component ${c.name}: required in port '${p.name}' has no upstream edges")
-        require(p.multi || n == 1,
-          s"component ${c.name}: in port '${p.name}' must have exactly one upstream edge")
+        require(p.multi || n <= 1,
+          s"component ${c.name}: in port '${p.name}' must have " +
+            s"${if (p.required) "exactly" else "at most"} one upstream edge")
       }
       // unknown route ports
       for (port <- c.routes.keys)

@@ -108,43 +108,6 @@ object Dedup {
   private[graft] def exactKeyRegex(text: Column): Column =
     regexp_replace(lower(trim(text)), "\\s+", " ")
 
-  /** Scala-side twin of exactKey for typed/streaming paths (groupByKey
-    * closures can't evaluate Columns), in lockstep with the expression
-    * form BY CONSTRUCTION: non-null text runs the same CollapseWs
-    * kernel the Column form compiles to (the previous hand-rolled twin
-    * silently diverged twice — Java String.trim strips every char
-    * <= U+0020 where SQL trim strips 0x20 only, so "\ta" keyed "a"
-    * here but " a" in batch; and null mapped to "", merging the
-    * null-text group into the blank-text group where batch keeps
-    * NULL-key and ""-key groups separate).
-    *
-    * Grouping must also replicate the SQL NULL group, and state keys
-    * can't be null — so the twin PREFIX-ENCODES: null → U+0000, any
-    * real key → U+0001 + key. Injective by construction: every
-    * non-null key carries the prefix, so no text (not even one
-    * containing NULs, which survive normalization as token chars) can
-    * collide with the null token. Batch/stream parity on a null+blank
-    * fixture is pinned in StreamingSpec; key equivalence with the
-    * Column form on generated exotic unicode in ScalePropertySpec. */
-  val NullKeySentinel = "\u0000"
-  val NonNullKeyPrefix = "\u0001"
-  def exactKeyString(text: String): String =
-    if (text == null) NullKeySentinel
-    else NonNullKeyPrefix + graft.functions.CollapseWs.normalizeString(text)
-
-  /** [[exactKeyString]] packaged for row loops: the ICU case-mapping
-    * flag is resolved ONCE per deserialized instance (@transient lazy
-    * — Lower's own once-per-expression-instance pattern, evaluated
-    * task-side from the conf that ships with it), where the bare
-    * function would pay a ThreadLocal SQLConf fetch per document on
-    * the streaming hot path. */
-  final class ExactKeyFn extends (String => String) with Serializable {
-    @transient private lazy val useICU = graft.functions.CollapseWs.icuEnabled
-    override def apply(text: String): String =
-      if (text == null) NullKeySentinel
-      else NonNullKeyPrefix + graft.functions.CollapseWs.normalizeString(text, useICU)
-  }
-
   /**
    * Exact dedup: keep one row per normalized key. The winner is the
    * lowest-id row by default; `keepBy` ((field, ±1) sort components,
@@ -187,7 +150,8 @@ object Dedup {
    * rows are always kept (they carry no key evidence; an exact() pass
    * downstream still groups them). Also the STREAMING shape: with a
    * static reference this is a stream-static left-anti join, stateless
-   * (streaming_dedup_against) — unlike in-stream dedup it needs no
+   * (dedup_against in a streaming job, its `reference` port fed by a
+   * source) — unlike in-stream dedup it needs no
    * watermark because the reference is closed.
    */
   def exactAgainst(df: DataFrame, reference: DataFrame, textCol: String,
@@ -297,13 +261,22 @@ object Dedup {
    * dedup or group_cap upstream is the fix if ids can collide);
    * [[lineDedupSet]] rewrites per row and tolerates duplicate ids,
    * which is another reason it is the scale path.
+   *
+   * `reference` = (frame, text column) runs the census on another
+   * corpus (keyed by the same `idCol`) and strips its hot lines from
+   * `df`; None censuses `df` itself.
    */
   def lineDedup(df: DataFrame, textCol: String, idCol: String,
                 maxDocs: Int = 1, broadcastHot: Boolean = true,
-                unit: String = "line"): DataFrame = {
+                unit: String = "line",
+                reference: Option[(DataFrame, String)] = None): DataFrame = {
     val delim = unitDelim(unit)
     val lines = explodedLines(df, textCol, idCol, delim)
-    val hotCensus = hotLines(lines, idCol, maxDocs)
+    val hotCensus = reference match {
+      case Some((ref, refText)) =>
+        hotLines(explodedLines(ref, refText, idCol, delim), idCol, maxDocs)
+      case None => hotLines(lines, idCol, maxDocs)
+    }
     val hot = if (broadcastHot) broadcast(hotCensus) else hotCensus
     val kept = lines.join(hot, Seq("__line"), "left_anti")
     val rebuilt = kept
@@ -388,19 +361,24 @@ object Dedup {
    * shape when boilerplate is concentrated (it always is; that is what
    * makes it boilerplate). Eager like the bloom paths: the census runs
    * at plan-construction time. The default [[lineDedup]] stays lazy.
+   * `reference` as in [[lineDedup]]: with a static reference and a
+   * streaming `df` this is line_dedup's streaming face.
    */
   def lineDedupSet(df: DataFrame, textCol: String, idCol: String,
                    maxDocs: Int = 1,
                    maxHotLines: Int = MaxHotLines,
-                   unit: String = "line"): DataFrame =
+                   unit: String = "line",
+                   reference: Option[(DataFrame, String)] = None): DataFrame = {
+    val (census, censusText) = reference.getOrElse(df -> textCol)
     stripHotLines(df, textCol,
-      hotLineSet(df, textCol, idCol, maxDocs, maxHotLines, unit), unit)
+      hotLineSet(census, censusText, idCol, maxDocs, maxHotLines, unit), unit)
+  }
 
   /** The bounded-collected hot-line set of a (static) corpus —
-    * [[lineDedupSet]]'s census half, also the plan-time half of the
-    * stream-static streaming_line_dedup face (a census over an
-    * unbounded stream never finalizes, so the hot set must come from a
-    * closed reference corpus there). */
+    * [[lineDedupSet]]'s census half. In a streaming job line_dedup's
+    * census comes from its static `reference` port through here (a
+    * census over an unbounded stream never finalizes, so the hot set
+    * must come from a closed corpus). */
   def hotLineSet(corpus: DataFrame, textCol: String, idCol: String,
                  maxDocs: Int = 1,
                  maxHotLines: Int = MaxHotLines,

@@ -205,8 +205,8 @@ object Profile {
    * cannot compute its own global stats (an unwindowed aggregate over
    * an unbounded stream never finalizes), but a STATIC reference's
    * fences are one batch aggregate whose result broadcast-joins onto
-   * the stream as a stateless narrow filter — the stream-static
-   * pattern streaming_decontaminate uses for its benchmark side.
+   * the stream as a stateless narrow filter — outlier_filter in a
+   * streaming job, its static `reference` port fed by a source.
    * `reference` must carry `column` (and the `by` columns); both
    * frames are resolved case-insensitively and independently.
    */

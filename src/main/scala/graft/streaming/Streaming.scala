@@ -1,175 +1,28 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import java.sql.Timestamp
 
 /**
- * Structured Streaming surface. The reference's "streaming" is asyncio
- * pipelining of whole payloads with no event time, no watermarks and no
- * windows (SURVEY §2.4) — batch results are its only semantics. Here the
- * SAME DataFrame transforms run in either mode: a batch DataFrame or a
- * readStream frame flow through identical plans (Catalyst subsumes the
- * row/bulk/bigdata strategy split), and event-time features the reference
- * cannot express come with it:
+ * Stateful streaming. The reference's "streaming" is asyncio pipelining
+ * of whole payloads with no event time, no watermarks and no windows
+ * (SURVEY §2.4) — batch results are its only semantics. Here the SAME
+ * DataFrame transforms run in either mode (StreamingJobs runs the
+ * registry's builds on readStream frames); what a stream adds is state,
+ * and state must be bounded:
  *
- *  - tumbling-window aggregation with a watermark bounding state;
- *  - per-key custom state via mapGroupsWithState (running per-user
- *    aggregates with event-time timeout — the state machine shape a
- *    training-data ingest pipeline needs for sessionization).
+ *  - batch `aggregation` and `dedup` are not streamable: their JSON
+ *    surfaces declare no watermark, so their state would grow with the
+ *    stream. `streaming_aggregation` (windowed, watermark-bounded) and
+ *    `streaming_dedup` (dropDuplicatesWithinWatermark on the exact key)
+ *    are their streaming comp_types (graph/Components.scala);
+ *  - a LIFETIME per-group quota has no watermark to expire by: its
+ *    custom state (flatMapGroupsWithState) lives here, below.
  *
- * Scale notes: windowed aggregation state is bounded by the watermark
- * horizon; keys hash-partition across executors; sinks should be
- * checkpointed (`option("checkpointLocation", ...)`) for exactly-once.
+ * Scale notes: state is partitioned by key across executors; sinks are
+ * checkpointed for exactly-once (StreamingJobs.start).
  */
 object Streaming {
-
-  final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
-                         event_type: String, value: Double)
-
-  final case class UserAgg(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Streaming source over a parquet directory (schema required by
-    * Structured Streaming file sources). `ts` is normalized to canonical
-    * TimestampType exactly like batch ingestion (graft.util.EventTime —
-    * the driver testdata has shipped both nanos-INT64 and native
-    * TIMESTAMP(µs) NTZ representations), so the watermark/window
-    * operators downstream cannot diverge from the batch contract.
-    *
-    * CAVEAT — integral `ts` is assumed epoch-NANOS: that is the driver
-    * testdata's legacy INT64 contract, and it is what batch `table()`
-    * reads, so the parity tests hold. A directory whose longs are
-    * epoch-seconds/millis would be mis-scaled 10^6-10^9 with no error;
-    * such sources must declare the scale instead — the component path
-    * (streaming aggregation/session configs) REQUIRES an explicit
-    * `time_unit` for INT64 columns via EventTime.forComponent and is the
-    * API for anything that is not this driver fixture. */
-  def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
-    graft.util.EventTime.normalize(spark.readStream.schema(schema).parquet(dir), "ts")
-  }
-
-  /**
-   * Tumbling-window event aggregation — the streaming twin of the batch
-   * q_events_window query: identical results on identical input, plus
-   * late-data handling bounded by `watermark`.
-   */
-  def windowedCounts(events: DataFrame, watermarkDur: String = "1 hour",
-                     windowDur: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDur)
-      .groupBy(window(col("ts"), windowDur).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value")).as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
-
-  /**
-   * Running per-user aggregate with explicit state — the
-   * mapGroupsWithState shape for custom sessionization logic. State lives
-   * in the state store (RocksDB/HDFS-backed at scale), partitioned by
-   * user_id.
-   */
-  def runningUserAggs(events: Dataset[Event]): Dataset[UserAgg] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[UserAgg]) =>
-          val prev = state.getOption.getOrElse(UserAgg(userId, 0L, 0.0))
-          val next = batch.foldLeft(prev) { (acc, e) =>
-            UserAgg(userId, acc.n_events + 1, acc.total_value + e.value)
-          }
-          state.update(next)
-          next
-      }
-  }
-
-  final case class Doc(doc_id: Long, ts: Timestamp, text: String)
-
-  /**
-   * Streaming exact dedup over a document stream — the ingest-side twin of
-   * Dedup.exact. Two state regimes:
-   *
-   *  - `streamingExactDedup`: Spark-native dropDuplicatesWithinWatermark
-   *    on the normalized text key; state is BOUNDED because the engine may
-   *    evict entries once they age past the watermark — a duplicate
-   *    arriving after the horizon can be re-emitted. (Plain
-   *    dropDuplicates(key) would NOT bound state: without the event-time
-   *    column in the key list its state grows with the corpus.) The right
-   *    default for continuous ingest.
-   *  - `streamingFirstSeen`: flatMapGroupsWithState keeping one boolean
-   *    per key with no timeout — exact survivor semantics matching the
-   *    batch operator on any replay, state grows O(distinct keys). Use
-   *    when the dedup horizon is the whole corpus and the state store
-   *    (RocksDB at scale) is provisioned for it.
-   *    STATE FORMAT NOTE: the state key is Dedup.exactKeyString, whose
-   *    encoding changed when the null/blank-merge bug was fixed (null →
-   *    U+0000 sentinel, real keys U+0001-prefixed; previously the raw
-   *    key with null → ""). A checkpoint written under the old (v1)
-   *    encoding cannot be honored — and that is now ENFORCED, not a doc
-   *    note: see [[FirstSeenStateVersion]]. On upgrade, start a fresh
-   *    checkpoint.
-   */
-  def streamingExactDedup(docs: DataFrame, textCol: String,
-                          watermarkDur: String = "1 hour"): DataFrame = {
-    // withColumn silently OVERWRITES an existing column of the same
-    // name and the final drop would then delete user data — guard at
-    // this altitude too, not only in the StreamingJobs wrapper, so
-    // direct API callers get the loud failure as well
-    require(!docs.columns.contains("__key"),
-      "streamingExactDedup: column name __key is reserved internally")
-    docs
-      .withColumn("__key", graft.scale.Dedup.exactKey(col(textCol)))
-      .withWatermark("ts", watermarkDur)
-      .dropDuplicatesWithinWatermark("__key")
-      .drop("__key")
-  }
-
-  /** Key-format version stored as [[streamingFirstSeen]]'s state VALUE.
-    * The version is machine-checked on resume, two layers deep:
-    *
-    *  - v1 → v2 (the exactKeyString null/blank-merge fix): v1 kept
-    *    Boolean state; v2 deliberately changed the state type to Int so
-    *    Spark's state-schema compatibility check (on by default,
-    *    spark.sql.streaming.stateStore.stateSchemaCheck) ABORTS a v1
-    *    checkpoint's resume at its first stateful batch — loud failure
-    *    instead of silently missing every persisted key and re-emitting
-    *    one already-emitted survivor per old key.
-    *  - any future key-encoding change bumps this constant: resumed
-    *    state carrying an older version trips the IllegalStateException
-    *    in the group function (the state TYPE alone can't tell two Int
-    *    versions apart).
-    *
-    * Pinned by StreamingSpec "a v1-format checkpoint fails the resumed
-    * query loudly" against a checkpoint genuinely written by a v1
-    * replica. */
-  val FirstSeenStateVersion: Int = 2
-
-  def streamingFirstSeen(docs: Dataset[Doc]): Dataset[Doc] = {
-    import docs.sparkSession.implicits._
-    // key function instance, not the bare exactKeyString: the ICU flag
-    // resolves once per deserialized task instance instead of per doc
-    val keyFn = new graft.scale.Dedup.ExactKeyFn
-    docs
-      .groupByKey(d => keyFn(d.text))
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_: String, batch: Iterator[Doc], state: GroupState[Int]) =>
-          if (state.exists) {
-            if (state.get != FirstSeenStateVersion) throw new IllegalStateException(
-              s"streamingFirstSeen: resumed state was written under key-format " +
-                s"version ${state.get}; this build writes $FirstSeenStateVersion. " +
-                "Keys recorded under the old encoding cannot be honored — " +
-                "restart with a fresh checkpoint.")
-            Iterator.empty
-          } else {
-            state.update(FirstSeenStateVersion)
-            // min doc_id in this batch = the batch operator's survivor rule
-            Iterator.single(batch.minBy(_.doc_id))
-          }
-      }
-  }
 
   /**
    * Streaming per-group row quota over an arbitrary Row schema — the
@@ -226,13 +79,4 @@ object Streaming {
       }(Encoders.scalaLong, rowEnc)
       .toDF()
   }
-
-  /** Start `windowedCounts` into an in-memory table (tests/dev). */
-  def startToMemory(streamed: DataFrame, queryName: String,
-                    mode: OutputMode = OutputMode.Update()) =
-    streamed.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(mode)
-      .start()
 }

@@ -45,6 +45,27 @@ class ComponentSchemasSpec extends AnyFunSuite {
     }
   }
 
+  test("stream-static comp_types run in both folds and mark their static in port") {
+    import org.json4s._
+    val static = Map("dedup_against" -> "reference", "decontaminate" -> "benchmark",
+      "range_join" -> "right", "asof_join" -> "right",
+      "line_dedup" -> "reference", "outlier_filter" -> "reference")
+    def staticPorts(t: String): Seq[String] = {
+      val full = org.json4s.jackson.JsonMethods.parse(ComponentSchemas.fullSchemaJson(t).get)
+      for (JObject(p) <- (full \ "ports" \ "in").children
+           if p.contains("static" -> JBool(true)); ("name", JString(n)) <- p) yield n
+    }
+    for ((t, port) <- static) {
+      assert(graft.graph.Components.byName(t).runs === graft.graph.Runs.Both, t)
+      assert(staticPorts(t) === Seq(port), t)
+    }
+    // the static side of line_dedup/outlier_filter is optional in a batch job
+    assert(ComponentSchemas.fullSchemaJson("line_dedup").get.contains(
+      """{"name":"reference","required":false,"multi":false,"static":true}"""))
+    for (t <- ComponentSchemas.compTypes if !static.contains(t))
+      assert(staticPorts(t).isEmpty, t)
+  }
+
   test("job schema documents exactly the JobConfig.parse contract") {
     val js = ComponentSchemas.jobSchemaJson
     val parsed = org.json4s.jackson.JsonMethods.parse(js)

@@ -995,4 +995,87 @@ class JobComponentsSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("emit=pairs"))
   }
+
+  test("line_dedup with a reference port: the census comes from the reference, join and set") {
+    import spark.implicits._
+    val in = tmp("ldref_in")
+    val ref = tmp("ldref_ref")
+    // "Footer" is hot in the reference only; "Local" is hot in `in` only
+    Seq((1L, "alpha\nFooter\nLocal"), (2L, "beta\nLocal"), (3L, "Footer"),
+      (4L, "gamma"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(in)
+    Seq((10L, "x\nFooter"), (11L, "y\nFooter"), (12L, "Local"))
+      .toDF("doc_id", "body").write.mode("overwrite").parquet(ref)
+    val sch =
+      """{ "fields": [ { "name": "doc_id", "data_type": "integer" },
+        |  { "name": "text", "data_type": "string" } ] }""".stripMargin
+    val refSch =
+      """{ "fields": [ { "name": "doc_id", "data_type": "integer" },
+        |  { "name": "body", "data_type": "string" } ] }""".stripMargin
+    val want = graft.scale.Dedup.stripHotLines(spark.read.parquet(in), "text",
+      graft.scale.Dedup.hotLineSet(spark.read.parquet(ref), "body", "doc_id"))
+      .as[(Long, String)].collect().toMap
+    assert(want === Map(1L -> "alpha\nLocal", 2L -> "beta\nLocal", 4L -> "gamma"))
+    for (strategy <- Seq("join", "set")) {
+      val out = tmp(s"ldref_out_$strategy")
+      val json =
+        s"""{ "name": "t", "components": [
+           |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
+           |    "routes": { "out": [ { "to": "ld", "in_port": "in" } ] },
+           |    "out_port_schemas": { "out": $sch } },
+           |  { "name": "c", "comp_type": "read_parquet", "filepath": "$ref",
+           |    "routes": { "out": [ { "to": "ld", "in_port": "reference" } ] },
+           |    "out_port_schemas": { "out": $refSch } },
+           |  { "name": "ld", "comp_type": "line_dedup", "strategy": "$strategy",
+           |    "reference_text_column": "body",
+           |    "in_port_schemas": { "in": $sch, "reference": $refSch },
+           |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+           |    "out_port_schemas": { "out": $sch } },
+           |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
+           |    "in_port_schemas": { "in": $sch } } ] }""".stripMargin
+      val built = JobGraph.build(spark, JobConfig.parse(json))
+      built.runSinks(); built.close()
+      assert(spark.read.parquet(out).as[(Long, String)].collect().toMap === want,
+        s"strategy=$strategy")
+    }
+  }
+
+  test("outlier_filter with a reference port: fences come from the reference") {
+    import spark.implicits._
+    val in = tmp("ofref_in")
+    val ref = tmp("ofref_ref")
+    // every row sits inside its own fences; the tight baseline keeps only 10.0
+    Seq((1L, 10.0), (2L, 20.0), (3L, 30.0), (4L, 40.0))
+      .toDF("id", "v").write.mode("overwrite").parquet(in)
+    Seq(9.0, 10.0, 11.0, 12.0).toDF("v").write.mode("overwrite").parquet(ref)
+    val sch =
+      """{ "fields": [ { "name": "id", "data_type": "integer" },
+        |  { "name": "v", "data_type": "float" } ] }""".stripMargin
+    val refSch = """{ "fields": [ { "name": "v", "data_type": "float" } ] }"""
+    val out = tmp("ofref_out")
+    val json =
+      s"""{ "name": "t", "components": [
+         |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
+         |    "routes": { "out": [ { "to": "of", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $sch } },
+         |  { "name": "b", "comp_type": "read_parquet", "filepath": "$ref",
+         |    "routes": { "out": [ { "to": "of", "in_port": "reference" } ] },
+         |    "out_port_schemas": { "out": $refSch } },
+         |  { "name": "of", "comp_type": "outlier_filter", "column": "v",
+         |    "method": "iqr", "k": 1.5,
+         |    "in_port_schemas": { "in": $sch, "reference": $refSch },
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $sch } },
+         |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
+         |    "in_port_schemas": { "in": $sch } } ] }""".stripMargin
+    val built = JobGraph.build(spark, JobConfig.parse(json))
+    built.runSinks(); built.close()
+    val got = spark.read.parquet(out).select("id").as[Long].collect().toSet
+    val want = graft.scale.Profile.outlierFilterAgainst(spark.read.parquet(in),
+      spark.read.parquet(ref), "v", "iqr", 1.5).select("id").as[Long].collect().toSet
+    assert(got === want)
+    assert(got === Set(1L))
+    assert(graft.scale.Profile.outlierFilter(spark.read.parquet(in), "v", "iqr", 1.5)
+      .count() === 4, "the fixture's own fences keep every row")
+  }
 }

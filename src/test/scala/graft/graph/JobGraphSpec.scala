@@ -519,6 +519,19 @@ class JobGraphSpec extends SparkTestBase {
     assert(e.getMessage.contains("'aggregation'"))
   }
 
+  test("validation: read_json format is ndjson | array, not a free string") {
+    def job(format: String) = specOf(
+      s"""{ "name": "r", "comp_type": "read_json", "filepath": "x.ndjson",
+         |  "format": "$format",
+         |  "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |  "out_port_schemas": { "out": $abSchema } }""".stripMargin,
+      s"""{ "name": "w", "comp_type": "write_parquet", "filepath": "y",
+         |  "in_port_schemas": { "in": $abSchema } }""".stripMargin)
+    val e = intercept[IllegalArgumentException](JobGraph.validate(job("xml")))
+    assert(e.getMessage === "component r: param 'format' must be one of ndjson | array, got format=xml")
+    JobGraph.validate(job("array"))
+  }
+
   test("validation: a misspelled param is rejected with a did-you-mean, not run on defaults") {
     val e = intercept[IllegalArgumentException] {
       JobGraph.validate(specOf(

@@ -384,29 +384,6 @@ class ScalePropertySpec extends SparkTestBase {
     })
   }
 
-  test("exactKeyString twin equals the Column exactKey on generated exotic unicode") {
-    // the typed/streaming twin (null → sentinel key) must produce the
-    // SAME key as the Column form for every non-null doc, and its null
-    // sentinel must be unreachable from any real text
-    val docs = sampleN(exoticDoc, 400, 191L).filter(_ != null)
-      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
-    val viaColumn = docs.toDF("id", "t")
-      .select(col("id"), Dedup.exactKey(col("t")).as("k"))
-      .as[(Long, String)].collect().toMap
-    // the packaged row-loop form (ICU flag hoisted per instance) must
-    // be indistinguishable from the per-call function
-    val keyFn = new Dedup.ExactKeyFn
-    docs.foreach { case (id, text) =>
-      val s = Dedup.exactKeyString(text)
-      assert(s === Dedup.NonNullKeyPrefix + viaColumn(id),
-        s"id=$id text=${text.map(c => f"\\u${c.toInt}%04x").mkString}")
-      assert(s !== Dedup.NullKeySentinel,
-        "no real text may key onto the null token")
-      assert(keyFn(text) === s, "ExactKeyFn must equal exactKeyString")
-    }
-    assert(keyFn(null) === Dedup.exactKeyString(null))
-  }
-
   test("case-folding kernels stay in lockstep with lower() when ICU is OFF") {
     // every suite run exercises useICU=true (Spark 4's default); this
     // pins the OTHER branch: with ICU case mappings disabled, lower()
@@ -428,16 +405,6 @@ class ScalePropertySpec extends SparkTestBase {
         not(Dedup.exactKey(t) <=> Dedup.exactKeyRegex(t)).as("b"))
         .filter(col("a") || col("b")).collect()
       assert(bad.isEmpty, bad.mkString("\n"))
-      // the typed twin and its packaged form read the same conf
-      val viaColumn = docs.toDF("id", "t")
-        .select(col("id"), Dedup.exactKey(t).as("k"))
-        .as[(Long, String)].collect().toMap
-      val keyFn = new Dedup.ExactKeyFn
-      docs.filter(_._2 != null).foreach { case (id, text) =>
-        assert(Dedup.exactKeyString(text) ===
-          Dedup.NonNullKeyPrefix + viaColumn(id), s"id=$id")
-        assert(keyFn(text) === Dedup.exactKeyString(text), s"id=$id")
-      }
     } finally spark.conf.set(key, prev)
   }
 }

@@ -604,6 +604,11 @@ class StreamingJobsSpec extends SparkTestBase {
         |  { "name": "id", "data_type": "integer" },
         |  { "name": "t", "data_type": "integer" },
         |  { "name": "tag", "data_type": "string", "nullable": true } ] }""".stripMargin
+    val rSchema =
+      """{ "fields": [
+        |  { "name": "user", "data_type": "string" },
+        |  { "name": "t", "data_type": "integer" },
+        |  { "name": "tag", "data_type": "string" } ] }""".stripMargin
     for ((dir, tol) <- Seq(("backward", None), ("forward", None),
                            ("nearest", None), ("backward", Some("4")))) {
       val tag = s"${dir}_${tol.getOrElse("notol")}"
@@ -612,12 +617,15 @@ class StreamingJobsSpec extends SparkTestBase {
       val cfg =
         s"""{ "name": "sasof", "components": [
            |  { "name": "r", "comp_type": "read_parquet", "filepath": "$lin",
-           |    "routes": { "out": [ { "to": "aj", "in_port": "in" } ] },
+           |    "routes": { "out": [ { "to": "aj", "in_port": "left" } ] },
            |    "out_port_schemas": { "out": $lSchema } },
-           |  { "name": "aj", "comp_type": "streaming_asof_join",
-           |    "right_path": "$rin", "on": "t", "by": ["user"],
+           |  { "name": "dim", "comp_type": "read_parquet", "filepath": "$rin",
+           |    "routes": { "out": [ { "to": "aj", "in_port": "right" } ] },
+           |    "out_port_schemas": { "out": $rSchema } },
+           |  { "name": "aj", "comp_type": "asof_join", "strategy": "broadcast",
+           |    "on": "t", "by": ["user"],
            |    "direction": "$dir", $tolJson
-           |    "in_port_schemas": { "in": $lSchema },
+           |    "in_port_schemas": { "left": $lSchema, "right": $rSchema },
            |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
            |    "out_port_schemas": { "out": $oSchema } },
            |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
@@ -662,17 +670,26 @@ class StreamingJobsSpec extends SparkTestBase {
         |  { "name": "s", "data_type": "integer", "nullable": true },
         |  { "name": "e", "data_type": "integer", "nullable": true },
         |  { "name": "tag", "data_type": "string", "nullable": true } ] }""".stripMargin
+    val rSchema =
+      """{ "fields": [
+        |  { "name": "k", "data_type": "string" },
+        |  { "name": "s", "data_type": "integer" },
+        |  { "name": "e", "data_type": "integer" },
+        |  { "name": "tag", "data_type": "string" } ] }""".stripMargin
     for (jt <- Seq("inner", "left")) {
       val out = tmp(s"srj_out_$jt")
       val cfg =
         s"""{ "name": "srj", "components": [
            |  { "name": "r", "comp_type": "read_parquet", "filepath": "$lin",
-           |    "routes": { "out": [ { "to": "rj", "in_port": "in" } ] },
+           |    "routes": { "out": [ { "to": "rj", "in_port": "left" } ] },
            |    "out_port_schemas": { "out": $lSchema } },
-           |  { "name": "rj", "comp_type": "streaming_range_join",
-           |    "right_path": "$rin", "on": "t", "start": "s", "end": "e",
+           |  { "name": "iv", "comp_type": "read_parquet", "filepath": "$rin",
+           |    "routes": { "out": [ { "to": "rj", "in_port": "right" } ] },
+           |    "out_port_schemas": { "out": $rSchema } },
+           |  { "name": "rj", "comp_type": "range_join",
+           |    "on": "t", "start": "s", "end": "e",
            |    "by": ["k"], "join_type": "$jt",
-           |    "in_port_schemas": { "in": $lSchema },
+           |    "in_port_schemas": { "left": $lSchema, "right": $rSchema },
            |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
            |    "out_port_schemas": { "out": $oSchema } },
            |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
@@ -711,17 +728,25 @@ class StreamingJobsSpec extends SparkTestBase {
         |  { "name": "s", "data_type": "integer", "nullable": true },
         |  { "name": "e", "data_type": "integer", "nullable": true },
         |  { "name": "tag", "data_type": "string", "nullable": true } ] }""".stripMargin
+    val rSchema =
+      """{ "fields": [
+        |  { "name": "s", "data_type": "integer" },
+        |  { "name": "e", "data_type": "integer" },
+        |  { "name": "tag", "data_type": "string" } ] }""".stripMargin
     for (jt <- Seq("inner", "left")) {
       val out = tmp(s"srjk_out_$jt")
       val cfg =
         s"""{ "name": "srjk", "components": [
            |  { "name": "r", "comp_type": "read_parquet", "filepath": "$lin",
-           |    "routes": { "out": [ { "to": "rj", "in_port": "in" } ] },
+           |    "routes": { "out": [ { "to": "rj", "in_port": "left" } ] },
            |    "out_port_schemas": { "out": $lSchema } },
-           |  { "name": "rj", "comp_type": "streaming_range_join",
-           |    "right_path": "$rin", "on": "t", "start": "s", "end": "e",
+           |  { "name": "iv", "comp_type": "read_parquet", "filepath": "$rin",
+           |    "routes": { "out": [ { "to": "rj", "in_port": "right" } ] },
+           |    "out_port_schemas": { "out": $rSchema } },
+           |  { "name": "rj", "comp_type": "range_join",
+           |    "on": "t", "start": "s", "end": "e",
            |    "join_type": "$jt",
-           |    "in_port_schemas": { "in": $lSchema },
+           |    "in_port_schemas": { "left": $lSchema, "right": $rSchema },
            |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
            |    "out_port_schemas": { "out": $oSchema } },
            |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
@@ -897,6 +922,7 @@ class StreamingJobsSpec extends SparkTestBase {
       """{ "fields": [
         |  { "name": "id", "data_type": "integer" },
         |  { "name": "text", "data_type": "string" } ] }""".stripMargin
+    val refSch = """{ "fields": [ { "name": "text", "data_type": "string" } ] }"""
     for (strategy <- Seq("join", "bloom")) {
       val out = tmp(s"sda_out_$strategy")
       val cfg =
@@ -904,9 +930,11 @@ class StreamingJobsSpec extends SparkTestBase {
            |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
            |    "routes": { "out": [ { "to": "da", "in_port": "in" } ] },
            |    "out_port_schemas": { "out": $sch } },
-           |  { "name": "da", "comp_type": "streaming_dedup_against",
-           |    "reference_path": "$ref", "strategy": "$strategy",
-           |    "in_port_schemas": { "in": $sch },
+           |  { "name": "known", "comp_type": "read_parquet", "filepath": "$ref",
+           |    "routes": { "out": [ { "to": "da", "in_port": "reference" } ] },
+           |    "out_port_schemas": { "out": $refSch } },
+           |  { "name": "da", "comp_type": "dedup_against", "strategy": "$strategy",
+           |    "in_port_schemas": { "in": $sch, "reference": $refSch },
            |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
            |    "out_port_schemas": { "out": $sch } },
            |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
@@ -941,9 +969,11 @@ class StreamingJobsSpec extends SparkTestBase {
          |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
          |    "routes": { "out": [ { "to": "ld", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $sch } },
-         |  { "name": "ld", "comp_type": "streaming_line_dedup",
-         |    "reference_path": "$ref",
-         |    "in_port_schemas": { "in": $sch },
+         |  { "name": "corpus", "comp_type": "read_parquet", "filepath": "$ref",
+         |    "routes": { "out": [ { "to": "ld", "in_port": "reference" } ] },
+         |    "out_port_schemas": { "out": $sch } },
+         |  { "name": "ld", "comp_type": "line_dedup", "strategy": "set",
+         |    "in_port_schemas": { "in": $sch, "reference": $sch },
          |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $sch } },
          |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
@@ -978,16 +1008,22 @@ class StreamingJobsSpec extends SparkTestBase {
         |  { "name": "id", "data_type": "integer" },
         |  { "name": "g", "data_type": "string" },
         |  { "name": "v", "data_type": "float" } ] }""".stripMargin
+    val refSch =
+      """{ "fields": [
+        |  { "name": "g", "data_type": "string" },
+        |  { "name": "v", "data_type": "float" } ] }""".stripMargin
     val out = tmp("sof_out")
     val cfg =
       s"""{ "name": "sof", "components": [
          |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
          |    "routes": { "out": [ { "to": "of", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $sch } },
-         |  { "name": "of", "comp_type": "streaming_outlier_filter",
+         |  { "name": "base", "comp_type": "read_parquet", "filepath": "$ref",
+         |    "routes": { "out": [ { "to": "of", "in_port": "reference" } ] },
+         |    "out_port_schemas": { "out": $refSch } },
+         |  { "name": "of", "comp_type": "outlier_filter",
          |    "column": "v", "method": "iqr", "k": 1.5, "by": ["g"],
-         |    "reference_path": "$ref",
-         |    "in_port_schemas": { "in": $sch },
+         |    "in_port_schemas": { "in": $sch, "reference": $refSch },
          |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $sch } },
          |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
@@ -1165,12 +1201,15 @@ class StreamingJobsSpec extends SparkTestBase {
       val cfg =
         s"""{ "name": "sdec", "components": [
            |  { "name": "r", "comp_type": "read_parquet", "filepath": "$cin",
-           |    "routes": { "out": [ { "to": "dc", "in_port": "in" } ] },
+           |    "routes": { "out": [ { "to": "dc", "in_port": "corpus" } ] },
            |    "out_port_schemas": { "out": $inSchema } },
-           |  { "name": "dc", "comp_type": "streaming_decontaminate",
-           |    "benchmark_path": "$bin", "ngram_n": 3, "min_overlap": 2,
+           |  { "name": "bench", "comp_type": "read_parquet", "filepath": "$bin",
+           |    "routes": { "out": [ { "to": "dc", "in_port": "benchmark" } ] },
+           |    "out_port_schemas": { "out": $inSchema } },
+           |  { "name": "dc", "comp_type": "decontaminate",
+           |    "ngram_n": 3, "min_overlap": 2,
            |    "emit": "$emit",
-           |    "in_port_schemas": { "in": $inSchema },
+           |    "in_port_schemas": { "corpus": $inSchema, "benchmark": $inSchema },
            |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
            |    "out_port_schemas": { "out": $oSchema } },
            |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
@@ -1201,11 +1240,13 @@ class StreamingJobsSpec extends SparkTestBase {
     val cfg =
       s"""{ "name": "sdecbad", "components": [
          |  { "name": "r", "comp_type": "read_parquet", "filepath": "${tmp("sdec_corpus")}",
-         |    "routes": { "out": [ { "to": "dc", "in_port": "in" } ] },
+         |    "routes": { "out": [ { "to": "dc", "in_port": "corpus" } ] },
          |    "out_port_schemas": { "out": $inSchema } },
-         |  { "name": "dc", "comp_type": "streaming_decontaminate",
-         |    "benchmark_path": "${tmp("sdec_bench")}", "strategy": "join",
-         |    "in_port_schemas": { "in": $inSchema },
+         |  { "name": "bench", "comp_type": "read_parquet", "filepath": "${tmp("sdec_bench")}",
+         |    "routes": { "out": [ { "to": "dc", "in_port": "benchmark" } ] },
+         |    "out_port_schemas": { "out": $inSchema } },
+         |  { "name": "dc", "comp_type": "decontaminate", "strategy": "join",
+         |    "in_port_schemas": { "corpus": $inSchema, "benchmark": $inSchema },
          |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $inSchema } },
          |  { "name": "w", "comp_type": "write_parquet", "filepath": "${tmp("sdecbad_out")}",
@@ -1213,7 +1254,129 @@ class StreamingJobsSpec extends SparkTestBase {
     val ex = intercept[IllegalArgumentException] {
       StreamingJobs.runOnce(spark, JobConfig.parse(cfg), tmp("sdecbad_ckpt"))
     }
-    assert(ex.getMessage.contains("param 'strategy' must be one of broadcast"))
+    assert(ex.getMessage.contains(
+      "decontaminate dc: strategy=join does not stream (it would aggregate over " +
+        "the stream); set strategy: broadcast"))
+  }
+
+  /** A streaming job: `comps` between a parquet source `r` (routes
+    * given) and a parquet sink `w`, all on `sch`. */
+  private def jobOf(name: String, rRoutes: String, comps: String*): String =
+    s"""{ "name": "$name", "components": [
+       |  { "name": "r", "comp_type": "read_parquet", "filepath": "${tmp(s"${name}_in")}",
+       |    "routes": { "out": [ $rRoutes ] },
+       |    "out_port_schemas": { "out": $docSchema } },
+       |  ${comps.mkString(",\n")},
+       |  { "name": "w", "comp_type": "write_parquet", "filepath": "${tmp(s"${name}_out")}",
+       |    "in_port_schemas": { "in": $docSchema } } ] }""".stripMargin
+
+  private val docSchema =
+    """{ "fields": [
+      |  { "name": "doc_id", "data_type": "integer" },
+      |  { "name": "text", "data_type": "string" } ] }""".stripMargin
+
+  private def planError(cfg: String): String =
+    intercept[IllegalArgumentException](StreamingJobs.plan(spark, JobConfig.parse(cfg))).getMessage
+
+  test("a static port fed by a stream is rejected at plan time, naming the component") {
+    val dedupAgainst =
+      s"""{ "name": "da", "comp_type": "dedup_against",
+         |  "in_port_schemas": { "in": $docSchema, "reference": $docSchema },
+         |  "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |  "out_port_schemas": { "out": $docSchema } }""".stripMargin
+    // one source routed to the data port AND the static port
+    val both = planError(jobOf("sboth",
+      """{ "to": "da", "in_port": "in" }, { "to": "da", "in_port": "reference" }""",
+      dedupAgainst))
+    assert(both.contains(
+      "dedup_against da: static port 'reference' receives a stream from r"), both)
+    // a transform in front of the static port
+    val ahead = planError(jobOf("sahead",
+      """{ "to": "da", "in_port": "in" }, { "to": "tn", "in_port": "in" }""",
+      s"""{ "name": "tn", "comp_type": "text_normalize",
+         |  "in_port_schemas": { "in": $docSchema },
+         |  "routes": { "out": [ { "to": "da", "in_port": "reference" } ] },
+         |  "out_port_schemas": { "out": $docSchema } }""".stripMargin,
+      dedupAgainst))
+    assert(ahead.contains(
+      "dedup_against da: static port 'reference' receives a stream from tn"), ahead)
+  }
+
+  test("an unwired static port is rejected in a streaming job, naming the component") {
+    for (t <- Seq("line_dedup", "outlier_filter")) {
+      val params = if (t == "line_dedup") """"strategy": "set"""" else """"column": "doc_id""""
+      val msg = planError(jobOf(s"sunwired_$t", """{ "to": "x", "in_port": "in" }""",
+        s"""{ "name": "x", "comp_type": "$t", $params,
+           |  "in_port_schemas": { "in": $docSchema },
+           |  "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+           |  "out_port_schemas": { "out": $docSchema } }""".stripMargin))
+      assert(msg.contains(s"$t x: static port 'reference' is not wired"), msg)
+    }
+  }
+
+  test("a strategy or emit that would aggregate over the stream is rejected, naming the fix") {
+    def withRef(t: String, params: String, ports: (String, String)) =
+      jobOf(s"snostream_${t}_${params.filter(_.isLetter)}",
+        s"""{ "to": "x", "in_port": "${ports._1}" }""",
+        s"""{ "name": "ref", "comp_type": "read_parquet", "filepath": "${tmp("snostream_ref")}",
+           |  "routes": { "out": [ { "to": "x", "in_port": "${ports._2}" } ] },
+           |  "out_port_schemas": { "out": $docSchema } }""".stripMargin,
+        s"""{ "name": "x", "comp_type": "$t", $params
+           |  "in_port_schemas": { "${ports._1}": $docSchema, "${ports._2}": $docSchema },
+           |  "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+           |  "out_port_schemas": { "out": $docSchema } }""".stripMargin)
+    val ld = ("in", "reference")
+    for ((t, params, ports, fix) <- Seq(
+        ("line_dedup", "", ld, "strategy=join does not stream"),
+        ("line_dedup", """"strategy": "set", "emit": "hot",""", ld, "emit=hot does not stream"),
+        ("asof_join", """"on": "doc_id", "by": ["text"],""", ("left", "right"),
+          "strategy=window does not stream"),
+        ("decontaminate", """"emit": "pairs",""", ("corpus", "benchmark"),
+          "emit=pairs does not stream"))) {
+      val msg = planError(withRef(t, params, ports))
+      assert(msg.contains(s"$t x: $fix"), msg)
+      assert(msg.contains("; set "), msg)
+    }
+  }
+
+  test("a streaming read_json rejects format=array at plan time") {
+    val cfg =
+      s"""{ "name": "sjarr", "components": [
+         |  { "name": "r", "comp_type": "read_json", "filepath": "${tmp("sjarr_in")}",
+         |    "format": "array",
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "w", "comp_type": "write_parquet", "filepath": "${tmp("sjarr_out")}",
+         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin
+    val msg = planError(cfg)
+    assert(msg.contains("read_json r: only ndjson streams"), msg)
+  }
+
+  test("a sink that fails to start stops the queries already started") {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.Trigger
+    val in = tmp("sstop_in")
+    Seq(("1", "x")).toDF("a", "b").write.mode("overwrite").parquet(in)
+    // the second sink's checkpoint directory is taken by a plain file
+    val ckpt = tmp("sstop_ckpt")
+    Files.createDirectories(Paths.get(ckpt))
+    Files.write(Paths.get(ckpt, "w2"), Array[Byte](1))
+    val cfg =
+      s"""{ "name": "sstop", "components": [
+         |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
+         |    "routes": { "out": [ { "to": "w1", "in_port": "in" }, { "to": "w2", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "w1", "comp_type": "write_parquet", "filepath": "${tmp("sstop_out1")}",
+         |    "in_port_schemas": { "in": $abSchema } },
+         |  { "name": "w2", "comp_type": "write_parquet", "filepath": "${tmp("sstop_out2")}",
+         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin
+    try {
+      intercept[Exception] {
+        StreamingJobs.start(spark, JobConfig.parse(cfg), ckpt, Trigger.ProcessingTime("1 second"))
+      }
+      assert(spark.streams.active.isEmpty,
+        s"left running: ${spark.streams.active.map(_.id).mkString(", ")}")
+    } finally spark.streams.active.foreach(_.stop())
   }
 
   test("text_analysis repetition=true streams: parity with the batch fold") {
