@@ -24,16 +24,6 @@ final case class Ports(in: Seq[PortSpec], out: Seq[PortSpec])
   * depend on params (the /full view renders `of` on an empty config). */
 final case class PortContract(of: ComponentSpec => Ports, note: Option[String] = None)
 
-/** Which folds run a comp_type: the batch fold (JobGraph), the streaming
-  * fold (StreamingJobs), or both with the same build (a stream-static
-  * comp_type reads its static port from a statically read source). */
-sealed abstract class Runs(val batch: Boolean, val streaming: Boolean)
-object Runs {
-  case object BatchOnly extends Runs(batch = true, streaming = false)
-  case object Both extends Runs(batch = true, streaming = true)
-  case object StreamingOnly extends Runs(batch = false, streaming = true)
-}
-
 /** What a build sees: the session, its component, the frames on each in
   * port, and the whole job's components (read_table checks them). Params
   * are read through `apply`/`opt`, which refuse a Param the component's
@@ -69,14 +59,15 @@ final class BuildCtx(val spark: SparkSession, val c: ComponentSpec, d: Component
 }
 
 /** One comp_type, defined once: its doc and params (served by GET
-  * /schemas and checked by validation), its port contract, where it runs,
-  * and its build — the out frame per port plus, for sinks, the deferred
-  * write. The streaming fold runs the same build on streaming frames
-  * (sources and sinks aside, which StreamingJobs maps to readStream /
-  * writeStream; a source feeding only static ports runs this build). */
+  * /schemas and checked by validation), its port contract, whether it
+  * also `streams`, and its build — the out frame per port plus, for
+  * sinks, the deferred write. Every comp_type runs in batch jobs; the
+  * streaming fold runs the same build on streaming frames (sources and
+  * sinks aside, which StreamingJobs maps to readStream / writeStream; a
+  * source feeding only static ports runs this build). */
 final case class ComponentDef(name: String, doc: String, params: Seq[Param[_]],
                               ports: PortContract = Components.transform,
-                              runs: Runs = Runs.BatchOnly)(
+                              streams: Boolean = false)(
     val build: BuildCtx => (Map[String, DataFrame], Option[() => Unit])) {
   val paramNames: Set[String] = params.map(_.name).toSet
 }
@@ -89,8 +80,6 @@ final case class ComponentDef(name: String, doc: String, params: Seq[Param[_]],
  * (schemas.py:362-479).
  */
 object Components {
-  import Runs._
-
   private def p[T](name: String, kind: Kind[T], desc: String): Param[T] =
     Param(name, kind)(desc)
   private def p[T](name: String, kind: Kind[T], default: T, desc: String): Param[T] =
@@ -161,7 +150,7 @@ object Components {
   private val on = req("on", Kind.str, "event-time column present on both sides")
   private val start = req("start", Kind.str, "right-side interval start column")
   private val end = req("end", Kind.str, "right-side interval end column")
-  private val joinType = p("join_type", Kind.str, "inner", "inner | left")
+  private val joinType = choice("join_type", Seq("inner", "left"), "inner | left")
   private val direction = p("direction", Kind.str, "backward",
     "backward | forward | nearest — same semantics as batch asof_join")
   private val tolerance = p("tolerance", Kind.str,
@@ -187,10 +176,12 @@ object Components {
     "plan-time driver-collect cap — overflow fails loudly")
   private val againstStrategy = choice("strategy", Seq("join", "bloom"),
     "'join' or 'bloom' — identical results")
-  private val timeColumn = req("time_column", Kind.str,
+  private val timeColumn = p("time_column", Kind.str,
     "event-time column (string/timestamp/date parsed; INT64 epochs additionally need time_unit)")
   private val timeUnit = p("time_unit", Kind.str,
-    "epoch scale when time_column is INT64: seconds | millis | micros | nanos (REQUIRED for integer time columns)")
+    "epoch scale when time_column is INT64: seconds | millis | micros | nanos (REQUIRED for integer time columns — the scale is not inferable)")
+  private val watermark = p("watermark", Kind.str,
+    "late-data horizon on time_column, e.g. '10 minutes' (required in a streaming job)")
   private val windowP = p("window", Kind.str, "tumbling window width (required unless session_gap)")
   private val slide = p("slide", Kind.str, "slide interval for overlapping windows")
   private val sessionGap = p("session_gap", Kind.str, "session window gap (exclusive with window/slide)")
@@ -216,8 +207,7 @@ object Components {
   private val rulesByDest = p("rules_by_dest", Kind.mapRules,
     Map.empty[String, Seq[SchemaMappingOp.MapRule]],
     "map mode: {dst_port: {dst_path: {src_port, src_path}}}")
-  /** schema_mapping join mode (the streaming fold refuses it). */
-  val joinPlan = p("join_plan", Kind.joinPlan,
+  private val joinPlan = p("join_plan", Kind.joinPlan,
     "join mode: {steps: [{left_port, right_port, left_on, right_on, how, output_port, broadcast?}]} — broadcast: left|right pins a broadcast-hash plan for a known-small side above Catalyst's auto threshold (results identical; the shuffle of the big side disappears)")
   private val similarityMethod = choice("method", Seq("knn", "ivf", "ivf_index"),
     "knn (ports corpus/queries) | ivf (ports corpus/centroids/query) | ivf_index (ports centroids/query over a write_ivf_index layout)")
@@ -326,7 +316,7 @@ object Components {
     {
       val multiline = p("multiline", Kind.bool, false, "quote-aware whole-record parse (reads back write_csv output whose cells carry embedded newlines); false = line-splittable parallel parse")
       ComponentDef("read_csv", "Read a CSV file as all-string columns", Seq(
-        filepath, separator, multiline), source, runs = Both) { b => import b._
+        filepath, separator, multiline), source, streams = true) { b => import b._
         // multiline=false (default) = reference parity, line-splittable
         // parallel parse; true = quote-aware whole-record parse, the
         // knob that reads back write_csv output whose cells carry
@@ -337,7 +327,7 @@ object Components {
       }
     },
     ComponentDef("write_csv", "Write a CSV file", Seq(
-      filepath, separator, singleFile, append), sink, runs = Both) { b => import b._
+      filepath, separator, singleFile, append), sink, streams = true) { b => import b._
       val df = one()
       val path = b(filepath)
       val sep = b(separator)
@@ -346,7 +336,7 @@ object Components {
     },
     ComponentDef("read_json", "Read JSON: array, NDJSON, or gzip of either", Seq(
       filepath,
-      jsonFormat.doc("'ndjson' or 'array', accepted for symmetry with write_json; a batch read's layout follows the path: .ndjson/.jsonl (optionally .gz) read as NDJSON, anything else as an array/object document; a streaming read is NDJSON only")), source, runs = Both) { b => import b._
+      jsonFormat.doc("'ndjson' or 'array', accepted for symmetry with write_json; a batch read's layout follows the path: .ndjson/.jsonl (optionally .gz) read as NDJSON, anything else as an array/object document; a streaming read is NDJSON only")), source, streams = true) { b => import b._
       val path = b(filepath)
       val schema = c.outPortSchemas.get("out").map(FieldDef.toStructType)
       val df =
@@ -362,7 +352,7 @@ object Components {
       ComponentDef("write_json", "Write JSON (NDJSON or array format)", Seq(
         filepath, jsonFormat,
         append.doc("append rows to an existing file instead of overwriting"),
-        gzip, jsonSingleFile), sink, runs = Both) { b => import b._
+        gzip, jsonSingleFile), sink, streams = true) { b => import b._
         val df = one()
         val path = b(filepath)
         // default stays NDJSON (Spark's native part-file layout); "array"
@@ -388,7 +378,7 @@ object Components {
     {
       val mergeSchema = p("merge_schema", Kind.bool, false, "schema-evolution read: merge every file's footer into the union schema (columns added by newer files surface as nulls in older rows); false — single-footer inference")
       ComponentDef("read_parquet", "Read a parquet file or directory", Seq(filepath,
-        mergeSchema), source, runs = Both) { b => import b._
+        mergeSchema), source, streams = true) { b => import b._
         // ParquetIO caches inferred schemas (listing-fingerprint
         // invalidated) — repeated builds over the same inputs skip the
         // ~70 ms footer-inference constant (tools/JobPhaseProbe @0fcdae9).
@@ -409,7 +399,7 @@ object Components {
       ComponentDef("write_parquet", "Write parquet", Seq(filepath, partitionBy,
         coalesceP,
         sortBy.doc("data-skipping layout: range-partition + sort on these keys so each file carries a disjoint range and min/max stats skip files (high-cardinality keys that can't be directories); exclusive with coalesce"),
-        files, maxRecordsPerFile), sink, runs = Both) { b => import b._
+        files, maxRecordsPerFile), sink, streams = true) { b => import b._
         val df = one()
         val path = b(filepath)
         // partition_by: Hive-style directory partitioning — the 100 TB
@@ -554,34 +544,34 @@ object Components {
     {
       val rule = req("rule", Kind.rule, "nested {column, operator, value} / {logical_operator, rules} tree")
       ComponentDef("filter", "Route rows to pass/fail ports by a boolean rule tree", Seq(
-        rule), filterPorts, runs = Both) { b => import b._
+        rule), filterPorts, streams = true) { b => import b._
         (FilterOp(one(), b(rule)), None)
       }
     },
     {
-      val grouping = p("grouping", Kind.str, "groups", "groups | rollup | cube")
+      val grouping = choice("grouping", Seq("groups", "rollup", "cube"), "groups | rollup | cube")
       val pivotColumn = p("pivot_column", Kind.str, "pivot this column's values into output columns")
       val pivotValues = p("pivot_values", Kind.scalars, Nil, "explicit pivot values (required with pivot_column)")
       val salted = p("salted", Kind.bool, false, "two-phase skew-safe aggregate for hot keys (exact results; count/sum/min/max only; exclusive with rollup/cube/pivot/windows)")
       val saltFactor = p("salt_factor", Kind.int, 16, "subkeys per key when salted")
-      val timeCol = p("time_column", Kind.str, "event-time column: switches to windowed aggregation (batch face of streaming_aggregation)")
-      ComponentDef("aggregation", "Group-by aggregation (count/sum/min/max/mean/median/std/nunique)", Seq(
+      ComponentDef("aggregation", "Group-by aggregation (count/sum/min/max/mean/median/std/nunique). time_column switches to windowed aggregation (tumbling/sliding/session), the face that also runs in a streaming job: there time_column and watermark are required, and in append mode a window emits once the watermark passes its end", Seq(
         groupBy.doc("grouping columns; empty = one global row"),
-        aggregations, grouping, pivotColumn, pivotValues, timeCol,
-        timeUnit.doc("epoch scale when time_column is INT64: seconds | millis | micros | nanos (REQUIRED for integer time columns — same contract as streaming_aggregation)"),
+        aggregations, grouping, pivotColumn, pivotValues,
+        timeColumn.doc("event-time column: switches to windowed aggregation (INT64 epochs additionally need time_unit; required in a streaming job)"),
+        timeUnit,
         windowP.doc("tumbling/sliding window size, e.g. '1 hour' (with time_column)"),
         slide.doc("slide interval; requires window"),
         sessionGap.doc("session window gap; exclusive with window/slide"),
         salted, saltFactor,
-        p("watermark", Kind.str, "streaming_aggregation's late-data horizon, accepted so one config runs in both modes; a batch run has no late data and ignores it"))) { b => import b._
+        watermark.doc("late-data horizon on time_column, e.g. '10 minutes': bounds a stream's window state and late data (required in a streaming job); a batch run has no late data, so Spark drops it from the batch plan")), streams = true) { b => import b._
         val (keys, aggs) = (b(groupBy), b(aggregations))
         // salted is only meaningful on the plain group-by face; the
         // pivot/window branches never read it, so accepting it there
         // would silently drop the skew protection the user asked for
-        require(!b(salted) || (opt(pivotColumn).isEmpty && opt(timeCol).isEmpty),
+        require(!b(salted) || (opt(pivotColumn).isEmpty && opt(timeColumn).isEmpty),
           s"aggregation ${c.name}: salted is exclusive with pivot and " +
             "time windows")
-        (opt(pivotColumn), opt(timeCol)) match {
+        (opt(pivotColumn), opt(timeColumn)) match {
           case (Some(_), Some(_)) => throw new IllegalArgumentException(
             s"aggregation ${c.name}: pivot and time windows are exclusive")
           case (Some(pc), None) =>
@@ -589,21 +579,23 @@ object Components {
               s"aggregation ${c.name}: pivot and rollup/cube are exclusive")
             // typed: [2023] stays numeric
             (Map("out" -> AggregateOp.pivoted(one(), keys, pc, b(pivotValues), aggs)), None)
-          // batch time-windowed aggregation (tumbling/sliding/session) —
-          // the same window rules as streaming_aggregation, minus the
-          // watermark: config-level batch/stream parity
+          // time-windowed aggregation (tumbling/sliding/session), in both
+          // folds: EventTime.forComponent normalizes the event time, so
+          // an INT64 epoch column + time_unit means ONE thing in both.
+          // The watermark bounds a stream's state and late data (with
+          // session_gap a session closes when it passes the session's
+          // end); on a batch frame Spark's EliminateEventTimeWatermark
+          // drops it, so the batch plan is the unwatermarked one
           case (None, Some(tc)) =>
             require(b(grouping) == "groups",
               s"aggregation ${c.name}: time windows and rollup/cube are exclusive")
             val winCol = AggregateOp.windowColumn(tc, opt(windowP),
               opt(slide), opt(sessionGap), s"aggregation ${c.name}")
-            // same event-time normalization as streaming_aggregation
-            // (EventTime.forComponent), so a config with an INT64 epoch
-            // time column + time_unit means ONE thing in both modes
             val base = one()
             val et = base.withColumn(tc, graft.util.EventTime.forComponent(
               base.schema, tc, opt(timeUnit), s"aggregation ${c.name}"))
-            (Map("out" -> AggregateOp.windowed(et, tc, winCol, keys, aggs)), None)
+            val marked = opt(watermark).fold(et)(et.withWatermark(tc, _))
+            (Map("out" -> AggregateOp.windowed(marked, tc, winCol, keys, aggs)), None)
           case (None, None) =>
             // salted=true opts into the two-phase skew-safe aggregate
             // (scale/Skew.saltedAggregate — exactly equal results for
@@ -622,11 +614,11 @@ object Components {
       }
     },
     ComponentDef("type_conversion", "Cast columns with raise/null/skip policies", Seq(
-      castRules), runs = Both) { b => import b._
+      castRules), streams = true) { b => import b._
       (Map("out" -> TypeConversionOp(one(), b(castRules))), None)
     },
     ComponentDef("schema_mapping", "Project/rename columns (map mode) or join inputs (join mode)", Seq(
-      rulesByDest, joinPlan), schemaMappingPorts, runs = Both) { b => import b._
+      rulesByDest, joinPlan), schemaMappingPorts, streams = true) { b => import b._
       val mapRules = b(rulesByDest)
       val joinSteps = opt(joinPlan).getOrElse(Nil)
       val byPort: Map[String, DataFrame] = in.view.mapValues(_.head).toMap
@@ -638,7 +630,7 @@ object Components {
         else joinSteps.map(_.outputPort).distinct.map(p => p -> afterJoins(p)).toMap
       (outs, None)
     },
-    ComponentDef("split", "Fan one input out to N identical ports (ports come from routes)", Seq(), splitPorts, runs = Both) { b => import b._
+    ComponentDef("split", "Fan one input out to N identical ports (ports come from routes)", Seq(), splitPorts, streams = true) { b => import b._
       val df = one()
       (c.extraOutputPorts.map(_ -> df).toMap, None)
     },
@@ -668,7 +660,7 @@ object Components {
         (Map("out" -> resolved), None)
       }
     },
-    ComponentDef("merge", "Union all inbound branches by column name", Seq(), mergePorts, runs = Both) { b => import b._
+    ComponentDef("merge", "Union all inbound branches by column name", Seq(), mergePorts, streams = true) { b => import b._
       val dfs = in.getOrElse("in", Nil)
       require(dfs.nonEmpty, s"merge ${c.name}: no inputs")
       (Map("merge" -> dfs.reduce(_.unionByName(_))), None)
@@ -698,12 +690,17 @@ object Components {
       val dim = p("dim", Kind.int, 64, "embedding dimension")
       val rowsPerBand = p("rows_per_band", Kind.int, "embedding sign bits per band; omitted = sized from the corpus count (measured lshDepthFor rule)")
       val emitP = choice("emit", Seq("survivors", "pairs", "cluster"), "survivors (pairwise drop-id_b) | pairs (near-dup pair table (id_a, id_b, score) for connected_components) | cluster (one min-id survivor per TRANSITIVE component; near-dup methods only)")
-      ComponentDef("dedup", "Deduplicate documents: exact, minhash, simhash, ngram, or embedding", Seq(
-        dedupMethod, textColumn, idColumn, keepBy, shingleN, numHashes, bands,
+      ComponentDef("dedup", "Deduplicate documents: exact, minhash, simhash, ngram, or embedding. In a streaming job only method=exact runs, as a watermark-bounded dropDuplicatesWithinWatermark on the normalized text key (time_column and watermark required, keep_by empty): a duplicate arriving after the watermark horizon can re-emit, and the first arrival is kept", Seq(
+        dedupMethod, textColumn,
+        idColumn.doc("unique id column (not used in a stream)"),
+        timeColumn.doc("streaming only: event-time column the watermark runs on (not used in batch)"),
+        timeUnit.doc("streaming only: epoch scale when time_column is INT64: seconds | millis | micros | nanos (not used in batch)"),
+        watermark.doc("streaming only: dedup state horizon, e.g. '1 hour' (not used in batch)"),
+        keepBy, shingleN, numHashes, bands,
         threshold, maxHamming, ngramN.doc("ngram width"), maxDf, vectorColumn,
         simThreshold, dim, rowsPerBand, emitP,
         maxIter.doc("emit=cluster: connected-components round cap"),
-        checkpointDir.doc("emit=cluster: per-round RELIABLE checkpoint directory for the component loop (preemption-safe; superseded rounds' files deleted as it advances); unset = executor-block localCheckpoint. NOTE: Spark's checkpoint directory is a global SparkContext setting — declaring this retargets it for the whole application unless the context already points under this directory"))) { b => import b._
+        checkpointDir.doc("emit=cluster: per-round RELIABLE checkpoint directory for the component loop (preemption-safe; superseded rounds' files deleted as it advances); unset = executor-block localCheckpoint. NOTE: Spark's checkpoint directory is a global SparkContext setting — declaring this retargets it for the whole application unless the context already points under this directory")), streams = true) { b => import b._
         // beyond-reference components: training-data pipeline operators as
         // first-class declarative citizens
         import graft.scale.Dedup
@@ -736,6 +733,24 @@ object Components {
         // variant when the embedding path persists for its sizing count
         var clusterSrc = base
         val out = method match {
+          // a stream keeps each normalized key's first arrival and bounds
+          // its state by the watermark horizon — a duplicate arriving
+          // after the horizon can re-emit, the right trade for continuous
+          // ingest (StreamingJobs.plan admits only this shape). The event
+          // time rides in a temp column so the schema passes through
+          // unchanged (declared schemas travel times as strings)
+          case "exact" if base.isStreaming =>
+            // withColumn silently OVERWRITES an existing column of the
+            // same name — that would be user data loss at the final drop
+            val reservedHit = base.columns.toSet.intersect(Set("__t", "__key"))
+            require(reservedHit.isEmpty, s"dedup ${c.name}: column names " +
+              s"${reservedHit.mkString(", ")} are reserved internally")
+            base.withColumn("__t", graft.util.EventTime.forComponent(
+                base.schema, b(timeColumn), opt(timeUnit), s"dedup ${c.name}"))
+              .withColumn("__key", Dedup.exactKey(col(textCol)))
+              .withWatermark("__t", b(watermark))
+              .dropDuplicatesWithinWatermark("__key")
+              .drop("__key", "__t")
           case "exact" => Dedup.exact(base, textCol, idCol, keep)
           case "minhash" =>
             val (sn, k, nb) = (b(shingleN), b(numHashes), opt(bands).getOrElse(16))
@@ -782,7 +797,7 @@ object Components {
       }
     },
     ComponentDef("hash_split", "Deterministic train/val/test split: md5-bucket of the id routes each row to exactly one named out port (stable across engines/runs; no shuffle)", Seq(
-      splits, idColumn.doc("column hashed for routing")), hashSplitPorts, runs = Both) { b => import b._
+      splits, idColumn.doc("column hashed for routing")), hashSplitPorts, streams = true) { b => import b._
       // Deterministic md5-bucket split (RelationalOps.hashSplit): each
       // row routes to exactly one split port; no shuffle, stable across
       // engines/runs — the train/val/test primitive of a training-data
@@ -797,7 +812,7 @@ object Components {
       ComponentDef("sample", "Deterministic seeded Bernoulli sample: keep a row iff md5(seed:id) bucket < rate*10000 (stable across engines/runs/partitionings; one narrow filter, no shuffle). Null ids are kept only at rate 1.0. rate_column switches to the per-row WEIGHTED face: keep probability = the row's own rate clamped into [0,1] (quality-weighted curation; NULL rates drop; raising a rate only ever ADDS rows — the bucket is rate-independent)", Seq(
         fraction, rateColumn,
         idColumn.doc("column hashed for the keep/drop decision"),
-        seed, strataColumn, strataFractions), runs = Both) { b => import b._
+        seed, strataColumn, strataFractions), streams = true) { b => import b._
         // Deterministic seeded Bernoulli sample (RelationalOps.hashSample):
         // the training-mix primitive — one narrow filter, per-stratum rates,
         // engine-replayable md5 arithmetic. rate_column switches to the
@@ -859,7 +874,7 @@ object Components {
       val normColumn = p("norm_column", Kind.str, "vec_norm", "normalize only: name of the added L2-norm column")
       val scaleColumn = p("scale_column", Kind.str, "vec_scale", "quantize only: name of the added per-row scale column")
       ComponentDef("embedding_transform", "Embedding-column transforms, both narrow maps: op=normalize appends dest = v/‖v‖ (double array; NULL for a zero vector) + norm_column = ‖v‖ — unit vectors turn cosine into a dot product; op=quantize appends dest = round(v_i/scale) as an int8 array + scale_column = max|v_i|/127 — the 4× storage/bandwidth lever for a float32 embedding column (dequantize as q_i·scale)", Seq(
-        op, vectorColumn.doc("embedding array column"), dest, normColumn, scaleColumn), runs = Both) { b => import b._
+        op, vectorColumn.doc("embedding array column"), dest, normColumn, scaleColumn), streams = true) { b => import b._
         // Embedding-column transforms (Similarity.l2NormalizeVectors /
         // quantizeVectorsInt8): op=normalize appends the unit vector +
         // norm; op=quantize appends the int8 vector + per-row scale (the
@@ -900,7 +915,7 @@ object Components {
       val chunkColumn = p("chunk_column", Kind.str, "chunk_text", "name of the added chunk text column")
       val keepText = p("keep_text", Kind.bool, false, "keep the source text column — after chunking the full document is dead weight in every downstream exchange")
       ComponentDef("chunk", "Context-window chunking: fan each document out into fixed-size character chunks of `size` with `overlap` characters shared between consecutive chunks (chunk starts 0, size-overlap, … < len; the last chunk may be shorter, none is empty). NULL/empty text emits no chunks. One narrow filter + posexplode in the scan's task — no shuffle", Seq(
-        size, overlap, textColumn, indexColumn, chunkColumn, keepText), runs = Both) { b => import b._
+        size, overlap, textColumn, indexColumn, chunkColumn, keepText), streams = true) { b => import b._
         // Context-window chunking (TextAnalysis.chunk): fan each document
         // out into fixed-size character chunks with overlap — one narrow
         // filter + posexplode in the scan's task, no shuffle. NULL/empty
@@ -917,7 +932,7 @@ object Components {
       val squeezeWs = p("squeeze_ws", Kind.bool, true, "collapse whitespace runs to one space")
       ComponentDef("text_normalize", "Text canonicalization (normalize-before-dedup): lowercase → accent-fold (1:1 translate) → punctuation strip (drop chars that are not unicode letter/digit/whitespace) → whitespace squeeze (runs → one space) → trim, each step opt-in/out, FIXED order so equal flags give equal bytes. Codegen'd narrow map, no shuffle; NULL stays NULL", Seq(
         textColumn.doc("column to normalize"), dest, lowercase, accentFold,
-        stripPunct, squeezeWs), runs = Both) { b => import b._
+        stripPunct, squeezeWs), streams = true) { b => import b._
         // Text canonicalization (TextAnalysis.normalizeText): the
         // normalize-before-dedup step — lowercase → accent-fold →
         // punctuation strip → whitespace squeeze → trim, each opt-in/out,
@@ -931,7 +946,7 @@ object Components {
       val urlColumn = p("url_column", Kind.str, "url", "URL string column")
       val prefix = p("prefix", Kind.str, "url_", "output column prefix (the four output names must not collide with input columns)")
       ComponentDef("url_features", "URL decomposition: append <prefix>scheme/host/domain/path parsed from a URL string column — the per-domain quota / blocklist / URL-dedup primitive (chain with group_cap on <prefix>domain for the CCNet-style dominance guard). domain = last two dot-labels of the host (PSL-free heuristic); userinfo/port are stripped from host; non-matching parts are NULL. Codegen'd regexp chains, no shuffle", Seq(
-        urlColumn, prefix), runs = Both) { b => import b._
+        urlColumn, prefix), streams = true) { b => import b._
         // URL decomposition (TextAnalysis.urlFeatures): scheme/host/
         // domain/path columns parsed from a URL string — the per-domain
         // quota / blocklist primitive. Codegen'd regexp chains, no shuffle.
@@ -945,7 +960,7 @@ object Components {
       fenceK.doc("fence width multiplier (>= 0) (use 1.5 for classic Tukey)"),
       by.doc("compute fences per these group columns (per-source length norms differ); empty = global fences"),
       approx.doc("iqr only: use approx_percentile (bounded sketch state) instead of exact percentile")),
-      withStatic("in", "reference", required = false), runs = Both) { b => import b._
+      withStatic("in", "reference", required = false), streams = true) { b => import b._
       // Distribution-based outlier filter (Profile.outlierFilterAgainst):
       // z-score or Tukey-fence (IQR) quality gate on a numeric signal,
       // optionally per `by` group, fences from `reference` if wired.
@@ -962,7 +977,7 @@ object Components {
       val column = p("column", Kind.str, "props", "JSON string column")
       val keepSource = p("keep_source", Kind.bool, true, "keep the raw JSON column — drop it to keep the widest column out of downstream exchanges")
       ComponentDef("json_extract", "Typed JSON-path extraction from a JSON string column (event props, crawl metadata): each field rule lands one path as a typed column — codegen'd narrow map (get_json_object + cast), missing/uncastable values become NULL", Seq(
-        fields, column, keepSource), runs = Both) { b => import b._
+        fields, column, keepSource), streams = true) { b => import b._
         // Typed JSON-path extraction (RelationalOps.jsonExtract): pull
         // fields out of a JSON string column (event props, crawl
         // metadata) as typed columns — codegen'd narrow map, lenient
@@ -973,35 +988,25 @@ object Components {
     },
     {
       val cap = req("cap", Kind.int, "max rows kept per group (>= 1)")
-      ComponentDef("group_cap", "Per-group row cap: keep at most `cap` rows per `by` group ('at most N docs per domain' — the source-dominance guard). order_by keeps the TOP rows under that order (quality cap, id tiebreak); empty order_by draws a seeded uniform md5(seed:id) subset. One hash exchange + in-partition sort (WindowOp's shape)", Seq(
-        cap, idColumn.doc("deterministic tiebreak / hash key"),
-        by.doc("quota-group columns (source, domain, language); empty needs allow_global"),
+      ComponentDef("group_cap", "Per-group row cap: keep at most `cap` rows per `by` group ('at most N docs per domain' — the source-dominance guard); the cap is exact in both folds. In batch, order_by keeps the TOP rows under that order (quality cap, id tiebreak) and an empty order_by draws a seeded uniform md5(seed:id) subset: one hash exchange + in-partition sort (WindowOp's shape). In a streaming job the FIRST `cap` rows per group to arrive are kept over the stream's lifetime (a stream has no replayable order, so order_by, seed and allow_global stay at their defaults and `by` is required), with one Long counter of state per distinct group (flatMapGroupsWithState, no watermark). STATE GROWS WITH GROUP CARDINALITY AND NEVER EXPIRES: a lifetime quota cannot time out (an expired counter would re-admit rows past the cap), so state is one counter per distinct group ever seen, forever — key on bounded-cardinality columns (source, language, shard), never a per-document id", Seq(
+        cap, idColumn.doc("deterministic tiebreak / hash key (not used in a stream)"),
+        by.doc("quota-group columns (source, domain, language); empty needs allow_global; required in a stream, where state holds one counter per distinct group forever — use bounded-cardinality keys"),
         orderBy,
         seed.doc("hash salt for the uniform draw — independent of sample/shuffle/hash_split hashing"),
-        allowGlobal.doc("permit the empty-`by` single-partition rank"))) { b => import b._
-        // Per-group row cap (RelationalOps.groupCap): at most `cap` rows
-        // per `by` group — the domain/source-quota curation primitive.
-        // order_by keeps the top rows under an explicit order (quality
-        // cap); empty order_by draws a seeded uniform subset. A
-        // defaulted cap would silently discard data, so it is required.
-        (Map("out" -> RelationalOps.groupCap(one(), b(idColumn), b(cap), b(by),
-          b(orderBy), b(seed), b(allowGlobal))), None)
-      }
-    },
-    {
-      val cap = req("cap", Kind.int, "max rows emitted per group over the stream's lifetime (>= 1)")
-      ComponentDef("streaming_group_cap", "Streaming per-group quota (flatMapGroupsWithState): keep the FIRST `cap` rows per `by` group over the stream's lifetime — one Long of state per distinct group, no watermark. The cap is exact across microbatches; the kept subset follows arrival order (streams have no replayable order — use batch group_cap for order-exact curation). STATE GROWS WITH GROUP CARDINALITY AND NEVER EXPIRES: a lifetime quota cannot time out (an expired counter would re-admit rows past the cap), so state is one counter per distinct group ever seen, forever — key on bounded-cardinality columns (source, language, shard), never a per-document id", Seq(
-        cap, by.doc("quota-group columns (bounded-cardinality keys: source, language, shard — state holds one counter per distinct group forever)")), runs = StreamingOnly) { b => import b._
-        // Custom-state per-group quota (Streaming.streamingGroupCap —
-        // the flatMapGroupsWithState primitive reachable from JSON):
-        // keeps the FIRST cap rows per `by` group over the stream's
-        // LIFETIME; one Long of state per distinct group, no watermark
-        // (a quota is not time-scoped). Unlike batch group_cap the kept
-        // subset is arrival-order dependent (streams carry no
-        // engine-replayable order) — the CAP itself is exact across
-        // microbatches, which is the quota's contract.
-        (Map("out" -> graft.streaming.Streaming.streamingGroupCap(
-          one(), b(by), b(cap))), None)
+        allowGlobal.doc("permit the empty-`by` single-partition rank")), streams = true) { b => import b._
+        // Per-group row cap: at most `cap` rows per `by` group — the
+        // domain/source-quota curation primitive. Batch
+        // (RelationalOps.groupCap): order_by keeps the top rows under an
+        // explicit order (quality cap); empty order_by draws a seeded
+        // uniform subset. Stream (RelationalOps.streamingGroupCap): the
+        // first arrivals, a lifetime counter per group. A defaulted cap
+        // would silently discard data, so it is required.
+        val df = one()
+        val out =
+          if (df.isStreaming) RelationalOps.streamingGroupCap(df, b(by), b(cap))
+          else RelationalOps.groupCap(df, b(idColumn), b(cap), b(by),
+            b(orderBy), b(seed), b(allowGlobal))
+        (Map("out" -> out), None)
       }
     },
     {
@@ -1048,7 +1053,7 @@ object Components {
       ComponentDef("gopher_filter", "Gopher QUALITY rules (Rae et al. 2021 A1.1) as one stateless narrow projection — the complement of text_repetition's Gopher REPETITION signals: word-count bounds, mean-word-length bounds, symbol-to-word ratio (# and ellipses), bullet-start and ellipsis-end line fractions, alphabetic-word fraction, and >= min_stop_hits distinct English stopwords (the, be, to, of, and, that, have, with). Every rule is a boolean over integer counts and IEEE-exact divisions (oracle-replayable; ratios never leave the engine). emit=docs keeps passing rows; emit=flagged appends the per-rule booleans + gopher_pass for threshold tuning. NULL text fails every rule. Stateless, so it also runs incrementally over streams", Seq(
         textColumn, emit, minWords, maxWords, minMeanWordLen, maxMeanWordLen,
         maxSymbolRatio, maxBulletRatio, maxEllipsisRatio, minAlphaRatio,
-        minStopHits), runs = Both) { b => import b._
+        minStopHits), streams = true) { b => import b._
         // Gopher quality rules (TextAnalysis.gopherRules): one narrow
         // boolean projection per document — emit=docs keeps passing rows
         // (the training-pipeline shape), emit=flagged appends the
@@ -1076,7 +1081,7 @@ object Components {
         maxHotLines.doc("strategy=set driver-collect cap — overflow fails loudly toward strategy=join"),
         broadcast,
         referenceTextColumn),
-        withStatic("in", "reference", required = false), runs = Both) { b => import b._
+        withStatic("in", "reference", required = false), streams = true) { b => import b._
         // Corpus-level duplicate-line removal (Dedup.lineDedup): census
         // non-blank lines across documents, lines present in more than
         // max_docs DISTINCT documents are boilerplate and get stripped
@@ -1109,13 +1114,13 @@ object Components {
       againstStrategy.doc("'join' or 'bloom' — identical results, spec-pinned"),
       textColumn.doc("document text column on the in port"),
       referenceTextColumn),
-      withStatic("in", "reference"), runs = Both) { b => import b._
+      withStatic("in", "reference"), streams = true) { b => import b._
       // Incremental exact dedup (Dedup.exactAgainst): keep only `in`
       // rows whose normalized key is absent from the `reference` port —
       // the ingest-time "drop documents we already have" primitive.
       // One anti-join, no window, no state: a static reference
       // anti-joins a stream statelessly (no watermark — the reference
-      // is closed, unlike streaming_dedup's in-stream TTL).
+      // is closed, unlike a streaming dedup's watermark TTL).
       // strategy=bloom probes a compact reference-key bloom as a narrow
       // map and sends only candidates to the exact join — the
       // corpus-sized-reference path (Dedup.exactAgainstBloom).
@@ -1192,7 +1197,7 @@ object Components {
       val repetitionN = p("repetition_n", Kind.int, 2, "word n-gram width for the repetition signals")
       val entropy = p("entropy", Kind.bool, false, "append char_entropy — Shannon entropy of the text's UTF-8 bytes in bits/byte (compression-proxy quality signal: prose ~4.0-4.5; base64/padding/binary score far off)")
       ComponentDef("text_analysis", "Token counts, quality ratios, language id", Seq(
-        textColumn, repetition, repetitionN, entropy), runs = Both) { b => import b._
+        textColumn, repetition, repetitionN, entropy), streams = true) { b => import b._
         val textCol = b(textColumn)
         val base = graft.scale.TextAnalysis.analyze(one(), textCol)
         // repetition=true appends the Gopher repetition signals
@@ -1288,7 +1293,7 @@ object Components {
       }
     },
     ComponentDef("pii_redact", "Mask emails/phones/IPv4 in a text column (<EMAIL>/<PHONE>/<IP>) and add n_emails/n_phones/n_ips counts", Seq(
-      textColumn.doc("column to redact in place")), runs = Both) { b => import b._
+      textColumn.doc("column to redact in place")), streams = true) { b => import b._
       // PII redaction (scale/TextAnalysis.redactPiiWithCounts): masks
       // emails/phones/IPv4 in the text column and adds per-category
       // counts for downstream filtering. Codegen'd regex maps, no
@@ -1297,7 +1302,7 @@ object Components {
         b(textColumn))), None)
     },
     {
-      val strategy = p("strategy", Kind.str, "broadcast", "broadcast (benchmark grams probed via a codegen'd set, corpus stays a narrow map) | join (ids-only posting join for huge benchmarks) | bloom (sketch prefilter: only candidate docs pay the exact join — the middle path; results exact under all three)")
+      val strategy = choice("strategy", Seq("broadcast", "join", "bloom"), "broadcast (benchmark grams probed via a codegen'd set, corpus stays a narrow map) | join (ids-only posting join for huge benchmarks) | bloom (sketch prefilter: only candidate docs pay the exact join — the middle path; results exact under all three)")
       val emit = choice("emit", Seq("flagged", "clean", "pairs"), "flagged (appends n_hits/contaminated) | clean (keeps only uncontaminated rows) | pairs (audit: one (corpus_id, bench_id, n_shared) row per contaminated pair; always the join shape)")
       val benchIdColumn = p("bench_id_column", Kind.str, "pairs: benchmark id column, default = id_column")
       val maxDf = p("max_df", Kind.int, graft.scale.Decontaminate.DefaultPairsMaxDf, "pairs: corpus-side document-frequency cap on the posting join (stop-gram guard) — capped grams leave the per-pair n_shared counts (docs contaminated only through capped grams keep a row with null bench_id, the loud signal the cap fired); the doc-level contamination set itself is never capped")
@@ -1305,7 +1310,7 @@ object Components {
         textColumn.doc("text column on both ports"),
         docIdColumn.doc("corpus id column (join strategy)"),
         ngramN, minOverlap, strategy, emit, benchIdColumn, maxDf),
-        withStatic("corpus", "benchmark"), runs = Both) { b => import b._
+        withStatic("corpus", "benchmark"), streams = true) { b => import b._
         // Benchmark decontamination (scale/Decontaminate.scala): flag or
         // drop corpus docs sharing word n-grams with the `benchmark` port's
         // eval set. emit=flagged appends n_hits/contaminated for auditing;
@@ -1439,7 +1444,7 @@ object Components {
       on.doc("left-side value/time column the interval must contain (inclusive bounds)"),
       start, end,
       by.doc("optional equality keys — REQUIRED at scale unless the interval side is dimension-sized (without keys the right side broadcasts)"),
-      suffix, joinType), withStatic("left", "right"), runs = Both) { b => import b._
+      suffix, joinType), withStatic("left", "right"), streams = true) { b => import b._
       // Range/interval join (ops/RangeJoin.scala): left rows matched to
       // right [start,end] intervals, one-to-many; with `by` keys an
       // equi-join carries the range condition (no cross product), without
@@ -1454,7 +1459,7 @@ object Components {
         on, keysBy, suffix,
         direction.doc("backward: latest right at or before | forward: earliest at or after | nearest: closer of the two, ties to backward"),
         tolerance.doc("max match distance as a SQL literal (INTERVAL '1' HOUR for timestamps, a number for numeric times); farther matches become null"),
-        strategy), withStatic("left", "right"), runs = Both) { b => import b._
+        strategy), withStatic("left", "right"), streams = true) { b => import b._
         // Backward as-of join (ops/AsofJoin.scala): ports `left`/`right`,
         // `on` = event-time column on both sides, `by` = equality keys.
         val keys = b(keysBy)
@@ -1477,7 +1482,7 @@ object Components {
       val varColumn = p("var_column", Kind.str, "variable", "name of the variable column")
       val valueColumn = p("value_column", Kind.str, "value", "name of the value column")
       ComponentDef("unpivot", "Unpivot/melt: value columns become (variable, value) rows", Seq(
-        valueColumns, idColumns, varColumn, valueColumn), runs = Both) { b => import b._
+        valueColumns, idColumns, varColumn, valueColumn), streams = true) { b => import b._
         // Unpivot/melt (RelationalOps.unpivot): value columns become
         // (variable, value) rows next to the id columns.
         val values = b(valueColumns)
@@ -1513,74 +1518,6 @@ object Components {
             (Map("out" -> graft.scale.Profile.profile(one(), b(columns),
               approx = b(approx))), None)
         }
-      }
-    },
-    {
-      val watermark = req("watermark", Kind.str, "late-data horizon, e.g. '10 minutes'")
-      ComponentDef("streaming_aggregation", "Watermark-bounded windowed aggregation (streaming jobs only)", Seq(
-        timeColumn,
-        timeUnit.doc("epoch scale when time_column is INT64: seconds | millis | micros | nanos (REQUIRED for integer time columns — the scale is not inferable)"),
-        watermark, windowP, slide, sessionGap, groupBy, aggregations), runs = StreamingOnly) { b => import b._
-        // Watermark-bounded windowed aggregation, the streaming twin of the
-        // batch `aggregation` comp_type: `time_column` is the event-time
-        // column (normalized via EventTime when the declared schema carries
-        // it as a string — the engine's schema vocabulary travels times as
-        // strings, SURVEY §1.2), `watermark` bounds state AND late data,
-        // `window` (+ optional `slide`) tumbles/slides, and group_by/
-        // aggregations reuse the batch vocabulary (AggregateOp.aggColumn).
-        // Window bounds are emitted as STRING columns window_start/
-        // window_end so the out-port schema stays declarable. In append
-        // mode (file sinks) a window emits once the watermark passes its
-        // end — the deterministic drain contract for runOnce.
-        val df = one()
-        val timeCol = b(timeColumn)
-        val aggs = b(aggregations)
-        require(aggs.nonEmpty, s"streaming_aggregation ${c.name}: needs aggregations")
-        // same event-time normalization as the batch aggregation's
-        // time-window path, so a config means one thing in both modes
-        val et = df.withColumn(timeCol, graft.util.EventTime.forComponent(
-          df.schema, timeCol, opt(timeUnit), s"streaming_aggregation ${c.name}"))
-        // window-rule selection + the grouped tail are shared with the
-        // batch aggregation component (AggregateOp.windowColumn /
-        // .windowed); the stream's only addition is the watermark —
-        // with session_gap a session closes when the watermark passes
-        // its end
-        val winCol = AggregateOp.windowColumn(timeCol, opt(windowP),
-          opt(slide), opt(sessionGap), s"streaming_aggregation ${c.name}")
-        (Map("out" -> AggregateOp.windowed(
-          et.withWatermark(timeCol, b(watermark)), timeCol, winCol, b(groupBy), aggs)), None)
-      }
-    },
-    {
-      val watermark = p("watermark", Kind.str, "1 hour", "dedup state horizon")
-      val exactOnly = choice("method", Seq("exact"), "only 'exact' is streamable (near-dup families are batch-only)")
-      ComponentDef("streaming_dedup", "Watermark-bounded exact dedup (streaming jobs only)", Seq(
-        timeColumn, timeUnit, watermark, textColumn, exactOnly), runs = StreamingOnly) { b => import b._
-        // Watermark-bounded exact dedup, the streaming twin of the batch
-        // `dedup` comp_type: dropDuplicatesWithinWatermark on
-        // the normalized text key bounds state by the watermark horizon —
-        // a duplicate arriving after the horizon can re-emit, the right
-        // trade for continuous ingest. Only method=exact is streamable
-        // (the param's one allowed value): the near-dup families
-        // (minhash/simhash/ngram/embedding) need a corpus-wide self-join
-        // and stay batch-only. The event-time column rides in a temp
-        // column so the input schema passes through unchanged (declared
-        // schemas travel times as strings).
-        val df = one()
-        val timeCol = b(timeColumn)
-        // the temp columns are added with withColumn, which silently
-        // OVERWRITES an existing column of the same name — that would
-        // be user data loss at the final drop
-        val reservedHit = df.columns.toSet.intersect(Set("__t", "__key"))
-        require(reservedHit.isEmpty, s"streaming_dedup ${c.name}: column names " +
-          s"${reservedHit.mkString(", ")} are reserved internally")
-        val et = df.withColumn("__t", graft.util.EventTime.forComponent(
-          df.schema, timeCol, opt(timeUnit), s"streaming_dedup ${c.name}"))
-        (Map("out" -> et
-          .withColumn("__key", graft.scale.Dedup.exactKey(col(b(textColumn))))
-          .withWatermark("__t", b(watermark))
-          .dropDuplicatesWithinWatermark("__key")
-          .drop("__key", "__t")), None)
       }
     }
   ) ++ {

@@ -89,24 +89,18 @@ object JobGraph {
 
   /** The registry entry a component runs under in this fold — or the
     * rejection: an unknown comp_type (a typo like 'text_normalise' must
-    * not reach execute time, after every retry and backoff), a
-    * streaming-only twin in a batch job, or a batch-only type in a
-    * streaming job. */
+    * not reach execute time, after every retry and backoff), or a
+    * batch-only type in a streaming job. */
   private def resolve(spec: JobSpec, c: ComponentSpec, streaming: Boolean): ComponentDef =
     Components.byName.get(c.compType) match {
       case None => throw new IllegalArgumentException(
         s"component ${c.name}: unknown comp_type '${c.compType}' " +
           "(GET /schemas lists the registry)")
-      case Some(d) if streaming && !d.runs.streaming =>
-        val supported = Components.all.filter(_.runs.streaming).map(_.name).sorted
+      case Some(d) if streaming && !d.streams =>
+        val supported = Components.all.filter(_.streams).map(_.name).sorted
         throw new IllegalArgumentException(
           s"streaming job ${spec.name}: comp_type '${c.compType}' (${c.name}) is not " +
-            s"streamable — supported: ${supported.mkString(", ")}; " +
-            "aggregation/dedup need watermark semantics (see streaming/Streaming.scala)")
-      case Some(d) if !streaming && !d.runs.batch => throw new IllegalArgumentException(
-        s"component ${c.name}: comp_type '${c.compType}' runs only in streaming " +
-          "jobs (graft.streaming.StreamingJobs); its batch counterpart is " +
-          s"'${c.compType.stripPrefix("streaming_")}'")
+            s"streamable — supported: ${supported.mkString(", ")}")
       case Some(d) => d
     }
 

@@ -71,8 +71,8 @@ object AggregateOp {
     }
   }
 
-  /** Window-column selection shared by the batch `aggregation` component
-    * and `streaming_aggregation` (one rule set, two execution modes):
+  /** Window-column selection of the `aggregation` component's time-window
+    * face (one rule set in both folds):
     * `session_gap` selects data-driven session windows and is exclusive
     * with the fixed `window`/`slide` pair; `slide` requires `window`. */
   def windowColumn(timeCol: String, winOpt: Option[String],
@@ -93,8 +93,8 @@ object AggregateOp {
     }
 
   /** Time-windowed grouped aggregation over an event-timed frame — the
-    * shared tail of batch windowed aggregation and streaming_aggregation
-    * (the stream adds its watermark BEFORE calling this). Window bounds
+    * tail of `aggregation`'s time-window face in both folds (the
+    * component adds the watermark BEFORE calling this). Window bounds
     * come back as STRINGS: declared port schemas travel times as strings
     * (SURVEY §1.2 — the reference type system has no timestamp). */
   def windowed(df: DataFrame, timeCol: String, winCol: Column,

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Split / merge and the generic select-sort-skip-limit surface.
@@ -475,6 +476,57 @@ object RelationalOps {
     df.withColumn(rnCol, row_number().over(w))
       .filter(col(rnCol) <= cap)
       .drop(rnCol)
+  }
+
+  /**
+   * groupCap on a stream (the `group_cap` comp_type in a streaming job,
+   * flatMapGroupsWithState over an arbitrary Row schema): keep the FIRST
+   * `cap` rows per `by` group over the stream's LIFETIME.
+   *
+   * A stream has no engine-replayable order, so the kept subset follows
+   * arrival order. What IS exact is the cap itself (never more than
+   * `cap` rows per group emitted, across ALL microbatches) and that every
+   * emitted row came from the input. StreamingJobsSpec pins both across a
+   * multi-batch drain.
+   *
+   * State: ONE Long counter per distinct group, GroupStateTimeout.
+   * NoTimeout — and that is the contract, not an omission: a LIFETIME
+   * quota cannot expire state, because an evicted counter would re-admit
+   * rows past the cap the moment the group reappears. State therefore
+   * grows with the number of distinct groups ever seen and never
+   * shrinks; it is bounded only by keying on bounded-cardinality
+   * columns (source, language, shard — never a per-document id), the
+   * same envelope as any per-group streaming aggregate. A time-scoped
+   * quota ("N per source per day") is a different operator: window the
+   * key by event time and accept watermark-TTL eviction. Null group
+   * values key as a reserved token, so a null source is ONE group with
+   * its own quota, mirroring groupCap's null-key window partition.
+   */
+  def streamingGroupCap(df: DataFrame, by: Seq[String], cap: Int): DataFrame = {
+    require(cap >= 1, s"group_cap: cap must be >= 1, got $cap")
+    require(by.nonEmpty, "group_cap: a stream needs non-empty `by` group columns")
+    val missing = by.filterNot(df.columns.contains)
+    require(missing.isEmpty,
+      s"group_cap: missing group column(s): ${missing.mkString(", ")}")
+    val rowEnc: Encoder[Row] = Encoders.row(df.schema)
+    // collision-free composite key: length-prefixed elements (a plain
+    // separator join would conflate ("a b","c") with ("a","b c"));
+    // null keys get a reserved marker no real length-prefix produces
+    df.groupByKey { r: Row =>
+        by.map { c =>
+          val v = r.getAs[Any](c)
+          if (v == null) "n:" else { val s = v.toString; s"${s.length}:$s" }
+        }.mkString("|")
+      }(Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+        (_: String, batch: Iterator[Row], state: GroupState[Long]) =>
+          val already = state.getOption.getOrElse(0L)
+          val room = math.max(cap - already, 0L).toInt
+          val kept = batch.take(room).toVector
+          if (kept.nonEmpty) state.update(already + kept.size)
+          kept.iterator
+      }(Encoders.scalaLong, rowEnc)
+      .toDF()
   }
 
   /**

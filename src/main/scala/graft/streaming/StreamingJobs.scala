@@ -24,14 +24,16 @@ import graft.schema.FieldDef
  * batch/streaming parity per config, which is the reference's own
  * cross-strategy contract.
  *
- * Which comp_types stream is the registry's `runs` field: `Both` for the
- * stateless transforms, the stream-static comp_types and the
- * csv/json/parquet sources and sinks, `StreamingOnly` for the stateful
- * `streaming_*` comp_types. Batch `aggregation`/`dedup` stay batch-only
- * (their JSON surfaces declare no watermark, so their state would be
- * unbounded); `streaming_aggregation` and `streaming_dedup` are the
- * watermark-bounded twins. Validation (JobGraph, in streaming mode)
- * rejects anything else before any frame is built.
+ * Which comp_types stream is the registry's `streams` flag: the
+ * stateless transforms, the stream-static comp_types, the stateful
+ * `aggregation` (event-time windows under a watermark), `dedup`
+ * (method=exact, dropDuplicatesWithinWatermark) and `group_cap` (a
+ * lifetime counter per group), and the csv/json/parquet sources and
+ * sinks. Every comp_type runs in batch jobs. Validation (JobGraph, in
+ * streaming mode) rejects any other comp_type before any frame is
+ * built; `plan` then rejects a streaming comp_type's configuration that
+ * would aggregate over the stream or keep unbounded state
+ * (`streamable`).
  *
  * Stream-static comp_types (dedup_against, decontaminate, range_join,
  * asof_join, line_dedup, outlier_filter) take their closed side — a
@@ -71,7 +73,7 @@ object StreamingJobs {
 
   /** The params each readStream source / writeStream sink below applies,
     * per comp_type; its other declared params must stay at their defaults. */
-  private val appliedParams: Map[String, Set[String]] = Map(
+  private[graft] val appliedParams: Map[String, Set[String]] = Map(
     "read_csv" -> Set("filepath", "separator"),
     "read_json" -> Set("filepath", "format"),
     "read_parquet" -> Set("filepath"),
@@ -79,14 +81,42 @@ object StreamingJobs {
     "write_json" -> Set("filepath", "format"),
     "write_parquet" -> Set("filepath"))
 
-  /** The param values a stream-static comp_type's streaming face
-    * accepts: its stateless shape. Any other value would explode,
-    * aggregate or window over the unbounded stream. A comp_type absent
-    * here streams in every configuration. */
-  private val streamable: Map[String, Seq[(String, Set[String])]] = Map(
-    "asof_join" -> Seq("strategy" -> Set("broadcast")),
-    "decontaminate" -> Seq("strategy" -> Set("broadcast"), "emit" -> Set("flagged", "clean")),
-    "line_dedup" -> Seq("strategy" -> Set("set"), "emit" -> Set("docs")))
+  /** What a comp_type's streaming face needs of one param: one of
+    * `values`, set (non-empty when a list), or left at its default. */
+  private[graft] sealed trait Need
+  private[graft] final case class OneOf(values: Set[String]) extends Need
+  private[graft] case object Given extends Need
+  private[graft] case object Default extends Need
+
+  /** A comp_type whose streaming face holds only for some configurations:
+    * why, and what each param must be. Any other configuration would
+    * aggregate over the unbounded stream or keep unbounded state. A
+    * streaming comp_type absent here streams in every configuration. */
+  private[graft] final case class Streamable(why: String, needs: (String, Need)*)
+
+  private[graft] val streamable: Map[String, Streamable] = {
+    val stateless = "it would aggregate over the stream"
+    Map(
+      "asof_join" -> Streamable(stateless, "strategy" -> OneOf(Set("broadcast"))),
+      "decontaminate" -> Streamable(stateless, "strategy" -> OneOf(Set("broadcast")),
+        "emit" -> OneOf(Set("flagged", "clean"))),
+      "line_dedup" -> Streamable(stateless, "strategy" -> OneOf(Set("set")),
+        "emit" -> OneOf(Set("docs"))),
+      "schema_mapping" -> Streamable("a stream-stream join needs watermark " +
+        "bounds; map mode streams", "join_plan" -> Default),
+      "aggregation" -> Streamable("a stream aggregates per event-time window, " +
+        "and the watermark bounds the window state",
+        "time_column" -> Given, "watermark" -> Given),
+      "dedup" -> Streamable("a stream drops repeats of the exact key within the " +
+        "watermark; near-dup methods and keep_by need the whole corpus, so run " +
+        "them in a batch job",
+        "method" -> OneOf(Set("exact")), "keep_by" -> Default,
+        "time_column" -> Given, "watermark" -> Given),
+      "group_cap" -> Streamable("a stream keeps the first `cap` rows to arrive " +
+        "per `by` group, one counter per group",
+        "by" -> Given, "order_by" -> Default, "seed" -> Default,
+        "allow_global" -> Default))
+  }
 
   /** Fold the spec into per-sink streaming plans (no query started yet). */
   def plan(spark: SparkSession, spec0: JobSpec): Seq[SinkPlan] = {
@@ -109,9 +139,6 @@ object StreamingJobs {
 
     for (c <- spec.components) {
       val what = s"streaming job ${spec.name}: ${c.compType} ${c.name}"
-      require(c.compType != "schema_mapping" || Components.joinPlan.read(c).isEmpty,
-        s"streaming job ${spec.name}: schema_mapping join mode (${c.name}) is not " +
-          "streamable (stream-stream joins need watermark bounds); map mode is")
       // a source/sink param the readStream/writeStream mapping below does
       // not apply would be silently ignored: only its default is accepted
       for (applied <- appliedParams.get(c.compType) if !static(c.name);
@@ -134,11 +161,20 @@ object StreamingJobs {
           s"$what: static port '${p.name}' receives a stream from $f; feed it " +
             "straight from a source whose every route ends on a static port")
       }
-      for (accepted <- streamable.get(c.compType); (key, ok) <- accepted) {
-        val v = Components.byName(c.compType).params.find(_.name == key).get(c).toString
-        require(ok(v),
-          s"$what: $key=$v does not stream (it would aggregate over the " +
-            s"stream); set $key: ${ok.toSeq.sorted.mkString(" or ")}")
+      for (Streamable(why, needs @ _*) <- streamable.get(c.compType); (key, need) <- needs) {
+        val p = Components.byName(c.compType).params.find(_.name == key).get
+        def reject(problem: String, fix: String) =
+          throw new IllegalArgumentException(s"$what: $problem does not stream ($why); $fix")
+        need match {
+          case OneOf(ok) =>
+            val v = p(c).toString
+            if (!ok(v)) reject(s"$key=$v", s"set $key: ${ok.toSeq.sorted.mkString(" or ")}")
+          case Given =>
+            if (p.read(c).forall { case xs: Seq[_] => xs.isEmpty; case _ => false })
+              reject(s"an unset $key", s"set $key")
+          case Default =>
+            if (p.overridden(c)) reject(s"a set $key", s"drop $key")
+        }
       }
     }
 

@@ -6,13 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * the form/full/hidden views, the port block, and the job schema. */
 class ComponentSchemasSpec extends AnyFunSuite {
 
-  test("streaming_group_cap discovery doc declares the never-expiring state contract") {
-    // the state-growth contract IS the semantics (a lifetime quota
-    // cannot evict counters without re-admitting rows past the cap), so
-    // the discovery surface must say so loudly — pin the phrasing
-    val full = ComponentSchemas.fullSchemaJson("streaming_group_cap").get
+  test("group_cap doc declares the never-expiring stream state") {
+    // the state-growth contract IS the streaming semantics (a lifetime
+    // quota cannot evict counters without re-admitting rows past the
+    // cap), so the discovery surface must say so loudly — pin the phrasing
+    val full = ComponentSchemas.fullSchemaJson("group_cap").get
     assert(full.contains("NEVER EXPIRES"),
-      "streaming_group_cap's schema description must advertise that " +
+      "group_cap's schema description must advertise that streaming " +
         "state grows with group cardinality and never expires")
     assert(full.contains("bounded-cardinality"),
       "…and steer users to bounded-cardinality group keys")
@@ -56,7 +56,7 @@ class ComponentSchemasSpec extends AnyFunSuite {
            if p.contains("static" -> JBool(true)); ("name", JString(n)) <- p) yield n
     }
     for ((t, port) <- static) {
-      assert(graft.graph.Components.byName(t).runs === graft.graph.Runs.Both, t)
+      assert(graft.graph.Components.byName(t).streams, t)
       assert(staticPorts(t) === Seq(port), t)
     }
     // the static side of line_dedup/outlier_filter is optional in a batch job

@@ -663,15 +663,22 @@ class JobComponentsSpec extends SparkTestBase {
       e2.getMessage.contains("query_column"))
   }
 
-  test("aggregation with time_column windows in batch (session + tumbling)") {
+  /** Event rows for the windowed-aggregation cases — user a: events at
+    * 00:00, 00:05 (one 10-min session) and 00:35 (second session); user
+    * b: one event — the streaming parity fixture's shape, minus the
+    * watermark sentinel (batch needs none). */
+  private def winAggInput(name: String): String = {
     import spark.implicits._
-    val in = tmp("winagg_in")
-    // user a: events at 00:00, 00:05 (one 10-min session) and 00:35
-    // (second session); user b: one event — same shape as the streaming
-    // parity fixture, minus the watermark sentinel (batch needs none)
+    val in = tmp(name)
     Seq(("2024-01-01 00:00:00", "a", 1L), ("2024-01-01 00:05:00", "a", 2L),
       ("2024-01-01 00:35:00", "a", 4L), ("2024-01-01 00:07:00", "b", 8L))
       .toDF("ts", "k", "v").write.mode("overwrite").parquet(in)
+    in
+  }
+
+  /** read_parquet(in) → aggregation `agg` (time_column ts, sum of v per
+    * k) → write_parquet(out). */
+  private def winAggJob(in: String, out: String, windowParams: String): JobGraph.BuiltJob = {
     val inSchema =
       """{ "fields": [
         |  { "name": "ts", "data_type": "string" },
@@ -683,22 +690,26 @@ class JobComponentsSpec extends SparkTestBase {
         |  { "name": "window_end", "data_type": "string" },
         |  { "name": "k", "data_type": "string" },
         |  { "name": "sv", "data_type": "integer" } ] }""".stripMargin
+    JobGraph.build(spark, JobConfig.parse(
+      s"""{ "name": "t", "components": [
+         |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
+         |    "routes": { "out": [ { "to": "agg", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $inSchema } },
+         |  { "name": "agg", "comp_type": "aggregation",
+         |    "time_column": "ts", $windowParams
+         |    "group_by": ["k"],
+         |    "aggregations": [ { "src": "v", "op": "sum", "dest": "sv" } ],
+         |    "in_port_schemas": { "in": $inSchema },
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $outSchema } },
+         |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
+         |    "in_port_schemas": { "in": $outSchema } } ] }""".stripMargin))
+  }
+
+  test("aggregation with time_column windows in batch (session + tumbling)") {
+    val in = winAggInput("winagg_in")
     def run(out: String, windowParams: String): Seq[(String, String, String, Long)] = {
-      val json =
-        s"""{ "name": "t", "components": [
-           |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
-           |    "routes": { "out": [ { "to": "agg", "in_port": "in" } ] },
-           |    "out_port_schemas": { "out": $inSchema } },
-           |  { "name": "agg", "comp_type": "aggregation",
-           |    "time_column": "ts", $windowParams
-           |    "group_by": ["k"],
-           |    "aggregations": [ { "src": "v", "op": "sum", "dest": "sv" } ],
-           |    "in_port_schemas": { "in": $inSchema },
-           |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
-           |    "out_port_schemas": { "out": $outSchema } },
-           |  { "name": "w", "comp_type": "write_parquet", "filepath": "$out",
-           |    "in_port_schemas": { "in": $outSchema } } ] }""".stripMargin
-      val built = JobGraph.build(spark, JobConfig.parse(json))
+      val built = winAggJob(in, out, windowParams)
       built.runSinks(); built.close()
       spark.read.parquet(out).orderBy(col("k"), col("window_start")).collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
@@ -713,6 +724,26 @@ class JobComponentsSpec extends SparkTestBase {
       ("2024-01-01 00:00:00", "2024-01-01 00:30:00", "a", 3L),
       ("2024-01-01 00:30:00", "2024-01-01 01:00:00", "a", 4L),
       ("2024-01-01 00:00:00", "2024-01-01 00:30:00", "b", 8L)))
+  }
+
+  test("aggregation watermark in batch: same optimized plan and rows as without it") {
+    val in = winAggInput("wmagg_in")
+    // the watermark bounds a stream's state; a batch frame has no late
+    // data, and Spark's analyzer drops the EventTimeWatermark node
+    def face(watermark: String): (String, Seq[String]) = {
+      val built = winAggJob(in, tmp("wmagg_out"), s""""window": "30 minutes", $watermark""")
+      try {
+        val df = built.frames(("agg", "out"))
+        (df.queryExecution.optimizedPlan.toString.replaceAll("#\\d+", ""),
+          df.collect().map(_.toString).sorted.toSeq)
+      } finally built.close()
+    }
+    val (plainPlan, plainRows) = face("")
+    val (markedPlan, markedRows) = face(""""watermark": "10 minutes",""")
+    assert(markedPlan === plainPlan)
+    assert(!markedPlan.contains("EventTimeWatermark"), markedPlan)
+    assert(markedRows === plainRows)
+    assert(plainRows.size === 3)
   }
 
   test("aggregation pivot from config keeps numeric pivot_values typed") {

@@ -500,25 +500,6 @@ class JobGraphSpec extends SparkTestBase {
       s"case variant must hit the staging guard, got: ${e.getMessage}")
   }
 
-  test("validation: a batch job naming a streaming-only comp_type is rejected at validate") {
-    // the streaming twins are documented in the registry, so a batch job
-    // naming one used to pass validation and die at execute time with
-    // 'unknown comp_type', after every retry and backoff
-    val e = intercept[IllegalArgumentException] {
-      JobGraph.validate(specOf(
-        s"""{ "name": "r", "comp_type": "read_csv", "filepath": "x",
-           |  "routes": { "out": [ { "to": "agg", "in_port": "in" } ] },
-           |  "out_port_schemas": { "out": $abSchema } }""".stripMargin,
-        s"""{ "name": "agg", "comp_type": "streaming_aggregation",
-           |  "time_column": "a", "watermark": "1 minute", "window": "1 hour",
-           |  "aggregations": [ { "src": "b", "op": "count", "dest": "n" } ],
-           |  "in_port_schemas": { "in": $abSchema } }""".stripMargin))
-    }
-    assert(e.getMessage.contains("'streaming_aggregation' runs only in streaming jobs"))
-    assert(e.getMessage.contains("StreamingJobs"))
-    assert(e.getMessage.contains("'aggregation'"))
-  }
-
   test("validation: read_json format is ndjson | array, not a free string") {
     def job(format: String) = specOf(
       s"""{ "name": "r", "comp_type": "read_json", "filepath": "x.ndjson",
@@ -530,6 +511,38 @@ class JobGraphSpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException](JobGraph.validate(job("xml")))
     assert(e.getMessage === "component r: param 'format' must be one of ndjson | array, got format=xml")
     JobGraph.validate(job("array"))
+  }
+
+  /** One transform `x` of `compType` between a csv source on each of
+    * `ports` and a csv sink, all on abSchema. */
+  private def oneTransform(compType: String, params: String, ports: String*) = {
+    val sources = ports.map(port =>
+      s"""{ "name": "r_$port", "comp_type": "read_csv", "filepath": "x",
+         |  "routes": { "out": [ { "to": "x", "in_port": "$port" } ] },
+         |  "out_port_schemas": { "out": $abSchema } }""".stripMargin)
+    specOf(sources ++ Seq(
+      s"""{ "name": "x", "comp_type": "$compType", $params
+         |  "in_port_schemas": { ${ports.map(p => s""""$p": $abSchema""").mkString(", ")} },
+         |  "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |  "out_port_schemas": { "out": $abSchema } }""".stripMargin,
+      s"""{ "name": "w", "comp_type": "write_csv", "filepath": "y",
+         |  "in_port_schemas": { "in": $abSchema } }""".stripMargin): _*)
+  }
+
+  test("validation: enum params are choices, not free strings") {
+    val aggs = """"group_by": ["a"], "aggregations": [ { "src": "b", "op": "count", "dest": "b" } ],"""
+    val interval = """"on": "a", "start": "a", "end": "b","""
+    for ((t, params, key, bad, good, choices, ports) <- Seq(
+        ("decontaminate", "", "strategy", "brodcast", "bloom", "broadcast | join | bloom",
+          Seq("corpus", "benchmark")),
+        ("aggregation", aggs, "grouping", "rolup", "rollup", "groups | rollup | cube", Seq("in")),
+        ("range_join", interval, "join_type", "outer", "left", "inner | left", Seq("left", "right")))) {
+      def job(v: String) = oneTransform(t, s"""$params "$key": "$v",""", ports: _*)
+      val e = intercept[IllegalArgumentException](JobGraph.validate(job(bad)))
+      assert(e.getMessage ===
+        s"component x: param '$key' must be one of $choices, got $key=$bad")
+      JobGraph.validate(job(good))
+    }
   }
 
   test("validation: a misspelled param is rejected with a did-you-mean, not run on defaults") {

@@ -245,7 +245,7 @@ class StreamingJobsSpec extends SparkTestBase {
          |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
          |    "routes": { "out": [ { "to": "c", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $schema } },
-         |  { "name": "c", "comp_type": "streaming_group_cap",
+         |  { "name": "c", "comp_type": "group_cap",
          |    "cap": 3, "by": ["g"],
          |    "in_port_schemas": { "in": $schema },
          |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
@@ -271,6 +271,11 @@ class StreamingJobsSpec extends SparkTestBase {
     assert(r2.count(_._2 == "g2") === 3, s"g2 quota not filled: ${r2.toSeq}")
     assert(r2.map(_._1).toSet.subsetOf((1L to 10L).toSet))
     assert(r2.map(_._1).distinct.length === r2.length, "no duplicates")
+    // the SAME config through the batch fold: the cap holds there too
+    val built = JobGraph.build(spark, JobConfig.parse(cfg))
+    val perGroup = try built.frames(("c", "out")).collect().groupBy(_.getString(1))
+      .view.mapValues(_.length).toMap finally built.close()
+    assert(perGroup === Map("g1" -> 3, "g2" -> 3), s"batch cap: $perGroup")
     // config guards: missing cap, empty by
     intercept[IllegalArgumentException] {
       StreamingJobs.runOnce(spark, JobConfig.parse(
@@ -318,7 +323,7 @@ class StreamingJobsSpec extends SparkTestBase {
          |    "format": "ndjson",
          |    "routes": { "out": [ { "to": "agg", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $evtSchema } },
-         |  { "name": "agg", "comp_type": "streaming_aggregation",
+         |  { "name": "agg", "comp_type": "aggregation",
          |    "time_column": "ts", "watermark": "10 minutes", "window": "1 hour",
          |    "group_by": ["k"],
          |    "aggregations": [ { "src": "*", "op": "count", "dest": "n" },
@@ -375,7 +380,7 @@ class StreamingJobsSpec extends SparkTestBase {
          |    "format": "ndjson",
          |    "routes": { "out": [ { "to": "agg", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $evtSchema } },
-         |  { "name": "agg", "comp_type": "streaming_aggregation",
+         |  { "name": "agg", "comp_type": "aggregation",
          |    "time_column": "ts", "watermark": "10 minutes",
          |    "window": "1 hour", "slide": "30 minutes",
          |    "group_by": ["k"],
@@ -436,7 +441,7 @@ class StreamingJobsSpec extends SparkTestBase {
          |    "format": "ndjson",
          |    "routes": { "out": [ { "to": "agg", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $evtSchema } },
-         |  { "name": "agg", "comp_type": "streaming_aggregation",
+         |  { "name": "agg", "comp_type": "aggregation",
          |    "time_column": "ts", "watermark": "10 minutes",
          |    "session_gap": "10 minutes",
          |    "group_by": ["k"],
@@ -490,7 +495,7 @@ class StreamingJobsSpec extends SparkTestBase {
          |  { "name": "r", "comp_type": "read_parquet", "filepath": "$inDir",
          |    "routes": { "out": [ { "to": "agg", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $evtSchema } },
-         |  { "name": "agg", "comp_type": "streaming_aggregation",
+         |  { "name": "agg", "comp_type": "aggregation",
          |    "time_column": "ts", "watermark": "10 minutes",
          |    "window": "1 hour", $unitLine
          |    "group_by": ["k"],
@@ -513,13 +518,12 @@ class StreamingJobsSpec extends SparkTestBase {
     assert(got.length === 1)
     assert(got.head.getAs[String]("window_start") === "2024-01-01 00:00:00")
     assert(got.head.getAs[Long]("sv") === 3L)
-    // batch/stream parity: the SAME time_unit contract through the batch
-    // `aggregation` comp_type produces the same window (plus the
-    // sentinel's still-open window, which batch has no watermark to hold)
+    // batch/stream parity: the SAME config through the batch fold
+    // produces the same window (plus the sentinel's still-open window,
+    // which batch has no late data to hold back for)
     val outB = tmp("sunit_out_batch")
-    val batchCfg = cfg(""""time_unit": "seconds",""", outB)
-      .replace("streaming_aggregation", "aggregation")
-    val built = JobGraph.build(spark, JobConfig.parse(batchCfg))
+    val built = JobGraph.build(spark,
+      JobConfig.parse(cfg(""""time_unit": "seconds",""", outB)))
     built.runSinks(); built.close()
     val gotB = spark.read.parquet(outB).collect()
       .map(r => (r.getAs[String]("window_start"), r.getAs[String]("k"),
@@ -558,7 +562,7 @@ class StreamingJobsSpec extends SparkTestBase {
          |    "format": "ndjson",
          |    "routes": { "out": [ { "to": "dd", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $docSchema } },
-         |  { "name": "dd", "comp_type": "streaming_dedup",
+         |  { "name": "dd", "comp_type": "dedup",
          |    "text_column": "text", "time_column": "ts",
          |    "watermark": "1 hour",
          |    "in_port_schemas": { "in": $docSchema },
@@ -1115,8 +1119,8 @@ class StreamingJobsSpec extends SparkTestBase {
          |  { "name": "r", "comp_type": "read_csv", "filepath": "${tmp("sddbad_in")}",
          |    "routes": { "out": [ { "to": "dd", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $abSchema } },
-         |  { "name": "dd", "comp_type": "streaming_dedup", "method": "minhash",
-         |    "text_column": "a", "time_column": "b",
+         |  { "name": "dd", "comp_type": "dedup", "method": "minhash",
+         |    "text_column": "a", "time_column": "b", "watermark": "1 hour",
          |    "in_port_schemas": { "in": $abSchema },
          |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $abSchema } },
@@ -1125,8 +1129,9 @@ class StreamingJobsSpec extends SparkTestBase {
     val ex = intercept[IllegalArgumentException] {
       StreamingJobs.plan(spark, JobConfig.parse(cfg))
     }
-    assert(ex.getMessage.contains("param 'method' must be one of exact"))
-    assert(ex.getMessage.contains("got method=minhash"))
+    assert(ex.getMessage.contains("dedup dd: method=minhash does not stream"))
+    assert(ex.getMessage.contains("run them in a batch job"))
+    assert(ex.getMessage.contains("; set method: exact"))
   }
 
   test("a sink param the writeStream path does not apply is rejected, not ignored") {
@@ -1150,31 +1155,25 @@ class StreamingJobsSpec extends SparkTestBase {
     assert(plans.map(_.component) === Seq("w"))
   }
 
-  test("stateful comp_types are rejected with a pointer to streaming twins") {
+  test("a batch-only comp_type is rejected in a streaming job") {
     val cfg =
       s"""{ "name": "bad", "components": [
          |  { "name": "r", "comp_type": "read_csv", "filepath": "${tmp("bad_in")}",
-         |    "routes": { "out": [ { "to": "agg", "in_port": "in" } ] },
+         |    "routes": { "out": [ { "to": "srt", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $abSchema } },
-         |  { "name": "agg", "comp_type": "aggregation",
-         |    "group_by": ["a"],
-         |    "aggregations": [ { "src": "b", "op": "count", "dest": "n" } ],
+         |  { "name": "srt", "comp_type": "sort", "sort": [ ["a", 1] ],
          |    "in_port_schemas": { "in": $abSchema },
          |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
-         |    "out_port_schemas": { "out": { "fields": [
-         |      { "name": "a", "data_type": "string" },
-         |      { "name": "n", "data_type": "integer" } ] } } },
+         |    "out_port_schemas": { "out": $abSchema } },
          |  { "name": "w", "comp_type": "write_parquet", "filepath": "${tmp("bad_out")}",
-         |    "in_port_schemas": { "in": { "fields": [
-         |      { "name": "a", "data_type": "string" },
-         |      { "name": "n", "data_type": "integer" } ] } } } ] }""".stripMargin
+         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin
     val ex = intercept[IllegalArgumentException] {
       StreamingJobs.plan(spark, JobConfig.parse(cfg))
     }
     // exact fragment + offending comp_type: a different IllegalArgumentException
     // that merely mentions "stream" must not satisfy this test
-    assert(ex.getMessage.contains("comp_type 'aggregation' (agg) is not streamable"))
-    assert(ex.getMessage.contains("streaming/Streaming.scala"))
+    assert(ex.getMessage.contains("comp_type 'sort' (srt) is not streamable"))
+    assert(ex.getMessage.contains("supported: aggregation, asof_join, "))
   }
 
   test("streaming_decontaminate: stream-static parity with the batch component, flagged and clean") {
@@ -1336,6 +1335,27 @@ class StreamingJobsSpec extends SparkTestBase {
       val msg = planError(withRef(t, params, ports))
       assert(msg.contains(s"$t x: $fix"), msg)
       assert(msg.contains("; set "), msg)
+    }
+  }
+
+  test("stateful comp_types reject configs that do not stream") {
+    val aggs = """"aggregations": [ { "src": "doc_id", "op": "count", "dest": "n" } ],"""
+    for ((t, params, fix) <- Seq(
+        ("aggregation", s"""$aggs "group_by": ["doc_id"],""",
+          "an unset time_column does not stream"),
+        ("aggregation", s"""$aggs "time_column": "text", "window": "1 hour",""",
+          "an unset watermark does not stream"),
+        ("dedup", """"time_column": "text", "watermark": "1 hour", "keep_by": [["doc_id", -1]],""",
+          "a set keep_by does not stream"),
+        ("group_cap", """"cap": 2, "by": ["text"], "order_by": [["doc_id", -1]],""",
+          "a set order_by does not stream"),
+        ("group_cap", """"cap": 2,""", "an unset by does not stream"))) {
+      val msg = planError(jobOf(s"sstate_$t", """{ "to": "x", "in_port": "in" }""",
+        s"""{ "name": "x", "comp_type": "$t", $params
+           |  "in_port_schemas": { "in": $docSchema },
+           |  "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+           |  "out_port_schemas": { "out": $docSchema } }""".stripMargin))
+      assert(msg.contains(s"$t x: $fix"), msg)
     }
   }
 
