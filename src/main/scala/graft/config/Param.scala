@@ -87,6 +87,12 @@ object Kind {
     case other      => at.bad("a string", other)
   })
 
+  /** A string read in lower case: a choice of lower-case values then
+    * accepts any spelling (the reference writes `if_exists` modes in
+    * upper case). */
+  val lowerStr: Kind[String] = Kind("string", (at, v) =>
+    str.read(at, v).toLowerCase(java.util.Locale.ROOT))
+
   val bool: Kind[Boolean] = Kind("boolean", (at, v) => v match {
     case JBool(b) => b
     // DELIBERATELY narrower than pydantic lax (r20 ADVICE adjudicated

@@ -8,14 +8,15 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Fixed-size character chunks with overlap in one compiled pass — the
- * kernel of TextAnalysis.chunk, replacing the interpreted
- * transform(sequence)-over-substr HOF chain (ArrayTransform is
- * CodegenFallback: one evaluator dispatch per chunk per row).
+ * Fixed-size character chunks with overlap in one linear pass — the
+ * kernel of TextAnalysis.chunk. The character start offsets are found
+ * once ([[Kernel.charStarts]], shared with CharShingles) and each chunk
+ * is one byte copy, where a `substringSQL` per chunk walked the string
+ * from byte 0 (O(L²/stride) per document).
  *
  * Contract (exactly the grid TextAnalysis.chunk documents and the
- * DuckDB oracle replays; pinned in CurationOpsSpec + the
- * ScalePropertySpec model):
+ * DuckDB oracle replays; pinned in CurationOpsSpec, the
+ * ScalePropertySpec model and NearDupKernelsSpec's `substringSQL` loop):
  *  - starts 0, stride, 2·stride, … < numChars (stride = size − overlap);
  *  - chunk i = substringSQL(start+1, size) — CHARACTER counting, same
  *    as Column.substr / SQL substring, never bytes;
@@ -26,16 +27,14 @@ object CharChunks {
 
   /** The kernel: the chunk grid of `s` (`stride` = size − overlap). */
   def compute(s: UTF8String, size: Int, stride: Int): ArrayData = {
-    val chars = s.numChars()
-    if (chars == 0) return new GenericArrayData(new Array[Any](0))
-    val positions = (chars + stride - 1) / stride
-    val out = new Array[Any](positions)
+    val at = Kernel.charStarts(s)
+    val chars = at.length - 1
+    val out = new Array[Any](if (chars == 0) 0 else (chars - 1) / stride + 1)
     var i = 0
-    var start = 0
-    while (start < chars) {
-      out(i) = s.substringSQL(start + 1, size)
+    while (i < out.length) {
+      val start = i * stride
+      out(i) = Kernel.chars(s, at, start, start + math.min(size, chars - start))
       i += 1
-      start += stride
     }
     new GenericArrayData(out)
   }

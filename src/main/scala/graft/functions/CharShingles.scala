@@ -8,23 +8,24 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Distinct character n-gram shingles of a string in one compiled pass —
- * replacing Dedup.shingles's interpreted transform over an index
- * sequence (one interpreted substr per character position per row).
+ * Distinct character n-gram shingles of a string in one linear pass:
+ * the character start offsets are found once ([[Kernel.charStarts]]) and
+ * each window is one byte copy. (A `substringSQL` per position walks the
+ * string from byte 0 every time: O(L²) per document.)
  *
- * Exact-semantics contract with the HOF form (pinned in
- * WordShinglesSpec over the real documents fixture):
+ * Contract, the same as the HOF form `Dedup.shinglesHof` (pinned in
+ * WordShinglesSpec over the documents fixture) and the per-position
+ * `substringSQL` loop (pinned in NearDupKernelsSpec over generated
+ * unicode):
  *  - shingle at 1-based char position i = substr(i, n), for
- *    i in 1..max(numChars-(n-1), 1) — the final partial window of an
- *    n-1-char-short text appears as substr's natural clamp, and an
- *    EMPTY string yields [""] (one substr over nothing);
- *  - substr counts CHARACTERS (UTF8String.substringSQL), not bytes —
- *    CJK text shingles identically to the builtin;
+ *    i in 1..max(numChars-(n-1), 1) — a text shorter than n is one
+ *    whole-text shingle, and an EMPTY string yields [""];
+ *  - positions count CHARACTERS, not bytes — CJK and 4-byte characters
+ *    shingle as the builtin substr cuts them;
  *  - distinct keeps first-occurrence order (array_distinct);
  *  - null string → [null], a single-null-element array, NOT a null
  *    array: the HOF's sequence bound is greatest(length(null)-(n-1), 1)
- *    and greatest SKIPS nulls, so one substr(null) element survives
- *    (measured — WordShinglesSpec pins it).
+ *    and greatest SKIPS nulls, so one substr(null) element survives.
  */
 object CharShingles {
 
@@ -42,12 +43,13 @@ object CharShingles {
   /** The kernel; null text gives `[null]`. */
   def compute(s: UTF8String, n: Int): ArrayData = {
     if (s == null) return oneNull
-    val chars = s.numChars()
+    val at = Kernel.charStarts(s)
+    val chars = at.length - 1
     val positions = math.max(chars - (n - 1), 1)
     val seen = new java.util.LinkedHashSet[UTF8String]()
-    var i = 1
-    while (i <= positions) {
-      seen.add(s.substringSQL(i, n))
+    var i = 0
+    while (i < positions) {
+      seen.add(Kernel.chars(s, at, i, i + math.min(n, chars - i)))
       i += 1
     }
     val out = new Array[Any](seen.size)

@@ -22,6 +22,35 @@ private[functions] object Kernel {
     case ArrayType(_: NumericType, _) => true
     case _ => false
   }
+  val longs: InputType = InputType("array<bigint>") {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+
+  /** The byte offset of each character of `s`, then its byte length:
+    * characters [i, j) are bytes [at(i), at(j)). One walk, counting
+    * characters as `UTF8String.numChars` and `substringSQL` do; a lead
+    * byte whose declared width runs past the end is clamped to it. */
+  def charStarts(s: UTF8String): Array[Int] = {
+    val bytes = s.numBytes()
+    val at = new Array[Int](s.numChars() + 1)
+    var i = 0
+    var c = 0
+    while (i < bytes) {
+      at(c) = i
+      i += UTF8String.numBytesForFirstByte(s.getByte(i))
+      c += 1
+    }
+    at(c) = bytes
+    at
+  }
+
+  /** A copy of characters [from, until) of `s`, given its [[charStarts]]
+    * `at` — what `s.substringSQL(from + 1, until - from)` returns, without
+    * walking from byte 0. */
+  def chars(s: UTF8String, at: Array[Int], from: Int, until: Int): UTF8String =
+    if (at(until) > at(from)) s.copyUTF8String(at(from), at(until) - 1)
+    else UTF8String.EMPTY_UTF8
 
   /** A constant object argument, typed as `cls` rather than its runtime
     * class (which may be package-private, e.g. a BloomFilter's). */

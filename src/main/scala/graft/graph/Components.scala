@@ -128,8 +128,10 @@ object Components {
   private val sortBy = p("sort_by", Kind.strs, Nil, "in-bucket sort columns — lets the join skip its sort too")
   private val store = req("store", Kind.str, "store name (connection seam)")
   private val entityName = req("entity_name", Kind.str, "collection name")
-  /** JDBC/Mongo sink write mode; `insert` is not retry-safe (JobGraph). */
-  val ifExists = p("if_exists", Kind.str, "insert", "insert | upsert | truncate | update")
+  /** JDBC/Mongo sink write mode, a choice in any case; `insert` is not
+    * retry-safe (JobGraph). */
+  val ifExists = Param("if_exists", Kind.lowerStr, Some("insert"),
+    Seq("insert", "upsert", "truncate", "update"))("insert | upsert | truncate | update (any case)")
   private val keyFields = p("key_fields", Kind.strs, Nil, "conflict keys for upsert/update")
   private val textColumn = p("text_column", Kind.str, "text", "document text column")
   private val idColumn = p("id_column", Kind.str, "id", "unique id column")
@@ -529,7 +531,7 @@ object Components {
       val matchFilter = p("match_filter", Kind.scalarMap, Map.empty[String, Any], "explicit UPDATE filter; overrides key_fields")
       val updateFields = p("update_fields", Kind.strs, Nil, "restrict $set to these fields")
       ComponentDef("write_mongodb", "Write documents: insert/upsert/update/truncate", Seq(
-        store, entityName, ifExists.doc("insert | upsert | update | truncate"),
+        store, entityName, ifExists.doc("insert | upsert | update | truncate (any case)"),
         keyFields.doc("match keys for upsert/update"), matchFilter, updateFields), sink) { b => import b._
         val df = one()
         val factory = graft.io.MongoIO.InMemory(b(store))
@@ -1564,7 +1566,7 @@ object Components {
         },
         ComponentDef(s"write_$db", s"Write to $db via JDBC", Seq(
           url, context, entityName.doc("target table"),
-          ifExists.doc("insert | upsert | truncate | update"), keyFields,
+          ifExists, keyFields,
           whereConditions, rowBatchSize) ++ jdbcCommon, sink) { b => import b._
           val df = one()
           val sqlDialect = jdbcDialect(b)

@@ -164,7 +164,7 @@ object JobGraph {
             s"with num_of_retries ${spec.numOfRetries} — a retry re-runs the whole " +
             "job and would append the same rows again; set num_of_retries to 0 or drop append")
         require(!d.params.contains(Components.ifExists) ||
-          !Components.ifExists(c).equalsIgnoreCase("insert"),
+          Components.ifExists(c) != "insert",
           s"component ${c.name} (${c.compType}): if_exists insert cannot be combined " +
             s"with num_of_retries ${spec.numOfRetries} — a retry re-runs the whole " +
             "job and would insert the same rows again; set num_of_retries to 0 or " +

@@ -11,12 +11,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
  *
  *  - exact: hash-groupBy on a normalized key — one shuffle on the key, and
  *    the min-id winner is picked with a window (map-side combinable).
- *  - MinHash + LSH: shingle → k minhashes (one-pass aggregate) → band into
+ *  - MinHash + LSH: shingle → k minhashes (one row kernel) → band into
  *    (band, bucket) keys → **ids-only** self-join on the bucket key →
- *    candidate-pair dedup → cheap signature-agreement prefilter → exactly
- *    one Jaccard verification per surviving pair. Shingle arrays cross the
- *    wire exactly twice (the two verification join-backs), never through
- *    the banded explode/shuffle.
+ *    candidate-pair dedup → exactly one Jaccard verification per
+ *    candidate pair. Shingle arrays cross the wire exactly twice (the two
+ *    verification join-backs), never through the banded explode/shuffle.
  *  - SimHash: 60-bit weighted-projection fingerprint stored as 4×15-bit
  *    blocks; hamming ≤ 3 implies ≥1 shared block (pigeonhole), so the
  *    block-key join is *exactly* equivalent to the all-pairs computation.
@@ -30,7 +29,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
  *    it. A document-frequency cap bounds the O(df²) blowup of
  *    stop-phrase postings at scale.
  *
- * Everything is built from codegen'd Catalyst expressions — no UDFs.
+ * Everything is built from codegen'd Catalyst expressions and the
+ * `graft.functions` row kernels they call — no UDFs.
  *
  * Measured scaling (tools/ScaleProbe @0fcdae9, sf0.1 docs replicated Nx with
  * salted near-dup replicas, local[32] / 96g driver):
@@ -444,63 +444,23 @@ object Dedup {
     array_distinct(slice(grown, lit(1), greatest(size(toks) - (n - 1), lit(1))))
   }
 
-  /**
-   * k MinHash signatures in ONE pass over the shingle array: fold with a
-   * k-wide array accumulator, taking the element-wise min of the k seeded
-   * hashes of each shingle. (The naive form — k independent
-   * array_min(transform(...)) — walks the array k times and allocates k
-   * intermediate arrays.) NOTE: higher-order functions are interpreted
-   * (CodegenFallback); for corpus-scale signature tables prefer
-   * minhashSignatures, the codegen'd relational form of the same math.
-   */
+  /** The k-wide MinHash signature of a shingle array: element i is the
+    * min over shingles of `xxhash64(shingle, lit(i))`. One kernel call
+    * per row (MinHash.signature), which hashes each shingle's bytes once
+    * and re-seeds that hash per position, so a signature table needs no
+    * explode and no shuffle. */
   def minhashSignature(shingleArr: Column, k: Int = 32): Column =
-    aggregate(
-      shingleArr,
-      array_repeat(lit(Long.MaxValue), k),
-      (acc, s) => zip_with(acc,
-        array((0 until k).map(i => xxhash64(s, lit(i))): _*),
-        (m, h) => least(m, h)))
-
-  /**
-   * (id, sig) MinHash signature table computed relationally: explode the
-   * word shingles to (id, shingle) rows, then groupBy(id) with k plain
-   * `min(xxhash64(shingle, seed_i))` aggregates and re-assemble the k-wide
-   * array. Identical math to minhashSignature (element-wise min over the
-   * k seeded hashes of each shingle) but every operator stays inside
-   * whole-stage codegen: the k hashes are evaluated map-side by the
-   * partial min aggregates, so the shuffle carries ~k longs per (id ×
-   * partition) after map-side combine — shingle strings never cross the
-   * wire. The HOF fold, by contrast, is interpreted (~100 ns/node) and
-   * dominated the round-2 bench at 35%.
-   *
-   * PRECONDITIONS (edge cases differ from per-row minhashSignature):
-   * `idCol` must be unique — groupBy(id) would merge rows sharing an id
-   * into one signature — and documents with null text are DROPPED from
-   * the output (explode emits no rows) rather than carrying a null
-   * signature. On unique-id, non-null-text data the two forms compute
-   * identical signatures; degenerate docs simply don't participate in LSH.
-   */
-  def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
-                        shingleN: Int = 3, k: Int = 32): DataFrame = {
-    val exploded = df.select(col(idCol).as("id"),
-      explode(wordShingles(col(textCol), shingleN)).as("s"))
-    val aggs = (0 until k).map(i => min(xxhash64(col("s"), lit(i))).as(s"h_$i"))
-    exploded.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), array((0 until k).map(i => col(s"h_$i")): _*).as("sig"))
-  }
+    graft.functions.MinHash.signature(shingleArr, k)
 
   /**
    * LSH banding: split the k-wide signature into `bands` bands of width
-   * k/bands, hash each band. Emits (band_id, band_hash) pairs — the LSH
-   * bucket keys. Probability two docs share ≥1 bucket ≈ 1-(1-j^r)^b.
+   * k/bands and hash each band — `xxhash64(concat_ws(",", band), b)`,
+   * computed by the MinHash.bandKeys kernel. One bucket key per band;
+   * `posexplode` gives (band, bucket). Probability two docs share ≥1
+   * bucket ≈ 1-(1-j^r)^b.
    */
-  def lshBucketKeys(signature: Column, k: Int, bands: Int): Column = {
-    val r = k / bands
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",", slice(signature, b * r + 1, r)), lit(b)).as("bucket"))
-    }: _*)
-  }
+  def lshBucketKeys(signature: Column, k: Int, bands: Int): Column =
+    graft.functions.MinHash.bandKeys(signature, k, bands)
 
   /** Fraction of agreeing positions between two k-wide minhash signatures —
     * an unbiased Jaccard estimate costing O(k), used to prefilter candidate
@@ -509,16 +469,19 @@ object Dedup {
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v).cast("double") / k
 
-  /** Exact Jaccard similarity between two shingle arrays. */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val uni = size(array_union(a, b)).cast("double")
-    when(uni === 0, lit(0.0)).otherwise(inter / uni)
-  }
+  /** Exact Jaccard similarity between two string arrays over their
+    * distinct elements (MinHash.jaccard: one hash table per pair); 0.0
+    * when both are empty. */
+  def jaccard(a: Column, b: Column): Column = graft.functions.MinHash.jaccard(a, b)
 
   /**
    * MinHash-LSH near-dup candidate pairs with exact character-shingle
    * Jaccard verification. Returns (id_a, id_b, jaccard) with id_a < id_b.
+   *
+   * PRECONDITIONS: `idCol` is unique — each row is banded on its own,
+   * so two documents sharing an id both join back under it — and
+   * documents with null text are dropped (no signature, never a
+   * candidate).
    *
    * Scale shape, in order:
    *  1. Bucketing runs on WORD-trigram minhash signatures. Character
@@ -526,14 +489,16 @@ object Dedup {
    *     (common words), which floods banded LSH with false candidates;
    *     word trigrams of unrelated documents share ≈0, so buckets stay
    *     tight while near-dup recall at word-J ≥ 0.4 with bands=16/r=2 is
-   *     ≥ 1-(1-0.16)^16 ≈ 0.94 and ≥ 0.9999 at word-J ≥ 0.6.
+   *     ≥ 1-(1-0.16)^16 ≈ 0.94 and ≥ 0.9999 at word-J ≥ 0.6. Shingles,
+   *     signature and band keys are row kernels in one narrow map, so
+   *     no shuffle runs before the banded self-join.
    *  2. The banded self-join carries ONLY (band, bucket, id); candidate
    *     pairs are deduplicated across bands before anything heavier runs.
    *  3. Character shingle arrays are built ONCE PER INVOLVED DOCUMENT
    *     (left-semi join of texts against the candidate id set), then the
    *     pair join carries those arrays and computes one exact Jaccard per
-   *     pair — per-doc work stays O(docs), per-pair work is only the
-   *     intersect/union.
+   *     pair — per-doc work stays O(docs), and per-pair work is one hash
+   *     table over the two arrays.
    *
    * An earlier revision prefiltered candidates on signature agreement
    * before verification. With the only principled cutoff — r/k, the
@@ -550,16 +515,14 @@ object Dedup {
                       shingleN: Int = 5, k: Int = 32, bands: Int = 16,
                       threshold: Double = 0.6): DataFrame = {
     require(k % bands == 0, s"bands=$bands must divide k=$k")
-    // The signature table feeds ONLY the bucketing explode now (the old
-    // agreement prefilter was its other consumer), so it stays lazy —
-    // one pass, no persist. The bucket table is what the self-join
-    // consumes twice, and Spark reuses the shuffle files of its one
-    // Exchange for both sides.
+    // The bucket table stays lazy — one narrow map, no persist. The
+    // self-join consumes it twice, and Spark reuses the shuffle files of
+    // its one Exchange for both sides.
     val wide = widen(df)
-    val sigs = minhashSignatures(wide, textCol, idCol, 3, k)
-    val buckets = sigs
-      .select(col("id"), explode(lshBucketKeys(col("sig"), k, bands)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
+    val sig = minhashSignature(wordShingles(col(textCol), 3), k)
+    val buckets = wide.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"),
+        posexplode(lshBucketKeys(sig, k, bands)).as(Seq("band", "bucket")))
 
     // ids-only candidate generation, deduplicated across bands; consumed
     // twice below (involved-id set + pair spine)

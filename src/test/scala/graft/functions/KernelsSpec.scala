@@ -42,24 +42,29 @@ class KernelsSpec extends SparkTestBase {
   private lazy val fixture: DataFrame = {
     def f(xs: Float*): Seq[java.lang.Float] = xs.map(java.lang.Float.valueOf)
     def d(xs: Double*): Seq[java.lang.Double] = xs.map(java.lang.Double.valueOf)
+    def l(xs: Long*): Seq[java.lang.Long] = xs.map(java.lang.Long.valueOf)
     val cells = Seq(Row(1L, f(1f, 0f, 0f, 0f)), Row(2L, f(0f, 1f, 0f, 0f)),
       Row(3L, null), Row(4L, f(0f, 0f, 0f)))
     val edges = Seq(
-      Row(0, null, null, null, null, null),
-      Row(1, "", Seq.empty[String], Seq.empty, Seq.empty, cells),
-      Row(2, "  \t ", Seq("the", null, "of"), f(1f, 2f), d(1.0, 2.0), cells),
-      Row(3, " of  THE  a \n", Seq("a", "b", "a", "b"), f(1f, 2f, 3f), d(1.0, 2.0, 3.0, 4.0), cells),
-      Row(4, "line\nline\n...\n- x …  \n", Seq(null, null), f(1f, 2f, 3f, 4f, 5f), d(1.0), cells),
+      Row(0, null, null, null, null, null, null),
+      Row(1, "", Seq.empty[String], Seq.empty, Seq.empty, cells, Seq.empty),
+      Row(2, "  \t ", Seq("the", null, "of"), f(1f, 2f), d(1.0, 2.0), cells, l(1L, 2L)),
+      Row(3, " of  THE  a \n", Seq("a", "b", "a", "b"), f(1f, 2f, 3f), d(1.0, 2.0, 3.0, 4.0), cells,
+        l(-1L, 0L, 1L, 2L)),
+      Row(4, "line\nline\n...\n- x …  \n", Seq(null, null), f(1f, 2f, 3f, 4f, 5f), d(1.0), cells,
+        l(1L, 2L, 3L, 4L, 5L)),
       Row(5, "Σ σ ς", Seq(""), Seq[java.lang.Float](1f, null, 3f, 4f),
-        Seq[java.lang.Double](null, 1.0, 2.0, 3.0), cells),
-      Row(6, "nan", Seq("nan"), f(Float.NaN, 1f, 0f, 0f), d(0.0, 0.0, 0.0, 0.0), cells),
-      Row(7, "zero", Seq("0"), f(0f, 0f, 0f, 0f), d(0.0, 0.0, 0.0, 0.0), Seq.empty))
+        Seq[java.lang.Double](null, 1.0, 2.0, 3.0), cells, Seq[java.lang.Long](7L, null, 9L, 10L)),
+      Row(6, "nan", Seq("nan"), f(Float.NaN, 1f, 0f, 0f), d(0.0, 0.0, 0.0, 0.0), cells,
+        l(Long.MinValue, Long.MaxValue, 0L, 0L)),
+      Row(7, "zero", Seq("0"), f(0f, 0f, 0f, 0f), d(0.0, 0.0, 0.0, 0.0), Seq.empty, l(0L, 0L, 0L, 0L)))
     val rnd = new scala.util.Random(17)
     val texts = Gen.listOfN(50, textGen).apply(Gen.Parameters.default, Seed(17L)).get
     val generated = texts.zipWithIndex.map { case (t, i) =>
       Row(100 + i, t, t.split(" ").toSeq.map(w => if (w == "#") null else w),
         Seq.fill(dim)(java.lang.Float.valueOf(rnd.nextFloat() * 2 - 1)),
-        Seq.fill(dim)(java.lang.Double.valueOf(rnd.nextGaussian())), cells)
+        Seq.fill(dim)(java.lang.Double.valueOf(rnd.nextGaussian())), cells,
+        Seq.fill(dim)(java.lang.Long.valueOf(rnd.nextLong())))
     }
     val schema = StructType(Seq(
       StructField("id", IntegerType, nullable = false),
@@ -68,7 +73,8 @@ class KernelsSpec extends SparkTestBase {
       StructField("vec", ArrayType(FloatType)),
       StructField("vec2", ArrayType(DoubleType)),
       StructField("cells", ArrayType(StructType(Seq(
-        StructField("cell", LongType), StructField("cvec", ArrayType(FloatType))))))))
+        StructField("cell", LongType), StructField("cvec", ArrayType(FloatType)))))),
+      StructField("longs", ArrayType(LongType))))
     spark.createDataFrame(spark.sparkContext.parallelize(edges ++ generated, 2), schema)
   }
 
@@ -94,6 +100,9 @@ class KernelsSpec extends SparkTestBase {
     ("GopherLineStats.stats", GopherLineStats.stats(text), GopherLineStats.stats(text.cast("binary"))),
     ("L2Normalize.normalize", L2Normalize.normalize(vec), L2Normalize.normalize(toks)),
     ("MatVecSums.sums", MatVecSums.sums(vec, weights), MatVecSums.sums(col("id"), weights)),
+    ("MinHash.bandKeys", MinHash.bandKeys(col("longs"), 4, 2), MinHash.bandKeys(vec, 4, 2)),
+    ("MinHash.jaccard", MinHash.jaccard(toks, split(text, " ")), MinHash.jaccard(toks, vec)),
+    ("MinHash.signature", MinHash.signature(toks, 4), MinHash.signature(text, 4)),
     ("QuantizeInt8.quantize", QuantizeInt8.quantize(vec), QuantizeInt8.quantize(array(lit(true)))),
     ("RemoveInSet.remove", RemoveInSet.remove(toks, set), RemoveInSet.remove(vec, set)),
     ("SimHashBlocks60.blocks", SimHashBlocks60.blocks(toks), SimHashBlocks60.blocks(text)),

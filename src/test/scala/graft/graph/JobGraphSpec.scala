@@ -602,6 +602,29 @@ class JobGraphSpec extends SparkTestBase {
       JobGraph.validate(job(3, sink + s""", "if_exists": "$mode", "key_fields": ["a"]"""))
   }
 
+  test("validation: if_exists is a case-insensitive choice on every database sink") {
+    // a misspelled mode used to pass validation and fail only when its
+    // sink ran, after earlier sinks of the job had committed
+    def job(sink: String, mode: String) = specOf(
+      s"""{ "name": "r", "comp_type": "read_csv", "filepath": "x",
+         |  "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |  "out_port_schemas": { "out": $abSchema } }""".stripMargin,
+      s"""{ "name": "w", $sink, "if_exists": "$mode", "key_fields": ["a"],
+         |  "in_port_schemas": { "in": $abSchema } }""".stripMargin)
+    val jdbc = Seq("jdbc", "mariadb", "postgresql", "sqlserver").map(db =>
+      s""""comp_type": "write_$db", "url": "jdbc:derby:memory:x", "entity_name": "T"""")
+    val mongo = """"comp_type": "write_mongodb", "store": "s", "entity_name": "c""""
+    for (sink <- jdbc :+ mongo) {
+      for (bad <- Seq("upsrt", "MERGE")) {
+        val e = intercept[IllegalArgumentException](JobGraph.validate(job(sink, bad)))
+        assert(e.getMessage === "component w: param 'if_exists' must be one of " +
+          s"insert | upsert | truncate | update, got if_exists=${bad.toLowerCase}", sink)
+      }
+      for (good <- Seq("insert", "UPSERT", "Truncate", "update"))
+        JobGraph.validate(job(sink, good))
+    }
+  }
+
   test("validation: a present param of the wrong type or outside its choices is rejected at create time") {
     def job(sink: String) =
       s"""{ "name": "t", "components": [
