@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * each window is one byte copy. (A `substringSQL` per position walks the
  * string from byte 0 every time: O(L²) per document.)
  *
- * Contract, the same as the HOF form `Dedup.shinglesHof` (pinned in
+ * Contract, the same as the HOF form it replaced (kept in and pinned by
  * WordShinglesSpec over the documents fixture) and the per-position
  * `substringSQL` loop (pinned in NearDupKernelsSpec over generated
  * unicode):

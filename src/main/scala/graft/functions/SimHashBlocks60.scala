@@ -24,6 +24,13 @@ import org.apache.spark.unsafe.types.UTF8String
  *    always yields 4 elements — measured in tools/HofProbe @0fcdae9);
  *  - a null ELEMENT votes -1 on every bit (bitwiseAND(null) is null,
  *    the when falls through to otherwise(-1)).
+ *
+ * `hamming` is the Hamming distance of two block arrays, the value of
+ * the HOF form `aggregate(zip_with(a, b, (x, y) => bit_count(x ^ y)),
+ * 0L, _ + _)` (pinned in SimHashBlocks60Spec): the popcount of each
+ * position's XOR, summed; a null array, a null element on either side,
+ * or arrays of different lengths (zip_with pads the shorter with nulls)
+ * give null; two empty arrays give 0.
  */
 object SimHashBlocks60 {
 
@@ -31,6 +38,25 @@ object SimHashBlocks60 {
   def blocks(tokens: Column): Column =
     ColumnBridge.invoke(this, "compute", ArrayType(LongType, containsNull = true),
       Seq(tokens -> Kernel.strings), propagateNull = false, returnNullable = false)
+
+  /** Column face: the Hamming distance of two block arrays. */
+  def hamming(a: Column, b: Column): Column =
+    ColumnBridge.invoke(this, "hammingOf", LongType,
+      Seq(a -> Kernel.longs, b -> Kernel.longs))
+
+  /** The Hamming kernel. */
+  def hammingOf(a: ArrayData, b: ArrayData): java.lang.Long = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
+    var d = 0L
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      d += java.lang.Long.bitCount(a.getLong(i) ^ b.getLong(i))
+      i += 1
+    }
+    d
+  }
 
   /** The null-text result: 4 null blocks (see the object doc). */
   private val fourNulls: ArrayData = new GenericArrayData(new Array[Any](4))

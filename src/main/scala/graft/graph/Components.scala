@@ -650,6 +650,9 @@ object Components {
         // eagerly; the returned DataFrame no longer needs them) — two
         // concurrent jobs with a same-named component can't read each
         // other's data, and a long-lived process doesn't accumulate views.
+        // The views drop through the session catalog: Catalog.dropTempView
+        // also uncaches the view's plan, and a port's frame may itself be
+        // a fan-out persist other consumers still read.
         val sqlText = b(query)
         val names = in.keys.map(p => s"${c.name}_$p").toSeq
         val resolved = sqlViewLock.synchronized {
@@ -657,7 +660,7 @@ object Components {
             dfs.head.createOrReplaceTempView(s"${c.name}_$port")
           }
           try spark.sql(sqlText)
-          finally names.foreach(spark.catalog.dropTempView(_))
+          finally names.foreach(spark.sessionState.catalog.dropTempView(_))
         }
         (Map("out" -> resolved), None)
       }

@@ -11,11 +11,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
  *
  *  - exact: hash-groupBy on a normalized key — one shuffle on the key, and
  *    the min-id winner is picked with a window (map-side combinable).
- *  - MinHash + LSH: shingle → k minhashes (one row kernel) → band into
- *    (band, bucket) keys → **ids-only** self-join on the bucket key →
- *    candidate-pair dedup → exactly one Jaccard verification per
- *    candidate pair. Shingle arrays cross the wire exactly twice (the two
- *    verification join-backs), never through the banded explode/shuffle.
+ *  - MinHash + LSH: shingle → k minhashes → band keys (row kernels in
+ *    one narrow map, run once per document) → **ids-only** self-join on
+ *    the bucket key → candidate-pair dedup → the texts join back and each
+ *    pair is shingled and verified exactly once. No shingle array crosses
+ *    the wire.
  *  - SimHash: 60-bit weighted-projection fingerprint stored as 4×15-bit
  *    blocks; hamming ≤ 3 implies ≥1 shared block (pigeonhole), so the
  *    block-key join is *exactly* equivalent to the all-pairs computation.
@@ -404,7 +404,10 @@ object Dedup {
       "line_dedup: input already has a '__kept' column")
     val kept = graft.functions.RemoveInSet.remove(
       split(col(textCol), java.util.regex.Pattern.quote(delim)), hot)
-    df.withColumn("__kept", kept)
+    // a one-element explode: the kernel runs once per row in the
+    // Generate, and the filter on its output cannot be pushed below it
+    // (pushed into the Filter, it ran up to 3 times per row)
+    df.select(col("*"), explode(array(kept)).as("__kept"))
       .filter(col("__kept").isNotNull && size(col("__kept")) > 0)
       .withColumn(textCol, array_join(col("__kept"), delim))
       .drop("__kept")
@@ -413,36 +416,18 @@ object Dedup {
   /** Character shingles (n-grams) of the normalized text, distinct —
     * the codegen'd CharShingles expression (one compiled pass vs an
     * interpreted substr per character position; WordShinglesSpec pins
-    * equality with shinglesHof over the real fixture incl. CJK). */
+    * equality with the HOF form it replaced over the real fixture incl.
+    * CJK). */
   def shingles(text: Column, n: Int = 5): Column =
     graft.functions.CharShingles.shingles(exactKey(text), n)
-
-  /** The interpreted HOF form shingles replaced (semantic reference). */
-  private[graft] def shinglesHof(text: Column, n: Int = 5): Column = {
-    val norm = exactKey(text)
-    val idxs = sequence(lit(1), greatest(length(norm) - (n - 1), lit(1)))
-    array_distinct(transform(idxs, i => norm.substr(i, lit(n))))
-  }
 
   /** Word shingles (token n-grams), distinct — the codegen'd
     * WordShingles expression, one compiled pass per row. Keeps exactly
     * max(|toks|-n+1, 1) positions like the reference (short texts
     * collapse to one whole-text shingle); WordShinglesSpec pins equality
-    * with wordShinglesHof over the real fixture. */
+    * with the HOF form it replaced over the real fixture. */
   def wordShingles(text: Column, n: Int = 3): Column =
     graft.functions.WordShingles.shingles(split(exactKey(text), " "), n)
-
-  /** The interpreted HOF form wordShingles replaced: n-1 zip_with passes
-    * over shifted token arrays. Kept as the semantic reference for
-    * WordShinglesSpec's bit-parity pin. */
-  private[graft] def wordShinglesHof(text: Column, n: Int = 3): Column = {
-    val toks = split(exactKey(text), " ")
-    val grown = (1 until n).foldLeft(toks) { (acc, k) =>
-      zip_with(acc, slice(toks, lit(k + 1), greatest(size(toks) - k, lit(0))),
-        (a, b) => concat_ws(" ", a, b))
-    }
-    array_distinct(slice(grown, lit(1), greatest(size(toks) - (n - 1), lit(1))))
-  }
 
   /** The k-wide MinHash signature of a shingle array: element i is the
     * min over shingles of `xxhash64(shingle, lit(i))`. One kernel call
@@ -461,13 +446,6 @@ object Dedup {
    */
   def lshBucketKeys(signature: Column, k: Int, bands: Int): Column =
     graft.functions.MinHash.bandKeys(signature, k, bands)
-
-  /** Fraction of agreeing positions between two k-wide minhash signatures —
-    * an unbiased Jaccard estimate costing O(k), used to prefilter candidate
-    * pairs before the O(|shingles|) exact verification. */
-  def signatureAgreement(a: Column, b: Column, k: Int): Column =
-    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / k
 
   /** Exact Jaccard similarity between two string arrays over their
     * distinct elements (MinHash.jaccard: one hash table per pair); 0.0
@@ -490,67 +468,66 @@ object Dedup {
    *     word trigrams of unrelated documents share ≈0, so buckets stay
    *     tight while near-dup recall at word-J ≥ 0.4 with bands=16/r=2 is
    *     ≥ 1-(1-0.16)^16 ≈ 0.94 and ≥ 0.9999 at word-J ≥ 0.6. Shingles,
-   *     signature and band keys are row kernels in one narrow map, so
-   *     no shuffle runs before the banded self-join.
+   *     signature and band keys are row kernels in one narrow map, and
+   *     the (id, band, bucket) table is persisted: the bucket self-join
+   *     reads it on both sides (as a broadcast join at small scale, whose
+   *     sides share no exchange), so unpersisted the map ran once per
+   *     side.
    *  2. The banded self-join carries ONLY (band, bucket, id); candidate
    *     pairs are deduplicated across bands before anything heavier runs.
-   *  3. Character shingle arrays are built ONCE PER INVOLVED DOCUMENT
-   *     (left-semi join of texts against the candidate id set), then the
-   *     pair join carries those arrays and computes one exact Jaccard per
-   *     pair — per-doc work stays O(docs), and per-pair work is one hash
-   *     table over the two arrays.
+   *  3. The candidate pairs join back to (id, text) twice and each pair
+   *     computes `jaccard(shingles(ta), shingles(tb))` once, in a
+   *     one-element explode so the threshold filter cannot be pushed into
+   *     a second copy of it. The join-backs carry text, not the
+   *     character-shingle arrays (an 8-byte slot plus a word-aligned
+   *     shingle per character position, ~16 bytes per character of
+   *     text), and per-pair shingling is the same order of work as the
+   *     per-pair Jaccard it feeds.
+   *
+   * The shape it replaced built the band table twice (once per join
+   * side), persisted the candidate pairs and a per-involved-document
+   * shingle table (a left-semi join of the texts against the union of
+   * candidate ids, a text shuffle), and computed each Jaccard twice (the
+   * threshold filter pushed below its projection). Measured on the
+   * `curate` workload (`perfbench/run.py --seed 8 --trace 1`, 4-core
+   * box, per traced pass): `scale.dedup_ms` 1662 → 1415 ms and shuffle
+   * writes 2.75 MB → 17 KB; with the one-call Gopher filter of the same
+   * revision, Spark jobs 26 → 19 and stages 41 → 23.
    *
    * An earlier revision prefiltered candidates on signature agreement
    * before verification. With the only principled cutoff — r/k, the
    * agreement every true band collision already implies — the filter
    * passes essentially every candidate (a banded pair below r/k requires
    * a 64-bit bucket-hash accident), so it was two array-carrying joins of
-   * pure overhead; a cutoff above r/k (0.1, as reviewed) could drop true
-   * candidates and made oracle equality fixture-dependent. Measured at
-   * sf0.1: 2276 banded candidates, 378 past the 0.1 prefilter — and the
-   * whole verification stage is cheaper than the prefilter's joins once
-   * shingling is per-doc.
+   * pure overhead; a cutoff above r/k could drop true candidates and made
+   * oracle equality fixture-dependent.
    */
   def minhashNearDups(df: DataFrame, textCol: String, idCol: String,
                       shingleN: Int = 5, k: Int = 32, bands: Int = 16,
                       threshold: Double = 0.6): DataFrame = {
     require(k % bands == 0, s"bands=$bands must divide k=$k")
-    // The bucket table stays lazy — one narrow map, no persist. The
-    // self-join consumes it twice, and Spark reuses the shuffle files of
-    // its one Exchange for both sides.
     val wide = widen(df)
     val sig = minhashSignature(wordShingles(col(textCol), 3), k)
-    val buckets = wide.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        posexplode(lshBucketKeys(sig, k, bands)).as(Seq("band", "bucket")))
+    val buckets = OpCaches.persist( // both self-join sides
+      wide.filter(col(textCol).isNotNull)
+        .select(col(idCol).as("id"),
+          posexplode(lshBucketKeys(sig, k, bands)).as(Seq("band", "bucket"))))
 
-    // ids-only candidate generation, deduplicated across bands; consumed
-    // twice below (involved-id set + pair spine)
-    val cand = OpCaches.persist(
-      buckets.select(col("band"), col("bucket"), col("id").as("id_a"))
-        .join(buckets.select(col("band"), col("bucket"), col("id").as("id_b")),
-          Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-        .distinct())
+    // ids-only candidate generation, deduplicated across bands
+    val cand = buckets.select(col("band"), col("bucket"), col("id").as("id_a"))
+      .join(buckets.select(col("band"), col("bucket"), col("id").as("id_b")),
+        Seq("band", "bucket"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"))
+      .distinct()
 
-    // exact verification: shingle each INVOLVED doc once, then one
-    // Jaccard per pair over the joined arrays. No distinct on the
-    // involved-id union: a left_semi build side ignores duplicate rows,
-    // so the distinct was one whole Exchange+HashAggregate stage of pure
-    // overhead (r22, guide §2.4 — measured 1.27x on dedup_minhash
-    // together with the losers-distinct drop below, identical survivors)
-    val involved = cand.select(col("id_a").as("id"))
-      .union(cand.select(col("id_b").as("id")))
-    val shingled = OpCaches.persist( // consumed by both pair join-backs
-      wide.select(col(idCol).as("id"), col(textCol).as("t"))
-        .join(involved, Seq("id"), "left_semi")
-        .select(col("id"), shingles(col("t"), shingleN).as("sh")))
+    // exact verification against the texts, one Jaccard per pair
+    val texts = wide.select(col(idCol).as("id"), col(textCol).as("t"))
     cand
-      .join(shingled.select(col("id").as("id_a"), col("sh").as("sha")), Seq("id_a"))
-      .join(shingled.select(col("id").as("id_b"), col("sh").as("shb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sha"), col("shb")).as("jaccard"))
+      .join(texts.select(col("id").as("id_a"), col("t").as("ta")), Seq("id_a"))
+      .join(texts.select(col("id").as("id_b"), col("t").as("tb")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), explode(array(jaccard(
+        shingles(col("ta"), shingleN), shingles(col("tb"), shingleN)))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -614,10 +591,10 @@ object Dedup {
         lit(0L), (a, x) => a + x))
   }
 
-  /** Hamming distance between two 4×15-bit block fingerprints. */
+  /** Hamming distance between two 4×15-bit block fingerprints — the
+    * SimHashBlocks60.hamming kernel. */
   def hammingBlocks(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
-      lit(0L), (acc, v) => acc + v)
+    graft.functions.SimHashBlocks60.hamming(a, b)
 
   /**
    * SimHash near-dup pairs: block on the 4 fingerprint chunks (any pair
@@ -645,8 +622,10 @@ object Dedup {
       .join(e.select(col("pos"), col("v"), col("id").as("id_b"), col("blk").as("blk_b")),
         Seq("pos", "v"))
       .filter(col("id_a") < col("id_b"))
+      // a one-element explode keeps the cut from being pushed below the
+      // projection into a second hamming call
       .select(col("id_a"), col("id_b"),
-        hammingBlocks(col("blk_a"), col("blk_b")).as("hamming"))
+        explode(array(hammingBlocks(col("blk_a"), col("blk_b")))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -861,25 +840,32 @@ object Dedup {
     if (!integralSame || maxLocalEdges <= 0)
       ccLoop(pairs, srcCol, dstCol, maxIter, checkEvery, checkpointDir)
     else {
-      // persist the 2-column projection once: the gate count consumes it,
-      // and on the distributed path the loop's edge build references it
+      // persist the 2-column projection once: the gate reads it, and on
+      // the distributed path the loop's edge build references it
       // TWICE (dir ∪ dir.swapped) — previously that recomputed the whole
       // pairs lineage (an LSH pipeline, typically) twice at edge
       // materialization.
       //
       // COST TRADE above the gate (r22 note — do not "fix" this persist
-      // away): an above-gate pair table pays one persist+count pass the
+      // away): an above-gate pair table pays one persist+gate pass the
       // pre-r21 loop did not, and is repaid by the removed double-compute
       // of the dir ∪ swapped union (one pair-lineage evaluation instead
       // of two — the lineage is usually a multi-join LSH pipeline, far
       // more expensive than one cached pass over its OUTPUT). Removing
-      // the persist to save the count would reintroduce the double
-      // lineage compute; gating on plan-statistics instead of a count
+      // the persist to save the gate would reintroduce the double
+      // lineage compute; gating on plan-statistics instead of rows
       // would save the pass only when stats exist and are trustworthy
       // (post-shuffle sizeInBytes estimates at 100 TB routinely are not).
+      //
+      // The gate is one bounded collect: at most maxLocalEdges + 1 rows
+      // reach the driver, and below the bound they are the union-find's
+      // input (a count followed by a collect read the table twice).
       val dirF = sel.persist()
       try {
-        if (dirF.count() <= maxLocalEdges) localCc(dirF)
+        val bound = math.min(maxLocalEdges, Int.MaxValue - 1L).toInt + 1
+        val head = dirF.select(col("src").cast("long"), col("dst").cast("long"))
+          .limit(bound).collect()
+        if (head.length <= maxLocalEdges) localCc(dirF, head)
         else ccLoop(dirF, "src", "dst", maxIter, checkEvery, checkpointDir)
       } finally dirF.unpersist(false)
     }
@@ -896,12 +882,11 @@ object Dedup {
     * root IS the component minimum and the labeling matches the
     * distributed loop's exactly: null endpoints and self-loop-only
     * vertices drop, every other endpoint labels with the min id reachable
-    * from it. */
-  private def localCc(dirF: DataFrame): DataFrame = {
+    * from it. `rows` are the frame's (src, dst) cast to long. */
+  private def localCc(dirF: DataFrame, rows: Array[org.apache.spark.sql.Row]): DataFrame = {
     import org.apache.spark.sql.Row
     val spark = dirF.sparkSession
     val dt = dirF.schema(0).dataType
-    val rows = dirF.select(col("src").cast("long"), col("dst").cast("long")).collect()
     val parent = new scala.collection.mutable.LongMap[Long](math.max(16, rows.length * 2))
     def find(x0: Long): Long = {
       var x = x0

@@ -196,19 +196,34 @@ object TextAnalysis {
    * native (?m), so a DuckDB/RE2 plain-(?m) replay agrees on every
    * input including bare-\r and \r\n line endings, not just on
    * corpora without them) — the engine computes all five counts in
-   * one GopherLineStats char pass. NULL text fails every rule
-   * (coalesce to false), the curation-safe default.
+   * one GopherLineStats char pass. NULL text fails every rule, the
+   * curation-safe default.
    *
-   * The whole projection is compiled — no CodegenFallback node
-   * (plan-pinned in CurationOpsSpec). The alpha-word count is the
-   * CountAlphaTokens char-loop kernel — one compiled pass, NO regex:
-   * measured (tools/CurationProbe @0fcdae9, local[32], 500k docs) 0.23 s vs 0.41 s
-   * for the interpreted per-token ArrayFilter lambda it replaced
-   * (size(filter(toks, _ rlike \p{L})), equivalence spec-pinned) and
-   * vs 0.60 s for the compiled-but-regex-bound
-   * regexp_count(\S*\p{L}\S*) single pass — codegen alone was NOT the
-   * win (the compiled regex LOST to the interpreted lambda); dropping
-   * the regex engine was.
+   * All seven rules and the conjunction come from ONE GopherRules
+   * kernel call per row: `emit=flagged` projects the struct's fields,
+   * `emit=docs` filters on its `gopher_pass` bit. One call, because
+   * Spark's `FilterExec` codegen has no subexpression elimination
+   * (`ProjectExec`'s has) and the optimizer pushes a filter on
+   * `gopher_pass` below the projection that defines it: the per-count
+   * rule tree it replaced ran `TokenStats` 13 times and
+   * `GopherLineStats` 6 times per row inside the Filter (and an
+   * upstream `text_normalize`'s `regexp_replace` 23 times when no
+   * `observe()` node sat in between). Measured with
+   * `perfbench/run.py --workload curate --seed 8 --trace 1` (4-core
+   * box): `scale.text_ms` 1462 → 227 ms per traced pass.
+   *
+   * The counts come from the char-loop kernels, no regex: the alpha-word
+   * count is the CountAlphaTokens loop — measured (tools/CurationProbe
+   * @0fcdae9, local[32], 500k docs) 0.23 s vs 0.41 s for the interpreted
+   * per-token ArrayFilter lambda it replaced (size(filter(toks, _ rlike
+   * \p{L})), equivalence spec-pinned) and vs 0.60 s for the
+   * compiled-but-regex-bound regexp_count(\S*\p{L}\S*) single pass;
+   * the five symbol/line counts are one GopherLineStats pass, where five
+   * separate scans (regexp_replace '#' strip, ellipsis regexp_count,
+   * split-\n, two (?dm) regexp_counts) each cost alone about what the
+   * whole kernel does (tools/LineRuleProbe @0fcdae9, 500k docs: composed
+   * 0.94-1.40 s vs kernel 0.32-0.57 s); the distinct-stopword count is
+   * one CountTokensInSet tokenize scan.
    */
   def gopherRules(df: DataFrame, textCol: String = "text",
                   minWords: Int = 50, maxWords: Int = 100000,
@@ -218,49 +233,23 @@ object TextAnalysis {
                   maxEllipsisRatio: Double = 0.3,
                   minAlphaRatio: Double = 0.8,
                   minStopHits: Int = 2): DataFrame = {
-    val t = col(textCol)
-    val n = tokenCount(t) // 0 for blank, null for null text
-    val meanLen = meanWordLen(t)
-    // the five symbol/line counts in ONE GopherLineStats pass — the
-    // five separate scans it replaced (regexp_replace '#' strip,
-    // ellipsis regexp_count, split-\n, two (?dm) regexp_counts) each
-    // cost alone about what the whole kernel does (tools/LineRuleProbe @0fcdae9,
-    // 500k docs: composed 0.94-1.40 s vs kernel 0.32-0.57 s, ~2.3x;
-    // equivalence pinned in CurationOpsSpec + ScalePropertySpec)
-    val ls = graft.functions.GopherLineStats.stats(t)
-    val nHash = ls.getField("n_hash")
-    val nEll = ls.getField("n_ell")
-    val nLines = ls.getField("n_lines")
-    val nBullet = ls.getField("n_bullet")
-    val nEllEnd = ls.getField("n_ell_end")
-    val nAlpha = graft.functions.CountAlphaTokens.count(t)
-    // one tokenize scan counting DISTINCT stopword hits — the split +
-    // 8-way array_contains reduce it replaced materialized the token
-    // array to scan it eight times (equivalence spec-pinned)
-    val stopHits = graft.functions.CountTokensInSet.countDistinct(
-      t, GopherStopwords)
-    def rule(c: Column): Column = coalesce(c, lit(false))
-    val rules = Seq(
-      "g_word_count" -> rule(n >= minWords && n <= maxWords),
-      "g_mean_word_len" -> rule(n > 0 &&
-        meanLen >= minMeanLen && meanLen <= maxMeanLen),
-      "g_symbol_ratio" -> rule(n > 0 &&
-        (nHash + nEll).cast("double") <= lit(maxSymbolRatio) * n),
-      "g_bullet_lines" -> rule(
-        nBullet.cast("double") <= lit(maxBulletRatio) * nLines),
-      "g_ellipsis_lines" -> rule(
-        nEllEnd.cast("double") <= lit(maxEllipsisRatio) * nLines),
-      "g_alpha_words" -> rule(n > 0 &&
-        nAlpha.cast("double") >= lit(minAlphaRatio) * n),
-      "g_stopwords" -> rule(stopHits >= minStopHits))
-    val flagged = rules.foldLeft(df) { case (d, (name, c)) =>
-      d.withColumn(name, c) }
-    flagged.withColumn("gopher_pass",
-      rules.map(r => col(r._1)).reduce(_ && _))
+    require(!df.columns.contains("__gopher"),
+      "gopher_filter: input already has a '__gopher' column")
+    val g = gopherStruct(col(textCol), minWords, maxWords, minMeanLen,
+      maxMeanLen, maxSymbolRatio, maxBulletRatio, maxEllipsisRatio,
+      minAlphaRatio, minStopHits)
+    // the struct stays its own projection: CollapseProject does not
+    // inline a non-trivial expression its consumer reads 8 times
+    val fields = graft.functions.GopherRules.fields
+    df.withColumn("__gopher", g)
+      .withColumns(scala.collection.immutable.ListMap(
+        fields.map(f => f -> col("__gopher").getField(f)): _*))
+      .drop("__gopher")
   }
 
-  /** [[gopherRules]] then keep only the passing rows, dropping the rule
-    * columns — the shape a training pipeline feeds downstream. */
+  /** [[gopherRules]]' passing rows, columns unchanged — the shape a
+    * training pipeline feeds downstream: a filter on the one kernel
+    * call's `gopher_pass` bit. */
   def gopherFilter(df: DataFrame, textCol: String = "text",
                    minWords: Int = 50, maxWords: Int = 100000,
                    minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
@@ -269,16 +258,21 @@ object TextAnalysis {
                    maxEllipsisRatio: Double = 0.3,
                    minAlphaRatio: Double = 0.8,
                    minStopHits: Int = 2): DataFrame =
-    gopherRules(df, textCol, minWords, maxWords, minMeanLen, maxMeanLen,
-      maxSymbolRatio, maxBulletRatio, maxEllipsisRatio, minAlphaRatio,
-      minStopHits)
-      .filter(col("gopher_pass"))
-      .drop("gopher_pass" +: gopherRuleColumns: _*)
+    df.filter(gopherStruct(col(textCol), minWords, maxWords, minMeanLen,
+      maxMeanLen, maxSymbolRatio, maxBulletRatio, maxEllipsisRatio,
+      minAlphaRatio, minStopHits).getField("gopher_pass"))
+
+  private def gopherStruct(t: Column, minWords: Int, maxWords: Int,
+                           minMeanLen: Double, maxMeanLen: Double,
+                           maxSymbolRatio: Double, maxBulletRatio: Double,
+                           maxEllipsisRatio: Double, minAlphaRatio: Double,
+                           minStopHits: Int): Column =
+    graft.functions.GopherRules.rules(t, GopherStopwords, minWords, maxWords,
+      minMeanLen, maxMeanLen, maxSymbolRatio, maxBulletRatio,
+      maxEllipsisRatio, minAlphaRatio, minStopHits)
 
   /** The rule-column names [[gopherRules]] appends (pass flag apart). */
-  val gopherRuleColumns: Seq[String] = Seq("g_word_count",
-    "g_mean_word_len", "g_symbol_ratio", "g_bullet_lines",
-    "g_ellipsis_lines", "g_alpha_words", "g_stopwords")
+  val gopherRuleColumns: Seq[String] = graft.functions.GopherRules.fields.init
 
   /**
    * Fraction of non-blank lines that are duplicates of another line —

@@ -98,6 +98,8 @@ class KernelsSpec extends SparkTestBase {
       CountTokensInSet.countDistinct(toks, set)),
     ("DupLineRatio.ratio", DupLineRatio.ratio(text), DupLineRatio.ratio(col("id"))),
     ("GopherLineStats.stats", GopherLineStats.stats(text), GopherLineStats.stats(text.cast("binary"))),
+    ("GopherRules.rules", GopherRules.rules(text, set, 2, 100, 1.0, 8.0, 0.5, 0.9, 0.3, 0.5, 1),
+      GopherRules.rules(toks, set, 2, 100, 1.0, 8.0, 0.5, 0.9, 0.3, 0.5, 1)),
     ("L2Normalize.normalize", L2Normalize.normalize(vec), L2Normalize.normalize(toks)),
     ("MatVecSums.sums", MatVecSums.sums(vec, weights), MatVecSums.sums(col("id"), weights)),
     ("MinHash.bandKeys", MinHash.bandKeys(col("longs"), 4, 2), MinHash.bandKeys(vec, 4, 2)),
@@ -106,6 +108,8 @@ class KernelsSpec extends SparkTestBase {
     ("QuantizeInt8.quantize", QuantizeInt8.quantize(vec), QuantizeInt8.quantize(array(lit(true)))),
     ("RemoveInSet.remove", RemoveInSet.remove(toks, set), RemoveInSet.remove(vec, set)),
     ("SimHashBlocks60.blocks", SimHashBlocks60.blocks(toks), SimHashBlocks60.blocks(text)),
+    ("SimHashBlocks60.hamming", SimHashBlocks60.hamming(col("longs"), reverse(col("longs"))),
+      SimHashBlocks60.hamming(col("longs"), vec)),
     ("TokenStats.stats", TokenStats.stats(text), TokenStats.stats(col("id"))),
     ("TopGramStats.stats", TopGramStats.stats(toks, 2), TopGramStats.stats(vec, 2)),
     ("WordShingles.shingles", WordShingles.shingles(toks, 2), WordShingles.shingles(text, 2)),

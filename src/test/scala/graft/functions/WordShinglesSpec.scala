@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkTestBase
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.scale.Dedup
 
@@ -9,12 +10,30 @@ import graft.scale.Dedup
   * off these arrays (values AND first-occurrence distinct order). */
 class WordShinglesSpec extends SparkTestBase {
 
+  /** The interpreted HOF form Dedup.wordShingles replaced: n-1 zip_with
+    * passes over shifted token arrays. */
+  private def wordShinglesHof(text: Column, n: Int): Column = {
+    val toks = split(Dedup.exactKey(text), " ")
+    val grown = (1 until n).foldLeft(toks) { (acc, k) =>
+      zip_with(acc, slice(toks, lit(k + 1), greatest(size(toks) - k, lit(0))),
+        (a, b) => concat_ws(" ", a, b))
+    }
+    array_distinct(slice(grown, lit(1), greatest(size(toks) - (n - 1), lit(1))))
+  }
+
+  /** The interpreted HOF form Dedup.shingles replaced. */
+  private def shinglesHof(text: Column, n: Int): Column = {
+    val norm = Dedup.exactKey(text)
+    val idxs = sequence(lit(1), greatest(length(norm) - (n - 1), lit(1)))
+    array_distinct(transform(idxs, i => norm.substr(i, lit(n))))
+  }
+
   test("word shingles match the HOF form over the documents fixture") {
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     for (n <- Seq(1, 3, 4)) {
       val bad = docs.select(
         Dedup.wordShingles(col("text"), n).as("a"),
-        Dedup.wordShinglesHof(col("text"), n).as("b"))
+        wordShinglesHof(col("text"), n).as("b"))
         .filter(not(col("a") <=> col("b"))).count()
       assert(bad === 0L, s"n=$n: $bad documents diverge")
     }
@@ -25,7 +44,7 @@ class WordShinglesSpec extends SparkTestBase {
     for (n <- Seq(2, 5)) {
       val bad = docs.select(
         Dedup.shingles(col("text"), n).as("a"),
-        Dedup.shinglesHof(col("text"), n).as("b"))
+        shinglesHof(col("text"), n).as("b"))
         .filter(not(col("a") <=> col("b"))).count()
       assert(bad === 0L, s"n=$n: $bad documents diverge")
     }
@@ -37,9 +56,9 @@ class WordShinglesSpec extends SparkTestBase {
       (5, null.asInstanceOf[String]), (6, "a a a a")).toDF("id", "text")
     val got = df.select(col("id"),
       Dedup.wordShingles(col("text"), 3).as("wa"),
-      Dedup.wordShinglesHof(col("text"), 3).as("wb"),
+      wordShinglesHof(col("text"), 3).as("wb"),
       Dedup.shingles(col("text"), 5).as("ca"),
-      Dedup.shinglesHof(col("text"), 5).as("cb")).orderBy(col("id")).collect()
+      shinglesHof(col("text"), 5).as("cb")).orderBy(col("id")).collect()
     got.foreach { r =>
       assert(r.isNullAt(1) === r.isNullAt(2), s"row ${r.getInt(0)} word nullness")
       assert(r.isNullAt(3) === r.isNullAt(4), s"row ${r.getInt(0)} char nullness")

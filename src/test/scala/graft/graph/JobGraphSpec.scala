@@ -400,6 +400,38 @@ class JobGraphSpec extends SparkTestBase {
       "a scoped build must not leave handles in the global OpCaches queue")
   }
 
+  test("build: a sql component leaves its fan-out input cached (untagged build)") {
+    // the reader's out port feeds the sql component and a sink, so the
+    // graph persists it; without a run tag no observe() wraps it, and the
+    // sql view IS that persisted frame — dropping the view must not
+    // uncache it, or the other sink re-runs the whole upstream
+    val in = writeCsv(tmp("sqlcache_in"), Seq(("1", "x"), ("2", "y")))
+    val json =
+      s"""{ "name": "sqlcache", "components": [
+         |  { "name": "r", "comp_type": "read_csv", "filepath": "$in",
+         |    "routes": { "out": [ { "to": "q", "in_port": "in" },
+         |                         { "to": "w2", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "q", "comp_type": "sql", "query": "SELECT a, b FROM q_in WHERE a = '1'",
+         |    "extra_input_ports": ["in"],
+         |    "in_port_schemas": { "in": $abSchema },
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "w", "comp_type": "write_csv", "filepath": "${tmp("sqlcache_w")}",
+         |    "in_port_schemas": { "in": $abSchema } },
+         |  { "name": "w2", "comp_type": "write_csv", "filepath": "${tmp("sqlcache_w2")}",
+         |    "in_port_schemas": { "in": $abSchema } }
+         |] }""".stripMargin
+    val built = JobGraph.build(spark, JobConfig.parse(json))
+    try {
+      val shared = built.frames(("r", "out"))
+      assert(built.cached.exists(_ eq shared), "the fan-out frame is the graph's persist")
+      assert(shared.storageLevel !== org.apache.spark.storage.StorageLevel.NONE,
+        "the sql component's view cleanup uncached its fan-out input")
+      assert(!spark.catalog.tableExists("q_in"), "the view is dropped")
+    } finally built.close()
+  }
+
   test("build: operator-internal persists are scoped to the job, released by close(), never global") {
     import spark.implicits._
     val in = tmp(s"opscope_in_${System.nanoTime()}")

@@ -2,6 +2,7 @@ package graft.scale
 
 import graft.SparkTestBase
 import graft.ops.RelationalOps
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Unit edges + plan shapes for the round-17 curation operators: chunk,
@@ -396,9 +397,11 @@ class CurationOpsSpec extends SparkTestBase {
 
   // ---- gopher_filter ----
 
-  test("gopherRules: each rule trips on its own pathology; null text fails all") {
+  /** One document per Gopher rule that it alone fails, one passing
+    * document and null text, by doc_id. */
+  private lazy val gopherPathologies: DataFrame = {
     val many = (1 to 60).map(i => s"word$i items").mkString(" ") // 120 tokens
-    val df = Seq(
+    Seq(
       (1L, many + " the be to of and"),              // passes everything
       (2L, "the be to of"),                          // too short
       (3L, many + " the be " + "# # # # # # # # # # # # # # #"), // symbols
@@ -408,6 +411,10 @@ class CurationOpsSpec extends SparkTestBase {
       (7L, many),                                    // no Gopher stopwords
       (8L, null)                                     // null text
     ).toDF("doc_id", "text")
+  }
+
+  test("gopherRules: each rule trips on its own pathology; null text fails all") {
+    val df = gopherPathologies
     val out = TextAnalysis.gopherRules(df)
     val byId = out.collect().map(r => r.getLong(0) -> r).toMap
     def b(id: Long, c: String) = byId(id).getAs[Boolean](c)
@@ -424,6 +431,77 @@ class CurationOpsSpec extends SparkTestBase {
     val kept = TextAnalysis.gopherFilter(df)
     assert(kept.columns.toSeq === df.columns.toSeq)
     assert(kept.select("doc_id").as[Long].collect().toSeq === Seq(1L))
+  }
+
+  /** The per-count rule tree gopherRules replaced: each rule a Column
+    * over the count kernels, coalesced to false, and their conjunction. */
+  private def gopherComposed(df: DataFrame, th: GopherTh) = {
+    val t = col("text")
+    val n = TextAnalysis.tokenCount(t)
+    val meanLen = TextAnalysis.meanWordLen(t)
+    val ls = graft.functions.GopherLineStats.stats(t)
+    val nAlpha = graft.functions.CountAlphaTokens.count(t)
+    val stopHits = graft.functions.CountTokensInSet.countDistinct(
+      t, TextAnalysis.GopherStopwords)
+    def rule(c: Column) = coalesce(c, lit(false))
+    val rules = Seq(
+      rule(n >= th.minWords && n <= th.maxWords),
+      rule(n > 0 && meanLen >= th.minMeanLen && meanLen <= th.maxMeanLen),
+      rule(n > 0 && (ls.getField("n_hash") + ls.getField("n_ell")).cast("double") <=
+        lit(th.maxSymbolRatio) * n),
+      rule(ls.getField("n_bullet").cast("double") <= lit(th.maxBulletRatio) * ls.getField("n_lines")),
+      rule(ls.getField("n_ell_end").cast("double") <= lit(th.maxEllipsisRatio) * ls.getField("n_lines")),
+      rule(n > 0 && nAlpha.cast("double") >= lit(th.minAlphaRatio) * n),
+      rule(stopHits >= th.minStopHits))
+    df.select((col("*") +: TextAnalysis.gopherRuleColumns.zip(rules).map { case (c, r) => r.as(c) } :+
+      rules.reduce(_ && _).as("gopher_pass")): _*)
+  }
+
+  private case class GopherTh(minWords: Int = 50, maxWords: Int = 100000,
+                              minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
+                              maxSymbolRatio: Double = 0.1, maxBulletRatio: Double = 0.9,
+                              maxEllipsisRatio: Double = 0.3, minAlphaRatio: Double = 0.8,
+                              minStopHits: Int = 2)
+
+  test("gopherRules' one kernel equals the per-count rule tree (pathologies + generated unicode)") {
+    import org.scalacheck.Gen
+    val word = Gen.frequency(
+      (6, Gen.oneOf("the", "be", "to", "of", "and", "that", "have", "with", "THE", "Be")),
+      (10, Gen.alphaStr.map(_.take(9))), (2, Gen.numStr.map(_.take(4))),
+      (2, Gen.oneOf("#", "...", "…", "-", "*", "•", "日本語", "Σίσυφος", "İstanbul", "😀x", "ΣΑΣ")))
+    val sep = Gen.frequency((12, Gen.const(" ")), (3, Gen.oneOf("\n", "\n- ", "\n* ", "...\n")),
+      (2, Gen.oneOf("\t", "  ", "\r\n", "\u000B", "\f", " … \n")))
+    val doc = Gen.choose(0, 120).flatMap(k => Gen.listOfN(k, Gen.zip(word, sep)))
+      .map(_.map { case (w, s) => w + s }.mkString)
+    val generated = Gen.listOfN(300, doc)
+      .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(13L)).get
+    val edges = Seq(null, "", " ", "\t\n", "the be", " the  be to of and ")
+    val texts = (edges ++ generated).toDF("text").repartition(2)
+      .union(gopherPathologies.select("text"))
+      .withColumn("id", monotonically_increasing_id())
+    val loose = GopherTh(minWords = 5, maxWords = 90, minMeanLen = 2.0, maxMeanLen = 7.5,
+      maxSymbolRatio = 0.2, maxBulletRatio = 0.2, maxEllipsisRatio = 0.1,
+      minAlphaRatio = 0.6, minStopHits = 1)
+    val odd = GopherTh(minWords = 0, maxSymbolRatio = Double.NaN,
+      maxBulletRatio = Double.PositiveInfinity, maxEllipsisRatio = -0.0,
+      minAlphaRatio = Double.NegativeInfinity, minMeanLen = Double.NaN)
+    for (th <- Seq(GopherTh(), loose, odd)) withClue(s"$th: ") {
+      val now = TextAnalysis.gopherRules(texts, "text", th.minWords, th.maxWords,
+        th.minMeanLen, th.maxMeanLen, th.maxSymbolRatio, th.maxBulletRatio,
+        th.maxEllipsisRatio, th.minAlphaRatio, th.minStopHits)
+      val old = gopherComposed(texts, th)
+      assert(now.schema === old.schema)
+      val rows = (df: DataFrame) =>
+        df.orderBy("id").collect().map(_.toString).toSeq
+      val got = rows(now)
+      assert(got === rows(old))
+      val kept = TextAnalysis.gopherFilter(texts, "text", th.minWords, th.maxWords,
+        th.minMeanLen, th.maxMeanLen, th.maxSymbolRatio, th.maxBulletRatio,
+        th.maxEllipsisRatio, th.minAlphaRatio, th.minStopHits)
+      assert(kept.schema === texts.schema)
+      assert(rows(kept) === rows(old.filter(col("gopher_pass")).select(texts.columns.map(col): _*)))
+      if (th != odd) assert(kept.count() > 0 && kept.count() < texts.count())
+    }
   }
 
   test("GopherLineStats kernel equals the five composed scans (fixture + edges)") {
