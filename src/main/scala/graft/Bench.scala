@@ -5,11 +5,25 @@ import java.nio.file.{Files, Paths}
 import graft.util.JsonStr.quote
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE machine-readable JSON line
-  * (also written to BENCH_LOCAL.json, since sbt's logger can prefix
-  * stdout). Queries run in sorted name order after a warmup pass at
-  * sf0.001 so JVM/codegen warmup doesn't land on an arbitrary query;
-  * failures are recorded per-query instead of being swallowed.
+  * SPARK_GRAFT_SF_DIR. Queries run in sorted name order after a warmup
+  * pass at sf0.001 so JVM/codegen warmup doesn't land on an arbitrary
+  * query; failures are recorded per-query instead of being swallowed.
+  *
+  * Output, in order (a reader of the log tail sees only the last ~2000
+  * characters, so the costliest detail comes last):
+  *  - `{"metric":"calibration",...}`: the median of 5 timed runs of a
+  *    seeded 1M-row `spark.range` aggregate that reads no file — a
+  *    box-speed anchor, so two runs on different boots can be compared
+  *    both raw and normalised by it;
+  *  - `{"metric":"per_query_part","part":i,"of":n,"queries":{...}}`
+  *    chunks of about 1400 characters: the per-query medians sorted by
+  *    descending median and cut into parts, so part 1 holds the
+  *    costliest queries. Parts print from n down to 1, so part 1 sits
+  *    just before the headline;
+  *  - the headline `{"metric":"total",...}`: total, counts, sf, no
+  *    per-query map.
+  * The full per-query map, the spreads and the calibration sit only in
+  * BENCH_LOCAL.json (BENCH_FILTERED.json for a name-restricted run).
   *
   * Each query is timed SPARK_GRAFT_REPS times (default 3) and reported
   * as the MEDIAN, with a per-query spread in "spread".
@@ -76,6 +90,24 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    def r4(d: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, d)
+
+    // Box-speed anchor before any query runs: a seeded aggregate over an
+    // in-memory range, so it measures CPU, codegen and shuffle, not IO.
+    // One untimed run pays the JIT; the median of 5 is the anchor.
+    def calibrate(): Double = {
+      import org.apache.spark.sql.functions.{col, rand, sum}
+      val t0 = System.nanoTime()
+      spark.range(0, 1000000, 1, cpus.toInt)
+        .select((col("id") % 1000).as("k"), rand(42).as("v"))
+        .groupBy("k").agg(sum("v")).collect()
+      (System.nanoTime() - t0) / 1e9
+    }
+    calibrate()
+    val calib = Vector.fill(5)(calibrate()).sorted
+    val calibJson =
+      s"""{"metric":"calibration","value":${r4(calib(2))},"unit":"sec","reps":5,"rows":1000000,"spread":[${r4(calib.head)},${r4(calib.last)}]}"""
+    println(calibJson)
 
     // Optional args restrict the run to the named queries (dev iteration);
     // the driver invokes with no args = full suite. A misspelled name must
@@ -160,15 +192,14 @@ object Bench {
     // The driver captures only the LAST ~2000 chars of output (BENCH_r04/
     // r05 both recorded parsed:null because the full line, with the spread
     // map, ran ~4 KB and its {"metric","value"...} head fell off the
-    // window). stdout gets a COMPACT line — 4-decimal medians, no spread —
-    // printed LAST, after spark.stop(); the full-precision detail
-    // (spreads included) goes to BENCH_LOCAL.json.
-    def r4(d: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, d)
-    // one derivation of the per-query JSON fragments, shared by the full
+    // window). stdout gets 4-decimal medians only, printed after
+    // spark.stop(); the full-precision detail (spreads included) goes to
+    // BENCH_LOCAL.json.
+    // one derivation of the per-query JSON fragments, shared by the file's
     // "queries" map and the chunked per_query_part lines below, so the
     // two can never diverge in precision or quoting
-    val qEntries = results.map { case (k, ts) => s"${quote(k)}:${r4(median(ts))}" }
-    val qs = qEntries.mkString("{", ",", "}")
+    def entry(k: String, ts: Seq[Double]): String = s"${quote(k)}:${r4(median(ts))}"
+    val qs = results.map { case (k, ts) => entry(k, ts) }.mkString("{", ",", "}")
     val spread = results
       .map { case (k, ts) =>
         val (lo, hi) = spreadOf(ts); s"${quote(k)}:[$lo,$hi]" }
@@ -192,48 +223,35 @@ object Bench {
     val partial =
       if (errors.nonEmpty) s""","partial":true,"n_timed":${results.size}"""
       else ""
-    val json =
-      s"""{"metric":"total","value":${totalRounded.underlying.toPlainString},"unit":"sec","queries":$qs,"reps":$reps,"reps_slow":$repsSlow,"errors":$errJson,"n_queries":${sorted.size},"n_errors":${errors.size}$partial,"sf":${quote(sfDir)}}"""
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"reps":$reps,"reps_slow":$repsSlow,"errors":$errJson,"n_queries":${sorted.size},"n_errors":${errors.size}$partial,"sf":${quote(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"reps":$reps,"reps_slow":$repsSlow,"errors":$errJson,"n_queries":${sorted.size},"n_errors":${errors.size}$partial,"sf":${quote(sfDir)},"calibration":$calibJson}"""
     // A filtered dev run must not clobber the full-suite artifact the
     // driver and the round notes read (a 1-query rerun once overwrote the
     // 88-query BENCH_LOCAL.json): name-restricted runs write elsewhere.
     val outName = if (args.isEmpty) "BENCH_LOCAL.json" else "BENCH_FILTERED.json"
     Files.writeString(Paths.get(outName), detail + "\n")
     spark.stop()
-    // The per-query line grows with the suite (~25 chars/query: at 85
-    // queries it exceeds the driver's ~2000-char log-tail window, and
-    // BENCH_r11 recorded parsed:null). A SHORT headline — total, counts,
-    // sf, no per-query map — brackets the full line on BOTH sides, so a
-    // tail window anchored anywhere still contains one complete
-    // parseable JSON object; per-query detail always lives in
-    // BENCH_LOCAL.json.
+    // A SHORT headline — total, counts, sf, no per-query map — printed
+    // last, so the log tail always ends in one complete parseable JSON
+    // object; its format is fixed, readers parse it.
     val headline =
       s"""{"metric":"total","value":${totalRounded.underlying.toPlainString},"unit":"sec","reps":$reps,"n_queries":${sorted.size},"n_errors":${errors.size}$partial,"sf":${quote(sfDir)}}"""
-    println(headline)
-    println(json)
-    // r22: the full per-query line above outgrew the driver's log-tail
-    // window at ~85 queries (PERF_r21 recorded per_query:{} / n_common:0 —
-    // the round-over-round per-query comparison went blind). ADDITIONALLY
-    // emit the per-query map as chunked lines of <= ~1500 chars each:
-    //   {"metric":"per_query_part","part":i,"of":n,"queries":{...}}
-    // so a consumer reading any contiguous window of the log can
-    // reassemble (or at least partially compare) the map from complete
-    // JSON objects. The existing headline/total lines are byte-identical
-    // to r21 (additions only) and stay the authoritative totals;
-    // BENCH_LOCAL.json keeps the full-precision detail.
+    // The per-query map as chunks of <= ~1400 chars (the full map outgrew
+    // a ~2000-char log tail at ~85 queries), cut in descending
+    // median order and printed last part first, so the part holding the
+    // costliest queries lands next to the headline inside the tail.
     val chunks = scala.collection.mutable.ArrayBuffer[Seq[String]]()
     var cur = scala.collection.mutable.ArrayBuffer[String]()
     var curLen = 0
-    qEntries.foreach { e =>
+    val byCost = results.sortBy { case (k, ts) => (-median(ts), k) }
+    byCost.map { case (k, ts) => entry(k, ts) }.foreach { e =>
       if (curLen + e.length + 1 > 1400 && cur.nonEmpty) {
         chunks += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer[String](); curLen = 0
       }
       cur += e; curLen += e.length + 1
     }
     if (cur.nonEmpty) chunks += cur.toSeq
-    chunks.zipWithIndex.foreach { case (c, i) =>
+    chunks.zipWithIndex.reverse.foreach { case (c, i) =>
       println(s"""{"metric":"per_query_part","part":${i + 1},"of":${chunks.size},"queries":${c.mkString("{", ",", "}")}}""")
     }
     println(headline)

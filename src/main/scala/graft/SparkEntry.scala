@@ -16,8 +16,13 @@ import graft.schema.FieldDef
  * the semantics are SQL-expressible. Column names are aligned 1:1 between
  * the Spark result and the oracle (the driver sorts columns by name and
  * hashes values). The declarative gate queries are data: job files under
- * the `gate/<query>/` resource directory, run by `corpus`. Each query's
- * oracle SQL is the resource `oracle/<query>.sql`.
+ * the `gate/<query>/` resource directory, run by `corpus`. A query in
+ * `twinQueries` runs another query's directory, because that job already
+ * gives its answer; it keeps its own name, result and oracle. The Scala
+ * functions left are the queries no job directory answers: operators or
+ * strategies no comp_type reaches, and roundtrips whose job twins take
+ * the append write path. Each query's oracle SQL is the resource
+ * `oracle/<query>.sql`.
  *
  * Float discipline: double *sums* are made exact by summing integer cents
  * (the synthetic money columns carry 2 decimals; discount products carry 4),
@@ -159,26 +164,6 @@ object SparkEntry {
         col("n_rows"))
       .orderBy(col("o_orderstatus"))
 
-  /** Same aggregate through the two-phase salted path (scale/Skew.scala) —
-    * the 100 TB hot-key shape. Exactness: the money sum goes through
-    * integer cents so the extra merge step cannot reorder float adds. */
-  private def qAggSalted(s: SparkSession, dir: String): DataFrame = {
-    import AggregateOp.AggSpec
-    val base = table(s, dir, "lineitem")
-      .withColumn("qty_c", round(col("l_quantity") * 100).cast("long"))
-    Skew.saltedAggregate(base, Seq("l_returnflag"),
-      Seq(
-        AggSpec("*", "count", "n_rows"),
-        AggSpec("qty_c", "sum", "qty_cents"),
-        AggSpec("l_extendedprice", "min", "min_price"),
-        AggSpec("l_extendedprice", "max", "max_price")),
-      saltFactor = 8)
-      .select(col("l_returnflag"), col("n_rows"),
-        (col("qty_cents") / 100.0).as("sum_qty"),
-        col("min_price"), col("max_price"))
-      .orderBy(col("l_returnflag"))
-  }
-
   /** Rollup grouping through AggregateOp's grouping-set face
     * (beyond-reference: SURVEY §2.4 lists grouping sets as absent).
     * Cents technique keeps the money sum bit-exact; subtotal rows carry
@@ -229,33 +214,6 @@ object SparkEntry {
       .orderBy(col("o_orderpriority"))
   }
 
-  /** Unpivot/melt (beyond-reference): lineitem's quantity/price/discount
-    * measures become (measure, value_cents) rows — aggregated per measure
-    * so the gate row count stays bounded while every melted cell still
-    * feeds the checksum. */
-  private def qUnpivot(s: SparkSession, dir: String): DataFrame =
-    graft.ops.RelationalOps.unpivot(
-      table(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-        round(col("l_quantity") * 100).cast("long").as("quantity"),
-        round(col("l_extendedprice") * 100).cast("long").as("extendedprice"),
-        round(col("l_discount") * 100).cast("long").as("discount")),
-      ids = Seq("l_orderkey", "l_linenumber"),
-      valueCols = Seq("quantity", "extendedprice", "discount"),
-      varName = "measure", valueName = "cents")
-      .groupBy(col("measure"))
-      .agg(count(lit(1)).as("n_cells"), sum(col("cents")).as("sum_cents"))
-      .orderBy(col("measure"))
-
-  /** Column profile over orders (scale/Profile.scala): exact
-    * count/nulls/distinct/min/max per column in one scan — the
-    * data-validation pass before training-data ingest. */
-  private def qProfile(s: SparkSession, dir: String): DataFrame =
-    graft.scale.Profile.profile(
-      table(s, dir, "orders"),
-      Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus",
-        "o_orderpriority"))
-      .orderBy(col("col_name"))
-
   // -------------------------------------------------- schema mapping / join
 
   private def qProjectRename(s: SparkSession, dir: String): DataFrame = {
@@ -303,18 +261,6 @@ object SparkEntry {
         .as("revenue"),
         count(lit(1)).as("n_rows"))
       .orderBy(col("c_mktsegment"))
-  }
-
-  private def qJoinLeftNulls(s: SparkSession, dir: String): DataFrame = {
-    import SchemaMappingOp.JoinStep
-    val joined = SchemaMappingOp.joinMode(
-      Map("customer" -> table(s, dir, "customer"),
-        "orders" -> table(s, dir, "orders")),
-      Seq(JoinStep("customer", "orders", Seq("c_custkey"), Seq("o_custkey"),
-        "left", "out")))("out")
-    joined.groupBy(col("c_custkey"))
-      .agg(count(col("o_orderkey")).as("n_orders"), count(lit(1)).as("n_rows"))
-      .orderBy(col("c_custkey"))
   }
 
   /** Anti join through the joinMode vocabulary (beyond-reference how:
@@ -434,19 +380,6 @@ object SparkEntry {
       .orderBy(col("o_custkey"), col("o_orderpriority"))
   }
 
-  /** EXCEPT ALL — multiset difference: each pair keeps
-    * max(0, left multiplicity − right multiplicity) copies. */
-  private def qSetExceptAll(s: SparkSession, dir: String): DataFrame = {
-    val o = table(s, dir, "orders")
-    RelationalOps.setOp(
-      o.filter(col("o_orderstatus") === "F")
-        .select(col("o_custkey"), col("o_orderpriority")),
-      o.filter(col("o_totalprice") > 50000)
-        .select(col("o_custkey"), col("o_orderpriority")),
-      "except_all")
-      .orderBy(col("o_custkey"), col("o_orderpriority"))
-  }
-
   /** UNION (distinct) — the last un-oracled member of the set_op enum:
     * dedup'd by-name union of both sides. */
   private def qSetUnion(s: SparkSession, dir: String): DataFrame = {
@@ -470,39 +403,7 @@ object SparkEntry {
       .orderBy(col("l_returnflag"))
   }
 
-  // ---------------------------------------------- sort/skip/limit (find-like)
-
-  private def qSortLimit(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.findLike(table(s, dir, "events"),
-      filter = Some(col("value") > 100),
-      sort = Seq(("value", -1), ("event_id", 1)),
-      skip = 10,
-      limit = Some(20),
-      projection = Seq("event_id", "user_id", "value"))
-
-  private def qWindowTopN(s: SparkSession, dir: String): DataFrame =
-    WindowOp(table(s, dir, "orders"), Seq("o_orderpriority"),
-      Seq(("o_totalprice", -1), ("o_orderkey", 1)),
-      Seq(WindowOp.WinFn("row_number", None, 1, "rank")))
-      .filter(col("rank") <= 3)
-      .select(col("o_orderpriority"), col("rank"), col("o_orderkey"), col("o_totalprice"))
-      .orderBy(col("o_orderpriority"), col("rank"))
-
-  /** lag + running sum per user (WindowOp's offset/ordered-aggregate
-    * faces; q_window_topn covers the rank face): integer cents keep the
-    * running sum dtype-exact, the unique event_id order makes the SQL
-    * default frame (peers included) coincide with ROWS, and the top-5
-    * cut bounds the gate's output. */
-  private def qWindowLag(s: SparkSession, dir: String): DataFrame =
-    WindowOp(table(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          round(col("value") * 100).cast("long").as("cents")),
-      Seq("user_id"), Seq(("event_id", 1)),
-      Seq(WindowOp.WinFn("lag", Some("cents"), 1, "prev_cents"),
-        WindowOp.WinFn("sum", Some("cents"), 1, "run_cents"),
-        WindowOp.WinFn("row_number", None, 1, "n_th")))
-      .filter(col("n_th") <= 5)
-      .orderBy(col("user_id"), col("n_th"))
+  // ---------------------------------------------------------------- window
 
   /** lead + first_value + dense_rank per user — the remaining WindowOp
     * function faces (q_window_topn: rank family; q_window_lag:
@@ -519,41 +420,6 @@ object SparkEntry {
         WindowOp.WinFn("dense_rank", None, 0, "n_th")))
       .filter(col("n_th") <= 5)
       .orderBy(col("user_id"), col("n_th"))
-
-  /** Trailing ROWS-frame aggregates (WinFn.frameRows): 3-row moving
-    * sum + count per user under the unique event_id order — the
-    * moving-average shape. The average itself is derived OUTSIDE the
-    * window as one exact long/long double division, so both engines
-    * produce the identical IEEE double (avg() inside the frame could
-    * accumulate differently per engine). */
-  private def qWindowRolling(s: SparkSession, dir: String): DataFrame =
-    WindowOp(table(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          round(col("value") * 100).cast("long").as("cents")),
-      Seq("user_id"), Seq(("event_id", 1)),
-      Seq(WindowOp.WinFn("sum", Some("cents"), 1, "roll_cents", Some(3)),
-        WindowOp.WinFn("count", Some("cents"), 1, "roll_n", Some(3)),
-        WindowOp.WinFn("row_number", None, 1, "n_th")))
-      .filter(col("n_th") <= 6)
-      .withColumn("roll_avg", col("roll_cents").cast("double") / col("roll_n"))
-      .orderBy(col("user_id"), col("n_th"))
-
-  /** The percentile/bucketing rank faces (percent_rank / cume_dist /
-    * ntile): per-language document quality curation — rank by n_chars
-    * desc (unique doc_id tiebreak, so no peer ties), keep the top half
-    * by percent_rank, tag each row's quartile bucket. Both engines
-    * compute the same (rank-1)/(n-1) double from the same integer rank,
-    * so the floats replay bit-exactly. */
-  private def qWindowPctile(s: SparkSession, dir: String): DataFrame =
-    WindowOp(table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars")),
-      Seq("lang"), Seq(("n_chars", -1), ("doc_id", 1)),
-      Seq(WindowOp.WinFn("percent_rank", None, 0, "pct"),
-        WindowOp.WinFn("cume_dist", None, 0, "cd"),
-        WindowOp.WinFn("ntile", None, 4, "bucket")))
-      .withColumn("bucket", col("bucket").cast("long"))
-      .filter(col("pct") <= 0.5)
-      .orderBy(col("doc_id"))
 
   /** Tumbling-window event aggregation (batch parity of the streaming path). */
   private def qEventsWindow(s: SparkSession, dir: String): DataFrame =
@@ -823,25 +689,6 @@ object SparkEntry {
       .orderBy(col("doc_id"))
   }
 
-  /** The Gopher QUALITY rules (TextAnalysis.gopherRules): every 3rd
-    * doc gets bullet lines, every 5th an ellipsis-ended line, every
-    * 7th a symbol burst, so each rule flips on a known stratum; the
-    * fixture's own 10-99-token spread exercises the word-count bound
-    * and its de/es/fr/zh docs the English-stopword rule. Boolean-only
-    * output — the ratios never leave the engine (dtype discipline). */
-  private def qGopher(s: SparkSession, dir: String): DataFrame = {
-    val seeded = table(s, dir, "documents")
-      .select(col("doc_id"), concat_ws("\n", col("text"),
-        when(col("doc_id") % 3 === 0,
-          lit("- bullet one\n- bullet two\n- bullet three")),
-        when(col("doc_id") % 5 === 0, lit("to be continued...")),
-        when(col("doc_id") % 7 === 0, lit("### ## # ####"))).as("text"))
-    TextAnalysis.gopherRules(seeded)
-      .select(col("doc_id") +:
-        (TextAnalysis.gopherRuleColumns :+ "gopher_pass").map(col): _*)
-      .orderBy(col("doc_id"))
-  }
-
   /** Exact top-50 vocabulary over documents (TextAnalysis.topTokens):
     * distributed top-k via TakeOrderedAndProject, deterministic
     * (count desc, token asc) tiebreak so the k-th boundary is stable
@@ -873,27 +720,6 @@ object SparkEntry {
       .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
       .groupBy(col("lang_pred")).agg(count(lit(1)).as("n_docs"))
       .orderBy(col("lang_pred"))
-
-  /** Gopher-style repetition signals (TextAnalysis.repetitionStats):
-    * duplicate-line fraction, most-frequent word bigram and its
-    * character fraction, duplicated-bigram position fraction — all
-    * narrow maps (the gram counting is the codegen'd TopGramStats
-    * per-row hash pass, no explode/shuffle). The fixture is single-line,
-    * so the query SEEDS deterministic line structure from doc_id —
-    * identically in the oracle — making the line rule actually bite:
-    * doc_id % 3 == 0 docs gain a duplicated line, the rest a unique
-    * one. */
-  private def qTextRepetition(s: SparkSession, dir: String): DataFrame = {
-    val seeded = table(s, dir, "documents")
-      .withColumn("text", when(col("doc_id") % 3 === 0,
-        concat(col("text"), lit("\nrepeat line\nrepeat line")))
-        .otherwise(concat(col("text"), lit("\nrepeat line\nunique "),
-          col("doc_id").cast("string"))))
-    TextAnalysis.repetitionStats(seeded, "text", n = 2)
-      .select(col("doc_id"), col("dup_line_ratio"), col("top_gram"),
-        col("top_gram_ratio"), col("dup_gram_ratio"))
-      .orderBy(col("doc_id"))
-  }
 
   /** Benchmark decontamination (scale/Decontaminate): docs with
     * doc_id % 41 == 0 play the eval set, the rest the corpus; a corpus
@@ -941,14 +767,6 @@ object SparkEntry {
 
   // ------------------------------------------------------------- similarity
 
-  private def qSimKnn(s: SparkSession, dir: String): DataFrame = {
-    val emb = table(s, dir, "embeddings")
-    Similarity.knnJoin(emb, emb.filter(col("vec_id") < 3), "embedding",
-      "vec_id", "vec_id", k = 5)
-      .select(col("query_id"), col("rank"), col("corpus_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
   private def qSimIvf(s: SparkSession, dir: String): DataFrame = {
     val emb = table(s, dir, "embeddings")
     // deterministic centroids: the first 8 vectors; query: vector 0.
@@ -961,48 +779,6 @@ object SparkEntry {
       k = 10, nprobe = 3)
   }
 
-  /** Token-budget sampling (RelationalOps.budgetSample): per language,
-    * documents survive in deterministic md5("mix:"+doc_id) order while
-    * the running n_chars total stays <= 20000 — the data-mixing
-    * "N tokens per source" primitive. One hash exchange on the mixing
-    * key + in-partition sort; the oracle replays the identical md5
-    * arithmetic and SQL-default-frame running sum in DuckDB. */
-  private def qBudgetSample(s: SparkSession, dir: String): DataFrame =
-    graft.ops.RelationalOps.budgetSample(
-      table(s, dir, "documents").select(col("doc_id"), col("lang"),
-        col("n_chars")),
-      idCol = "doc_id", costCol = "n_chars", budget = 20000L,
-      by = Seq("lang"), seed = "mix")
-      .orderBy(col("doc_id"))
-
-  /** Mixture sampling (RelationalOps.mixSample): compose a 40000-char
-    * budget as 50% en / 20% de / 20% fr / 10% es — zh is unlisted and
-    * drops before the exchange. Each language keeps its deterministic
-    * md5("m17:"+doc_id)-order prefix under the floored share; the
-    * oracle replays the shares as literals and the same md5 running
-    * sum in DuckDB. */
-  private def qMixSample(s: SparkSession, dir: String): DataFrame =
-    graft.ops.RelationalOps.mixSample(
-      table(s, dir, "documents").select(col("doc_id"), col("lang"),
-        col("n_chars")),
-      idCol = "doc_id", costCol = "n_chars", totalBudget = 40000L,
-      sourceCol = "lang",
-      weights = Seq("de" -> 0.2, "en" -> 0.5, "es" -> 0.1, "fr" -> 0.2),
-      seed = "m17")
-      .orderBy(col("doc_id"))
-
-  /** Per-source quality cap (RelationalOps.groupCap, explicit order):
-    * keep the 8 longest docs per source, doc_id tiebreak — the
-    * "at most N docs per domain" dominance guard. The rule is plain
-    * row_number() SQL, so the oracle replays it directly. */
-  private def qGroupCap(s: SparkSession, dir: String): DataFrame =
-    graft.ops.RelationalOps.groupCap(
-      table(s, dir, "documents").select(col("doc_id"), col("source"),
-        col("n_chars")),
-      idCol = "doc_id", cap = 8, by = Seq("source"),
-      orderBy = Seq(("n_chars", -1)))
-      .orderBy(col("doc_id"))
-
   /** The seeded-uniform face of groupCap (empty order_by): 10 docs per
     * lang ranked by md5("quota:" ++ doc_id) — both engines hash the
     * identical string, so the kept subset replays bit-exactly. */
@@ -1011,31 +787,6 @@ object SparkEntry {
       table(s, dir, "documents").select(col("doc_id"), col("lang")),
       idCol = "doc_id", cap = 10, by = Seq("lang"), seed = "quota")
       .orderBy(col("doc_id"))
-
-  /** Fixed-width histogram (Profile.histogram) of events.value over
-    * [0, 500) in 20 buckets: plain IEEE floor/clamp arithmetic both
-    * engines reproduce bit-exactly; bucket edges derive from the same
-    * bucket * width product. */
-  private def qHistogram(s: SparkSession, dir: String): DataFrame =
-    graft.scale.Profile.histogram(table(s, dir, "events"), "value",
-      buckets = 20, lo = 0.0, hi = 500.0)
-
-  /** Typed JSON-path extraction (RelationalOps.jsonExtract) over the
-    * events `props` blob: k lands as a long, a missing path as an
-    * all-null string (count pins the null contract), the raw blob is
-    * dropped. Both engines parse the same JSON and cast the same
-    * digits, so the group-by replays bit-exactly. */
-  private def qJsonExtract(s: SparkSession, dir: String): DataFrame =
-    graft.ops.RelationalOps.jsonExtract(
-      table(s, dir, "events").select(col("event_id"), col("props")),
-      "props",
-      Seq(("k", "k", "integer"), ("missing", "m_str", "string")),
-      keepSource = false)
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("event_id")).as("sum_ids"),
-        count(col("m_str")).as("n_missing"))
-      .orderBy(col("k"))
 
   /** Range join (ops/RangeJoin.scala): clicks inside the 1-hour window
     * after any same-user purchase — one-to-many interval containment,
@@ -1182,57 +933,6 @@ object SparkEntry {
           lit(0L), (a, x) => a + x).as("feature_checksum"))
       .orderBy(col("media_id"))
 
-  /** Context-window chunking (TextAnalysis.chunk): documents fan out
-    * into 200-char chunks with 50-char overlap (stride 150). The chunk
-    * grid is plain 1-based-substring arithmetic both engines replay
-    * bit-exactly; keep_text default drops the source text. */
-  private def qChunk(s: SparkSession, dir: String): DataFrame =
-    graft.scale.TextAnalysis.chunk(
-      table(s, dir, "documents").select(col("doc_id"), col("text")),
-      "text", size = 200, overlap = 50)
-      .orderBy(col("doc_id"), col("chunk_index"))
-
-  /** Seeded accent/punct mutation (q_job_text_normalize's stage job
-    * applies the same rule in SQL): every 4th document gets a prefix with uppercase accents, an
-    * em-dash, and punctuation, so all four normalize steps have work.
-    * The corpus text itself is ASCII (checked at gate design time) —
-    * the unicode surface under test is this fixed literal, identical
-    * on both engines. */
-  private def normalizeSeed(text: Column, docId: Column): Column =
-    when(docId % 4 === 0, concat(lit("ÀBÇ déf—Ghi!? "), text)).otherwise(text)
-
-  /** Full-pipeline text normalization (TextAnalysis.normalizeText with
-    * every step on): lowercase → accent-fold → punct-strip → whitespace
-    * squeeze → trim. */
-  private def qTextNormalize(s: SparkSession, dir: String): DataFrame = {
-    val docs = table(s, dir, "documents").select(col("doc_id"),
-      normalizeSeed(col("text"), col("doc_id")).as("text"))
-    graft.scale.TextAnalysis.normalizeText(docs, "text",
-      accentFold = true, stripPunct = true)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Seeded URL synthesis (q_job_url_features's stage job applies the
-    * same rule in SQL): plain https URLs, every 7th doc a userinfo+port+query variant, every
-    * 11th a non-URL (all-null features). Identical string concat on
-    * both engines. */
-  private def urlSeed(docId: Column, source: Column): Column =
-    when(docId % 11 === 0, lit("not a url"))
-      .when(docId % 7 === 0, concat(lit("http://user@"), source,
-        lit(".example.org:8080/a/b?q="), docId.cast("string")))
-      .otherwise(concat(lit("https://"), source, lit(".example.org/docs/"),
-        docId.cast("string")))
-
-  /** URL decomposition (TextAnalysis.urlFeatures): scheme/host/domain/
-    * path over the seeded URL mix — userinfo/port strip, the two-label
-    * domain heuristic, and the all-null non-URL contract. */
-  private def qUrlFeatures(s: SparkSession, dir: String): DataFrame = {
-    val docs = table(s, dir, "documents").select(col("doc_id"),
-      urlSeed(col("doc_id"), col("source")).as("url"))
-    graft.scale.TextAnalysis.urlFeatures(docs, "url")
-      .orderBy(col("doc_id"))
-  }
-
   /** Global z-score outlier gate (Profile.outlierFilter): keep events
     * whose value sits within 3 stddev of the mean. Gate-design check:
     * the minimum |‖v−mean‖ − 3σ| boundary distance is 0.15 at sf0.01
@@ -1255,18 +955,6 @@ object SparkEntry {
       "n_chars", "iqr", k = 1.5, by = Seq("source"))
       .orderBy(col("doc_id"))
 
-  /** Contiguous-fill packing (RelationalOps.packUnits): documents into
-    * ~5000-char units per language, md5("pk:"+doc_id) layout order —
-    * the identical md5 string and RANGE-frame running sum replay in
-    * DuckDB, and the floor division is exact far below 2^53. */
-  private def qPackUnits(s: SparkSession, dir: String): DataFrame =
-    graft.ops.RelationalOps.packUnits(
-      table(s, dir, "documents").select(col("doc_id"), col("lang"),
-        col("n_chars")),
-      idCol = "doc_id", costCol = "n_chars", capacity = 5000L,
-      by = Seq("lang"), seed = "pk")
-      .orderBy(col("doc_id"))
-
   /** L2 normalization (Similarity.l2NormalizeVectors): the embeddings
     * table is pre-normalized, so the gate first scales each vector by
     * (vec_id % 5 + 1) to make the math non-trivial, then pins the norm
@@ -1286,97 +974,12 @@ object SparkEntry {
       .orderBy(col("vec_id"))
   }
 
-  /** Symmetric int8 quantization (Similarity.quantizeVectorsInt8):
-    * per-row scale = max|v|/127, bytes pinned through their exact sum
-    * and min/max (integer arithmetic — no float compare at all on the
-    * quantized values; HALF_UP rounding matches DuckDB's round). */
-  private def qVecQuantize(s: SparkSession, dir: String): DataFrame =
-    graft.scale.Similarity.quantizeVectorsInt8(
-      table(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
-      "embedding")
-      .select(col("vec_id"),
-        round(col("vec_scale"), 6).as("vec_scale"),
-        aggregate(col("vec_q8"), lit(0L), (a, x) => a + x).as("q_sum"),
-        array_min(col("vec_q8")).cast("long").as("q_min"),
-        array_max(col("vec_q8")).cast("long").as("q_max"))
-      .orderBy(col("vec_id"))
-
-  /** Quality-aware exact-dedup winner (Dedup.exact keepBy): the corpus
-    * has no natural exact duplicates (checked at gate design time), so
-    * the gate seeds them — every document gets a case/whitespace
-    * variant at doc_id+10000 with quality+50 (same normalized key,
-    * different bytes and score). keep_by [[quality,-1]] must pick every
-    * variant over its original; the oracle replays the UNION ALL and
-    * the row_number rule directly. */
-  private def qDedupKeepBest(s: SparkSession, dir: String): DataFrame = {
-    val both = dedupKeepBestInput(s, dir)
-    Dedup.exact(both, "text", "doc_id", keepBy = Seq(("quality", -1)))
-      .select(col("doc_id"), col("quality"))
-      .orderBy(col("doc_id"))
-  }
-
-  private def dedupKeepBestInput(s: SparkSession, dir: String): DataFrame = {
-    val base = table(s, dir, "documents")
-      .select(col("doc_id"), col("text"), col("n_chars"))
-    base.select(col("doc_id"), col("text"), col("n_chars").as("quality"))
-      .unionAll(base.select((col("doc_id") + 10000).as("doc_id"),
-        concat(lit("  "), upper(col("text")), lit(" ")).as("text"),
-        (col("n_chars") + 50).as("quality")))
-  }
-
-  /** Per-row weighted sampling (RelationalOps.hashSampleWeighted):
-    * rate = n_chars/300 (clamps above 1 for long docs — the clamp
-    * contract is ON the gate path), NULL rate every 13th doc (the
-    * null-drop contract likewise). The bucket is the identical
-    * md5("w17:"+id) arithmetic as the fixed-rate sample gates; the
-    * threshold round replays exactly (same double in, same HALF_UP). */
-  private def qSampleWeighted(s: SparkSession, dir: String): DataFrame = {
-    val staged = table(s, dir, "documents")
-      .select(col("doc_id"), col("lang"), col("n_chars"),
-        when(col("doc_id") % 13 === 0, lit(null).cast("double"))
-          .otherwise(col("n_chars") / lit(300.0)).as("rate"))
-    graft.ops.RelationalOps.hashSampleWeighted(staged, "doc_id", "rate",
-      seed = "w17")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Byte-entropy quality signal (TextAnalysis.charEntropy — the
-    * codegen'd CharEntropy kernel): every 9th doc becomes a repeated
-    * "ab" pad (entropy exactly 1.0), every 17th an empty string (0.0),
-    * the rest keep their prose (~4 bits/byte). The corpus is ASCII
-    * (checked at gate design time), so DuckDB's per-character frequency
-    * replay equals the byte histogram; both engines round to 6 (the
-    * fold order differs across engines only in float round-off). */
-  private def qTextEntropy(s: SparkSession, dir: String): DataFrame = {
-    val seeded = table(s, dir, "documents").select(col("doc_id"),
-      when(col("doc_id") % 9 === 0, lit("ab" * 50))
-        .when(col("doc_id") % 17 === 0, lit(""))
-        .otherwise(col("text")).as("text"))
-    seeded.select(col("doc_id"),
-      round(graft.scale.TextAnalysis.charEntropy(col("text")), 6)
-        .as("char_entropy"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Incremental exact dedup (Dedup.exactAgainst): the reference is a
-    * case/whitespace VARIANT of every 3rd document (same normalized
-    * key, different bytes — proving the key rule, not byte equality),
-    * so exactly the docs with doc_id % 3 != 0 survive. */
-  private def qDedupAgainst(s: SparkSession, dir: String): DataFrame = {
-    val docs = table(s, dir, "documents")
-      .select(col("doc_id"), col("text"), col("n_chars"))
-    val ref = docs.filter(col("doc_id") % 3 === 0)
-      .select(concat(lit("  "), upper(col("text")), lit(" ")).as("text"))
-    Dedup.exactAgainst(docs, ref, "text")
-      .select(col("doc_id"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** The bloom strategy of the same drop (Dedup.exactAgainstBloom):
-    * bloom negatives skip the exchange, candidates pay the exact join —
-    * identical survivors by construction, checked against the identical
-    * oracle. */
+  /** The bloom strategy of q_dedup_against's drop
+    * (Dedup.exactAgainstBloom): the reference is a case/whitespace
+    * variant of every 3rd document, so exactly the docs with
+    * doc_id % 3 != 0 survive. Bloom negatives skip the exchange,
+    * candidates pay the exact join — identical survivors by
+    * construction, checked against the identical oracle. */
   private def qDedupAgainstBloom(s: SparkSession, dir: String): DataFrame = {
     val docs = table(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("n_chars"))
@@ -1387,27 +990,13 @@ object SparkEntry {
       .orderBy(col("doc_id"))
   }
 
-  /** Corpus-level duplicate-line removal (Dedup.lineDedup): every doc
-    * gets a newsletter line appended and every 4th a licence footer —
-    * byte-exact cross-document repeats, the boilerplate shape — so
-    * both seeded lines (plus any naturally repeated fixture lines) are
-    * hot at max_docs=1 and get stripped, while each doc's own prose
-    * survives. concat_ws skips the null CASE arm on both engines. */
-  private def qLineDedup(s: SparkSession, dir: String): DataFrame = {
-    val seeded = table(s, dir, "documents")
-      .select(col("doc_id"),
-        concat_ws("\n", col("text"), lit("Subscribe to our newsletter"),
-          when(col("doc_id") % 4 === 0,
-            lit("(c) example.com all rights reserved"))).as("text"),
-        col("lang"))
-    Dedup.lineDedup(seeded, "text", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** The strategy=set narrow rewrite of the same strip
-    * (Dedup.lineDedupSet): hot set collected once, remove_in_set →
-    * array_join as one codegen'd projection — identical survivors,
-    * checked against the identical oracle. */
+  /** The strategy=set narrow rewrite of q_line_dedup's strip
+    * (Dedup.lineDedupSet): every doc gets a newsletter line appended and
+    * every 4th a licence footer, so both are hot at max_docs=1. The hot
+    * set is collected once, remove_in_set → array_join runs as one
+    * codegen'd projection — identical survivors, checked against the
+    * identical oracle. concat_ws skips the null CASE arm on both
+    * engines. */
   private def qLineDedupSet(s: SparkSession, dir: String): DataFrame = {
     val seeded = table(s, dir, "documents")
       .select(col("doc_id"),
@@ -1419,8 +1008,8 @@ object SparkEntry {
       .orderBy(col("doc_id"))
   }
 
-  /** The audit face (Dedup.hotLineReport, emit=hot): the hot lines the
-    * same seeding produces, with distinct-doc counts — the newsletter
+  /** The audit face (Dedup.hotLineReport, emit=hot): the hot lines
+    * q_line_dedup's seeding produces, with distinct-doc counts — the newsletter
     * line in every doc, the licence footer in every 4th, plus any
     * naturally duplicated fixture texts. */
   private def qLineDedupHot(s: SparkSession, dir: String): DataFrame = {
@@ -1449,30 +1038,26 @@ object SparkEntry {
       .orderBy(col("doc_id"))
   }
 
-  /** Top-40 corpus bigrams (TextAnalysis.topGrams n=2): every gram
-    * position counted from the lowercase \s+ tokenization — the
-    * boilerplate-detection stat. Deterministic (count desc, gram asc)
-    * boundary on both engines. */
-  private def qTextTopkGrams(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.topGrams(table(s, dir, "documents"), "text", k = 40, n = 2)
-
   // ------------------------------------------------------------ job corpus
 
-  /** Run one declarative gate query: its `gate/<query>/NN-<step>.json`
+  /** Run one declarative gate query: the `gate/<gate>/NN-<step>.json`
     * resources, in name order, with `__DIR__` bound to the sf directory
     * and `__TMP__` to the query's own scratch directory, which is
     * deleted first so every run (each bench rep) starts clean. Staging
     * is a job like any other, placed first; the result is the readback
     * of the last job's single sink. Row order is not part of a result:
-    * the oracle compare sorts rows and columns. */
-  private def corpus(query: String)(s: SparkSession, dir: String): DataFrame = {
+    * the oracle compare sorts rows and columns. The scratch directory is
+    * named after `query`, not `gate`: a twin query runs its twin's
+    * directory, and the readback is lazy, so sharing the scratch would
+    * let one query's run delete the other's result. */
+  private def corpus(gate: String, query: String)(s: SparkSession, dir: String): DataFrame = {
     val tmp = s"$tmpRoot/$query"
     deleteTree(java.nio.file.Paths.get(tmp))
     nanosAsLong(s) // staging jobs read events.parquet as table() would
-    stagingHooks.get(query).foreach(_(s, dir, tmp))
+    stagingHooks.get(gate).foreach(_(s, dir, tmp))
     val subs = Map("__DIR__" -> dir, "__TMP__" -> tmp)
-    val (spec, built) = resourceNames(s"gate/$query").map { file =>
-      val spec = JobConfig.parse(resource(s"gate/$query/$file"), subs)
+    val (spec, built) = resourceNames(s"gate/$gate").map { file =>
+      val spec = JobConfig.parse(resource(s"gate/$gate/$file"), subs)
       val built = JobGraph.build(s, spec)
       try built.runSinks() finally built.close()
       (spec, built)
@@ -1630,6 +1215,27 @@ object SparkEntry {
     "q_job_unpivot", "q_job_url_features", "q_job_window_lag", "q_job_window_pctile",
     "q_job_window_rolling", "q_job_window_topn", "q_job_xml_agg", "q_sql_join")
 
+  /** Gate queries that run another query's job directory: each name's
+    * oracle SQL is byte-equal to its twin's, and the twin's comp_types
+    * call the operator the name gates. The name stays a query of its own
+    * (its oracle file, its result, its bench line). */
+  private[graft] val twinQueries = Map(
+    "q_agg_salted" -> "q_job_agg_salted", "q_budget_sample" -> "q_job_budget_sample",
+    "q_chunk" -> "q_job_chunk", "q_dedup_against" -> "q_job_dedup_against",
+    "q_dedup_keep_best" -> "q_job_dedup_keep_best", "q_gopher" -> "q_job_gopher",
+    "q_group_cap" -> "q_job_group_cap", "q_histogram" -> "q_job_histogram",
+    "q_join_left_nulls" -> "q_job_join_left", "q_json_extract" -> "q_job_json_extract",
+    "q_line_dedup" -> "q_job_line_dedup", "q_mix_sample" -> "q_job_mix_sample",
+    "q_pack_units" -> "q_job_pack_units", "q_profile" -> "q_job_profile",
+    "q_sample_weighted" -> "q_job_sample_weighted", "q_set_except_all" -> "q_job_set_except_all",
+    "q_sort_limit" -> "q_job_sort", "q_text_entropy" -> "q_job_text_entropy",
+    "q_text_normalize" -> "q_job_text_normalize", "q_text_topk_grams" -> "q_job_top_tokens",
+    "q_unpivot" -> "q_job_unpivot", "q_url_features" -> "q_job_url_features",
+    "q_vec_quantize" -> "q_job_embedding_transform", "q_window_lag" -> "q_job_window_lag",
+    "q_window_pctile" -> "q_job_window_pctile", "q_window_rolling" -> "q_job_window_rolling",
+    "q_window_topn" -> "q_job_window_topn", "sim_knn" -> "q_job_sim_knn",
+    "text_repetition" -> "q_job_text_repetition")
+
   // ----------------------------------------------------------------- driver
 
   /** Flagship query on sf=0.001; driver smoke-checks rows > 0. */
@@ -1645,16 +1251,12 @@ object SparkEntry {
     "q_agg_global" -> (qAggGlobal _),
     "q_agg_nullkeys" -> (qAggNullKeys _),
     "q_agg_money" -> (qAggMoney _),
-    "q_agg_salted" -> (qAggSalted _),
     "q_agg_rollup" -> (qAggRollup _),
     "q_agg_cube" -> (qAggCube _),
-    "q_profile" -> (qProfile _),
     "q_pivot" -> (qPivot _),
-    "q_unpivot" -> (qUnpivot _),
     "q_project_rename" -> (qProjectRename _),
     "q_project_nested" -> (qProjectNested _),
     "q_join_plan" -> (qJoinPlan _),
-    "q_join_left_nulls" -> (qJoinLeftNulls _),
     "q_join_anti" -> (qJoinAnti _),
     "q_join_star" -> (qJoinStar _),
     "q_type_conversion" -> (qTypeConversion _),
@@ -1662,15 +1264,9 @@ object SparkEntry {
     "q_set_intersect" -> (qSetIntersect _),
     "q_set_except" -> (qSetExcept _),
     "q_set_intersect_all" -> (qSetIntersectAll _),
-    "q_set_except_all" -> (qSetExceptAll _),
     "q_set_union" -> (qSetUnion _),
     "q_split_branches" -> (qSplitBranches _),
-    "q_sort_limit" -> (qSortLimit _),
-    "q_window_topn" -> (qWindowTopN _),
-    "q_window_lag" -> (qWindowLag _),
-    "q_window_rolling" -> (qWindowRolling _),
     "q_window_lead" -> (qWindowLead _),
-    "q_window_pctile" -> (qWindowPctile _),
     "q_events_window" -> (qEventsWindow _),
     "q_events_slide" -> (qEventsSlide _),
     "q_events_session" -> (qEventsSession _),
@@ -1699,43 +1295,25 @@ object SparkEntry {
     "q_cc_components" -> (qCcComponents _),
     "q_dedup_cluster" -> (qDedupCluster _),
     "text_stats" -> (qTextStats _),
-    "q_gopher" -> (qGopher _),
     "text_topk" -> (qTextTopk _),
     "text_pii" -> (qTextPii _),
     "text_langid" -> (qTextLangId _),
-    "sim_knn" -> (qSimKnn _),
     "sim_ivf" -> (qSimIvf _),
     "q_decontaminate" -> (qDecontaminate _),
     "q_decontaminate_join" -> (qDecontaminateJoin _),
     "q_decontaminate_bloom" -> (qDecontaminateBloom _),
     "q_decontaminate_pairs" -> (qDecontaminatePairs _),
-    "text_repetition" -> (qTextRepetition _),
-    "q_budget_sample" -> (qBudgetSample _),
-    "q_mix_sample" -> (qMixSample _),
-    "q_group_cap" -> (qGroupCap _),
     "q_group_cap_uniform" -> (qGroupCapUniform _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_histogram" -> (qHistogram _),
-    "q_chunk" -> (qChunk _),
-    "q_text_normalize" -> (qTextNormalize _),
-    "q_url_features" -> (qUrlFeatures _),
     "q_outlier_filter" -> (qOutlierFilter _),
     "q_outlier_filter_iqr" -> (qOutlierFilterIqr _),
-    "q_pack_units" -> (qPackUnits _),
     "q_vec_normalize" -> (qVecNormalize _),
-    "q_vec_quantize" -> (qVecQuantize _),
-    "q_dedup_keep_best" -> (qDedupKeepBest _),
-    "q_sample_weighted" -> (qSampleWeighted _),
-    "q_text_entropy" -> (qTextEntropy _),
-    "q_dedup_against" -> (qDedupAgainst _),
-    "q_line_dedup" -> (qLineDedup _),
     "q_line_dedup_set" -> (qLineDedupSet _),
     "q_line_dedup_para" -> (qLineDedupPara _),
     "q_line_dedup_hot" -> (qLineDedupHot _),
     "q_dedup_against_bloom" -> (qDedupAgainstBloom _),
-    "q_text_topk_grams" -> (qTextTopkGrams _),
     "multimodal_features" -> (qMultimodal _)) ++
-    corpusQueries.map(q => q -> (corpus(q) _))
+    corpusQueries.map(q => q -> (corpus(q, q) _)) ++
+    twinQueries.map { case (q, gate) => q -> (corpus(gate, q) _) }
 
   /** DuckDB oracle SQL per query, one `oracle/<query>.sql` resource each. */
   def oracleSql: Map[String, String] = resourceNames("oracle").map { f =>

@@ -136,7 +136,10 @@ object JsonIO {
     * are narrow dependencies with no query stage, and an exploded or
     * coalesced small scan is exactly the under-partitioned shape the
     * widen exists for. Limit stays excluded (GlobalLimit plans a
-    * single-partition exchange). */
+    * single-partition exchange). A cached relation is a leaf that is
+    * not narrow: its `toRdd` builds the cache's own adaptive plan, which
+    * runs that plan's shuffle stages as Spark jobs outside any SQL
+    * execution, so per-execution accounting would miss them. */
   private def narrowPlan(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
     p match {
       case r: org.apache.spark.sql.catalyst.plans.logical.Repartition =>
@@ -147,6 +150,7 @@ object JsonIO {
            _: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias |
            _: org.apache.spark.sql.catalyst.plans.logical.Union =>
         p.children.forall(narrowPlan)
+      case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => false
       case leaf if leaf.children.isEmpty => true
       case _ => false
     }
@@ -168,7 +172,7 @@ object JsonIO {
     * adaptive plan — executing every upstream shuffle/broadcast stage —
     * and the `.json(path)` write is a NEW QueryExecution that re-runs
     * them, i.e. the probe would double-execute the upstream (r22 ADVICE
-    * fix; JsonIOSpec pins the no-upstream-double-exec job count). A
+    * fix; CsvJsonIOSpec pins the no-upstream-double-exec job count). A
     * shuffled input needs no widening anyway: its partitioning was just
     * sized by the shuffle/AQE-coalesce policy, which never produces the
     * one-giant-scan-partition shape the widen exists for. */

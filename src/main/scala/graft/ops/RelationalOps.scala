@@ -389,8 +389,8 @@ object RelationalOps {
   }
 
   /**
-   * Mongo-read-shaped query surface over any DataFrame: filter, multi-key
-   * sort with per-key direction, skip, limit, projection.
+   * Mongo-read-shaped ORDER BY / OFFSET / LIMIT over any DataFrame:
+   * multi-key sort with per-key direction, skip, limit.
    *
    * Scale note: skip/limit compile to Catalyst's GlobalLimit-with-offset
    * (Dataset.offset, Spark ≥3.4) — executors take only local prefixes and
@@ -399,13 +399,10 @@ object RelationalOps {
    * unique key in `sort` for deterministic results.
    */
   def findLike(df: DataFrame,
-               filter: Option[Column] = None,
                sort: Seq[(String, Int)] = Nil,
                skip: Int = 0,
-               limit: Option[Int] = None,
-               projection: Seq[String] = Nil): DataFrame = {
+               limit: Option[Int] = None): DataFrame = {
     var d = df
-    filter.foreach(f => d = d.filter(f))
     if (sort.nonEmpty) {
       val keys = sort.map { case (f, dir) => if (dir >= 0) col(f).asc else col(f).desc }
       d = d.orderBy(keys: _*)
@@ -415,7 +412,6 @@ object RelationalOps {
       d = d.offset(skip)
     }
     limit.foreach(n => d = d.limit(n))
-    if (projection.nonEmpty) d = d.select(projection.map(col): _*)
     d
   }
 

@@ -271,9 +271,6 @@ object TextAnalysis {
       minMeanLen, maxMeanLen, maxSymbolRatio, maxBulletRatio,
       maxEllipsisRatio, minAlphaRatio, minStopHits)
 
-  /** The rule-column names [[gopherRules]] appends (pass flag apart). */
-  val gopherRuleColumns: Seq[String] = graft.functions.GopherRules.fields.init
-
   /**
    * Fraction of non-blank lines that are duplicates of another line —
    * the Gopher "duplicate line fraction" quality rule (boilerplate,

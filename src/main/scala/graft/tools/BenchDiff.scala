@@ -34,7 +34,7 @@ object BenchDiff {
     * query timings when scanning a truncated driver tail. */
   private val NonQueryKeys = Set(
     "metric", "value", "unit", "reps", "reps_slow", "n_queries",
-    "n_errors", "sf", "n", "rc", "cpus")
+    "n_errors", "sf", "n", "rc", "cpus", "part", "of", "rows")
 
   final case class Row(name: String, prev: Double, cur: Double) {
     def ratio: Double = cur / prev

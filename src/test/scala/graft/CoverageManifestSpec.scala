@@ -75,4 +75,16 @@ class CoverageManifestSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"q_job_* queries without a gate/<query>/ directory: ${missing.toSeq.sorted.mkString(", ")}")
   }
+
+  test("every twin query runs a gate/ directory whose oracle equals its own") {
+    def oracleBytes(q: String): Seq[Byte] = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"src/main/resources/oracle/$q.sql")).toSeq
+    SparkEntry.twinQueries.foreach { case (name, twin) =>
+      assert(gateDirs.contains(twin), s"$name: twin $twin has no gate/ directory")
+      assert(oracleBytes(name) == oracleBytes(twin),
+        s"$name: oracle/$name.sql differs from its twin's oracle/$twin.sql")
+      assert(!name.startsWith("q_job_"),
+        s"$name: a q_job_* name is a gate directory of its own, not a twin")
+    }
+  }
 }

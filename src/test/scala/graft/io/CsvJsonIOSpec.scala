@@ -247,6 +247,36 @@ class CsvJsonIOSpec extends SparkTestBase {
     assert(JsonIO.read(spark, tmp("json_gz_agg_gz"), Some(schema)).count() === 5)
   }
 
+  test("gzip write of a persisted frame runs every job inside the write's SQL execution") {
+    // A cached relation is not narrow: probing its partition count would
+    // build the cache's adaptive plan and run its shuffle stages as jobs
+    // that carry no spark.sql.execution.id, outside the write's own
+    // execution, where per-execution accounting misses them.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val untagged = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).flatMap(p =>
+            Option(p.getProperty("spark.sql.execution.id"))).isEmpty)
+          untagged.incrementAndGet()
+    }
+    val agg = spark.range(100).withColumn("k", col("id") % 5)
+      .groupBy("k").agg(sum(col("id")).as("s")).persist()
+    val out = tmp("json_gz_cached")
+    spark.sparkContext.addSparkListener(l)
+    try {
+      JsonIO.write(agg, out, gzip = true)
+      assert(ListenerBusBridge.drainSharedQueue(spark.sparkContext, 10000))
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      agg.unpersist()
+    }
+    assert(untagged.get() === 0,
+      s"${untagged.get()} job(s) of the gzip write ran outside its SQL execution")
+    val schema = StructType(Seq(StructField("k", LongType), StructField("s", LongType)))
+    assert(JsonIO.read(spark, out, Some(schema)).count() === 5)
+  }
+
   test("gzip write still widens a narrow under-partitioned input") {
     val dir = tmp("json_gz_widen_src")
     spark.range(1000).select(col("id")).coalesce(1)

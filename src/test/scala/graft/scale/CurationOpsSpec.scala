@@ -14,6 +14,9 @@ import org.apache.spark.sql.functions._
 class CurationOpsSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** The rule-column names [[TextAnalysis.gopherRules]] appends (pass flag apart). */
+  private val gopherRuleColumns: Seq[String] = graft.functions.GopherRules.fields.init
+
   // ---- chunk ----
 
   private def chunksOf(text: String, size: Int, overlap: Int): Seq[(Long, String)] =
@@ -425,7 +428,7 @@ class CurationOpsSpec extends SparkTestBase {
     assert(!b(5, "g_ellipsis_lines"))
     assert(!b(6, "g_alpha_words"))
     assert(!b(7, "g_stopwords"))
-    assert(TextAnalysis.gopherRuleColumns.forall(c => !b(8, c)) &&
+    assert(gopherRuleColumns.forall(c => !b(8, c)) &&
       !b(8, "gopher_pass"), "null text fails every rule, non-null false")
     // the filter face == flagged face filtered, rule columns dropped
     val kept = TextAnalysis.gopherFilter(df)
@@ -453,7 +456,7 @@ class CurationOpsSpec extends SparkTestBase {
       rule(ls.getField("n_ell_end").cast("double") <= lit(th.maxEllipsisRatio) * ls.getField("n_lines")),
       rule(n > 0 && nAlpha.cast("double") >= lit(th.minAlphaRatio) * n),
       rule(stopHits >= th.minStopHits))
-    df.select((col("*") +: TextAnalysis.gopherRuleColumns.zip(rules).map { case (c, r) => r.as(c) } :+
+    df.select((col("*") +: gopherRuleColumns.zip(rules).map { case (c, r) => r.as(c) } :+
       rules.reduce(_ && _).as("gopher_pass")): _*)
   }
 

@@ -39,6 +39,15 @@ class BenchDiffSpec extends AnyFunSuite {
     assert(qs === Map("q_a" -> 1.0, "q_b" -> 0.45, "q_gone" -> 0.7, "q_c" -> 0.8))
   }
 
+  test("parseTail skips the envelope keys of the calibration and per-query part lines") {
+    val tail =
+      """{"metric":"calibration","value":0.2100,"unit":"sec","reps":5,"rows":1000000,"spread":[0.2,0.3]}
+        |{"metric":"per_query_part","part":2,"of":2,"queries":{"q_b":0.4000}}
+        |{"metric":"per_query_part","part":1,"of":2,"queries":{"q_a":2.0000}}
+        |{"metric":"total","value":2.4,"unit":"sec","reps":3,"n_queries":2,"n_errors":0,"sf":"/x"}""".stripMargin
+    assert(BenchDiff.parseTail(tail) === Map("q_a" -> 2.0, "q_b" -> 0.4))
+  }
+
   test("diff: worst-first rows, only-in sets, regression rule") {
     val (prev, _) = BenchDiff.queriesOf(JsonMethods.parse(driver))
     val (cur, _) = BenchDiff.queriesOf(JsonMethods.parse(local))
